@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Multi-JVM PERF rig for the third-decade analytics spillers (VERDICT
@@ -27,19 +26,6 @@ import org.apache.spark.sql.SparkSession
   * Prints one CLUSTERPERF json line per query.
   */
 object ClusterPerf {
-
-  private final class MetricsListener extends SparkListener {
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    val spill = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def reset(): Unit = { shuffleWrite.set(0); spill.set(0) }
-  }
 
   def main(args: Array[String]): Unit = {
     if (args.length < 5) {
@@ -81,8 +67,7 @@ object ClusterPerf {
       .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new MetricsListener
-    spark.sparkContext.addSparkListener(metrics)
+    val totals = operators.PhaseStats.stageTotals(spark.sparkContext)
     // multi-process proof, same discipline as ClusterSmoke: the numbers
     // below mean nothing if the tasks never left the driver JVM
     val driverPid = ProcessHandle.current().pid()
@@ -96,15 +81,7 @@ object ClusterPerf {
     queryCsv.split(",").filter(_.nonEmpty).foreach { name =>
       val fn = SparkEntry.queries(name)
       val times = (1 to 2).map { _ =>
-        metrics.reset()
-        val t0 = System.nanoTime()
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        val wall = (System.nanoTime() - t0) / 1e9
-        // the listener bus is async — drain it before reading, or the
-        // final stage's completion event (often the one carrying the
-        // spill this rig exists to measure) may still be queued
-        org.apache.spark.sql.GraftSqlBridge.drainListenerBus(spark)
-        (wall, metrics.shuffleWrite.get(), metrics.spill.get())
+        totals.measure(fn(spark, dir).write.format("noop").mode("overwrite").save())
       }
       val (warm, shW, sp) = times.last
       println(s"""CLUSTERPERF {"query":"$name","master":"$master",""" +

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,20 +26,6 @@ import org.apache.spark.sql.functions._
   * PLANS.md §stress by hand — this is a measurement tool, not a gate.
   */
 object Stress {
-
-  /** Sum of shuffle write bytes + spill across completed stages. */
-  private final class MetricsListener extends SparkListener {
-    val shuffleWrite = new java.util.concurrent.atomic.AtomicLong
-    val spill = new java.util.concurrent.atomic.AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        spill.addAndGet(m.diskBytesSpilled)
-      }
-    }
-    def reset(): Unit = { shuffleWrite.set(0); spill.set(0) }
-  }
 
   private def genScaled(spark: SparkSession, baseDir: String, outDir: String,
       factor: Int): Unit = {
@@ -278,8 +263,7 @@ object Stress {
           sys.env.getOrElse("STRESS_EXECUTOR_MEM", "8g"))
     else builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val metrics = new MetricsListener
-    spark.sparkContext.addSparkListener(metrics)
+    val totals = operators.PhaseStats.stageTotals(spark.sparkContext)
 
     val scaledDir = s"$root/x$factor"
     genScaled(spark, baseDir, scaledDir, factor)
@@ -309,11 +293,9 @@ object Stress {
         // cold run (first plan + codegen), then a warm run; report both —
         // superlinearity shows in the warm number
         val times = (1 to 2).map { _ =>
-          metrics.reset()
-          val t0 = System.nanoTime()
-          fn(spark, dir).write.format("noop").mode("overwrite").save()
-          ((System.nanoTime() - t0) / 1e9,
-            metrics.shuffleWrite.get(), metrics.spill.get())
+          totals.measure {
+            fn(spark, dir).write.format("noop").mode("overwrite").save()
+          }
         }
         val (warmT, shW, sp) = times.last
         s""""$name":{"cold_sec":${times.head._1},"warm_sec":$warmT,""" +
@@ -360,15 +342,13 @@ object Stress {
               s"(doc_id DIV $factor) % 10 = 7 AND doc_id % $factor = 0")
           }
         val times = (1 to 2).map { _ =>
-          metrics.reset()
-          val t0 = System.nanoTime()
-          // the cache key carries the LAW: a scaled-regime filter must
-          // never be served to a realistic-regime run (or vice versa)
-          queries.PipelineQueries.contaminationFracFrame(spark, dir,
-            evalPred, s"evalgrams:stress:$tag:$law:$dir")
-            .write.format("noop").mode("overwrite").save()
-          ((System.nanoTime() - t0) / 1e9,
-            metrics.shuffleWrite.get(), metrics.spill.get())
+          totals.measure {
+            // the cache key carries the LAW: a scaled-regime filter must
+            // never be served to a realistic-regime run (or vice versa)
+            queries.PipelineQueries.contaminationFracFrame(spark, dir,
+              evalPred, s"evalgrams:stress:$tag:$law:$dir")
+              .write.format("noop").mode("overwrite").save()
+          }
         }
         println(s"""STRESS_CONTAM {"corpus":"$tag","law":"$law","docs":${
           if (tag == "base") nBase else nScaled},""" +
@@ -392,12 +372,10 @@ object Stress {
           .getOrElse(if (tag == "base") Seq(8) else Seq(8, 8 * factor))
         val sd = ks.map { k =>
           val times = (1 to 2).map { _ =>
-            metrics.reset()
-            val t0 = System.nanoTime()
-            queries.PipelineQueries.q132Frame(spark, dir, k)
-              .write.format("noop").mode("overwrite").save()
-            ((System.nanoTime() - t0) / 1e9,
-              metrics.shuffleWrite.get(), metrics.spill.get())
+            totals.measure {
+              queries.PipelineQueries.q132Frame(spark, dir, k)
+                .write.format("noop").mode("overwrite").save()
+            }
           }
           val kept = queries.PipelineQueries.q132Frame(spark, dir, k).count()
           s""""k$k":{"cold_sec":${times.head._1},"warm_sec":${times.last._1},""" +
@@ -556,11 +534,9 @@ object Stress {
         val cents = queries.PipelineQueries.ivfCentsK(spark, dir, k)
         def time(mk: => DataFrame): (Double, Long, Long) = {
           val runs = (1 to 2).map { _ =>
-            metrics.reset()
-            val t0 = System.nanoTime()
-            mk.write.format("noop").mode("overwrite").save()
-            ((System.nanoTime() - t0) / 1e9,
-              metrics.shuffleWrite.get(), metrics.spill.get())
+            totals.measure {
+              mk.write.format("noop").mode("overwrite").save()
+            }
           }
           runs.last
         }
@@ -579,12 +555,10 @@ object Stress {
         val nVec = spark.read.parquet(s"$dir/embeddings.parquet").count()
         val cents = queries.PipelineQueries.ivfCentsK(spark, dir, k)
         val runs = (1 to 2).map { _ =>
-          metrics.reset()
-          val t0 = System.nanoTime()
-          queries.PipelineQueries.marginMining(spark, dir, cents)
-            .write.format("noop").mode("overwrite").save()
-          ((System.nanoTime() - t0) / 1e9,
-            metrics.shuffleWrite.get(), metrics.spill.get())
+          totals.measure {
+            queries.PipelineQueries.marginMining(spark, dir, cents)
+              .write.format("noop").mode("overwrite").save()
+          }
         }
         val (warmS, shW, sp) = runs.last
         println(s"""STRESS_MARGIN {"corpus":"$tag","vectors":$nVec,"k":$k,""" +
@@ -597,12 +571,10 @@ object Stress {
       // cardinality, fewer duplicated grams, longer excised spans)
       sys.env.get("STRESS_SUBSTR").map(_.toInt).foreach { k =>
         val runs = (1 to 2).map { _ =>
-          metrics.reset()
-          val t0 = System.nanoTime()
-          queries.PipelineQueries.exactSubstr(spark, dir, k)
-            .write.format("noop").mode("overwrite").save()
-          ((System.nanoTime() - t0) / 1e9,
-            metrics.shuffleWrite.get(), metrics.spill.get())
+          totals.measure {
+            queries.PipelineQueries.exactSubstr(spark, dir, k)
+              .write.format("noop").mode("overwrite").save()
+          }
         }
         val (warmS, shW, sp) = runs.last
         val rows = if (tag == "base") nBase else nScaled
@@ -624,12 +596,10 @@ object Stress {
         val Array(c, o) = spec.split(":").map(_.toInt)
         var nChunks = 0L
         val runs = (1 to 2).map { _ =>
-          metrics.reset()
-          val t0 = System.nanoTime()
-          nChunks = queries.PipelineQueries.chunkOverlap(spark, dir, c, o)
-            .count()
-          ((System.nanoTime() - t0) / 1e9,
-            metrics.shuffleWrite.get(), metrics.spill.get())
+          totals.measure {
+            nChunks = queries.PipelineQueries.chunkOverlap(spark, dir, c, o)
+              .count()
+          }
         }
         val (warmS, shW, sp) = runs.last
         val rows = if (tag == "base") nBase else nScaled
@@ -645,12 +615,10 @@ object Stress {
       // flat (only the score>0 survivors reach the bounded top-k agg)
       if (sys.env.get("STRESS_BM25").contains("1")) {
         val runs = (1 to 2).map { _ =>
-          metrics.reset()
-          val t0 = System.nanoTime()
-          queries.PipelineQueries.bm25TopK(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          ((System.nanoTime() - t0) / 1e9,
-            metrics.shuffleWrite.get(), metrics.spill.get())
+          totals.measure {
+            queries.PipelineQueries.bm25TopK(spark, dir)
+              .write.format("noop").mode("overwrite").save()
+          }
         }
         val (warmS, shW, sp) = runs.last
         val rows = if (tag == "base") nBase else nScaled
@@ -669,12 +637,10 @@ object Stress {
       // run, so "sub-quadratic" is a number, not an adjective.
       if (sys.env.get("STRESS_EDITREP").contains("1")) {
         val runs = (1 to 2).map { _ =>
-          metrics.reset()
-          val t0 = System.nanoTime()
-          queries.PipelineQueries.editDistanceNearDupRep(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          ((System.nanoTime() - t0) / 1e9,
-            metrics.shuffleWrite.get(), metrics.spill.get())
+          totals.measure {
+            queries.PipelineQueries.editDistanceNearDupRep(spark, dir)
+              .write.format("noop").mode("overwrite").save()
+          }
         }
         val (warmS, shW, sp) = runs.last
         val (census, repCallsDistinct) = {
@@ -734,12 +700,10 @@ object Stress {
         val forms = Seq("exact" -> false, "approx" -> true).map {
           case (label, ap) =>
             val runs = (1 to 2).map { _ =>
-              metrics.reset()
-              val t0 = System.nanoTime()
-              queries.PipelineQueries.ngramDiversity(spark, dir, approx = ap)
-                .write.format("noop").mode("overwrite").save()
-              ((System.nanoTime() - t0) / 1e9,
-                metrics.shuffleWrite.get(), metrics.spill.get())
+              totals.measure {
+                queries.PipelineQueries.ngramDiversity(spark, dir, approx = ap)
+                  .write.format("noop").mode("overwrite").save()
+              }
             }
             val (warmS, shW, sp) = runs.last
             s""""$label":{"cold_sec":${runs.head._1},"warm_sec":$warmS,""" +
@@ -793,44 +757,44 @@ object Stress {
         forms.foreach { case (form, repAnchored) =>
           val run = operators.PhaseStats.start(spark.sparkContext,
             s"q160-$tag-$form")
-          metrics.reset()
           val stageRows = scala.collection.mutable.LinkedHashMap[String, Long]()
-          val t0 = System.nanoTime()
           // replicated ids are base*factor+r, so the oracle's doc_id%10==7
           // eval law would select "replica r≡7 of EVERY doc" and contaminate
           // every keep-list survivor with its own replica; lift the law to
           // the base id so the eval suite is base eval docs + their replicas
           val evalPred = if (tag == "base") col("doc_id") % 10 === 7
             else expr(s"(doc_id DIV $factor) % 10 = 7")
-          val out = queries.PipelineQueries.q160Frame(spark, dir, budget,
-            stageRun = Some((i, name, mk) => run.phase(i) {
-              val pinned = mk().localCheckpoint()
-              stageRows(s"s$i" + s"_$name") = pinned.count()
-              if (i == 2) s2Manifests(form) = pinned
-              pinned
-            }),
-            evalPred = evalPred,
-            repAnchoredNearDup = repAnchored,
-            // STRESS_PRETRAIN_BUCKETED=1|0: stage the per-doc edge
-            // payload as a bucketed-by-doc_id table before the verify
-            // joins (the PageRank pre-layout discipline) — the stage-2
-            // prepare A/B. "auto" (or any future default probe) defers
-            // to the library's survivor-count gate; the harness pins an
-            // EXPLICIT side by default so A/B rows stay labeled by what
-            // actually ran
-            bucketedEdgeBase = sys.env.get("STRESS_PRETRAIN_BUCKETED") match {
-              case Some("auto") => None
-              case v => Some(v.contains("1"))
-            })
-          // ONE execution of the unmaterialized tail: q160's output is
-          // one row per stage-5 survivor (stages 6-7 never filter), so
-          // out_rows is the s5 manifest count — a second count() here
-          // would re-run the tail and inflate phase 6's attribution
-          val outRows = run.phase(6) {
-            out.write.format("noop").mode("overwrite").save()
-            stageRows.getOrElse("s5_mixture_materialize", -1L)
+          var outRows = -1L
+          val (wall, shW, sp) = totals.measure {
+            val out = queries.PipelineQueries.q160Frame(spark, dir, budget,
+              stageRun = Some((i, name, mk) => run.phase(i) {
+                val pinned = mk().localCheckpoint()
+                stageRows(s"s$i" + s"_$name") = pinned.count()
+                if (i == 2) s2Manifests(form) = pinned
+                pinned
+              }),
+              evalPred = evalPred,
+              repAnchoredNearDup = repAnchored,
+              // STRESS_PRETRAIN_BUCKETED=1|0: stage the per-doc edge
+              // payload as a bucketed-by-doc_id table before the verify
+              // joins (the PageRank pre-layout discipline) — the stage-2
+              // prepare A/B. "auto" (or any future default probe) defers
+              // to the library's survivor-count gate; the harness pins an
+              // EXPLICIT side by default so A/B rows stay labeled by what
+              // actually ran
+              bucketedEdgeBase = sys.env.get("STRESS_PRETRAIN_BUCKETED") match {
+                case Some("auto") => None
+                case v => Some(v.contains("1"))
+              })
+            // ONE execution of the unmaterialized tail: q160's output is
+            // one row per stage-5 survivor (stages 6-7 never filter), so
+            // out_rows is the s5 manifest count — a second count() here
+            // would re-run the tail and inflate phase 6's attribution
+            outRows = run.phase(6) {
+              out.write.format("noop").mode("overwrite").save()
+              stageRows.getOrElse("s5_mixture_materialize", -1L)
+            }
           }
-          val wall = (System.nanoTime() - t0) / 1e9
           val handle = run.finish()
           val rowsJson = stageRows.map { case (k, v) => s""""$k":$v""" }
             .mkString("{", ",", "}")
@@ -842,8 +806,8 @@ object Stress {
           println(s"""STRESS_PRETRAIN_E2E {"corpus":"$tag","form":"$form","docs":${
             if (tag == "base") nBase else nScaled},"budget":$budget,""" +
             s""""bucketed":$bucketedRan,""" +
-            s""""wall_sec":$wall,"shuffle_write_bytes":${metrics.shuffleWrite.get},""" +
-            s""""spilled_bytes":${metrics.spill.get},"out_rows":$outRows,""" +
+            s""""wall_sec":$wall,"shuffle_write_bytes":$shW,""" +
+            s""""spilled_bytes":$sp,"out_rows":$outRows,""" +
             s""""stage_rows":$rowsJson,"stages":${handle.json},""" +
             s""""fixpoint_rounds":${operators.Dedup.lastFixpointStatsJson}}""")
         }
@@ -900,23 +864,22 @@ object Stress {
           if (!new java.io.File(gpath).exists())
             graph(n).repartition(32).write.mode("overwrite").parquet(gpath)
           val edges = spark.read.parquet(gpath)
+          var agg: org.apache.spark.sql.Row = null
           val runs = (1 to 2).map { _ =>
-            metrics.reset()
-            val t0 = System.nanoTime()
-            val pr = graft.operators.PageRank.run(edges, iters)
-            val agg = pr.agg(sum(col("pr")), count(lit(1))).head()
-            (agg.getDouble(0), agg.getLong(1),
-              (System.nanoTime() - t0) / 1e9,
-              metrics.shuffleWrite.get(), metrics.spill.get())
+            totals.measure {
+              agg = graft.operators.PageRank.run(edges, iters)
+                .agg(sum(col("pr")), count(lit(1))).head()
+            }
           }
-          val (mass, nodes, warmS, shW, sp) = runs.last
+          val (mass, nodes) = (agg.getDouble(0), agg.getLong(1))
+          val (warmS, shW, sp) = runs.last
           val massOk = math.abs(mass - 1.0) < nodes * 5e-10
           // per-phase attribution of the warm run (0 = prepare): the
           // same rows Bench persists — drift adjudication per stage
           val rounds = graft.operators.PageRank.lastRunStatsJson
           println(s"""STRESS_PAGERANK {"corpus":"$gtag","nodes":$nodes,""" +
             s""""edges":${edges.count()},"iters":$iters,""" +
-            s""""cold_sec":${runs.head._3},"warm_sec":$warmS,""" +
+            s""""cold_sec":${runs.head._1},"warm_sec":$warmS,""" +
             s""""shuffle_write_bytes":$shW,"spilled_bytes":$sp,""" +
             s""""mass":$mass,"mass_ok":$massOk,"rounds":$rounds}""")
           // STRESS_PAGERANK_BUCKETED=1: same graph through the
@@ -946,19 +909,17 @@ object Stress {
               java.nio.file.Files.writeString(btMarker, srcFp + "\n")
             }
             val bruns = (1 to 2).map { _ =>
-              metrics.reset()
-              val t0 = System.nanoTime()
-              val pr = graft.operators.PageRank.run(spark.table(tbl), iters)
-              val agg = pr.agg(sum(col("pr")), count(lit(1))).head()
-              (agg.getDouble(0), agg.getLong(1),
-                (System.nanoTime() - t0) / 1e9,
-                metrics.shuffleWrite.get(), metrics.spill.get())
+              totals.measure {
+                agg = graft.operators.PageRank.run(spark.table(tbl), iters)
+                  .agg(sum(col("pr")), count(lit(1))).head()
+              }
             }
-            val (bmass, bnodes, bwarm, bshW, bsp) = bruns.last
+            val (bmass, bnodes) = (agg.getDouble(0), agg.getLong(1))
+            val (bwarm, bshW, bsp) = bruns.last
             val brounds = graft.operators.PageRank.lastRunStatsJson
             println(s"""STRESS_PAGERANK_BUCKETED {"corpus":"$gtag",""" +
               s""""nodes":$bnodes,"iters":$iters,""" +
-              s""""cold_sec":${bruns.head._3},"warm_sec":$bwarm,""" +
+              s""""cold_sec":${bruns.head._1},"warm_sec":$bwarm,""" +
               s""""shuffle_write_bytes":$bshW,"spilled_bytes":$bsp,""" +
               s""""mass":$bmass,"mass_ok":${math.abs(bmass - 1.0) < bnodes * 5e-10},""" +
               s""""rounds":$brounds}""")

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
 /** Cluster-representative selection for near-dup keep-lists (the step
@@ -39,31 +41,20 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  // per-phase attribution via the shared PhaseStats job-group scheme
-  // (round 0 = prepare/pin, 1..N the propagation/star rounds) — exists
-  // for the same reason as PageRank's q146_rounds: the iterative
+  // per-phase attribution (round 0 = prepare/pin, 1..N the propagation
+  // or star rounds) under these PhaseStats tags: the iterative
   // checkpoint-heavy queries (q87/q128) drift in wide same-box bands,
-  // and without per-round rows in the artifact every flag burns an A/B.
-  // Thread-local first so concurrent runs read their own rows.
-  private val lastFixpointByThread = new ThreadLocal[PhaseStats.Handle]
-  @volatile private var lastFixpoint: PhaseStats.Handle = PhaseStats.emptyHandle
-  private val lastCcByThread = new ThreadLocal[PhaseStats.Handle]
-  @volatile private var lastCc: PhaseStats.Handle = PhaseStats.emptyHandle
+  // and without per-round rows in the artifact every flag burns an A/B
+  private val FixpointTag = "dedup-fixpoint"
+  private val CcTag = "dedup-cc"
 
   /** Per-phase stats of the calling thread's (else the JVM's) most
-    * recent [[keepListToFixpoint]], as the shared JSON row shape. Read
-    * AFTER the run returns. */
-  def lastFixpointStatsJson: String = {
-    val tl = lastFixpointByThread.get()
-    (if (tl != null) tl else lastFixpoint).json
-  }
+    * recent [[keepListToFixpoint]], as the shared JSON row shape. */
+  def lastFixpointStatsJson: String = PhaseStats.last(FixpointTag).json
 
   /** Per-phase stats of the calling thread's (else the JVM's) most
     * recent [[connectedComponents]] run, same shape. */
-  def lastCcStatsJson: String = {
-    val tl = lastCcByThread.get()
-    (if (tl != null) tl else lastCc).json
-  }
+  def lastCcStatsJson: String = PhaseStats.last(CcTag).json
 
   /** @param docs  one row per document; `idCol` must be its unique id
     * @param edges verified near-dup pairs in BOTH directions, columns
@@ -80,67 +71,44 @@ object Dedup {
     */
   def keepListToFixpoint(docs: DataFrame, edges: DataFrame, idCol: String = "doc_id",
       maxRounds: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
-    val runStats = PhaseStats.start(docs.sparkSession.sparkContext, "dedup-fixpoint")
-    try {
+    val idType = docs.select(col(idCol)).schema.head.dataType
+    // one propagation round over the pinned edges: `prev` keeps the
+    // round's input label so the fold can count changes
+    def step(e: DataFrame)(state: DataFrame): DataFrame = {
+      val labels = state.select(col(idCol), col("rep"))
+      val nbr = e.join(
+          labels.select(col(idCol).as("nbr_id"), col("rep").as("nrep")),
+          col("dst") === col("nbr_id"))
+        .groupBy(col("src")).agg(min(col("nrep")).as("minrep"))
+      labels.join(nbr, labels(idCol) === nbr("src"), "left")
+        .select(col(idCol), col("rep").as("prev"),
+          least(col("rep"), coalesce(col("minrep"), col("rep"))).as("rep"))
+    }
+    val (labels, _) = Pin.iterate[Long](docs.sparkSession.sparkContext,
+        FixpointTag, maxRounds, checkpointDir,
+        s"keepListToFixpoint did not converge in $maxRounds rounds — " +
+          "either raise maxRounds or check the edge set for corruption " +
+          "(a component's propagation path can't exceed its node count)") {
       // phase 0 = prepare: pinning the edges MATERIALIZES the caller's
       // candidate-generation lineage (banding + verification run exactly
       // once, here) — so round 0's row carries that whole cost, exactly
       // the prepare-vs-rounds split a drift flag needs
-      val (e, releaseE, labels0, releaseLabels0) = runStats.phase(0) {
-        val (e, releaseE) =
-          Pin.pin(edges.select(col("src"), col("dst")), checkpointDir)
-        val (l, rl) = Pin.pin(
-          docs.select(col(idCol), col(idCol).as("rep")), checkpointDir)
-        (e, releaseE, l, rl)
-      }
-      var labels = labels0
-      var releaseLabels = releaseLabels0
-      var changed = 1L
-      var round = 0
-      while (changed > 0 && round < maxRounds) {
-        val (stepped, releaseStepped, nChanged) = runStats.phase(round + 1) {
-          val nbr = e.join(
-              labels.select(col(idCol).as("nbr_id"), col("rep").as("nrep")),
-              col("dst") === col("nbr_id"))
-            .groupBy(col("src")).agg(min(col("nrep")).as("minrep"))
-          val steppedDf = labels.join(nbr, labels(idCol) === nbr("src"), "left")
-            .select(col(idCol), col("rep").as("prev"),
-              least(col("rep"), coalesce(col("minrep"), col("rep"))).as("rep"))
-          // fuse the convergence test into the materializing pass: a separate
-          // `filter(changed).count()` would re-read the full label table once
-          // more per round — at corpus scale that is a whole extra pass. The
-          // fold is DETERMINISTIC (an aggregate over the pinned UnsafeRows —
-          // a retried task recomputes the same count, unlike the old
-          // accumulator form, which could only over-count), and runs as the
-          // ONE action that materializes the round's checkpoint.
-          val (stepped, steppedRdd, releaseStepped) = Pin.arm(steppedDf, checkpointDir)
-          val dt = steppedDf.schema(1).dataType // prev/rep share idCol's type
-          val n = steppedRdd.aggregate(0L)(
-            (n, r) => n + (if (r.get(1, dt) != r.get(2, dt)) 1L else 0L),
-            _ + _)
-          (stepped, releaseStepped, n)
-        }
-        changed = nChanged
-        releaseLabels() // prior round no longer referenced: blocks + files
-        labels = stepped.select(col(idCol), col("rep"))
-        releaseLabels = releaseStepped
-        round += 1
-      }
-      releaseE()
-      // non-convergence aborts: release the final round too, or its blocks
-      // stay pinned in the block manager for the life of the session. On
-      // success the final round's storage intentionally survives — the
-      // returned frame reads from it.
-      if (changed != 0) releaseLabels()
-      require(changed == 0,
-        s"keepListToFixpoint did not converge in $maxRounds rounds — " +
-          "either raise maxRounds or check the edge set for corruption " +
-          "(a component's propagation path can't exceed its node count)")
-      val handle = runStats.finish()
-      lastFixpointByThread.set(handle)
-      lastFixpoint = handle
-      labels.withColumn("is_kept", col(idCol) === col("rep"))
-    } catch { case t: Throwable => runStats.abort(); throw t }
+      val (e, releaseE) =
+        Pin.pin(edges.select(col("src"), col("dst")), checkpointDir)
+      val (l, releaseL) = Pin.pin(
+        docs.select(col(idCol), col(idCol).as("rep")), checkpointDir)
+      Pin.Start(l, releaseL, -1L, step(e), releaseE)
+    }(
+      // the convergence test rides in the materializing pass: a separate
+      // `filter(changed).count()` would re-read the full label table once
+      // more per round. The fold is DETERMINISTIC (an aggregate over the
+      // pinned UnsafeRows — a retried task recomputes the same count,
+      // unlike an accumulator, which could only over-count).
+      fold = _.aggregate(0L)( // prev/rep share idCol's type
+        (n, r) => n + (if (r.get(1, idType) != r.get(2, idType)) 1L else 0L),
+        _ + _),
+      done = (round, _, changed) => round > 0 && changed == 0)
+    labels.select(col(idCol), col("rep")).withColumn("is_kept", col(idCol) === col("rep"))
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR rounds
@@ -234,86 +202,69 @@ object Dedup {
       var h = a * 0x9E3779B97F4A7C15L + (b ^ (b >>> 31)) * 0xBF58476D1CE4E5B9L
       h ^= h >>> 27; h *= 0x94D049BB133111EBL; h ^ (h >>> 31)
     }
-    def pinWithStats(df: DataFrame): (DataFrame, () => Unit, (Long, Long)) = {
-      val (pinned, rdd, release) = Pin.arm(df, checkpointDir)
-      val st = rdd.aggregate((0L, 0L))(
+    def digest(rdd: RDD[InternalRow]): (Long, Long) =
+      rdd.aggregate((0L, 0L))(
         (acc, r) => (acc._1 + 1L, acc._2 ^ mix(r.getLong(0), r.getLong(1))),
         (x, y) => (x._1 + y._1, x._2 ^ y._2))
-      (pinned, release, st)
+    def step(e: DataFrame): DataFrame = {
+      // ---- large-star: neighbors v > u re-attach to m = min(N(u) ∪ u).
+      // Oriented-input simplification (r19, guide §2.3/§2.4): with
+      // every stored edge (src > dst), a node's strictly-LARGER sym
+      // neighbors can never contribute to its min — every incoming
+      // src exceeds u — so m(u) = least(u, min outgoing dst), over
+      // the stored edges alone. That deletes the symmetric union
+      // (the per-round aggregation reads half the rows) and
+      // collapses the emission rule to one attach join on dst: for
+      // an oriented edge (s, d), the only sym pair passing the
+      // v > u filter is (d, s), emitting (s, m(d)). Nodes with no
+      // outgoing edge have m = themselves → left join + coalesce.
+      val mins = e.groupBy(col("src").as("u"))
+        .agg(min(col("dst")).as("mn"))
+        .select(col("u"), least(col("u"), col("mn")).as("m"))
+      val ls = e.join(mins, col("dst") === col("u"), "left")
+        .select(col("src"), coalesce(col("m"), col("dst")).as("dst"))
+      // ls is deliberately NOT deduped: min() is duplicate-
+      // insensitive and the round's single distinct below covers
+      // the emissions — the old per-phase distinct was one of the
+      // round's six exchanges.
+      // ---- small-star on the (src > dst)-oriented output: each
+      // node's smaller neighborhood collapses onto its minimum.
+      // Both small-star emissions — (b, m) per edge and (u, m) per
+      // node — come off ONE pass over the attach join via a
+      // two-element explode (the old form unioned a second read of
+      // the smins subplan); duplicates and the b = m case fall to
+      // the same filter + distinct.
+      val smins = ls.groupBy(col("src").as("u")).agg(min(col("dst")).as("m"))
+      ls.join(smins, col("src") === col("u"))
+        .select(explode(array(
+          struct(col("dst").as("src"), col("m").as("dst")),
+          struct(col("src").as("src"), col("m").as("dst")))).as("p"))
+        .select(col("p.src").as("src"), col("p.dst").as("dst"))
+        .filter(col("src") =!= col("dst"))
+        // hash(dst) satisfies the distinct's clustering (one
+        // exchange, not two) and is the layout the NEXT round's
+        // attach join reads exchange-free through the pin
+        .repartition(col("dst")).distinct()
     }
-    val runStats = PhaseStats.start(spark.sparkContext, "dedup-cc")
-    try {
+    val (e, rounds) = Pin.iterate[(Long, Long)](spark.sparkContext, CcTag,
+        maxRounds, checkpointDir,
+        s"connectedComponents did not converge in $maxRounds rounds — " +
+          "the alternating star algorithm needs O(log n) rounds, so this " +
+          "indicates edge-set corruption (e.g. NULL ids), not graph size") {
       // phase 0 = prepare: orienting + pinning e0 materializes the
       // caller's edge-derivation lineage (same prepare-cost attribution
       // as keepListToFixpoint's round 0)
-      var (e, releaseE, prev) = runStats.phase(0)(pinWithStats(e0))
-      var round = 0
-      var converged = false
-      while (!converged && round < maxRounds) {
-        val (stepped, releaseStepped, cur) = runStats.phase(round + 1) {
-          // ---- large-star: neighbors v > u re-attach to m = min(N(u) ∪ u).
-          // Oriented-input simplification (r19, guide §2.3/§2.4): with
-          // every stored edge (src > dst), a node's strictly-LARGER sym
-          // neighbors can never contribute to its min — every incoming
-          // src exceeds u — so m(u) = least(u, min outgoing dst), over
-          // the stored edges alone. That deletes the symmetric union
-          // (the per-round aggregation reads half the rows) and
-          // collapses the emission rule to one attach join on dst: for
-          // an oriented edge (s, d), the only sym pair passing the
-          // v > u filter is (d, s), emitting (s, m(d)). Nodes with no
-          // outgoing edge have m = themselves → left join + coalesce.
-          val mins = e.groupBy(col("src").as("u"))
-            .agg(min(col("dst")).as("mn"))
-            .select(col("u"), least(col("u"), col("mn")).as("m"))
-          val ls = e.join(mins, col("dst") === col("u"), "left")
-            .select(col("src"), coalesce(col("m"), col("dst")).as("dst"))
-          // ls is deliberately NOT deduped: min() is duplicate-
-          // insensitive and the round's single distinct below covers
-          // the emissions — the old per-phase distinct was one of the
-          // round's six exchanges.
-          // ---- small-star on the (src > dst)-oriented output: each
-          // node's smaller neighborhood collapses onto its minimum.
-          // Both small-star emissions — (b, m) per edge and (u, m) per
-          // node — come off ONE pass over the attach join via a
-          // two-element explode (the old form unioned a second read of
-          // the smins subplan); duplicates and the b = m case fall to
-          // the same filter + distinct.
-          val smins = ls.groupBy(col("src").as("u")).agg(min(col("dst")).as("m"))
-          val ss = ls.join(smins, col("src") === col("u"))
-            .select(explode(array(
-              struct(col("dst").as("src"), col("m").as("dst")),
-              struct(col("src").as("src"), col("m").as("dst")))).as("p"))
-            .select(col("p.src").as("src"), col("p.dst").as("dst"))
-            .filter(col("src") =!= col("dst"))
-            // hash(dst) satisfies the distinct's clustering (one
-            // exchange, not two) and is the layout the NEXT round's
-            // attach join reads exchange-free through the pin
-            .repartition(col("dst")).distinct()
-          pinWithStats(ss)
-        }
-        releaseE()
-        e = stepped; releaseE = releaseStepped
-        converged = cur == prev
-        prev = cur
-        round += 1
-      }
-      if (!converged) releaseE()
-      require(converged,
-        s"connectedComponents did not converge in $maxRounds rounds — " +
-          "the alternating star algorithm needs O(log n) rounds, so this " +
-          "indicates edge-set corruption (e.g. NULL ids), not graph size")
-      val handle = runStats.finish()
-      lastCcByThread.set(handle)
-      lastCc = handle
-      // converged edges are stars: every non-root node carries exactly one
-      // edge to its component minimum (min(dst) guards the contract even
-      // if a future edit relaxes the invariant)
-      val reps = e.groupBy(col("src").as("cc_id")).agg(min(col("dst")).as("cc_rep"))
-      val labels = docs.select(col(idCol))
-        .join(reps, col(idCol) === col("cc_id"), "left")
-        .select(col(idCol), coalesce(col("cc_rep"), col(idCol)).as("rep"))
-        .withColumn("is_kept", col(idCol) === col("rep"))
-      (labels, round)
-    } catch { case t: Throwable => runStats.abort(); throw t }
+      val (pinned, rdd, release) = Pin.arm(e0, checkpointDir)
+      Pin.Start(pinned, release, digest(rdd), step)
+    }(fold = digest, done = (round, prev, cur) => round > 0 && cur == prev)
+    // converged edges are stars: every non-root node carries exactly one
+    // edge to its component minimum (min(dst) guards the contract even
+    // if a future edit relaxes the invariant)
+    val reps = e.groupBy(col("src").as("cc_id")).agg(min(col("dst")).as("cc_rep"))
+    val labels = docs.select(col(idCol))
+      .join(reps, col(idCol) === col("cc_id"), "left")
+      .select(col(idCol), coalesce(col("cc_rep"), col(idCol)).as("rep"))
+      .withColumn("is_kept", col(idCol) === col("rep"))
+    (labels, rounds)
   }
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -21,7 +21,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * pinned share table with the 2-column rank table on `src`, one
   * partial-aggregated sum shuffle on `dst`, one left join back onto
   * the node list — the same per-round discipline as
-  * [[Dedup.keepListToFixpoint]]: every round is pinned
+  * [[Dedup.keepListToFixpoint]] (both run on [[Pin.iterate]]): every
+  * round is pinned
   * (localCheckpoint, or RELIABLE checkpoint via `checkpointDir` on a
   * real cluster) so round N's plan never replays rounds 1..N-1, and
   * the previous round's blocks are released as soon as the next is
@@ -58,28 +59,17 @@ object PageRank {
     */
   type RoundStat = PhaseStats.RoundStat
 
-  private val lastRunByThread = new ThreadLocal[PhaseStats.Handle]
-  @volatile private var lastRun: PhaseStats.Handle = PhaseStats.emptyHandle
+  private val Tag = "pagerank"
 
   /** Per-phase stats of the most recent [[run]] — the CALLING THREAD's
     * last run when it has one (so concurrent runs each read their own),
-    * else the JVM-wide most recent. Empty before any run. Shuffle/spill
-    * read from the listener at CALL time — call after the run returns,
-    * not mid-loop.
+    * else the JVM-wide most recent. Empty before any run.
     */
-  def lastRunStats: Seq[RoundStat] = {
-    val tl = lastRunByThread.get()
-    (if (tl != null) tl else lastRun).stats
-  }
+  def lastRunStats: Seq[RoundStat] = PhaseStats.last(Tag).stats
 
-  /** [[lastRunStats]] as one JSON array — the single serialization every
-    * artifact writer (Bench's q146_rounds, the stress harness lines)
-    * shares, so the rows can't drift in shape between artifacts.
-    */
-  def lastRunStatsJson: String = {
-    val tl = lastRunByThread.get()
-    (if (tl != null) tl else lastRun).json
-  }
+  /** [[lastRunStats]] as the shared JSON row shape (Bench's q146_rounds,
+    * the stress harness lines). */
+  def lastRunStatsJson: String = PhaseStats.last(Tag).json
 
   /** Bucketed-by-src edge storage — the cluster-scale layout the class
     * doc prescribes, as code: write the link graph ONCE with this, pass
@@ -111,61 +101,14 @@ object PageRank {
     * @return (nid, pr): one row per node that has at least one
     *         out-edge, pr rounded to 9 decimals
     */
-  /** `pinEvery` — checkpoint INTERVAL (the GraphX pregel discipline):
-    * pin every k-th damped round instead of every round. Rounds between
-    * pins chain as plan depth; the intermediate round's rank vector is
-    * computed exactly once (it feeds only the NEXT round's broadcast
-    * build, which materializes it), so total pass count over the pinned
-    * share table is unchanged while checkpoint writes drop k-fold. The
-    * DEFAULT stays 1: measured at sf0.1 (r18), k = 2 won the isolated
-    * subset A/B slightly (5-round wall 2.59 → 2.35 s) but was tail-
-    * UNSTABLE in full bench context — individual batch phases spiked to
-    * 8+ s (an unpinned intermediate re-materializing under storage
-    * churn), and min-of-5 regressed 3.30 → 4.31 s. Multi-executor row
-    * (r19, ClusterPerf local-cluster[2,16,8192] at sf0.1, warm seconds,
-    * 3 invocations each): k = 1 → 12.76 / 12.90 / 13.20; k = 2 →
-    * 11.93 / 14.20 / 12.28. Min and median favor k = 2 by ~4–5% but
-    * the 14.2 s outlier reproduces the local tail instability, and the
-    * band overlaps — not decisive enough to flip the default off the
-    * measured-stable local winner. The knob exists for cluster runs
-    * where the per-round |V|-row RELIABLE checkpoint write is a real
-    * IO term and storage churn is per-executor; q146 exposes it as
-    * `spark.graft.pagerank.pinEvery`. k bounds lineage depth either way, so the
-    * driver-death-by-lineage guarantee the per-round pin existed for is
-    * kept. Results are bit-identical (the same IEEE/decimal chain,
-    * pinned or not); per-phase attribution reports one row per PIN.
-    */
   def run(edges: DataFrame, iters: Int, damping: Double = 0.85,
-      checkpointDir: Option[String] = None, pinEvery: Int = 1): DataFrame = {
-    require(pinEvery >= 1, s"pinEvery must be >= 1, got $pinEvery")
-    val sc = edges.sparkSession.sparkContext
-    val runStats = PhaseStats.start(sc, "pagerank")
-    try {
-      val prep = runStats.phase(0)(prepare(edges, damping, checkpointDir))
-      var pr = prep.pr
-      var releasePr = prep.releasePr
-      var i = 1
-      var phase = 1
-      while (i <= iters) {
-        val hi = math.min(i + pinEvery - 1, iters)
-        val (p, r) = runStats.phase(phase) {
-          var cur = pr
-          (i to hi).foreach(_ => cur = step(prep, cur, damping))
-          pin(cur, checkpointDir)
-        }
-        releasePr()
-        pr = p; releasePr = r
-        i = hi + 1
-        phase += 1
-      }
-      prep.releaseShares()
-      prep.releaseNodes()
-      val handle = runStats.finish()
-      lastRunByThread.set(handle)
-      lastRun = handle
-      pr
-    } catch { case t: Throwable => runStats.abort(); throw t }
-  }
+      checkpointDir: Option[String] = None): DataFrame =
+    Pin.iterate[Long](edges.sparkSession.sparkContext, Tag, iters,
+        checkpointDir, s"PageRank ran past its $iters rounds") {
+      val prep = prepare(edges, damping, checkpointDir)
+      Pin.Start(prep.pr, prep.releasePr, 0L, step(prep, _, damping),
+        () => { prep.releaseShares(); prep.releaseNodes() })
+    }(fold = _.count(), done = (round, _, _) => round >= iters)._1
 
   /** The pinned per-run frames one damped round steps over (exposed
     * `private[graft]` so PlanShapeSpec can lock the round's physical
@@ -205,7 +148,7 @@ object PageRank {
     // save |V|, not |E|.) Measured at 2M nodes / 40M edges / 5 rounds,
     // together with the UnsafeRow pin below: 156 s + 3.4 GB spill →
     // 32 s + 0.18 GB.
-    val (shares, releaseShares) = pin(sharesOf(edges), checkpointDir)
+    val (shares, releaseShares) = Pin.pin(sharesOf(edges), checkpointDir)
     // node list pinned too: it is |V| rows derived from the |E|-row share
     // table via distinct — left lazy, every round's stepped plan would
     // re-shuffle the EDGE set just to rebuild it (measured at 2M nodes /
@@ -266,19 +209,4 @@ object PageRank {
         (lit(prep.teleport) + lit(damping) * coalesce(col("s"), lit(0.0)))
           .cast(DecimalType(20, 9)).cast(DoubleType).as("pr"))
   }
-
-  /** Dataset-LEVEL pin, shared with [[Dedup]] via [[Pin]]: the
-    * checkpoint stores compact UnsafeRows instead of boxed external
-    * Rows (the row-pin held the 40M-row share table as ~4 GB of objects
-    * — most of the heap, which is what pushed the per-round aggregation
-    * to spill), and the resulting LogicalRDD PRESERVES output
-    * partitioning, which the whole per-round exchange-elision scheme
-    * above rests on. On the reliable path [[Pin]] persists before the
-    * materializing action so `RDD.doCheckpoint`'s file-writing pass
-    * reads cache instead of replaying the plan. Returns the pinned
-    * frame and its release thunk.
-    */
-  private def pin(df: DataFrame,
-      checkpointDir: Option[String] = None): (DataFrame, () => Unit) =
-    Pin.pin(df, checkpointDir)
 }

@@ -7,9 +7,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerApplicationEnd, S
   * [[Dedup]]): wall plus EXACT shuffle-write/spill per phase (round 0 is
   * `prepare`, 1..N the iterations). Attribution is by job group — every
   * stage of a phase's jobs is tagged at submission, so the numbers are
-  * per-phase even though listener delivery is async; read a run's stats
-  * AFTER it returns (e.g. from Bench's artifact writer), when the
-  * listener bus has long drained.
+  * per-phase even though listener delivery is async; a read drains the
+  * listener bus first, so a run's stats are complete as soon as it
+  * returns.
   *
   * Exists because the heaviest iterative headline queries have wide
   * box-sensitivity bands across quiet boxes and every drift flag used
@@ -27,7 +27,19 @@ object PhaseStats {
   final case class RoundStat(round: Int, wallSec: Double,
       shuffleWriteBytes: Long, spillBytes: Long)
 
-  private final class Listener(appId: String) extends SparkListener {
+  private final class Listener(appId: String, context: SparkContext)
+      extends SparkListener {
+    // null once the application ends: stop() drained the bus, and a
+    // handle read later must not keep the stopped context reachable
+    @volatile private var ctx: SparkContext = context
+    def drain(): Unit = {
+      val c = ctx
+      if (c != null) org.apache.spark.sql.GraftSqlBridge.drainListenerBus(c)
+    }
+    // every completed stage's shuffle write and spill, tagged or not —
+    // the context-wide totals [[StageTotals]] reads
+    val totalShuffleWrite = new java.util.concurrent.atomic.AtomicLong
+    val totalSpill = new java.util.concurrent.atomic.AtomicLong
     val stagePhase = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Int)]()
     val bytes = new java.util.concurrent.ConcurrentHashMap[
       (Long, Int), (java.util.concurrent.atomic.AtomicLong,
@@ -55,11 +67,17 @@ object PhaseStats {
     // bus before returning, so by the time stop() completes this entry
     // is gone — without this, a JVM cycling many sessions (notebook,
     // test harness) accumulates one dead Listener per application
-    override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit =
+    override def onApplicationEnd(e: SparkListenerApplicationEnd): Unit = {
       listeners.remove(appId, this)
+      ctx = null
+    }
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       val key = stagePhase.get(sc.stageInfo.stageId)
       val m = sc.stageInfo.taskMetrics
+      if (m != null) {
+        totalShuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        totalSpill.addAndGet(m.diskBytesSpilled)
+      }
       if (key != null && m != null &&
           seen.add((sc.stageInfo.stageId, sc.stageInfo.attemptNumber()))) {
         val acc = bytes.computeIfAbsent(key, _ =>
@@ -92,16 +110,19 @@ object PhaseStats {
     new java.util.concurrent.ConcurrentLinkedDeque[java.lang.Long]()
 
   /** A completed run's readable stats handle: shuffle/spill read from
-    * the listener at CALL time — read after the run returns, not
-    * mid-loop.
+    * the listener at CALL time, after draining the listener bus — read
+    * after the run returns, not mid-loop.
     */
   final class Handle private[PhaseStats] (listener: Listener, epoch: Long,
       walls: Seq[(Int, Double)]) {
-    def stats: Seq[RoundStat] = walls.map { case (r, w) =>
-      val b = listener.bytes.get((epoch, r))
-      RoundStat(r, w,
-        if (b == null) 0L else b._1.get(),
-        if (b == null) 0L else b._2.get())
+    def stats: Seq[RoundStat] = {
+      listener.drain()
+      walls.map { case (r, w) =>
+        val b = listener.bytes.get((epoch, r))
+        RoundStat(r, w,
+          if (b == null) 0L else b._1.get(),
+          if (b == null) 0L else b._2.get())
+      }
     }
     /** [[stats]] as one JSON array — the single serialization every
       * artifact writer (Bench's `*_rounds` fields, the stress harness
@@ -116,7 +137,23 @@ object PhaseStats {
   }
 
   /** An empty handle (before any run of an operator). */
-  val emptyHandle: Handle = new Handle(new Listener(""), -1L, Nil)
+  val emptyHandle: Handle = new Handle(new Listener("", null), -1L, Nil)
+
+  // the last finished run per tag: the calling thread's own first (so
+  // concurrent runs each read theirs), else the JVM's most recent
+  private val lastByThread =
+    ThreadLocal.withInitial[java.util.HashMap[String, Handle]](
+      () => new java.util.HashMap[String, Handle]())
+  private val lastInJvm =
+    new java.util.concurrent.ConcurrentHashMap[String, Handle]()
+
+  /** The handle of the calling thread's (else the JVM's) most recent
+    * finished run started under `tag`; [[emptyHandle]] before any.
+    */
+  def last(tag: String): Handle = {
+    val own = lastByThread.get().get(tag)
+    if (own != null) own else lastInJvm.getOrDefault(tag, emptyHandle)
+  }
 
   /** Number of applications with a live registered listener — the
     * lifecycle observable ([[Listener.onApplicationEnd]] must return
@@ -152,11 +189,15 @@ object PhaseStats {
         saved.foreach { case (k, v) => if (v != null) sc.setLocalProperty(k, v) }
       }
     }
+    /** End the run and record its handle as `tag`'s [[last]]. */
     def finish(): Handle = {
       activeEpochs.remove(epoch)
       recentEpochs.addLast(epoch)
       while (recentEpochs.size > 8) recentEpochs.pollFirst()
-      new Handle(listener, epoch, walls.result())
+      val handle = new Handle(listener, epoch, walls.result())
+      lastByThread.get().put(tag, handle)
+      lastInJvm.put(tag, handle)
+      handle
     }
     def abort(): Unit = activeEpochs.remove(epoch)
   }
@@ -166,9 +207,7 @@ object PhaseStats {
     * epoch.
     */
   def start(sc: SparkContext, tag: String): Run = {
-    val listener = listeners.computeIfAbsent(sc.applicationId, id => {
-      val l = new Listener(id); sc.addSparkListener(l); l
-    })
+    val listener = listenerOf(sc)
     val epoch = epochs.incrementAndGet()
     activeEpochs.add(epoch)
     // bound listener growth: drop only epochs that are neither in-flight
@@ -176,4 +215,36 @@ object PhaseStats {
     listener.prune(e => activeEpochs.contains(e) || recentEpochs.contains(e))
     new Run(sc, listener, epoch, tag)
   }
+
+  private def listenerOf(sc: SparkContext): Listener =
+    listeners.computeIfAbsent(sc.applicationId, id => {
+      val l = new Listener(id, sc); sc.addSparkListener(l); l
+    })
+
+  /** Shuffle-write and spill bytes over every stage a context completes,
+    * read off the same listener the phase rows come from — the one
+    * stage-metrics listener the harnesses (Stress, ClusterPerf) share.
+    */
+  final class StageTotals private[PhaseStats] (listener: Listener) {
+    /** Run `body`; return its wall seconds and the shuffle-write and
+      * spilled bytes of the stages that completed meanwhile. Both reads
+      * drain the listener bus, so an earlier query's late stage events
+      * land before the window and this one's final stage inside it.
+      */
+    def measure(body: => Unit): (Double, Long, Long) = {
+      val (w0, s0) = read()
+      val t0 = System.nanoTime()
+      body
+      val wall = (System.nanoTime() - t0) / 1e9
+      val (w1, s1) = read()
+      (wall, w1 - w0, s1 - s0)
+    }
+    private def read(): (Long, Long) = {
+      listener.drain()
+      (listener.totalShuffleWrite.get(), listener.totalSpill.get())
+    }
+  }
+
+  def stageTotals(sc: SparkContext): StageTotals =
+    new StageTotals(listenerOf(sc))
 }

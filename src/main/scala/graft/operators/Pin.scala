@@ -1,18 +1,21 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
+import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.storage.StorageLevel
 
-/** Shared Dataset-level round pin for the iterative operators
-  * ([[PageRank]], [[Dedup]]): each round checkpoints as compact
-  * UnsafeRow blocks — measured ~3× smaller than the boxed-Row `df.rdd`
-  * pin at PageRank's 40M-edge share table, which is what pushed the
-  * per-round aggregation into spill — and the resulting `LogicalRDD`
-  * PRESERVES output partitioning, so a `repartition(col)` laid down
-  * before the pin survives into every subsequent round's plan instead
-  * of being re-shuffled.
+/** Shared Dataset-level round pin and round loop ([[iterate]]) for the
+  * iterative operators ([[PageRank]], [[Dedup]]): each round
+  * checkpoints as compact UnsafeRow blocks — measured ~3× smaller than
+  * the boxed-Row `df.rdd` pin at PageRank's 40M-edge share table, which
+  * is what pushed the per-round aggregation into spill — and the
+  * resulting `LogicalRDD` PRESERVES output partitioning, so a
+  * `repartition(col)` laid down before the pin survives into every
+  * subsequent round's plan instead of being re-shuffled.
   *
   * Two forms: [[pin]] materializes eagerly (count); [[arm]] leaves
   * materialization to the CALLER's one action on the internal RDD, so a
@@ -80,7 +83,7 @@ private[graft] object Pin {
         try {
           val p = new org.apache.hadoop.fs.Path(f)
           p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
-        } catch { case _: Throwable => () } // cleanup must never fail the job
+        } catch { case NonFatal(_) => () } // cleanup must never fail the job
       }
     }
     (rebased, rdd, release)
@@ -92,5 +95,59 @@ private[graft] object Pin {
     val (pinned, rdd, release) = arm(df, checkpointDir)
     rdd.count()
     (pinned, release)
+  }
+
+  /** What an operator's phase 0 hands [[iterate]]: round 0's frame, its
+    * release thunk and fold value, the one-round `step` over the inputs
+    * the prepare pinned, and the release of those inputs (run when the
+    * loop ends, converged or not).
+    */
+  final case class Start[S](state: DataFrame, release: () => Unit, stat: S,
+      step: DataFrame => DataFrame, releaseInputs: () => Unit = () => ())
+
+  /** The pinned-round loop of the iterative operators. Phase 0 runs
+    * `prepare`. Each round r ≥ 1 arms `step(round r−1)` and materializes
+    * it with ONE action, `fold` over the armed rows, so a convergence
+    * stat rides in the pass that writes the checkpoint. Round r−1 is
+    * released only then (round r's checkpoint truncated the lineage
+    * through it). At each round boundary `done(r, stat r−1, stat r)`
+    * decides (round 0 passes its own stat twice). Still not done after
+    * `maxRounds`, the loop releases its last round and fails with
+    * `notConverged`; on success the last round's storage survives, since
+    * the returned frame reads from it. Every phase runs under
+    * [[PhaseStats]], and the finished run is `PhaseStats.last(tag)`.
+    * Checkpointing every round is what keeps round N's plan from
+    * replaying rounds 1..N−1 (the plan would double per round).
+    * @return the last round's pinned frame and the number of rounds
+    */
+  def iterate[S](sc: SparkContext, tag: String, maxRounds: Int,
+      checkpointDir: Option[String], notConverged: => String)(
+      prepare: => Start[S])(
+      fold: RDD[InternalRow] => S, done: (Int, S, S) => Boolean)
+      : (DataFrame, Int) = {
+    val run = PhaseStats.start(sc, tag)
+    try {
+      val start = run.phase(0)(prepare)
+      var (state, release, prev, stat) =
+        (start.state, start.release, start.stat, start.stat)
+      var round = 0
+      try {
+        while (!done(round, prev, stat)) {
+          if (round >= maxRounds) {
+            release()
+            throw new IllegalArgumentException(notConverged)
+          }
+          round += 1
+          val (next, releaseNext, nextStat) = run.phase(round) {
+            val (pinned, rdd, rel) = arm(start.step(state), checkpointDir)
+            (pinned, rel, fold(rdd))
+          }
+          release()
+          state = next; release = releaseNext; prev = stat; stat = nextStat
+        }
+      } finally start.releaseInputs()
+      run.finish()
+      (state, round)
+    } catch { case t: Throwable => run.abort(); throw t }
   }
 }

@@ -1,5 +1,7 @@
 package graft.queries
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -47,7 +49,6 @@ object PipelineQueries {
     */
   private[graft] def spreadForKernels(df: DataFrame,
       key: String = "doc_id"): DataFrame = {
-    import scala.util.control.NonFatal
     val s = df.sparkSession
     // NonFatal, not Throwable (r19): an OOM/fatal error here must
     // propagate, not be masked into "spread off"
@@ -261,7 +262,7 @@ object PipelineQueries {
       // this, repeated Verify/Bench runs accumulate disk without bound.
       // A dir whose pid is no longer alive can never be read again (the
       // path is only reachable through that process's Models cache).
-      sweepDeadIndexDirs(root)
+      sweepDeadPidDirs(root, "^[0-9a-f]{32}-p(\\d+)$".r)
       val p = s"$root/$dirMd5-p${ProcessHandle.current().pid()}/$kind"
       val cents = ivfCents(s, d)
       val books = if (residual) pqResidualBooks(s, d) else pqBooks(s, d)
@@ -277,26 +278,27 @@ object PipelineQueries {
     s.read.parquet(path)
   }
 
-  /** Delete `<root>/<md5>-p<pid>` index dirs whose owning pid is dead
-    * (see [[ivfPqIndex]]). Best-effort: any IO failure (a dir another
-    * sweep already removed, permissions) is ignored — a leftover dir
-    * costs disk, not correctness.
+  /** Delete the dirs directly under `root` whose name matches `name`
+    * (its first group the owning pid) and whose owner is dead — crash
+    * leftovers of [[ivfPqIndex]] and q160's edge-base staging.
+    * Best-effort: any IO failure (a dir another sweep already removed,
+    * permissions) is ignored — a leftover dir costs disk, not
+    * correctness.
     *
     * Deliberately `java.io.File`, NOT the Hadoop FS API (the one
     * justified local-FS use on the product path — see the PLANS.md
     * filesystem inventory): the pid-liveness probe is meaningful only
-    * for processes on THIS host, so on a shared `hdfs://`-like index
-    * root — where other hosts' pids are unknowable — sweeping would be
-    * WRONG (it would reap a live remote JVM's index). There the local
-    * listing correctly degrades to a no-op and retention belongs to the
+    * for processes on THIS host, so on a shared `hdfs://`-like root —
+    * where other hosts' pids are unknowable — sweeping would be WRONG
+    * (it would reap a live remote JVM's dir). There the local listing
+    * correctly degrades to a no-op and retention belongs to the
     * deployment.
     */
-  private def sweepDeadIndexDirs(root: String): Unit =
+  private def sweepDeadPidDirs(root: String, name: scala.util.matching.Regex): Unit =
     try {
       val dirs = new java.io.File(root).listFiles()
       if (dirs != null) dirs.foreach { f =>
-        val m = "^[0-9a-f]{32}-p(\\d+)$".r.findFirstMatchIn(f.getName)
-        val dead = m.exists { mm =>
+        val dead = name.findFirstMatchIn(f.getName).exists { mm =>
           val pid = mm.group(1).toLong
           val h = ProcessHandle.of(pid)
           pid != ProcessHandle.current().pid() &&
@@ -310,7 +312,7 @@ object PipelineQueries {
           }
         } catch { case _: java.io.IOException => () }
       }
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
   /** The query vector, collected once (1 row — the ANN-query contract:
     * a search receives its query as a literal, not as a table).
@@ -4085,15 +4087,7 @@ object PipelineQueries {
           (col("ck") + lit(1000000L)).as("dst"), col("w"))
         .union(base.select((col("ck") + lit(1000000L)).as("src"),
           col("sk").as("dst"), col("w")))
-      // spark.graft.pagerank.pinEvery — checkpoint-interval dial (see
-      // PageRank.run's scaladoc): default 1 stays the measured local
-      // winner; the dial exists so the multi-executor rig (ClusterPerf
-      // on local-cluster — real per-executor storage churn) can A/B
-      // k = 2 without a code edit. Results are bit-identical either way.
-      val pinEvery =
-        try s.conf.get("spark.graft.pagerank.pinEvery", "1").toInt
-        catch { case scala.util.control.NonFatal(_) => 1 }
-      graft.operators.PageRank.run(edges, iters = 5, pinEvery = pinEvery)
+      graft.operators.PageRank.run(edges, iters = 5)
         .orderBy(col("nid"))
     }, Some(q146OracleSql), bench = true),
 
@@ -4425,42 +4419,11 @@ object PipelineQueries {
     */
   private lazy val edgeBaseHostToken: String =
     (try java.net.InetAddress.getLocalHost.getHostName
-     catch { case _: Throwable => "unknown" })
+     catch { case NonFatal(_) => "unknown" })
       .toLowerCase.replaceAll("[^a-z0-9]", "").take(32) match {
       case "" => "unknown"
       case h => h
     }
-
-  /** Delete `graft_q160_edgebase_<md5>_h<host>_p<pid>_<seq>` warehouse
-    * dirs whose owning pid is dead AND whose host token is THIS host —
-    * crash leftovers (the owner's finally never ran). Deliberately
-    * local-FS-only, same argument as [[sweepDeadIndexDirs]]: on a
-    * remote-scheme warehouse the listing degrades to a no-op and
-    * retention belongs to the deployment. Best-effort.
-    */
-  private def sweepDeadEdgeBaseDirs(s: SparkSession): Unit =
-    try {
-      val dirs = new java.io.File(s.conf.get("spark.sql.warehouse.dir"))
-        .listFiles()
-      if (dirs != null) dirs.foreach { f =>
-        val m = ("^graft_q160_edgebase_[0-9a-f]{32}_h" +
-          java.util.regex.Pattern.quote(edgeBaseHostToken) +
-          "_p(\\d+)_\\d+$").r.findFirstMatchIn(f.getName)
-        val dead = m.exists { mm =>
-          val pid = mm.group(1).toLong
-          val h = ProcessHandle.of(pid)
-          pid != ProcessHandle.current().pid() &&
-            !(h.isPresent && h.get.isAlive)
-        }
-        if (dead) try {
-          import scala.jdk.CollectionConverters._
-          scala.util.Using.resource(java.nio.file.Files.walk(f.toPath)) { st =>
-            st.iterator().asScala.toSeq.reverse
-              .foreach(p => java.nio.file.Files.deleteIfExists(p))
-          }
-        } catch { case _: java.io.IOException => () }
-      }
-    } catch { case _: Throwable => () }
 
   private[graft] def q160Frame(s: SparkSession, d: String, budget: Long,
       stageRun: Option[(Int, String, () => DataFrame) => DataFrame] = None,
@@ -4533,12 +4496,12 @@ object PipelineQueries {
       // needs the table
       def dropStaged(tbl: String): Unit = {
         try s.sql(s"DROP TABLE IF EXISTS $tbl")
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
         val wh = new org.apache.hadoop.fs.Path(
           s.conf.get("spark.sql.warehouse.dir"), tbl.toLowerCase)
         try wh.getFileSystem(s.sparkContext.hadoopConfiguration)
           .delete(wh, true)
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
       var stagedTbl: Option[String] = None
       // auto mode: under the default pinReleasingPrior path (and every
@@ -4590,8 +4553,13 @@ object PipelineQueries {
           // host's dead-pid dirs, then drop THIS name unconditionally:
           // the sweep alone cannot cover an OS-recycled pid whose new
           // JVM restarts the seq at 1 and collides exactly with the
-          // orphan (r17 ADVICE); dropStaged is idempotent and cheap
-          sweepDeadEdgeBaseDirs(s)
+          // orphan (r17 ADVICE); dropStaged is idempotent and cheap.
+          // The sweep matches this host's token only (see
+          // edgeBaseHostToken)
+          sweepDeadPidDirs(s.conf.get("spark.sql.warehouse.dir"),
+            ("^graft_q160_edgebase_[0-9a-f]{32}_h" +
+              java.util.regex.Pattern.quote(edgeBaseHostToken) +
+              "_p(\\d+)_\\d+$").r)
           dropStaged(tbl)
           edgeBase(d1, spread = false).write.mode("overwrite").format("parquet")
             .bucketBy(nb, "doc_id").sortBy("doc_id").saveAsTable(tbl)

@@ -127,10 +127,17 @@ object CensusReporterDecoder {
     }
     val columns = lead ++ dataCols.result()
 
+    // json4s `\` scans every field per call, so per-geo and per-code
+    // lookups would make decoding quadratic: index each object once
+    def fieldsOf(v: JValue): Map[String, JValue] = v match {
+      case JObject(fields) => fields.toMap
+      case _ => Map.empty
+    }
     val geos = (data \ "data") match {
       case JObject(fields) => fields
       case _ => Nil
     }
+    val geography = fieldsOf(data \ "geography")
     def num(v: JValue): Any = v match {
       case JDouble(x) => x
       case JInt(x) => x.toDouble
@@ -139,11 +146,12 @@ object CensusReporterDecoder {
       case JNull | JNothing => null
       case other => other.extract[Double]
     }
-    val rows = geos.map { case (geo, _) =>
-      val geoName = (data \ "geography" \ geo \ "name").extract[String]
-      val tbl = data \ "data" \ geo \ tableId
+    val rows = geos.map { case (geo, geoData) =>
+      val geoName = (geography.getOrElse(geo, JNothing) \ "name").extract[String]
+      val tbl = geoData \ tableId
+      val (estimate, error) = (fieldsOf(tbl \ "estimate"), fieldsOf(tbl \ "error"))
       val cells = columnCodes.flatMap { code =>
-        Seq(num(tbl \ "estimate" \ code), num(tbl \ "error" \ code))
+        Seq(num(estimate.getOrElse(code, JNothing)), num(error.getOrElse(code, JNothing)))
       }
       Seq[Any](geo, geoName) ++ cells
     }

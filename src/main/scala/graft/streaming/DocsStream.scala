@@ -427,7 +427,7 @@ object DocsStream {
   private def deletePath(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     try p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-    catch { case _: Throwable => () }
+    catch { case scala.util.control.NonFatal(_) => () }
   }
 
   /** The (doc_id, rep) parts that constitute the labeling as of (but

@@ -33,10 +33,20 @@ object GraftSqlBridge {
   /** Block until the async listener bus has delivered every queued
     * event (private[spark] in core): a harness reading accumulated
     * SparkListener metrics immediately after an action races the bus —
-    * the final stage's completion event may still be queued.
+    * the final stage's completion event may still be queued. A stopped
+    * context's bus was drained by `stop()`; a bus that never empties
+    * within the timeout is reported, not thrown, since the caller is
+    * only reading metrics.
     */
-  def drainListenerBus(spark: SparkSession, timeoutMs: Long = 30000L): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
+  def drainListenerBus(sc: org.apache.spark.SparkContext,
+      timeoutMs: Long = 30000L): Unit =
+    if (!sc.isStopped) {
+      try sc.listenerBus.waitUntilEmpty(timeoutMs)
+      catch { case _: java.util.concurrent.TimeoutException =>
+        System.err.println(s"[metrics] WARNING: listener bus not drained " +
+          s"in $timeoutMs ms; stage metrics read now may be incomplete")
+      }
+    }
 
   /** The checkpointed InternalRow RDD behind a `Dataset.checkpoint` /
     * `localCheckpoint` result (its plan is a single `LogicalRDD`) — the

@@ -366,4 +366,34 @@ class DedupSpec extends AnyFunSuite {
     assert(spark.sparkContext.getPersistentRDDs.size <= before,
       s"non-convergence leaked blocks: ${spark.sparkContext.getPersistentRDDs.keys}")
   }
+
+  test("concurrent star CC runs each read their own rounds from lastCcStatsJson") {
+    // two threads, two graphs with different round counts: the per-
+    // thread last-run registry must hand each thread its own phase rows
+    // (round 0 = prepare, then one row per round). Both read only after
+    // both runs finished, so a JVM-wide slot would fail one of them.
+    val bothDone = new java.util.concurrent.CountDownLatch(2)
+    def ccOn(n: Long): (Int, String) = {
+      val rounds = try {
+        val (out, r) = Dedup.connectedComponentsWithRounds(
+          (1L to n).toDF("doc_id"), (1L until n).map(i => i -> (i + 1)).toDF("src", "dst"))
+        assert(out.filter(col("rep") =!= 1L).count() == 0)
+        r
+      } finally bothDone.countDown()
+      assert(bothDone.await(5, java.util.concurrent.TimeUnit.MINUTES))
+      (rounds, Dedup.lastCcStatsJson)
+    }
+    val sizes = Seq(2L, 512L)
+    val got = new java.util.concurrent.ConcurrentHashMap[Long, Either[Throwable, (Int, String)]]()
+    val threads = sizes.map(n => new Thread(() =>
+      got.put(n, try Right(ccOn(n)) catch { case t: Throwable => Left(t) })))
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    val results = sizes.map(n => got.get(n).fold(t => throw t, identity))
+    assert(results.map(_._1).distinct.size == 2, s"round counts must differ: $results")
+    results.foreach { case (rounds, json) =>
+      val phases = "\"round\":(\\d+)".r.findAllMatchIn(json).map(_.group(1).toInt).toSeq
+      assert(phases == (0 to rounds), s"$rounds rounds but phase rows $phases")
+    }
+  }
 }

@@ -64,4 +64,23 @@ class PageRankSpec extends AnyFunSuite {
       .orderBy("nid").collect().toSeq
     assert(a == b)
   }
+
+  test("iters = k yields exactly k + 1 phase rows: prepare, then one per round") {
+    val edges = sym((1L, 2L, 5L), (1L, 3L, 1L), (1L, 4L, 1L))
+    for (k <- Seq(1, 3)) {
+      PageRank.run(edges, iters = k).collect()
+      assert(PageRank.lastRunStats.map(_.round) == (0 to k))
+    }
+  }
+
+  test("a run leaves only its returned round pinned") {
+    val edges = sym((1L, 2L, 5L), (1L, 3L, 1L), (1L, 4L, 1L), (4L, 5L, 2L))
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet.toSet
+    val out = PageRank.run(edges, iters = 4)
+    assert(out.count() == 5L)
+    // shares, node list and rounds 1..3 released; round 4 backs `out`
+    val left = sc.getPersistentRDDs.keySet.toSet -- before
+    assert(left.size <= 1, s"leaked pinned blocks: $left")
+  }
 }

@@ -552,6 +552,10 @@ object StreamStress {
       val d3 = diff(
         ids(graft.queries.PipelineQueries.q160GateFrom(sig3)),
         ids(stages(3)))
+      // ... and BEFORE the gate: the decontaminated ids over the batch
+      // stage-2 survivors, so a divergence on a doc the gate drops shows
+      val d3pre = diff(ids(sig3), ids(graft.queries.PipelineQueries
+        .q160Decontaminated(docs, tablesDir, stages(2), evalPred)))
       val dOut = diff(streamOut, batchOut)
       // over-keep-only law vs the PAIRWISE stage-2 form: pairwise
       // survivors minus stream survivors must be empty under ANY order.
@@ -592,8 +596,10 @@ object StreamStress {
         s""""sig3_rows":${sig3.count()},"out_rows":${streamOut.count()},""" +
         s""""state_ops":${acc.json},""" +
         s""""displaced":$displaced,"overconnect_merges":$overConnect,""" +
-        s""""diff_s1":$d1,"diff_s2":$d2,"diff_s3":$d3,"diff_out":$dOut,""" +
-        s""""parity_ok":${d1 == 0 && d2 == 0 && d3 == 0 && dOut == 0},""" +
+        s""""diff_s1":$d1,"diff_s2":$d2,"diff_s3_pregate":$d3pre,""" +
+        s""""diff_s3":$d3,"diff_out":$dOut,""" +
+        s""""parity_ok":${
+          d1 == 0 && d2 == 0 && d3pre == 0 && d3 == 0 && dOut == 0},""" +
         s""""underkeep_vs_pairwise":$underKeep,""" +
         s""""overkeep_only_ok":${
           if (underKeep < 0) "null" else (underKeep == 0).toString},""" +

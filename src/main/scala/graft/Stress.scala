@@ -401,20 +401,14 @@ object Stress {
           .toSeq.filter(_.nonEmpty).map(_.toInt).map { b =>
           val t0 = System.nanoTime()
           val corpus = queries.Tables(spark, dir, "documents")
-          val sig = graft.functions.TextFunctions
-            .minhashSigNative(col("text"), 2 * b)
-          def mh(j: Int) = element_at(col("sig"), j + 1)
-          val bandStructs = (0 until b).map(i => struct(lit(i).as("band"),
-            concat_ws("_", mh(2 * i), mh(2 * i + 1)).as("bkey")))
-          val banded = corpus
-            .filter(size(split(col("text"), " ")) >= 3)
+          val banded = operators.Dedup.bandRows(corpus
+            .filter(operators.TextOps.eligible(col("text")))
             .select(col("doc_id"),
-              graft.functions.SetFunctions.shingleHashSet(col("text"), 3).as("shset"),
-              sig.as("sig"))
+              operators.TextOps.shingleSet(col("text")).as("shset"),
+              operators.TextOps.signature(col("text"), 2 * b).as("sig"))
             .select(col("doc_id"), col("shset"),
-              explode(array(bandStructs: _*)).as("bk"))
-            .select(col("doc_id"), col("shset"),
-              col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+              array(operators.TextOps.bandKeys(col("sig"), b): _*).as("bkeys")),
+            Seq("doc_id", "shset"), b)
           val aS = banded.select(col("band"), col("bkey"),
             col("doc_id").as("a"), col("shset").as("sha"))
           val bS = banded.select(col("band").as("band_r"), col("bkey").as("bkey_r"),
@@ -644,21 +638,18 @@ object Stress {
         }
         val (warmS, shW, sp) = runs.last
         val (census, repCallsDistinct) = {
-          val sig = graft.functions.TextFunctions
-            .minhashSigNative(col("text"), 8)
-          val bk = (0 until 4).map(b => struct(lit(b).as("band"),
-            concat_ws("_", element_at(col("sig"), 2 * b + 1),
-              element_at(col("sig"), 2 * b + 2)).as("bkey")))
           // cached: the stats aggregate and BOTH sides of the distinct-
           // pair self-join derive from this — uncached, the corpus-wide
           // minhash scan would run three times in a census whose whole
           // point is wall attribution
-          val bandedDocs = queries.Tables(spark, dir, "documents")
-            .filter(size(graft.operators.TextOps.tokens(col("text"))) >= 3)
-            .select(col("doc_id"), sig.as("sig"))
-            .select(col("doc_id"), explode(array(bk: _*)).as("s"))
-            .select(col("doc_id"), col("s.band").as("band"),
-              col("s.bkey").as("bkey"))
+          val bandedDocs = operators.Dedup.bandRows(
+            queries.Tables(spark, dir, "documents")
+              .filter(operators.TextOps.eligible(col("text")))
+              .select(col("doc_id"),
+                operators.TextOps.signature(col("text")).as("sig"))
+              .select(col("doc_id"),
+                array(operators.TextOps.bandKeys(col("sig")): _*).as("bkeys")),
+            Seq("doc_id"))
             .cache()
           // coalesce: a corpus with zero multi-member buckets sums to
           // NULL, which used to NPE the getLongs below
@@ -673,10 +664,7 @@ object Stress {
           // the headline kernel-call number is the set the id-join plan
           // actually verifies: cross-band-DISTINCT (rep, member) pairs;
           // the per-band Σ(n−1) rides along as the labeled upper bound
-          val reps = bandedDocs.groupBy(col("band"), col("bkey"))
-            .agg(min(col("doc_id")).as("rep"))
-          val distinctPairs = bandedDocs.join(reps, Seq("band", "bkey"))
-            .filter(col("doc_id") =!= col("rep"))
+          val distinctPairs = operators.Dedup.repPairs(bandedDocs)
             .select(col("rep"), col("doc_id")).distinct().count()
           bandedDocs.unpersist()
           (stats, distinctPairs)

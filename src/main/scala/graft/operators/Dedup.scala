@@ -5,9 +5,16 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
 
-/** Cluster-representative selection for near-dup keep-lists (the step
-  * after candidate generation + verification — see
-  * `graft.queries.PipelineQueries` q72/q87).
+/** Near-dup banding frames and cluster-representative selection for
+  * near-dup keep-lists (the step after candidate generation +
+  * verification — see `graft.queries.PipelineQueries` q72/q87).
+  *
+  * This object is the one home of the near-dup law's FRAME-level parts:
+  * the per-(doc, band) explode ([[bandRows]]), the band-sharing pair
+  * join ([[bandPairs]]), the bucket-size probe with its singleton prune
+  * and hot split ([[probeBuckets]]) and the bucket-minimum rep pairs
+  * ([[repPairs]]). The per-doc column laws they band over live in
+  * [[TextOps]].
   *
   * [[keepListToFixpoint]] runs min-label propagation over the verified
   * edge set until no label changes, which yields the minimum id of each
@@ -47,6 +54,86 @@ object Dedup {
   // and without per-round rows in the artifact every flag burns an A/B
   private val FixpointTag = "dedup-fixpoint"
   private val CcTag = "dedup-cc"
+
+  /** One row per (doc, band) of a frame carrying the `bkeys` array
+    * ([[TextOps.bandKeys]]): the `keep` columns, then `band` and its
+    * `bkey`. The explode runs over a LITERAL band-index array, not
+    * `posexplode(bkeys)`: InferFiltersFromGenerate synthesizes
+    * `size(<input>) > 0` from a generate, and with the computed array as
+    * input that filter pushes below the projection with the full bkeys
+    * expression INLINED — eight minhash_sig calls per doc in the Filter
+    * (measured 9x kernel cost). The literal input folds the inferred
+    * filter away; the materialized bkeys attribute is then indexed per
+    * emitted row.
+    */
+  def bandRows(base: DataFrame, keep: Seq[String], nBands: Int = 4): DataFrame = {
+    val in = if (keep.contains("bkeys")) keep else keep :+ "bkeys"
+    base.select(in.map(col) :+
+        explode(array((0 until nBands).map(lit(_)): _*)).as("band"): _*)
+      .select(keep.map(col) ++ Seq(col("band"),
+        element_at(col("bkeys"), col("band") + 1).as("bkey")): _*)
+  }
+
+  /** Distinct candidate pairs `(doc_a < doc_b)` sharing any band bucket
+    * of a [[bandRows]]-shaped frame — the plain self-join form. */
+  def bandPairs(bands: DataFrame): DataFrame =
+    bands.as("x").join(bands.as("y"),
+        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
+          col("x.doc_id") < col("y.doc_id"))
+      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b")).distinct()
+
+  /** Bucket-minimum rep pairs: each [[bandRows]] row whose (band, bkey)
+    * bucket holds a smaller doc_id, with that minimum as column `rep` —
+    * the rep-anchoring law shared by the batch twins of the streams,
+    * q157 and q161's stage 2. */
+  def repPairs(bands: DataFrame, rep: String = "rep"): DataFrame = {
+    val reps = bands.groupBy(col("band"), col("bkey"))
+      .agg(min(col("doc_id")).as(rep))
+    bands.join(reps, Seq("band", "bkey")).filter(col(rep) < col("doc_id"))
+  }
+
+  /** [[probeBuckets]]' result: the payload rows to verify bucket-locally
+    * and, when any bucket is over `hotCap`, the hot `(band, bkey)` keys
+    * for the caller's pair-join fallback. */
+  final case class Buckets(small: DataFrame, hot: Option[DataFrame])
+
+  /** The bucket-size probe over a light `(band, bkey)` frame, applied to
+    * a banded `payload` frame:
+    *  - SINGLETON buckets (no partner, so no pair) are dropped before any
+    *    payload moves: the multi-member bucket keys broadcast back as a
+    *    semi-join. When that key set is itself too big to broadcast
+    *    (over `pruneBroadcastLimit` — the dup-heavy regime, where most
+    *    payloads are needed anyway) the prune is skipped.
+    *  - buckets over `hotCap` members (boilerplate band values, the skew
+    *    case) leave the payload via an anti-join and come back as
+    *    [[Buckets.hot]], so a bucket-collect stays O(hotCap × payload).
+    * Both counts ride ONE narrow aggregate, memoized under
+    * `probeKey` + `hotCap` like the trained models: the bucket-size
+    * profile is a corpus property, and re-probing on every construction
+    * would re-run the signature pass each bench round. Distinct inputs
+    * MUST use distinct keys. Absent subplans never enter the plan.
+    */
+  def probeBuckets(light: DataFrame, payload: DataFrame, probeKey: String,
+      hotCap: Int, pruneBroadcastLimit: Long): Buckets = {
+    val sizes = light.groupBy(col("band"), col("bkey"))
+      .agg(count(lit(1)).as("n"))
+    val multi = sizes.filter(col("n") >= 2).select(col("band"), col("bkey"))
+    val hot = sizes.filter(col("n") > hotCap).select(col("band"), col("bkey"))
+    val (nMulti, nHot) = Models.cached(s"$probeKey:hotCap=$hotCap") {
+      val probe = sizes.agg(
+        sum(when(col("n") >= 2, 1L).otherwise(0L)),
+        sum(when(col("n") > hotCap, 1L).otherwise(0L))).head()
+      (java.lang.Long.valueOf(probe.getLong(0)),
+        java.lang.Long.valueOf(probe.getLong(1)))
+    }
+    val pruned = if (nMulti <= pruneBroadcastLimit)
+      payload.join(broadcast(multi), Seq("band", "bkey"), "left_semi")
+    else payload
+    if (nHot > 0)
+      Buckets(pruned.join(broadcast(hot), Seq("band", "bkey"), "left_anti"),
+        Some(hot))
+    else Buckets(pruned, None)
+  }
 
   /** Per-phase stats of the calling thread's (else the JVM's) most
     * recent [[keepListToFixpoint]], as the shared JSON row shape. */

@@ -9,11 +9,58 @@ import org.apache.spark.sql.functions._
   * and everything is a Catalyst expression (no UDFs), so the operators
   * stay codegen-friendly and distribute trivially: each document's
   * signature is computed map-side with zero shuffles.
+  *
+  * This object is the one home of the near-dup law's PER-DOC column
+  * laws — eligibility, the MinHash signature, the band keys, the k=3
+  * shingle-hash set and the canonical class key. The batch queries, the
+  * streaming twins and the stress harness all build from these, so they
+  * cannot drift apart; the FRAME-level banding (band explode, bucket
+  * probe, rep pairs) lives in [[Dedup]].
   */
 object TextOps {
 
   /** Whitespace tokens of a single-space-separated text column. */
   def tokens(text: Column): Column = split(text, " ")
+
+  /** Near-dup eligibility: at least 3 tokens, i.e. at least one k=3
+    * shingle. Ineligible docs have no signature and no edges. */
+  def eligible(text: Column): Column = size(tokens(text)) >= 3
+
+  /** The MinHash signature: `nHashes` seeded minima over the k=3
+    * shingles, from the fused native [[graft.functions.MinHashSig]]
+    * kernel (bit-identical to the [[minhash]] HOF composition). */
+  def signature(text: Column, nHashes: Int = 8): Column =
+    graft.functions.TextFunctions.minhashSigNative(text, nHashes)
+
+  /** LSH band keys over a signature array: band b joins components 2b
+    * and 2b+1 with "_" — `nBands` bands of 2 rows. The DuckDB oracles
+    * render the same law as `duckBandsCte`. */
+  def bandKeys(sig: Column, nBands: Int = 4): Seq[Column] =
+    bandKeysOf(j => element_at(sig, j + 1), nBands)
+
+  /** [[bandKeys]] over signature components held as separate columns
+    * (`mh(j)` is component j). */
+  def bandKeysOf(mh: Int => Column, nBands: Int = 4): Seq[Column] =
+    (0 until nBands).map(b => concat_ws("_", mh(2 * b), mh(2 * b + 1)))
+
+  /** Band keys as an array of `(band, bkey)` structs, for the sites that
+    * explode the keys straight off the signature. */
+  def bandStructs(keys: Seq[Column]): Column =
+    array(keys.zipWithIndex.map { case (k, b) =>
+      struct(lit(b).as("band"), k.as("bkey"))
+    }: _*)
+
+  /** The verification payload: the sorted distinct 56-bit k=3
+    * shingle-hash set ([[graft.functions.ShingleHashSet]]). */
+  def shingleSet(text: Column): Column =
+    graft.functions.SetFunctions.shingleHashSet(text, 3)
+
+  /** Canonical exact-dedup class key: md5 of the NFC-normalized,
+    * casefolded, whitespace-collapsed, trimmed text. Null text gives a
+    * null key, so all null texts form one class. */
+  def canonicalKey(text: Column): Column =
+    md5(trim(regexp_replace(lower(
+      graft.functions.TextFunctions.nfcNormalize(text)), "\\s+", " ")))
 
   /** Word k-shingles as space-joined strings (k=3). */
   def shingles3(ws: Column): Column = shinglesK(ws, 3)

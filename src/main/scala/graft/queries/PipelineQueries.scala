@@ -365,15 +365,13 @@ object PipelineQueries {
     "fr" -> Seq("es", "le", "de", "re", "en", "on", "nt", "ou"))
 
   /** MinHash signature frame (Spark side), shared by q42/q43. The
-    * signature comes from the fused native [[graft.functions.MinHashSig]]
-    * expression (bit-identical to the HOF composition, spec-locked) —
-    * the HOF form interpreted ~10us per shingle inside the scan stage.
+    * native signature kernel replaced a HOF form that interpreted ~10us
+    * per shingle inside the scan stage.
     */
   private def minhashSig(s: SparkSession, d: String, nHashes: Int): DataFrame = {
-    val sig = graft.functions.TextFunctions.minhashSigNative(col("text"), nHashes)
     spreadForKernels(docs(s, d))
-      .filter(size(TextOps.tokens(col("text"))) >= 3)
-      .select(col("doc_id"), sig.as("sig"))
+      .filter(TextOps.eligible(col("text")))
+      .select(col("doc_id"), TextOps.signature(col("text"), nHashes).as("sig"))
       .select(col("doc_id") +: (0 until nHashes).map(j =>
         element_at(col("sig"), j + 1).as(s"mh$j")): _*)
   }
@@ -523,14 +521,6 @@ object PipelineQueries {
       sig AS (SELECT doc_id, $mh FROM s)"""
   }
 
-  /** The near-dup edge kernel shared by q72/q87: MinHash-banding
-    * candidates (q43's 4×2 bands over an 8-hash signature) verified at
-    * exact Jaccard ≥ 0.5, emitted in both directions as (src, dst).
-    */
-  /** Distinct banded candidate pairs (doc_a < doc_b) from q43's 4×2
-    * MinHash banding — the shared candidate kernel of the Jaccard
-    * (q72/q87) and containment (q122) verifiers.
-    */
   /** Eagerly localCheckpoint `df`, releasing the storage blocks of the
     * PREVIOUS checkpoint taken under the same key. Bench loops construct
     * q72 afresh per timed run (5+ constructions back to back); each
@@ -555,16 +545,15 @@ object PipelineQueries {
     cp
   }
 
+  /** Distinct banded candidate pairs (doc_a < doc_b) over the q42
+    * signature frame — the candidate kernel of q43, q84 and the
+    * containment verifier (q122).
+    */
   private def bandedCandidatePairs(s: SparkSession, d: String): DataFrame = {
-    val sig = minhashSig(s, d, 8)
-    val bands = (0 until 4).map(b => struct(lit(b).as("band"),
-      concat_ws("_", col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")).as("bkey")))
-    val exploded = sig.select(col("doc_id"), explode(array(bands: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    exploded.as("x").join(exploded.as("y"),
-        col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-          col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b")).distinct()
+    val bands = TextOps.bandStructs(TextOps.bandKeysOf(j => col(s"mh$j")))
+    graft.operators.Dedup.bandPairs(minhashSig(s, d, 8)
+      .select(col("doc_id"), explode(bands).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey")))
   }
 
   /** Distinct shingle sets of verification-eligible docs (≥ 3 tokens) as
@@ -574,12 +563,9 @@ object PipelineQueries {
     * string hash-set build (see [[graft.functions.ShingleHashSet]] for
     * the parity contract with the string form).
     */
-  private def shingleSets(s: SparkSession, d: String): DataFrame = {
-    val ws = TextOps.tokens(col("text"))
-    docs(s, d).filter(size(ws) >= 3)
-      .select(col("doc_id"),
-        graft.functions.SetFunctions.shingleHashSet(col("text"), 3).as("shset"))
-  }
+  private def shingleSets(s: SparkSession, d: String): DataFrame =
+    docs(s, d).filter(TextOps.eligible(col("text")))
+      .select(col("doc_id"), TextOps.shingleSet(col("text")).as("shset"))
 
   /** Verified near-dup edges — q43's banded candidates at exact Jaccard
     * ≥ 0.5 — emitted in both directions as (src, dst).
@@ -596,30 +582,18 @@ object PipelineQueries {
     * Each pair is verified once, at its FIRST shared band (later bands
     * skip it by comparing the carried band keys).
     *
-    * Two prunes keep that linear bound TIGHT:
-    *  - SINGLETON buckets (no partner → no pair) are dropped before any
-    *    payload moves: a payload-free band-key pass sizes every bucket,
-    *    and the multi-member bucket keys broadcast back as a semi-join
-    *    on the payload stream. In a mostly-unique corpus (the 100 TB
-    *    common case, and the base testdata) almost every bucket is a
-    *    singleton, so without this the bucket shuffle ships 4× corpus
-    *    payload where the old pair-join form shipped almost nothing
-    *    (measured at sf0.1: 11 MB vs 0.2 MB, 2.4× wall regression).
-    *    When the multi-bucket key set is itself too big to broadcast
-    *    (> ~1M buckets — the dup-heavy regime where most payloads are
-    *    needed anyway) the prune is skipped.
-    *  - Buckets over `hotCap` members — boilerplate band values with
-    *    huge membership, the skew case — fall back to the old pair-join
-    *    form, restricted to those buckets: the collect buffer stays
-    *    O(hotCap × set size) and only pathological buckets pay the
-    *    quadratic shuffle.
-    * Both probes ride one construction-time count over the band-key
-    * aggregate; absent subplans never enter the plan, so the common
-    * case has no dead scans. A pair first banded in a hot bucket that
-    * ALSO shares a later small bucket is emitted by both paths; the
-    * final distinct dedups. The resulting edge SET is bit-identical to
-    * the naive candidates→join→verify composition (spec-locked, all
-    * paths forced).
+    * The [[graft.operators.Dedup.probeBuckets]] prunes keep that linear
+    * bound TIGHT. The singleton prune matters because in a mostly-unique
+    * corpus (the 100 TB common case, and the base testdata) almost every
+    * bucket is a singleton: without it the bucket shuffle ships 4×
+    * corpus payload where the old pair-join form shipped almost nothing
+    * (measured at sf0.1: 11 MB vs 0.2 MB, 2.4× wall regression). Hot
+    * buckets fall back to the old pair-join form, restricted to those
+    * buckets, so only pathological buckets pay the quadratic shuffle. A
+    * pair first banded in a hot bucket that ALSO shares a later small
+    * bucket is emitted by both paths; the final distinct dedups. The
+    * resulting edge SET is bit-identical to the naive
+    * candidates→join→verify composition (spec-locked, all paths forced).
     */
   private[graft] def verifiedEdges(s: SparkSession, d: String,
       hotCap: Int = 256, pruneBroadcastLimit: Long = 1000000L): DataFrame =
@@ -641,19 +615,14 @@ object PipelineQueries {
     */
   private def edgeBase(docsDf: DataFrame,
       extra: Seq[(String, org.apache.spark.sql.Column)] = Nil,
-      spread: Boolean = true): DataFrame = {
-    val nBands = 4
-    val sig = graft.functions.TextFunctions.minhashSigNative(col("text"), 8)
-    val bkeys = array((0 until nBands).map(b => concat_ws("_",
-      element_at(col("sig"), 2 * b + 1), element_at(col("sig"), 2 * b + 2))): _*)
+      spread: Boolean = true): DataFrame =
     (if (spread) spreadForKernels(docsDf) else docsDf)
-      .filter(size(TextOps.tokens(col("text"))) >= 3)
-      .select(Seq(col("doc_id"), sig.as("sig"),
-        graft.functions.SetFunctions.shingleHashSet(col("text"), 3).as("shset")) ++
+      .filter(TextOps.eligible(col("text")))
+      .select(Seq(col("doc_id"), TextOps.signature(col("text")).as("sig"),
+        TextOps.shingleSet(col("text")).as("shset")) ++
         extra.map { case (n, c) => c.as(n) }: _*)
-      .select(Seq(col("doc_id"), bkeys.as("bkeys"), col("shset")) ++
-        extra.map { case (n, _) => col(n) }: _*)
-  }
+      .select(Seq(col("doc_id"), array(TextOps.bandKeys(col("sig")): _*).as("bkeys"),
+        col("shset")) ++ extra.map { case (n, _) => col(n) }: _*)
 
   /** Edge-generation core over a prepared [[edgeBase]]-shaped frame
     * (doc_id, bkeys, shset). `probeKey` keys the memoized bucket-size
@@ -662,68 +631,27 @@ object PipelineQueries {
   private def verifiedEdgesOf(base: DataFrame, probeKey: String,
       hotCap: Int, pruneBroadcastLimit: Long): DataFrame = {
     import graft.functions.SetFunctions
-    val nBands = 4
-    // Explode over a LITERAL band-index array, not posexplode(bkeys):
-    // InferFiltersFromGenerate synthesizes `size(<input>) > 0` from a
-    // generate, and with the computed array as input that filter pushes
-    // below the projection with the full bkeys expression INLINED -
-    // eight minhash_sig calls per doc in the Filter (measured 9x kernel
-    // cost). The literal input folds the inferred filter away; the
-    // materialized bkeys attribute is then indexed per emitted row.
-    val bandIdx = explode(array((0 until nBands).map(lit(_)): _*)).as("band")
+    import graft.operators.Dedup
     // band keys only - the light frame for bucket sizing and hot candidates
-    val explSig = base.select(col("doc_id"), col("bkeys"))
-      .select(col("doc_id"), col("bkeys"), bandIdx)
-      .select(col("doc_id"), col("bkeys"), col("band"),
-        element_at(col("bkeys"), col("band") + 1).as("bkey"))
-    val bucketSizes = explSig.groupBy(col("band"), col("bkey"))
-      .agg(count(lit(1)).as("n"))
-    val multiBuckets = bucketSizes.filter(col("n") >= 2).select(col("band"), col("bkey"))
-    val hotBuckets = bucketSizes.filter(col("n") > hotCap).select(col("band"), col("bkey"))
-    // construction-time probe (ONE narrow agg over the band stream)
-    // deciding which subplans exist and whether the singleton prune can
-    // broadcast; at every tested scale the hot set is empty and the
-    // fallback subplan - with its extra corpus scans - never enters the
-    // plan at all. Memoized per (input, dial) like the trained models:
-    // the bucket-size profile is a corpus property, and re-probing on
-    // every construction would re-run the minhash pass each bench round.
-    val (nMulti, nHot) = Models.cached(
-        s"edgeprobe:$probeKey:hotCap=$hotCap") {
-      val probe = bucketSizes.agg(
-        sum(when(col("n") >= 2, 1L).otherwise(0L)),
-        sum(when(col("n") > hotCap, 1L).otherwise(0L))).head()
-      (java.lang.Long.valueOf(probe.getLong(0)),
-        java.lang.Long.valueOf(probe.getLong(1)))
-    }
-    val anyHot = nHot > 0
-    // band keys + verify payload, exploded to one row per (doc, band)
-    // (same literal-index explode as above for the same reason)
-    val explFull = base
-      .select(col("doc_id"), col("bkeys"), col("shset"), bandIdx)
-      .select(col("doc_id"), col("bkeys"), col("shset"), col("band"),
-        element_at(col("bkeys"), col("band") + 1).as("bkey"))
-    val pruned = if (nMulti <= pruneBroadcastLimit)
-      explFull.join(broadcast(multiBuckets), Seq("band", "bkey"), "left_semi")
-    else explFull
-    val smallRows = if (anyHot)
-      pruned.join(broadcast(hotBuckets), Seq("band", "bkey"), "left_anti")
-    else pruned
+    val explSig = Dedup.bandRows(base, Seq("doc_id", "bkeys"))
+    // at every tested scale the hot set is empty and the fallback
+    // subplan - with its extra corpus scans - never enters the plan
+    val buckets = Dedup.probeBuckets(explSig,
+      Dedup.bandRows(base, Seq("doc_id", "bkeys", "shset")),
+      s"edgeprobe:$probeKey", hotCap, pruneBroadcastLimit)
     // one fused generator per bucket: pair expansion, the
     // first-shared-band skip (a pair sharing bands i < k verifies at
     // band i only), and the merge-scan Jaccard all run over the bucket's
     // object arrays - only surviving (doc_a, doc_b) longs are ever
     // materialized as rows (see [[graft.functions.VerifiedJaccardPairs]]
     // for why the compose-then-filter form was the 100x wall time)
-    val verSmall = smallRows.groupBy(col("band"), col("bkey"))
+    val verSmall = buckets.small.groupBy(col("band"), col("bkey"))
       .agg(collect_list(struct(col("doc_id"), col("bkeys"), col("shset"))).as("ms"))
       .select(SetFunctions.verifiedJaccardPairs(col("ms"), col("band"), 0.5))
-    val ver = (if (!anyHot) verSmall else {
-      val hx = explSig.join(broadcast(hotBuckets), Seq("band", "bkey"), "left_semi")
-        .select(col("band"), col("bkey"), col("doc_id"))
-      val hotCand = hx.as("x").join(hx.as("y"),
-          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b")).distinct()
+    val ver = buckets.hot.fold(verSmall) { hotBuckets =>
+      val hotCand = Dedup.bandPairs(
+        explSig.join(broadcast(hotBuckets), Seq("band", "bkey"), "left_semi")
+          .select(col("band"), col("bkey"), col("doc_id")))
       val shs = base.select(col("doc_id"), col("shset"))
       val verHot = hotCand
         .join(shs.select(col("doc_id").as("doc_a"), col("shset").as("sh_a")), "doc_a")
@@ -731,7 +659,7 @@ object PipelineQueries {
         .filter(SetFunctions.jaccardSorted(col("sh_a"), col("sh_b")) >= 0.5)
         .select(col("doc_a"), col("doc_b"))
       verSmall.union(verHot)
-    }).distinct()
+    }.distinct()
     ver.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(ver.select(col("doc_b").as("src"), col("doc_a").as("dst")))
   }
@@ -1021,9 +949,8 @@ object PipelineQueries {
     // ---- n-gram Jaccard near-dup (within-source blocking) ----
     Q("q45_ngram_jaccard", (s, d) => {
       val base = docs(s, d)
-        .filter(size(TextOps.tokens(col("text"))) >= 3)
-        .select(col("doc_id"), col("source"),
-          graft.functions.SetFunctions.shingleHashSet(col("text"), 3).as("shset"))
+        .filter(TextOps.eligible(col("text")))
+        .select(col("doc_id"), col("source"), TextOps.shingleSet(col("text")).as("shset"))
       val a = base.select(col("doc_id").as("doc_a"), col("source").as("src_a"),
         col("shset").as("sh_a"))
       val b = base.select(col("doc_id").as("doc_b"), col("source").as("src_b"),
@@ -1059,16 +986,7 @@ object PipelineQueries {
     // collides — the standard LSH trade, tuned by (bands, rows). ----
     Q("q84_ngram_jaccard_banded", (s, d) => {
       val shs = shingleSets(s, d)
-      val sig = minhashSig(s, d, 8)
-      val bands = (0 until 4).map(b => struct(lit(b).as("band"),
-        concat_ws("_", col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")).as("bkey")))
-      val exploded = sig.select(col("doc_id"), explode(array(bands: _*)).as("bk"))
-        .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-      val cand = exploded.as("x").join(exploded.as("y"),
-          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b")).distinct()
-      cand
+      bandedCandidatePairs(s, d)
         .join(shs.select(col("doc_id").as("doc_a"), col("shset").as("sh_a")), "doc_a")
         .join(shs.select(col("doc_id").as("doc_b"), col("shset").as("sh_b")), "doc_b")
         .withColumn("jaccard",
@@ -1508,7 +1426,7 @@ object PipelineQueries {
     // fingerprint ops). ----
     Q("q87_neardup_fixpoint", (s, d) => {
       val all = docs(s, d)
-      val isEligible = size(TextOps.tokens(col("text"))) >= 3
+      val isEligible = TextOps.eligible(col("text"))
       // exact-group key map-side, then the expensive payload kernels run
       // AFTER the fp collapse — post-exchange, so they parallelize even
       // on a single-split local scan — and the collapsed payload is
@@ -1697,11 +1615,7 @@ object PipelineQueries {
       // 2) buckets the new batch touches — light band-key pass, payload
       // (shset) pruned out of the scan; every member of a touched bucket
       // is re-verified, nothing else
-      val expl = base.select(col("doc_id"), col("bkeys"))
-        .select(col("doc_id"), col("bkeys"),
-          explode(array((0 until 4).map(lit(_)): _*)).as("band"))
-        .select(col("doc_id"), col("band"),
-          element_at(col("bkeys"), col("band") + 1).as("bkey"))
+      val expl = graft.operators.Dedup.bandRows(base, Seq("doc_id"))
       val deltaBuckets = expl.filter(isDelta)
         .select(col("band"), col("bkey")).distinct()
       val touchedIds = expl
@@ -1852,7 +1766,7 @@ object PipelineQueries {
       // ~|corpus bigrams| distinct keys and measured 3.5 GB shuffle +
       // 6.9 GB spill at 5M docs; this plan's only exchange is the
       // output sort
-      docs(s, d).filter(size(ws) >= 3)
+      docs(s, d).filter(TextOps.eligible(col("text")))
         .select(col("doc_id"),
           size(tri).cast("long").as("n_tri"),
           size(array_distinct(tri)).cast("long").as("n_tri_distinct"),
@@ -4236,14 +4150,11 @@ object PipelineQueries {
     // projection; the dedup is one partial-aggregated groupBy (clone
     // classes collapse map-side); no new exchange vs raw exact dedup. ----
     Q("q155_canonical_dedup", (s, d) => {
-      val canon = trim(regexp_replace(lower(
-        graft.functions.TextFunctions.nfcNormalize(col("text"))),
-        "\\s+", " "))
       // the md5 fp IS the output key — group on it directly (r19, guide
       // §2.3): the exchange carries 32 fp chars per class instead of
       // the full normalized text (q87's fp-collapse discipline)
       spreadForKernels(docs(s, d))
-        .select(col("doc_id"), md5(canon).as("fp"))
+        .select(col("doc_id"), TextOps.canonicalKey(col("text")).as("fp"))
         .groupBy(col("fp"))
         .agg(min(col("doc_id")).as("doc_id"), count(lit(1)).as("n_variants"))
         .select(col("doc_id"), col("fp"), col("n_variants"))
@@ -4319,30 +4230,17 @@ object PipelineQueries {
     */
   private def repAnchoredEdges(docsDf: DataFrame,
       spread: Boolean = true): DataFrame =
-    // ONE banding law: both the band keys and the shingle payloads come
-    // from [[edgeBase]] (Catalyst column-prunes the unused column from
-    // each branch), so this form cannot drift from the pairwise
-    // kernel's banding
+    // both the band keys and the shingle payloads come from [[edgeBase]]
+    // (Catalyst column-prunes the unused column from each branch)
     repAnchoredEdgesFromBase(edgeBase(docsDf, spread = spread))
 
   private def repAnchoredEdgesFromBase(base: DataFrame): DataFrame = {
     import graft.functions.SetFunctions
-    val nBands = 4
-    // literal-index explode (the InferFiltersFromGenerate discipline of
-    // verifiedEdgesOf: a computed-array explode would push a synthesized
-    // size()>0 filter with the minhash kernel inlined)
-    val bandIdx = explode(array((0 until nBands).map(lit(_)): _*)).as("band")
-    val bands = base
-      .select(col("doc_id"), col("bkeys"))
-      .select(col("doc_id"), col("bkeys"), bandIdx)
-      .select(col("doc_id"), col("band"),
-        element_at(col("bkeys"), col("band") + 1).as("bkey"))
-    val reps = bands.groupBy(col("band"), col("bkey"))
-      .agg(min(col("doc_id")).as("rep"))
-    // the groupBy's (band, bkey) exchange and this join's are identical
-    // subplans — ReuseExchange dedupes the banding pass
-    val pairs = bands.join(reps, Seq("band", "bkey"))
-      .filter(col("rep") < col("doc_id"))
+    import graft.operators.Dedup
+    val bands = Dedup.bandRows(base, Seq("doc_id"))
+    // the rep groupBy's (band, bkey) exchange and the rep join's are
+    // identical subplans — ReuseExchange dedupes the banding pass
+    val pairs = Dedup.repPairs(bands)
       .select(col("doc_id"), col("rep")).distinct()
     val sh = base.select(col("doc_id"), col("shset").as("sh"))
     val ver = pairs
@@ -4431,8 +4329,6 @@ object PipelineQueries {
       repAnchoredNearDup: Boolean = false,
       bucketedEdgeBase: Option[Boolean] = None)
       : DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    import graft.functions.BloomFunctions
     // the pin key carries EVERY dial that changes a stage's content
     // (budget, stage-2 form, eval law): q160 and q161 run the same
     // chain with different dials, and a shared key would release the
@@ -4442,7 +4338,6 @@ object PipelineQueries {
         .getOrElse(pinReleasingPrior(
           s"q160:$name:$d:$budget:$repAnchoredNearDup:$evalPred", mk))
     val all = docs(s, d)
-    val ws = TextOps.tokens(col("text"))
 
     // stage 1 — canonical exact dedup (q155): min doc_id per NFC-
     // canonical text class; survivors as an ids-only manifest
@@ -4454,15 +4349,11 @@ object PipelineQueries {
     // subset A/B, r18). The per-stage pins already bound each stage's
     // single-task kernel pass to one copy.
     val s1 = stage(1, "canonical_dedup") {
-      val canon = trim(regexp_replace(lower(
-        graft.functions.TextFunctions.nfcNormalize(col("text"))), "\\s+", " "))
       // group on the 128-bit md5 of the canonical form, not the form
       // itself (r19, guide §2.3 shuffle fewer bytes): the exchange
       // carries 32 fp chars per class instead of the full normalized
-      // TEXT — q87's accepted fp-collapse discipline (null canon → null
-      // fp groups all null-text docs together, exactly as grouping by
-      // the null canonical class did)
-      all.select(col("doc_id"), md5(canon).as("cfp"))
+      // TEXT — q87's accepted fp-collapse discipline
+      all.select(col("doc_id"), TextOps.canonicalKey(col("text")).as("cfp"))
         .groupBy(col("cfp")).agg(min(col("doc_id")).as("doc_id"))
         .select(col("doc_id"))
     }
@@ -4583,13 +4474,10 @@ object PipelineQueries {
       finally stagedTbl.foreach(dropStaged)
     }
 
-    // stage 3 — n-gram decontamination (q101) FUSED with the per-source
-    // quality gate (q97). The eval suite's 8-gram inventory comes from
-    // the FULL corpus's doc_id%10==7 docs (an eval set is external — it
-    // does not shrink because training docs were deduped); the gram
-    // stream being CHECKED runs only over stage 2's survivors. Bloom
-    // prune map-side, exact verify after. The gate's slim signal frame
-    // is projected straight off the anti-join's survivors, so the old
+    // stage 3 — n-gram decontamination (q101, [[q160Decontaminated]])
+    // FUSED with the per-source quality gate (q97). The gate's slim
+    // signal frame is projected straight off the anti-join's survivors,
+    // so the old
     // stage-4 corpus semi-join (`all ⋈ s3-ids` — a THIRD full-text scan
     // of this stage's lineage) and its separate localCheckpoint are gone
     // (r19; guide §2.4/§5 — same composition, one fewer pass + one
@@ -4599,23 +4487,7 @@ object PipelineQueries {
     // comparable across rounds and the stress harness's
     // `s5_mixture_materialize` key is untouched.
     val s4 = stage(3, "decontaminate_gate") {
-      val evalGrams = gramStream8(all.filter(evalPred), spread = false)
-        .select(col("g")).distinct()
-      // key carries the eval predicate: a stress run's DIV-based law must
-      // not reuse a bloom trained under the default mod law (or vice versa)
-      val bloom = trainEvalBloom(s"evalgrams:$d:$evalPred", evalGrams)
-      val trainSide = all.join(s2, Seq("doc_id"), "left_semi")
-        .filter(!evalPred)
-      val contaminated = gramStream8(trainSide, spread = false)
-        .filter(BloomFunctions.mightContain(bloom, col("g")))
-        .join(evalGrams, "g").select(col("doc_id")).distinct()
-      val d3 = trainSide.join(contaminated, Seq("doc_id"), "left_anti")
-      val sig3 = d3.select(col("doc_id"), col("source"),
-        size(ws).cast("long").as("n_tokens"),
-        (size(array_distinct(ws)) / size(ws)).as("ttr"),
-        md5(concat(lit("split|"), coalesce(col("text"), lit("")))).as("ckey"),
-        md5(concat(lit("mix|"), col("doc_id").cast("string"))).as("ord"))
-      q160GateFrom(sig3)
+      q160GateFrom(q160Decontaminated(all, d, s2, evalPred))
     }
 
     // stage 5 — temperature-mixture materialize (q124): sqrt-weight
@@ -4626,6 +4498,38 @@ object PipelineQueries {
 
     // stages 6-7 — stratified split + per-split packing
     q160SplitPackFrom(s5)
+  }
+
+  /** q160 stage 3's pre-gate body: the slim per-doc signal frame
+    * `(doc_id, source, n_tokens, ttr, ckey, ord)` of the non-eval
+    * stage-2 survivors (`s2`, ids) that share no 8-gram with the eval
+    * suite. The eval suite's 8-gram inventory comes from the FULL
+    * corpus `all` (an eval set is external — it does not shrink because
+    * training docs were deduped); the gram stream being CHECKED runs
+    * only over the survivors. Bloom prune map-side, exact verify after.
+    * The streaming twin's [[graft.streaming.PretrainStream.storeSig3]]
+    * must hold the same ids, which the stream/batch parity checks
+    * compare BEFORE the gate drops anything.
+    */
+  private[graft] def q160Decontaminated(all: DataFrame, d: String,
+      s2: DataFrame, evalPred: org.apache.spark.sql.Column): DataFrame = {
+    val ws = TextOps.tokens(col("text"))
+    val evalGrams = gramStream8(all.filter(evalPred), spread = false)
+      .select(col("g")).distinct()
+    // key carries the eval predicate: a stress run's DIV-based law must
+    // not reuse a bloom trained under the default mod law (or vice versa)
+    val bloom = trainEvalBloom(s"evalgrams:$d:$evalPred", evalGrams)
+    val trainSide = all.join(s2, Seq("doc_id"), "left_semi")
+      .filter(!evalPred)
+    val contaminated = gramStream8(trainSide, spread = false)
+      .filter(graft.functions.BloomFunctions.mightContain(bloom, col("g")))
+      .join(evalGrams, "g").select(col("doc_id")).distinct()
+    trainSide.join(contaminated, Seq("doc_id"), "left_anti")
+      .select(col("doc_id"), col("source"),
+        size(ws).cast("long").as("n_tokens"),
+        (size(array_distinct(ws)) / size(ws)).as("ttr"),
+        md5(concat(lit("split|"), coalesce(col("text"), lit("")))).as("ckey"),
+        md5(concat(lit("mix|"), col("doc_id").cast("string"))).as("ord"))
   }
 
   /** q160 stage 4's GATE LAW over the slim per-doc signal frame
@@ -5329,6 +5233,15 @@ object PipelineQueries {
       ORDER BY ua.source"""
   }
 
+  /** The edit-distance near-dups' per-doc payload: (doc_id, bkeys, text)
+    * of every eligible doc. */
+  private def editBase(s: SparkSession, d: String): DataFrame =
+    spreadForKernels(docs(s, d))
+      .filter(TextOps.eligible(col("text")))
+      .select(col("doc_id"), TextOps.signature(col("text")).as("sig"), col("text"))
+      .select(col("doc_id"), array(TextOps.bandKeys(col("sig")): _*).as("bkeys"),
+        col("text"))
+
   /** q152's kept pairs: edit distance ≤ `distFrac` of the longer text
     * (see the Q entry comment). `distFrac` rides as the decimal literal
     * 0.2 in BOTH engines (each parses it to the same nearest double),
@@ -5343,62 +5256,29 @@ object PipelineQueries {
     * the i<j member pairs in place (each member's code points converted
     * once, length-gate before any DP, first-shared-band skip so every
     * pair verifies exactly once) and only surviving id/dist/len longs
-    * materialize. Singleton buckets are pruned payload-free before the
-    * collect (the mostly-unique-corpus guard), and buckets past
-    * `hotCap` members fall back to the pair-join form restricted to
-    * those buckets — then a final distinct reconciles the two paths
-    * (a fused-path pair can also appear via a hot band, never with a
-    * different dist). Both probes ride one memoized narrow count.
+    * materialize. [[graft.operators.Dedup.probeBuckets]] prunes the
+    * singleton buckets and splits off the ones past `hotCap`, which fall
+    * back to the pair-join form restricted to those buckets — then a
+    * final distinct reconciles the two paths (a fused-path pair can also
+    * appear via a hot band, never with a different dist).
     */
   private[graft] def editDistanceNearDup(s: SparkSession, d: String,
       distFrac: Double = 0.2, hotCap: Int = 4096,
       pruneBroadcastLimit: Long = 1000000L): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val nBands = 4
-    val sig = graft.functions.TextFunctions.minhashSigNative(col("text"), 8)
-    val bkeysC = array((0 until nBands).map(b => concat_ws("_",
-      element_at(col("sig"), 2 * b + 1), element_at(col("sig"), 2 * b + 2))): _*)
-    val base = spreadForKernels(docs(s, d))
-      .filter(size(TextOps.tokens(col("text"))) >= 3)
-      .select(col("doc_id"), sig.as("sig"), col("text"))
-      .select(col("doc_id"), bkeysC.as("bkeys"), col("text"))
-    // literal-index explode — the InferFiltersFromGenerate gotcha
-    // documented at [[verifiedEdgesOf]]
-    val bandIdx = explode(array((0 until nBands).map(lit(_)): _*)).as("band")
-    val expl = base.select(col("doc_id"), col("bkeys"), col("text"), bandIdx)
-      .select(col("doc_id"), col("bkeys"), col("text"), col("band"),
-        element_at(col("bkeys"), col("band") + 1).as("bkey"))
-    val light = base.select(col("doc_id"), col("bkeys"), bandIdx)
-      .select(col("band"), element_at(col("bkeys"), col("band") + 1).as("bkey"))
-    val sizes = light.groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("n"))
-    val multi = sizes.filter(col("n") >= 2).select(col("band"), col("bkey"))
-    val hot = sizes.filter(col("n") > hotCap).select(col("band"), col("bkey"))
-    val (nMulti, nHot) = Models.cached(s"editprobe:$d:hotCap=$hotCap") {
-      val probe = sizes.agg(
-        sum(when(col("n") >= 2, 1L).otherwise(0L)),
-        sum(when(col("n") > hotCap, 1L).otherwise(0L))).head()
-      (java.lang.Long.valueOf(probe.getLong(0)),
-        java.lang.Long.valueOf(probe.getLong(1)))
-    }
-    val anyHot = nHot > 0
-    val pruned = if (nMulti <= pruneBroadcastLimit)
-      expl.join(broadcast(multi), Seq("band", "bkey"), "left_semi")
-    else expl
-    val smallRows = if (anyHot)
-      pruned.join(broadcast(hot), Seq("band", "bkey"), "left_anti")
-    else pruned
-    val fused = smallRows.groupBy(col("band"), col("bkey"))
+    import graft.operators.Dedup
+    val base = editBase(s, d)
+    val expl = Dedup.bandRows(base, Seq("doc_id", "bkeys", "text"))
+    val buckets = Dedup.probeBuckets(Dedup.bandRows(base, Nil), expl,
+      s"editprobe:$d", hotCap, pruneBroadcastLimit)
+    val fused = buckets.small.groupBy(col("band"), col("bkey"))
       .agg(collect_list(struct(col("doc_id"), col("bkeys"), col("text"))).as("ms"))
       .select(graft.functions.SetFunctions
         .verifiedEditPairs(col("ms"), col("band"), distFrac))
-    val verified = if (!anyHot) fused else {
+    val verified = buckets.hot.fold(fused) { hot =>
       val t = base.select(col("doc_id"), col("text"))
-      val hotExpl = expl.join(broadcast(hot), Seq("band", "bkey"), "left_semi")
-      val hotPairs = hotExpl.as("x").join(hotExpl.as("y"),
-          col("x.band") === col("y.band") && col("x.bkey") === col("y.bkey") &&
-            col("x.doc_id") < col("y.doc_id"))
-        .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-        .distinct()
+      val hotPairs = Dedup.bandPairs(
+          expl.join(broadcast(hot), Seq("band", "bkey"), "left_semi"))
         .join(t.select(col("doc_id").as("doc_a"), col("text").as("ta")), "doc_a")
         .join(t.select(col("doc_id").as("doc_b"), col("text").as("tb")), "doc_b")
         .select(col("doc_a"), col("doc_b"),
@@ -5445,36 +5325,19 @@ object PipelineQueries {
       distFrac: Double = 0.2, pruneBroadcastLimit: Long = 1000000L,
       fused: Boolean = false): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val nBands = 4
-    val sig = graft.functions.TextFunctions.minhashSigNative(col("text"), 8)
-    val bkeysC = array((0 until nBands).map(b => concat_ws("_",
-      element_at(col("sig"), 2 * b + 1), element_at(col("sig"), 2 * b + 2))): _*)
-    val base = spreadForKernels(docs(s, d))
-      .filter(size(TextOps.tokens(col("text"))) >= 3)
-      .select(col("doc_id"), sig.as("sig"), col("text"))
-      .select(col("doc_id"), bkeysC.as("bkeys"), col("text"))
-    val bandIdx = explode(array((0 until nBands).map(lit(_)): _*)).as("band")
-    val light = base.select(col("doc_id"), col("bkeys"), bandIdx)
-      .select(col("doc_id"), col("band"),
-        element_at(col("bkeys"), col("band") + 1).as("bkey"))
+    import graft.operators.Dedup
+    val base = editBase(s, d)
+    val light = Dedup.bandRows(base, Seq("doc_id"))
     val verified = if (fused) {
       // fused generator path (texts collected per bucket; the one-scan
       // shape, kept for path parity and as the q118 streaming analogue).
       // Its per-task cost is the OPEN-BUCKET text footprint — at 16k-
       // member clone buckets that is executor-memory-bound, which is
       // why the id-join path below is the default.
-      val expl = base.select(col("doc_id"), col("text"), col("bkeys"), bandIdx)
-        .select(col("doc_id"), col("text"), col("band"),
-          element_at(col("bkeys"), col("band") + 1).as("bkey"))
-      val sizes = light.groupBy(col("band"), col("bkey")).agg(count(lit(1)).as("n"))
-      val multi = sizes.filter(col("n") >= 2).select(col("band"), col("bkey"))
-      val nMulti = Models.cached(s"editrepprobe:$d") {
-        java.lang.Long.valueOf(
-          sizes.filter(col("n") >= 2).agg(count(lit(1))).head().getLong(0))
-      }
-      val pruned = if (nMulti <= pruneBroadcastLimit)
-        expl.join(broadcast(multi), Seq("band", "bkey"), "left_semi")
-      else expl
+      // no hot split: a rep bucket costs b−1 kernel calls at any size
+      val pruned = Dedup.probeBuckets(light,
+        Dedup.bandRows(base, Seq("doc_id", "text")),
+        s"editrepprobe:$d", Int.MaxValue, pruneBroadcastLimit).small
       pruned.groupBy(col("band"), col("bkey"))
         .agg(collect_list(struct(col("doc_id"), col("text"))).as("ms"))
         .select(graft.functions.SetFunctions
@@ -5490,10 +5353,7 @@ object PipelineQueries {
       // corpus texts shuffle exactly twice (keyed by doc_a / doc_b —
       // never once per band). The verify is the codegen'd scalar Myers
       // kernel with the same length gate the generator applies.
-      val reps = light.groupBy(col("band"), col("bkey"))
-        .agg(min(col("doc_id")).as("rep_id"))
-      val pairs = light.join(reps, Seq("band", "bkey"))
-        .filter(col("doc_id") > col("rep_id"))
+      val pairs = Dedup.repPairs(light, "rep_id")
         .select(col("rep_id").as("doc_a"), col("doc_id").as("doc_b"))
         .distinct()
       val t = base.select(col("doc_id"), col("text"))

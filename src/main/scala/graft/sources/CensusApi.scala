@@ -183,19 +183,27 @@ object CensusApi {
     }
   }
 
-  /** HTTP GET with explicit connect/request timeouts so a filtered or
-    * offline network fails fast (and [[getDataset]] falls back to its
+  /** One client for every source GET (thread-safe, pools connections). */
+  private lazy val client = java.net.http.HttpClient.newBuilder()
+    .connectTimeout(java.time.Duration.ofSeconds(10)).build()
+
+  /** The one HTTP GET of every source (this API, CensusReporter,
+    * VarRep): explicit connect/request timeouts so a filtered or offline
+    * network fails fast (and [[getDataset]] falls back to its
     * `$Host/$id` guess promptly) instead of hanging for the OS TCP
-    * timeout.
+    * timeout. A status of 400 or above throws an `IOException` naming
+    * the URL.
     */
-  private[sources] def httpGet(url: String): String = {
-    val client = java.net.http.HttpClient.newBuilder()
-      .connectTimeout(java.time.Duration.ofSeconds(10)).build()
+  private[sources] def httpGetBytes(url: String): Array[Byte] = {
     val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url))
       .timeout(java.time.Duration.ofSeconds(60)).GET().build()
-    val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
+    val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofByteArray())
     if (resp.statusCode() >= 400)
       throw new java.io.IOException(s"HTTP ${resp.statusCode()} for $url")
     resp.body()
   }
+
+  /** [[httpGetBytes]] decoded as UTF-8. */
+  private[sources] def httpGet(url: String): String =
+    new String(httpGetBytes(url), java.nio.charset.StandardCharsets.UTF_8)
 }

@@ -193,27 +193,32 @@ object CensusReporter {
     */
   def getResource(u: CensusReporterUrl, cache: Boolean = true,
       cacheDir: Path = defaultCacheDir,
-      fetch: String => String = httpGet): String = {
+      fetch: String => String = CensusApi.httpGet): String = {
     val cached = cacheDir.resolve(u.cacheKey)
     if (cache && Files.exists(cached)) {
       new String(Files.readAllBytes(cached), StandardCharsets.UTF_8)
     } else {
       val body = fetch(u.resourceUrl)
-      if (cache) {
-        Files.createDirectories(cached.getParent)
-        Files.write(cached, body.getBytes(StandardCharsets.UTF_8))
-      }
+      if (cache) writeCacheFile(cached, body.getBytes(StandardCharsets.UTF_8))
       body
     }
   }
 
-  private def httpGet(url: String): String = {
-    val client = java.net.http.HttpClient.newHttpClient()
-    val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url)).GET().build()
-    val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofString())
-    if (resp.statusCode() >= 400)
-      throw new java.io.IOException(s"HTTP ${resp.statusCode()} for $url")
-    resp.body()
+  /** Write a cache file so that it exists only once complete: the bytes
+    * go to a temp sibling that is then moved over `path` atomically.
+    * Cache lookups count `Files.exists` as a hit, so an in-place write
+    * killed midway would leave a truncated payload served on every later
+    * hit, and a concurrent loader could read a half-written file.
+    */
+  private[sources] def writeCacheFile(path: Path, bytes: Array[Byte]): Unit = {
+    Files.createDirectories(path.getParent)
+    val tmp = path.resolveSibling(
+      s".${path.getFileName}.${java.util.UUID.randomUUID()}.tmp")
+    try {
+      Files.write(tmp, bytes)
+      Files.move(tmp, path, java.nio.file.StandardCopyOption.ATOMIC_MOVE,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    } finally Files.deleteIfExists(tmp)
   }
 
   /** One-call load — the reference's `get_cr_dataframe(table, sl, geoid)`
@@ -221,7 +226,7 @@ object CensusReporter {
     */
   def load(spark: SparkSession, tableId: String, summaryLevel: String,
       geoid: String, cache: Boolean = true,
-      fetch: String => String = httpGet): CensusFrame = {
+      fetch: String => String = CensusApi.httpGet): CensusFrame = {
     val u = CensusReporterUrl(s"censusreporter:$tableId/$summaryLevel/$geoid")
     val json = getResource(u, cache, fetch = fetch)
     CensusReporterDecoder.toFrame(spark, CensusReporterDecoder.decode(json, tableId))

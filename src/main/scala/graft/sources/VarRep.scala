@@ -89,15 +89,6 @@ object VarRep {
       zin.readAllBytes()
     } else payload
 
-  private def httpGetBytes(url: String): Array[Byte] = {
-    val client = java.net.http.HttpClient.newHttpClient()
-    val req = java.net.http.HttpRequest.newBuilder(java.net.URI.create(url)).GET().build()
-    val resp = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofByteArray())
-    if (resp.statusCode() >= 400)
-      throw new java.io.IOException(s"HTTP ${resp.statusCode()} for $url")
-    resp.body()
-  }
-
   /** Fetch a remote VRE file to a local CSV path, consulting the cache
     * first (same shape as CensusReporter.getResource: injectable
     * transport, cache-hit skips the fetch entirely). With `cache=false`
@@ -107,12 +98,11 @@ object VarRep {
   def fetchVarRep(year: Int, tableId: String, summaryLevel: String, state: String,
       cache: Boolean = true,
       cacheDir: Path = CensusReporter.defaultCacheDir,
-      fetch: String => Array[Byte] = httpGetBytes): Path = {
+      fetch: String => Array[Byte] = CensusApi.httpGetBytes): Path = {
     val cached = cacheDir.resolve(cacheKey(year, tableId, summaryLevel, state))
     if (!(cache && Files.exists(cached))) {
-      val csv = unwrapCsv(fetch(varRepUrl(year, tableId, summaryLevel, state)))
-      Files.createDirectories(cached.getParent)
-      Files.write(cached, csv)
+      CensusReporter.writeCacheFile(cached,
+        unwrapCsv(fetch(varRepUrl(year, tableId, summaryLevel, state))))
     }
     cached
   }
@@ -124,7 +114,7 @@ object VarRep {
   def load(spark: SparkSession, year: Int, tableId: String, summaryLevel: String,
       state: String, cache: Boolean = true,
       cacheDir: Path = CensusReporter.defaultCacheDir,
-      fetch: String => Array[Byte] = httpGetBytes): DataFrame =
+      fetch: String => Array[Byte] = CensusApi.httpGetBytes): DataFrame =
     loadVarRep(spark,
       fetchVarRep(year, tableId, summaryLevel, state, cache, cacheDir, fetch).toString)
 

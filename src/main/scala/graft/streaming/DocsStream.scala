@@ -45,38 +45,37 @@ object DocsStream {
     spark.readStream.schema(docsSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(dir)
 
-  /** q43's 4×2-hash banding plus the doc's sorted shingle-hash set (the
-    * q72 verification kernel's input — see
-    * [[graft.functions.ShingleHashSet]] for the 56-bit parity contract):
-    * (doc_id, band, bkey, shset, ts). All map-side. `ts` is the optional
-    * event-time passenger (null timestamp when `tsCol` is None) — the
-    * handlers arm their horizon from it in event-time mode.
+  /** The [[TextOps]] banding plus the doc's shingle-hash set (the
+    * verification kernel's input): (doc_id, band, bkey, shset, ts). All
+    * map-side, from the same kernels as the batch path, so stream/batch
+    * parity with the query pack holds by construction. `ts` is the
+    * optional event-time passenger (null timestamp when `tsCol` is
+    * None) — the handlers arm their horizon from it in event-time mode.
+    * The batch twins below read this frame too, so it keeps the struct
+    * explode their plans were measured with.
     */
   private def banded(docs: DataFrame,
       tsCol: Option[String] = None): DataFrame = {
-    val ws = TextOps.tokens(col("text"))
-    // native fused signature/shingle-set kernels (graft.functions.
-    // {MinHashSig, ShingleHashSet}) — bit-identical to the HOF kernels,
-    // so stream/batch parity with the query pack is preserved by
-    // construction
-    val sig = graft.functions.TextFunctions.minhashSigNative(col("text"), 8)
-    def mh(j: Int) = element_at(col("sig"), j + 1)
-    val bands = (0 until 4).map(b => struct(lit(b).as("band"),
-      concat_ws("_", mh(2 * b), mh(2 * b + 1)).as("bkey")))
     val ts = tsCol.map(col).getOrElse(lit(null).cast("timestamp")).as("ts")
-    docs.filter(size(ws) >= 3)
-      .select(col("doc_id"),
-        graft.functions.SetFunctions.shingleHashSet(col("text"), 3).as("shset"),
-        sig.as("sig"), ts)
+    docs.filter(TextOps.eligible(col("text")))
+      .select(col("doc_id"), TextOps.shingleSet(col("text")).as("shset"),
+        TextOps.signature(col("text")).as("sig"), ts)
       .select(col("doc_id"), col("shset"), col("ts"),
-        explode(array(bands: _*)).as("bk"))
+        explode(TextOps.bandStructs(TextOps.bandKeys(col("sig")))).as("bk"))
       .select(col("doc_id"), col("bk.band").as("band"),
         col("bk.bkey").as("bkey"), col("shset"), col("ts"))
   }
 
-  /** q43's 4×2-hash banding, map-side: (doc_id, band, bkey). */
+  /** The banding, map-side: (doc_id, band, bkey). */
   def bandKeys(docs: DataFrame): DataFrame =
     banded(docs).select(col("doc_id"), col("band"), col("bkey"))
+
+  /** Rep shingle sets keyed by `dup_of`, looked up from the `history`
+    * corpus table — the verification side of every rep-anchored
+    * candidate (stream handlers and batch twin alike). */
+  private[streaming] def repShingles(history: DataFrame): DataFrame =
+    history.filter(TextOps.eligible(col("text")))
+      .select(col("doc_id").as("dup_of"), TextOps.shingleSet(col("text")).as("rep_sh"))
 
   /** The q72 exact-Jaccard verification, shared by the streaming and
     * batch candidate paths: each (doc_id, band, dup_of, shset) candidate
@@ -87,17 +86,12 @@ object DocsStream {
     * side is only the candidate set; the Jaccard itself is a map-side
     * array expression.
     */
-  private def verifyAgainstReps(cand: DataFrame, history: DataFrame): DataFrame = {
-    val hw = TextOps.tokens(col("text"))
-    val reps = history.filter(size(hw) >= 3)
-      .select(col("doc_id").as("dup_of"),
-        graft.functions.SetFunctions.shingleHashSet(col("text"), 3).as("rep_sh"))
-    cand.join(reps, "dup_of")
+  private def verifyAgainstReps(cand: DataFrame, history: DataFrame): DataFrame =
+    cand.join(repShingles(history), "dup_of")
       .select(col("doc_id"), col("band"), col("dup_of"),
         graft.functions.SetFunctions.jaccardSorted(
           col("shset"), col("rep_sh")).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
-  }
 
   private[streaming] def timeoutConf(ttlMs: Long,
       eventTime: Boolean = false): GroupStateTimeout =
@@ -172,29 +166,14 @@ object DocsStream {
         case ((band, _), rows, state) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
-            // sort within the batch: emission semantics are "min of all
-            // earlier ids", independent of partition iteration order
             val arr = rows.toArray
-            val ids = arr.map(_._3).sorted
-            var minSeen = state.getOption.getOrElse(Long.MaxValue)
-            val out = Array.newBuilder[(Long, Int, Long)]
-            ids.foreach { id =>
-              if (minSeen < id) out += ((id, band, minSeen))
-              else if (id < minSeen) {
-                // a smaller id DISPLACES the stored rep: link old rep →
-                // new rep, or every doc anchored to the old rep silently
-                // disconnects from docs anchored to the new one. Under
-                // id-ordered arrival this never fires (bit-parity with
-                // the batch twin unchanged); out-of-order arrival —
-                // unsorted crawl splits, the normal production case —
-                // is exactly what the 10× labels stress caught.
-                if (minSeen != Long.MaxValue) out += ((minSeen, band, id))
-                minSeen = id
-              }
-            }
-            state.update(minSeen)
+            val step = repStep(
+              (state.getOption.getOrElse(Long.MaxValue), Seq.empty[Long]),
+              arr.map(r => (r._3, Seq.empty[Long])))
+            state.update(step.minSeen)
             armTimeout(state, arr.map(r => tsMs(r._4)).max, ttlMs, eventTime)
-            out.result().iterator
+            (step.candidates.map(c => (c._1, band, c._2)) ++
+              step.displaced.map(p => (p._1, band, p._2))).iterator
           }
       }
       .toDF("doc_id", "band", "dup_of")
@@ -203,14 +182,9 @@ object DocsStream {
   /** Batch twin of [[nearDupCandidates]]: bucket representative = min
     * doc_id, every later doc in the bucket is a candidate against it.
     */
-  def nearDupCandidatesBatch(docs: DataFrame): DataFrame = {
-    val bk = bandKeys(docs)
-    val reps = bk.groupBy(col("band"), col("bkey"))
-      .agg(min(col("doc_id")).as("dup_of"))
-    bk.join(reps, Seq("band", "bkey"))
-      .filter(col("dup_of") < col("doc_id"))
+  def nearDupCandidatesBatch(docs: DataFrame): DataFrame =
+    graft.operators.Dedup.repPairs(bandKeys(docs), "dup_of")
       .select(col("doc_id"), col("band"), col("dup_of"))
-  }
 
   /** Displaced-rep emissions from [[nearDupVerified]]: out-of-order
     * arrivals where a smaller id displaced a bucket's stored rep and the
@@ -243,6 +217,71 @@ object DocsStream {
     * returns to zero when a cycled session stops. */
   private[graft] def trackedAccApps: Int =
     math.max(displacedAccs.trackedCount, overConnectAccs.trackedCount)
+
+  /** One (band, bucket)'s rep step — the pure core of every doc-stream
+    * rep handler ([[nearDupCandidates]], [[nearDupVerified]] and
+    * [[PretrainStream.signals]] stage 2). `state` is the bucket's stored
+    * `(minSeen, repSh)` (`Long.MaxValue` = empty bucket); `arrivals` are
+    * this batch's `(doc_id, shset)` rows in any order. They are taken
+    * in id order, so emissions are "min of all earlier ids",
+    * independent of partition iteration order:
+    *  - an id above the rep is a CANDIDATE `(doc_id, rep, doc shset)`;
+    *  - an id below a stored rep DISPLACES it, emitting
+    *    `(old rep, new rep, old rep shset, jaccard of the two sets)`.
+    *    Without that link every doc anchored to the old rep would
+    *    silently disconnect from docs anchored to the new one. Under
+    *    id-ordered arrival it never fires (bit-parity with the batch
+    *    twin); out-of-order arrival — unsorted crawl splits, the normal
+    *    production case — is exactly what the 10× labels stress caught;
+    *  - an id equal to the rep (a re-delivery) emits nothing.
+    * `nDisplaced`/`nOverConnect` are the counter increments for the
+    * verifying handlers ([[displacedReps]] / [[overConnectMerges]]).
+    */
+  private[graft] def repStep(state: (Long, Seq[Long]),
+      arrivals: scala.collection.Seq[(Long, Seq[Long])]): RepStep = {
+    var (minSeen, repSh) = state
+    val cand = Seq.newBuilder[(Long, Long, Seq[Long])]
+    val disp = Seq.newBuilder[(Long, Long, Seq[Long], Double)]
+    arrivals.sortBy(_._1).foreach { case (id, sh) =>
+      if (minSeen < id) cand += ((id, minSeen, sh))
+      else if (id < minSeen) {
+        if (minSeen != Long.MaxValue)
+          disp += ((minSeen, id, repSh, jaccardSortedSeq(repSh, sh)))
+        minSeen = id; repSh = sh
+      }
+    }
+    RepStep(minSeen, repSh, cand.result(), disp.result())
+  }
+
+  /** [[repStep]]'s result: the new state, the emissions and the counter
+    * increments. */
+  private[graft] final case class RepStep(minSeen: Long, repSh: Seq[Long],
+      candidates: Seq[(Long, Long, Seq[Long])],
+      displaced: Seq[(Long, Long, Seq[Long], Double)]) {
+    def nDisplaced: Long = displaced.size.toLong
+    /** Displacements whose relink passes verification: each folds the
+      * old rep's cluster into the new rep's. */
+    def nOverConnect: Long = displaced.count(_._4 >= 0.5).toLong
+  }
+
+  /** Exact Jaccard of two SORTED distinct shingle-hash arrays — the
+    * Scala twin of `SortedSetOps.jaccard` for in-handler use (the
+    * displaced pair is verified inside the state handler, where both
+    * sets are in hand). Hashes are 56-bit unsigned in a Long, so the
+    * signed merge compare is order-correct. Both-empty yields 0.0
+    * (the expression form yields null; both fall to the ≥ τ filter).
+    */
+  private[graft] def jaccardSortedSeq(a: Seq[Long], b: Seq[Long]): Double = {
+    var i = 0; var j = 0; var inter = 0
+    while (i < a.length && j < b.length) {
+      val x = a(i); val y = b(j)
+      if (x == y) { inter += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    val union = a.length + b.length - inter
+    if (union == 0) 0.0 else inter.toDouble / union
+  }
 
   /** [[nearDupCandidates]] extended through VERIFICATION: candidates are
     * exact-Jaccard-checked (≥ 0.5) against their bucket representative,
@@ -280,25 +319,6 @@ object DocsStream {
     * link). Consumers building cluster LABELS may also consume
     * [[nearDupCandidates]] (connectivity-exact under any order).
     */
-  /** Exact Jaccard of two SORTED distinct shingle-hash arrays — the
-    * Scala twin of `SortedSetOps.jaccard` for in-handler use (the
-    * displaced pair is verified inside the state handler, where both
-    * sets are in hand). Hashes are 56-bit unsigned in a Long, so the
-    * signed merge compare is order-correct. Both-empty yields 0.0
-    * (the expression form yields null; both fall to the ≥ τ filter).
-    */
-  private[graft] def jaccardSortedSeq(a: Seq[Long], b: Seq[Long]): Double = {
-    var i = 0; var j = 0; var inter = 0
-    while (i < a.length && j < b.length) {
-      val x = a(i); val y = b(j)
-      if (x == y) { inter += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    val union = a.length + b.length - inter
-    if (union == 0) 0.0 else inter.toDouble / union
-  }
-
   def nearDupVerified(stream: DataFrame, history: DataFrame,
       ttlMs: Long = 0L, eventTimeCol: Option[String] = None,
       watermarkDelay: String = "0 seconds"): DataFrame = {
@@ -323,38 +343,25 @@ object DocsStream {
         case ((band, _), rows, state) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
-            // same emission semantics as nearDupCandidates; the arriving
-            // doc's shingle set is carried on each emitted row, and the
-            // BUCKET REP's set is cached in state so a displacement can
-            // emit the (old rep, new rep) pair verified on the spot
-            val arr = rows.toArray.sortBy(_._3)
-            var (minSeen, repSh) = state.getOption
-              .getOrElse((Long.MaxValue, Seq.empty[Long]))
-            val out = Array.newBuilder[(Long, Int, Long, Seq[Long], Double)]
-            arr.foreach { r =>
-              if (minSeen < r._3) out += ((r._3, band, minSeen, r._4, -1.0))
-              else if (r._3 < minSeen) {
-                if (minSeen != Long.MaxValue) {
-                  val j = jaccardSortedSeq(repSh, r._4)
-                  out += ((minSeen, band, r._3, repSh, j))
-                  displaced.add(1L)
-                  // a VERIFIED relink folds the old rep's cluster into
-                  // the new rep's — the over-connection channel.
-                  // NOTE: displaced/overConnect are incremented inside
-                  // task execution, so they count AT-LEAST-ONCE under
-                  // task retries / speculative duplicates; the pair
-                  // stays internally consistent (same code path), but
-                  // an exactly-once rate must be derived from the
-                  // emitted displaced rows in the sink, which are
-                  // deduplicated per output row
-                  if (j >= 0.5) overConnect.add(1L)
-                }
-                minSeen = r._3; repSh = r._4
-              }
-            }
-            state.update((minSeen, repSh))
+            // the arriving doc's shingle set is carried on each emitted
+            // row, and the BUCKET REP's set is cached in state so a
+            // displacement can emit the (old rep, new rep) pair verified
+            // on the spot
+            val arr = rows.toArray
+            val step = repStep(state.getOption.getOrElse((Long.MaxValue, Seq.empty[Long])),
+              arr.map(r => (r._3, r._4)))
+            // NOTE: displaced/overConnect are incremented inside task
+            // execution, so they count AT-LEAST-ONCE under task retries /
+            // speculative duplicates; the pair stays internally
+            // consistent (same code path), but an exactly-once rate must
+            // be derived from the emitted displaced rows in the sink,
+            // which are deduplicated per output row
+            displaced.add(step.nDisplaced)
+            overConnect.add(step.nOverConnect)
+            state.update((step.minSeen, step.repSh))
             armTimeout(state, arr.map(r => tsMs(r._5)).max, ttlMs, eventTime)
-            out.result().iterator
+            (step.candidates.map(c => (c._1, band, c._2, c._3, -1.0)) ++
+              step.displaced.map(p => (p._1, band, p._2, p._3, p._4))).iterator
           }
       }
       .toDF("doc_id", "band", "dup_of", "shset", "pre_j")
@@ -362,11 +369,7 @@ object DocsStream {
     // from history gets null jaccard and falls to the filter (as the
     // old inner join dropped it); a displaced pair carries its
     // in-handler value and never needs the lookup
-    val hw = TextOps.tokens(col("text"))
-    val reps = history.filter(size(hw) >= 3)
-      .select(col("doc_id").as("dup_of"),
-        graft.functions.SetFunctions.shingleHashSet(col("text"), 3).as("rep_sh"))
-    cand.join(reps, Seq("dup_of"), "left")
+    cand.join(repShingles(history), Seq("dup_of"), "left")
       .select(col("doc_id"), col("band"), col("dup_of"),
         when(col("pre_j") >= 0, col("pre_j"))
           .otherwise(graft.functions.SetFunctions.jaccardSorted(
@@ -664,13 +667,7 @@ object DocsStream {
   }
 
   /** Batch twin of [[nearDupVerified]] — the q118 oracle surface. */
-  def nearDupVerifiedBatch(docs: DataFrame, history: DataFrame): DataFrame = {
-    val b = banded(docs)
-    val reps = b.groupBy(col("band"), col("bkey"))
-      .agg(min(col("doc_id")).as("dup_of"))
-    val cand = b.join(reps, Seq("band", "bkey"))
-      .filter(col("dup_of") < col("doc_id"))
-      .select(col("doc_id"), col("band"), col("dup_of"), col("shset"))
-    verifyAgainstReps(cand, history)
-  }
+  def nearDupVerifiedBatch(docs: DataFrame, history: DataFrame): DataFrame =
+    verifyAgainstReps(graft.operators.Dedup.repPairs(banded(docs), "dup_of")
+      .select(col("doc_id"), col("band"), col("dup_of"), col("shset")), history)
 }

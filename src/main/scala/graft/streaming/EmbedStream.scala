@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import org.apache.spark.sql.types.StructType
 
 import graft.operators.Ivf
@@ -54,10 +54,6 @@ object EmbedStream {
       .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
   }
 
-  private def timeoutConf(ttlMs: Long): GroupStateTimeout =
-    if (ttlMs > 0) GroupStateTimeout.ProcessingTimeTimeout
-    else GroupStateTimeout.NoTimeout
-
   /** Cap-overflow admissions: vectors that matched no exemplar AND found
     * their cell full — admitted with NO dedup memory (the documented
     * leader-clustering trade at the cap boundary). Silent, that trade
@@ -103,7 +99,7 @@ object EmbedStream {
       .as[(Long, Long, Seq[Double])]
       .groupByKey(_._1)
       .flatMapGroupsWithState[Seq[(Long, Seq[Double])], (Long, Long, Long, Double)](
-        OutputMode.Append, timeoutConf(ttlMs)) {
+        OutputMode.Append, DocsStream.timeoutConf(ttlMs)) {
         case (cid, rows, state) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 import graft.operators.TextOps
 
@@ -78,9 +78,6 @@ object PretrainStream {
 
   private val NBands = 4
 
-  private def timeoutConf(ttlMs: Long, eventTime: Boolean): GroupStateTimeout =
-    DocsStream.timeoutConf(ttlMs, eventTime)
-
   /** Displacement / verified-relink counters (same at-least-once
     * accounting as [[DocsStream.displacedReps]], kept separate so the
     * composed pipeline's out-of-order telemetry is readable on its own).
@@ -152,34 +149,30 @@ object PretrainStream {
     val tsCol = eventTimeCol.map(col)
       .getOrElse(lit(null).cast("timestamp")).as("ts")
 
-    // map-side signal + banding kernels BEFORE any state: the exact
-    // kernels of the batch chain (canonical law of q155/q160 s1; the
-    // edgeBase banding law; the q160 s4 signal laws), so parity is by
-    // construction. Text is dropped here and never rides a shuffle.
+    // map-side signal + banding kernels BEFORE any state: the
+    // [[TextOps]] laws of the batch chain plus the q160 s4 signal laws,
+    // so parity is by construction. Text is dropped here and never rides
+    // a shuffle.
     val ws = TextOps.tokens(col("text"))
-    val canon = trim(regexp_replace(lower(
-      graft.functions.TextFunctions.nfcNormalize(col("text"))), "\\s+", " "))
-    val sig = graft.functions.TextFunctions.minhashSigNative(col("text"), 8)
-    val bkeys = array((0 until NBands).map(b => concat_ws("_",
-      element_at(col("sig"), 2 * b + 1), element_at(col("sig"), 2 * b + 2))): _*)
     // null-text docs must not kill the query: the typed encoder below
     // has primitive Long/Boolean fields, so n_tokens/elig are
     // null-coalesced (a null text is a 0-token ineligible doc; its
-    // canonical key stays NULL-FAITHFUL — md5(null) is null, grouping
-    // all null texts into one class exactly as the batch groupBy does)
-    val elig = coalesce(size(ws) >= 3, lit(false))
+    // canonical key stays NULL-FAITHFUL, grouping all null texts into
+    // one class exactly as the batch groupBy does)
+    val elig = coalesce(TextOps.eligible(col("text")), lit(false))
     val slim = s0.select(col("doc_id"), col("source"), col("text"), tsCol,
-        md5(canon).as("ck"),
+        TextOps.canonicalKey(col("text")).as("ck"),
         coalesce(size(ws).cast("long"), lit(0L)).as("n_tokens"),
         when(size(ws) > 0, size(array_distinct(ws)) / size(ws))
           .otherwise(lit(0.0)).as("ttr"),
-        when(elig, graft.functions.SetFunctions.shingleHashSet(col("text"), 3))
+        when(elig, TextOps.shingleSet(col("text")))
           .otherwise(array().cast("array<long>")).as("shset"),
-        when(elig, sig).otherwise(lit(null)).as("sig"),
+        when(elig, TextOps.signature(col("text"))).otherwise(lit(null)).as("sig"),
         elig.as("elig"))
       .select(col("ck"), col("doc_id"), col("source"), col("n_tokens"),
         col("ttr"), col("shset"),
-        when(col("elig"), bkeys).otherwise(lit(null)).as("bkeys"),
+        when(col("elig"), array(TextOps.bandKeys(col("sig"), NBands): _*))
+          .otherwise(lit(null)).as("bkeys"),
         col("elig"), col("ts"))
 
     // horizon arming shared with the standalone twins — see
@@ -200,7 +193,7 @@ object PretrainStream {
       .flatMapGroupsWithState[Long,
         (Long, String, Long, Double, Seq[Long], Seq[String], Boolean,
           java.sql.Timestamp)](
-        OutputMode.Append, timeoutConf(ttlMs, eventTime)) {
+        OutputMode.Append, DocsStream.timeoutConf(ttlMs, eventTime)) {
         case (_, rows, state) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
@@ -221,8 +214,8 @@ object PretrainStream {
 
     // band explode: eligible docs get their 4 (band, bkey) rows;
     // ineligible docs one singleton `solo|id` bucket (band 0)
-    val bandArr = array((0 until NBands).map(b => struct(lit(b).as("band"),
-      element_at(col("bkeys"), b + 1).as("bkey"))): _*)
+    val bandArr = TextOps.bandStructs(
+      (0 until NBands).map(b => element_at(col("bkeys"), b + 1)))
     val soloArr = array(struct(lit(0).as("band"),
       concat(lit("solo|"), col("doc_id").cast("string")).as("bkey")))
     val rows0 = s1
@@ -246,39 +239,31 @@ object PretrainStream {
       .groupByKey(r => (r._1, r._2))
       .flatMapGroupsWithState[(Long, Seq[Long]),
         (Int, Long, Long, Seq[Long], Double, String, Long, Double)](
-        OutputMode.Append, timeoutConf(ttlMs, eventTime)) {
+        OutputMode.Append, DocsStream.timeoutConf(ttlMs, eventTime)) {
         case ((band, bkey), rows, state) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
-            val arr = rows.toArray.sortBy(_._3)
-            val out = Array.newBuilder[
-              (Int, Long, Long, Seq[Long], Double, String, Long, Double)]
-            if (bkey.startsWith("solo|")) {
-              // singleton bucket: marker only, no state ever needed
-              arr.foreach(r =>
-                out += ((0, r._3, -1L, Seq.empty, -2.0, r._5, r._6, r._7)))
-            } else {
-              var (minSeen, repSh) = state.getOption
-                .getOrElse((Long.MaxValue, Seq.empty[Long]))
-              arr.foreach { r =>
-                if (band == 0)
-                  out += ((0, r._3, -1L, Seq.empty, -2.0, r._5, r._6, r._7))
-                if (minSeen < r._3)
-                  out += ((1, r._3, minSeen, r._4, -1.0, null, -1L, -2.0))
-                else if (r._3 < minSeen) {
-                  if (minSeen != Long.MaxValue) {
-                    val j = DocsStream.jaccardSortedSeq(repSh, r._4)
-                    out += ((1, minSeen, r._3, repSh, j, null, -1L, -2.0))
-                    displaced.add(1L)
-                    if (j >= 0.5) overConnect.add(1L)
-                  }
-                  minSeen = r._3; repSh = r._4
-                }
-              }
-              state.update((minSeen, repSh))
+            val arr = rows.toArray
+            // band 0 (and every singleton bucket) carries the doc markers
+            val markers = if (band != 0) Iterator.empty
+              else arr.iterator.map(r =>
+                (0, r._3, -1L, Seq.empty[Long], -2.0, r._5, r._6, r._7))
+            // singleton bucket: marker only, no state ever needed
+            if (bkey.startsWith("solo|")) markers
+            else {
+              val step = DocsStream.repStep(
+                state.getOption.getOrElse((Long.MaxValue, Seq.empty[Long])),
+                arr.map(r => (r._3, r._4)))
+              displaced.add(step.nDisplaced)
+              overConnect.add(step.nOverConnect)
+              state.update((step.minSeen, step.repSh))
               armTimeout(state, arr.map(r => tsMs(r._8)).max)
+              markers ++
+                step.candidates.iterator.map(c =>
+                  (1, c._1, c._2, c._3, -1.0, null: String, -1L, -2.0)) ++
+                step.displaced.iterator.map(p =>
+                  (1, p._1, p._2, p._3, p._4, null: String, -1L, -2.0))
             }
-            out.result().iterator
           }
       }
       .toDF("kind", "doc_id", "dup_of", "shset", "pre_j", "source",
@@ -286,11 +271,7 @@ object PretrainStream {
 
     // stream-static verification of candidate edges against the corpus
     // table's rep shingles; displaced pairs carry their in-handler value
-    val hw = TextOps.tokens(col("text"))
-    val reps = history.filter(size(hw) >= 3)
-      .select(col("doc_id").as("dup_of"),
-        graft.functions.SetFunctions.shingleHashSet(col("text"), 3).as("rep_sh"))
-    handled.join(reps, Seq("dup_of"), "left")
+    handled.join(DocsStream.repShingles(history), Seq("dup_of"), "left")
       .withColumn("jaccard",
         when(col("kind") === 0, lit(null).cast("double"))
           .when(col("pre_j") >= 0, col("pre_j"))

@@ -115,6 +115,10 @@ class PretrainStreamSpec extends AnyFunSuite {
     val sig3 = PretrainStream.storeSig3(spark, storeRoot, labelsRoot)
     assert(sortedRows(PipelineQueries.q160GateFrom(sig3)) ==
       sortedRows(stages(3)), "stage-3 decontaminate+gate output differs")
+    // ... and BEFORE the gate, so a divergence on a doc the gate drops
+    // cannot hide behind it
+    assert(ids(sig3) == ids(PipelineQueries.q160Decontaminated(docs, dir,
+      stages(2), evalPred)), "stage-3 pre-gate decontaminated ids differ")
     // decontamination must actually drop something here, or this stage
     // locks nothing
     assert(ids(sig3).size < streamKept2.size,

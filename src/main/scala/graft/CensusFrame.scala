@@ -138,11 +138,18 @@ final case class CensusFrame(df: DataFrame, release: Option[Release] = None) {
     AcsMath.product(ac, am, bc, bm)
   }
 
-  /** Append `ref_rse` (ref `test/test_basic.py:97-101`). */
+  /** Append `ref_rse` (ref `test/test_basic.py:97-101`), replacing a
+    * column of that name in place. One `select` over an indexed column
+    * list rather than `withColumn`, whose project list inherits the
+    * frame output's collection type (see [[graft.sources.DriverFrame]]).
+    */
   def addRse(ref: String): CensusFrame = {
-    val n = resolveName(ref)
+    val name = resolveName(ref) + "_rse"
     val (e, m) = pair(ref)
-    copy(df = df.withColumn(n + "_rse", AcsMath.rse(e, m)))
+    val rse = AcsMath.rse(e, m).as(name)
+    val existing = df.columns.toIndexedSeq
+    val cols = existing.map(c => if (c == name) rse else df(c))
+    copy(df = df.select((if (existing.contains(name)) cols else cols :+ rse): _*))
   }
 
   /** Attach named (estimate, m90) pairs in this frame's row context — the

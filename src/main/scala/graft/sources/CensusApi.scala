@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -84,11 +84,8 @@ object CensusApi {
   }
 
   def toDataFrame(spark: SparkSession, header: Seq[String],
-      rows: Seq[Seq[String]]): DataFrame = {
-    val schema = StructType(header.map(StructField(_, StringType, nullable = true)))
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.map(r => Row(r: _*)).asJava, schema)
-  }
+      rows: Seq[Seq[String]]): DataFrame =
+    DriverFrame(spark, StructType(header.map(StructField(_, StringType, nullable = true))), rows)
 
   /** Dataset catalog search over `{Host}.json` (`api.search_datasets`). */
   def searchDatasets(pattern: String, fetchFn: String => String = httpGet): Seq[DatasetRef] = {

@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -166,18 +166,15 @@ object CensusReporterDecoder {
   }
 
   /** Materialize a decoded table as a metadata-rich CensusFrame. */
-  def toFrame(spark: SparkSession, t: CRTable): CensusFrame = {
-    val schema = CensusMeta.schema(t.columns)
-    val rows = t.rows.map(s => Row(s: _*))
-    import scala.jdk.CollectionConverters._
-    CensusFrame(spark.createDataFrame(rows.asJava, schema), Some(t.release))
-  }
+  def toFrame(spark: SparkSession, t: CRTable): CensusFrame =
+    CensusFrame(DriverFrame(spark, CensusMeta.schema(t.columns), t.rows), Some(t.release))
 }
 
 /** Driver-side fetch + cache + load (ref entry point A, SURVEY §3.1).
   * Data volumes per table are tiny (628×120 for B17001/140), so a
-  * driver-side source feeding `createDataFrame` is the right shape; the
-  * lazy Catalyst plan begins at the frame.
+  * driver-side source feeding [[DriverFrame]], the sources' one
+  * local-relation builder, is the right shape; the lazy Catalyst plan
+  * begins at the frame.
   */
 object CensusReporter {
 

@@ -1,0 +1,27 @@
+package graft.sources
+
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.types.StructType
+
+/** The one driver-side frame builder of the sources: rows decoded on the
+  * driver ([[CensusReporterDecoder.toFrame]], [[CensusApi.toDataFrame]])
+  * become a `LocalRelation` whose output is an `IndexedSeq`.
+  *
+  * Why not `createDataFrame`: it maps the `StructType` into a `List` of
+  * attributes, and every `Project` built over that output inherits the
+  * `List` (`withColumn`, and `PullOutGroupingExpressions`'
+  * `child.output ++ …` under a grouped SQL aggregate). Spark's
+  * `ConvertToLocalRelation` (optimizer batch "LocalRelation early", before
+  * column pruning) evaluates each such `Project` row by row with
+  * `InterpretedMutableProjection`, which indexes its expression list per
+  * field, so on a `List` every row costs O(width²).
+  */
+private[graft] object DriverFrame {
+  def apply(spark: SparkSession, schema: StructType, rows: Seq[Seq[Any]]): DataFrame = {
+    val output = schema.fields.toIndexedSeq.map(f =>
+      AttributeReference(f.name, f.dataType, f.nullable, f.metadata)())
+    GraftSqlBridge.ofRows(spark, LocalRelation.fromExternalRows(output, rows.map(Row.fromSeq)))
+  }
+}

@@ -1,10 +1,12 @@
 package graft.sources
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
+
+import graft.functions.VectorFunctions
 
 /** Variance-replicate utilities (reference `varrep.py`, absent from the
   * snapshot; observable surface pinned by `test/test_basic.py:221-234`).
@@ -50,15 +52,31 @@ object VarRep {
   def aveWeightSql(expr: String): String =
     s"CASE WHEN $expr = 11 THEN 13 ELSE 10 + ($expr) % 7 END"
 
+  private val repNames = (1 to 80).map(i => s"Var_Rep$i")
+
+  /** The documented VRE layout (FIXTURES.md §5). Declared rather than
+    * inferred: inference costs two extra Spark jobs and a pass over the
+    * file per load, and would read an all-digit GEOID such as
+    * `01001020100` as a number, losing its leading zero.
+    */
+  private val varRepSchema: StructType = StructType(
+    Seq("TBLID" -> StringType, "GEOID" -> StringType, "ORDER" -> IntegerType,
+      "TITLE" -> StringType, "CME" -> StringType, "ESTIMATE" -> DoubleType,
+      "MOE" -> DoubleType).map { case (n, t) => StructField(n, t) } ++
+      repNames.map(StructField(_, DoubleType)))
+
   /** Load a variance-replicate CSV (long format, FIXTURES.md §5) and pack
     * the 80 wide replicate columns into one array column for the variance
     * math — the scalable layout (one shuffle key, no 80-column fanout).
+    * The header must name [[varRepSchema]]'s columns in order
+    * (`enforceSchema=false`): a file of another layout fails its read
+    * instead of being read by position.
     */
   def loadVarRep(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-    val repCols = (1 to 80).map(i => col(s"Var_Rep$i"))
-    raw.withColumn("replicates", array(repCols: _*))
-      .drop((1 to 80).map(i => s"Var_Rep$i"): _*)
+    val raw = spark.read.schema(varRepSchema)
+      .option("header", "true").option("enforceSchema", "false").csv(path)
+    raw.select(raw.columns.toIndexedSeq.filterNot(repNames.toSet).map(raw(_)) :+
+      array(repNames.map(raw(_)): _*).as("replicates"): _*)
   }
 
   /** URL of a published ACS Variance Replicate Estimates file — the
@@ -119,12 +137,16 @@ object VarRep {
       fetchVarRep(year, tableId, summaryLevel, state, cache, cacheDir, fetch).toString)
 
   /** Successive-difference-replication variance: `4/80 · Σ (repᵢ − est)²`,
-    * computed with a higher-order aggregate over the packed array (no UDF).
-    * MOE at 90%: `1.645 · sqrt(variance)`.
+    * computed by the codegen'd [[graft.functions.L2DistSq]] kernel against
+    * the estimate repeated once per replicate: the same left fold in
+    * element order as `aggregate(replicates, 0.0, (acc, r) => acc +
+    * (r - est) * (r - est))`, so bit-identical to it, but in doubles, so an
+    * int-typed input cannot overflow. A null array, estimate or replicate
+    * gives null; an empty array gives 0. MOE at 90%: `1.645 · sqrt(variance)`.
     */
   def replicateVariance(est: Column, replicates: Column): Column =
-    aggregate(replicates, lit(0.0),
-      (acc, r) => acc + (r - est) * (r - est)) * lit(4.0 / 80.0)
+    VectorFunctions.d2Native(replicates, array_repeat(est, size(replicates))) *
+      lit(4.0 / 80.0)
 
   def replicateMoe(est: Column, replicates: Column): Column =
     sqrt(replicateVariance(est, replicates)) * lit(graft.functions.AcsMath.Z90)

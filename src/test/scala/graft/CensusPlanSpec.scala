@@ -1,0 +1,120 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.sources._
+
+/** Plan and job locks on the census request path: a decoded table becomes
+  * a frame without per-request Spark work, and its derived measures stay
+  * linear in the table's width.
+  */
+class CensusPlanSpec extends AnyFunSuite {
+  lazy val spark = TestSpark.spark
+
+  private def fixtureTable = {
+    val in = getClass.getClassLoader.getResourceAsStream("censusreporter/acs_fixture.json")
+    CensusReporterDecoder.decode(
+      new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8), "B17001")
+  }
+
+  private def output(df: DataFrame): Seq[_] = df.queryExecution.analyzed.output
+
+  test("the driver-side frame helper's output is an IndexedSeq") {
+    val t = fixtureTable
+    val direct = DriverFrame(spark, schema.CensusMeta.schema(t.columns), t.rows)
+    val api = CensusApi.toDataFrame(spark, Seq("NAME", "x"), Seq(Seq("a", "1")))
+    Seq(direct, CensusReporterDecoder.toFrame(spark, t).df, api).foreach { df =>
+      assert(output(df).isInstanceOf[IndexedSeq[_]], output(df).getClass.getName)
+    }
+    assert(CensusReporterDecoder.toFrame(spark, t).df.collect().map(_.toSeq).toSeq ==
+      t.rows)
+  }
+
+  /** Spark's `ConvertToLocalRelation` (optimizer batch "LocalRelation
+    * early", before column pruning) evaluates each `Project` over a
+    * `LocalRelation` row by row with `InterpretedMutableProjection`, which
+    * indexes the project list per field: O(width²) per row when the list
+    * is a `List`. With that rule excluded, the optimized plan shows every
+    * `Project` the rule would have evaluated.
+    */
+  test("no Project from addRse, withPairs or grouped with_m90 SQL carries a List") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.optimizer.excludedRules",
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+    val cf = CensusReporterDecoder.toFrame(s, fixtureTable)
+    val derived = cf.addRse("001")
+    val paired = derived.withPairs("share" -> derived.proportion("002", "001"))
+    cf.df.createOrReplaceTempView("plan_lock")
+    val grouped = s.sql(
+      "SELECT substr(geoid, 1, 9) AS grp, with_m90(B17001001) FROM plan_lock " +
+        "GROUP BY substr(geoid, 1, 9)")
+    def projects(p: LogicalPlan): Seq[Project] = p.collect { case x: Project => x }
+    Seq("addRse" -> derived.df, "withPairs" -> paired.df, "with_m90" -> grouped).foreach {
+      case (name, df) =>
+        val qe = df.queryExecution
+        val ps = projects(qe.analyzed) ++ projects(qe.optimizedPlan)
+        assert(ps.nonEmpty, name)
+        ps.foreach(p => assert(!p.projectList.isInstanceOf[List[_]],
+          s"$name: List project list over ${p.child.nodeName}"))
+    }
+    assert(grouped.count() == 1)
+  }
+
+  /** Count the jobs `body` starts, by job group, so concurrent suites'
+    * jobs are not counted.
+    */
+  private def jobsOf(s: SparkSession)(body: => Unit): Int = {
+    val sc = s.sparkContext
+    val group = s"census-plan-${java.util.UUID.randomUUID()}"
+    val n = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      GraftSqlBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get()
+  }
+
+  test("a VRE load + replicate-MOE collect runs one job; derived measures on a " +
+      "decoded frame run none") {
+    val dir = java.nio.file.Files.createTempDirectory("varrep-jobs")
+    val header = (Seq("TBLID", "GEOID", "ORDER", "TITLE", "CME", "ESTIMATE", "MOE") ++
+      (1 to 80).map(i => s"Var_Rep$i")).mkString(",")
+    val rows = (1 to 5).map(r => (Seq("B01001", s"g$r", r.toString, "Total", "", "100",
+      "5") ++ Seq.fill(80)("101")).mkString(","))
+    val path = dir.resolve("vr.csv")
+    java.nio.file.Files.write(path, (header +: rows).mkString("", "\n", "\n").getBytes)
+    var moe: Array[org.apache.spark.sql.Row] = null
+    val vreJobs = jobsOf(spark) {
+      val df = VarRep.loadVarRep(spark, path.toString)
+      moe = df.select(col("GEOID"),
+        VarRep.replicateMoe(col("ESTIMATE"), col("replicates")).as("m")).collect()
+    }
+    assert(moe.length == 5 && moe.forall(_.getDouble(1) == math.sqrt(4.0) * 1.645))
+    assert(vreJobs == 1, s"VRE load + collect ran $vreJobs jobs")
+
+    val cf = CensusReporterDecoder.toFrame(spark, fixtureTable)
+    val derivedJobs = jobsOf(spark) {
+      val f = cf.addRse("001")
+      val w = f.withPairs("share" -> f.proportion("002", "001"),
+        "sum" -> f.sumM("003", "004"))
+      assert(w.df.select("geoid", "B17001001_rse", "share", "share_m90", "sum")
+        .collect().length == 3)
+    }
+    assert(derivedJobs == 0, s"derived-measure collect ran $derivedJobs jobs")
+  }
+}

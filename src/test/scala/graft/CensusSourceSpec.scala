@@ -273,6 +273,53 @@ class CensusSourceSpec extends AnyFunSuite {
     assert(math.abs(out("g2")._2 - 1.645 * 2.0) < 1e-12)
   }
 
+  test("VarRep variance of int-typed input with a 50,000 deviation does not overflow") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.types._
+    // (r - est)² = 2.5e9 exceeds Int.MaxValue: an int multiply overflows
+    val schema = StructType(Seq(StructField("ESTIMATE", IntegerType),
+      StructField("replicates", ArrayType(IntegerType))))
+    val df = spark.createDataFrame(java.util.List.of(
+      Row(39000000, Seq.fill(80)(39050000))), schema)
+    val r = df.select(
+      VarRep.replicateVariance(col("ESTIMATE"), col("replicates")),
+      VarRep.replicateMoe(col("ESTIMATE"), col("replicates"))).head()
+    assert(r.getDouble(0) == 1e10)
+    assert(r.getDouble(1) == 1.645e5)
+  }
+
+  private def writeVarRep(dir: java.nio.file.Path, header: Seq[String],
+      rows: Seq[Seq[String]]): String = {
+    val path = dir.resolve("vr.csv")
+    java.nio.file.Files.write(path,
+      (header +: rows).map(_.mkString(",")).mkString("", "\n", "\n").getBytes)
+    path.toString
+  }
+
+  private val varRepHeader = Seq("TBLID", "GEOID", "ORDER", "TITLE", "CME", "ESTIMATE",
+    "MOE") ++ (1 to 80).map(i => s"Var_Rep$i")
+
+  test("VarRep keeps an all-digit GEOID's leading zero (declared schema)") {
+    val path = writeVarRep(java.nio.file.Files.createTempDirectory("varrep-geoid"),
+      varRepHeader, Seq(Seq("B01001", "01001020100", "1", "Total", "", "100", "5") ++
+        Seq.fill(80)("100")))
+    val df = VarRep.loadVarRep(spark, path)
+    assert(df.schema("GEOID").dataType == org.apache.spark.sql.types.StringType)
+    assert(df.select("GEOID").head().getString(0) == "01001020100")
+  }
+
+  test("VarRep fails loudly on a header that differs from the documented layout") {
+    val header = varRepHeader.take(2) ++ Seq("NAME") ++ varRepHeader.drop(2)
+    val path = writeVarRep(java.nio.file.Files.createTempDirectory("varrep-header"),
+      header, Seq(Seq("B01001", "01001020100", "Autauga", "1", "Total", "", "100", "5") ++
+        Seq.fill(80)("100")))
+    val e = intercept[Exception](VarRep.loadVarRep(spark, path).collect())
+    val messages = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).toSeq
+    assert(messages.exists(_.contains("CSV header")), messages.mkString(" | "))
+  }
+
   test("VarRep remote fetch: URL construction, zip unwrap, cache-hit skips fetch") {
     import org.apache.spark.sql.functions._
     // mirror of the reference's get_varrep_dataframe(2015,'B01001','140',

@@ -26,6 +26,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // sanity check, so `with_m90(c)` is rewritten away before anything
     // tries to resolve it as a function.
     e.injectHintResolutionRule(_ => graft.plans.MarginExpansionRule)
+    // Optimizer leg: aggregates over driver-local rows run on the driver.
+    e.injectOptimizerRule(_ => graft.plans.LocalAggregate)
     e.injectFunction((
       FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),

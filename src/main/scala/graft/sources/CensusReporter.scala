@@ -174,7 +174,10 @@ object CensusReporterDecoder {
   * Data volumes per table are tiny (628×120 for B17001/140), so a
   * driver-side source feeding [[DriverFrame]], the sources' one
   * local-relation builder, is the right shape; the lazy Catalyst plan
-  * begins at the frame.
+  * begins at the frame. Derived measures and aggregates over the frame
+  * (`groupBySum`, grouped `with_m90` SQL) are folded on the driver by the
+  * optimizer, so a census request starts no Spark job; only a VRE load
+  * ([[VarRep.loadVarRep]]) runs one, its file scan.
   */
 object CensusReporter {
 

@@ -17,6 +17,11 @@ import org.apache.spark.sql.types.StructType
   * column pruning) evaluates each such `Project` row by row with
   * `InterpretedMutableProjection`, which indexes its expression list per
   * field, so on a `List` every row costs O(width²).
+  *
+  * Aggregates over such a frame run on the driver too:
+  * [[graft.plans.LocalAggregate]] folds them to a `LocalRelation` of their
+  * result, so a frame's derived measures and grouped sums start no Spark
+  * job.
   */
 private[graft] object DriverFrame {
   def apply(spark: SparkSession, schema: StructType, rows: Seq[Seq[Any]]): DataFrame = {

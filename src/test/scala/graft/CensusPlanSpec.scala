@@ -45,8 +45,10 @@ class CensusPlanSpec extends AnyFunSuite {
     */
   test("no Project from addRse, withPairs or grouped with_m90 SQL carries a List") {
     val s = spark.newSession()
+    // LocalAggregate would fold the grouped plan (Projects and all) away.
     s.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation")
+      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation," +
+        "graft.plans.LocalAggregate")
     val cf = CensusReporterDecoder.toFrame(s, fixtureTable)
     val derived = cf.addRse("001")
     val paired = derived.withPairs("share" -> derived.proportion("002", "001"))
@@ -116,5 +118,41 @@ class CensusPlanSpec extends AnyFunSuite {
         .collect().length == 3)
     }
     assert(derivedJobs == 0, s"derived-measure collect ran $derivedJobs jobs")
+  }
+
+  test("grouped with_m90 SQL and groupBySum over a decoded frame run no job") {
+    val cf = CensusReporterDecoder.toFrame(spark, fixtureTable)
+    cf.df.createOrReplaceTempView("job_lock")
+    val keyed = CensusFrame(cf.df.select(substring(col("geoid"), 8, 2).as("state") +:
+      cf.df.columns.toIndexedSeq.map(cf.df(_)): _*))
+    val queries = Seq(
+      "with_m90 SQL" -> (() => spark.sql("SELECT substr(geoid, 1, 9) AS grp, " +
+        "with_m90(B17001001) FROM job_lock GROUP BY substr(geoid, 1, 9)")),
+      "groupBySum" -> (() =>
+        keyed.groupBySum("state").df.select("state", "B17001001", "B17001001_m90")))
+    val est = cf.df.collect().map(r => r.getAs[Double]("B17001001")).sum
+    val jobs = queries.map { case (name, q) =>
+      var rows: Array[org.apache.spark.sql.Row] = null
+      val n = jobsOf(spark) { rows = q().collect() }
+      assert(rows.length == 1 && rows.head.getDouble(1) == est, name)
+      name -> n
+    }
+    assert(jobs.forall(_._2 == 0), s"jobs per query: $jobs")
+  }
+
+  test("an ANSI long-sum overflow fails collect with ARITHMETIC_OVERFLOW on both paths") {
+    Seq("", "graft.plans.LocalAggregate").foreach { excluded =>
+      val s = spark.newSession()
+      s.conf.set("spark.sql.ansi.enabled", "true")
+      s.conf.set("spark.sql.optimizer.excludedRules", excluded)
+      val df = DriverFrame(s, new org.apache.spark.sql.types.StructType()
+        .add("k", "string").add("v", "long"),
+        Seq(Seq("a", Long.MaxValue), Seq("a", 1L), Seq("b", 2L)))
+        .groupBy("k").agg(sum("v"))
+      val e = intercept[Exception](df.collect())
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(t => String.valueOf(t.getMessage).contains("ARITHMETIC_OVERFLOW")),
+        s"excluded '$excluded': $e")
+    }
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StructField}
 
 import graft.functions.AcsMath
@@ -79,12 +78,18 @@ final case class CensusFrame(df: DataFrame, release: Option[Release] = None) {
   /** Frame column name of the margin paired with estimate `ref`. */
   def m90Name(ref: String): String = {
     val est = resolveName(ref)
+    pairedM90(est).getOrElse(throw new IllegalArgumentException(s"No m90 column paired with '$est'"))
+  }
+
+  /** The pairing rule: `<est>_m90` by name, else the margin whose census
+    * metadata names `est`'s code (the titled and code-title views).
+    */
+  private def pairedM90(est: String): Option[String] = {
     val byConvention = est + "_m90"
-    if (df.columns.contains(byConvention)) byConvention
+    if (df.columns.contains(byConvention)) Some(byConvention)
     else df.schema.fields
       .find(f => CensusMeta.fromField(f).exists(m => m.isM90 && m.valueCode == censusCode(est)))
       .map(_.name)
-      .getOrElse(throw new IllegalArgumentException(s"No m90 column paired with '$est'"))
   }
 
   /** Estimate column name paired with a margin column name. */
@@ -105,16 +110,15 @@ final case class CensusFrame(df: DataFrame, release: Option[Release] = None) {
 
   /** `selectCensus("geoid", "c0", "c1")` returns
     * `geoid, c0, c0_m90, c1, c1_m90` — selecting an estimate auto-includes
-    * its margin (ref `test/test_basic.py:176-195`). Expansion happens at the
-    * API layer, pre-Catalyst, so column pruning still sees the full list.
+    * its margin (ref `test/test_basic.py:176-195`), paired by [[m90Name]]'s
+    * rule, so a titled view's `Total` brings its `B17001001_m90`.
+    * Expansion happens at the API layer, pre-Catalyst, so column pruning
+    * still sees the full list.
     */
   def selectCensus(refs: String*): CensusFrame = {
     val expanded = refs.flatMap { r =>
       val n = resolveName(r)
-      val withM90 =
-        if (!n.endsWith("_m90") && df.columns.contains(n + "_m90")) Seq(n, n + "_m90")
-        else Seq(n)
-      withM90
+      n +: pairedM90(n).toSeq
     }.distinct
     copy(df = df.select(expanded.map(df(_)): _*))
   }
@@ -177,25 +181,26 @@ final case class CensusFrame(df: DataFrame, release: Option[Release] = None) {
     }.toSeq
 
   /** `groupby(keys).sum()` with RSS margins: estimates summed, `_m90`
-    * columns combined as `sqrt(sum(m²))` (ref `test/test_basic.py:197-207`,
-    * notebook cell 12). NaN margins should be filled first (`fillNaMargins`).
-    * One shuffle; partial aggregation is map-side (sum and sum-of-squares
-    * both decompose).
+    * columns combined as `sqrt(sum(m²))` ([[AcsMath.aggSumM]]; ref
+    * `test/test_basic.py:197-207`, notebook cell 12). NaN margins should be
+    * filled first (`fillNaMargins`). One shuffle; partial aggregation is
+    * map-side (sum and sum-of-squares both decompose).
     */
   def groupBySum(keys: String*): CensusFrame = groupByAgg(keys, mean = false)
 
-  /** `groupby(keys).mean()` with RSS-scaled margins (SURVEY §2.4 A2). */
+  /** `groupby(keys).mean()` with RSS-scaled margins ([[AcsMath.aggMeanM]];
+    * SURVEY §2.4 A2).
+    */
   def groupByMean(keys: String*): CensusFrame = groupByAgg(keys, mean = true)
 
+  /** Each data column takes its half of the aggregate pair law: the
+    * estimate half for an estimate, the margin half for an `_m90` column.
+    */
   private def groupByAgg(keys: Seq[String], mean: Boolean): CensusFrame = {
-    val dataCols = numericDataCols.filterNot(keys.contains)
-    val aggs = dataCols.map { c =>
-      if (c.endsWith("_m90")) {
-        val m = sqrt(sum(df(c) * df(c)))
-        (if (mean) m / count(df(c)) else m).as(c)
-      } else {
-        (if (mean) avg(df(c)) else sum(df(c))).as(c)
-      }
+    val law: (Column, Column) => EstM90 = if (mean) AcsMath.aggMeanM else AcsMath.aggSumM
+    val aggs = numericDataCols.filterNot(keys.contains).map { c =>
+      val p = law(df(c), df(c))
+      (if (c.endsWith("_m90")) p.m90 else p.est).as(c)
     }
     copy(df = df.groupBy(keys.map(df(_)): _*).agg(aggs.head, aggs.tail: _*))
   }

@@ -35,12 +35,13 @@ object SparkEntry {
     val bm = lit(1.0) + lit(5.0) * col("l_tax")
     val sm = AcsMath.sumM(Seq((a, am), (b, bm)))
     val prop = AcsMath.proportion(b, bm, a, am)
+    val aggs = AcsMath.aggSumM(col("s"), col("s_m90")).named("s") ++
+      Seq(avg(col("p")).as("p_mean"), count(lit(1)).as("n"))
     li.select(Seq(col("l_returnflag")) ++ sm.named("s") ++ prop.named("p")
         :+ AcsMath.rse(sm.est, sm.m90).as("s_rse"): _*)
       .na.fill(0.0, Seq("s_m90", "p_m90"))
       .groupBy(col("l_returnflag"))
-      .agg(sum(col("s")).as("s"), sqrt(sum(col("s_m90") * col("s_m90"))).as("s_m90"),
-        avg(col("p")).as("p_mean"), count(lit(1)).as("n"))
+      .agg(aggs.head, aggs.tail: _*)
       .orderBy(col("l_returnflag"))
   }
 

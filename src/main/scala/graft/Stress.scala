@@ -517,30 +517,20 @@ object Stress {
           s""""twolevel_bc_warm_sec":$twoBcS}""")
       }
       // STRESS_HARDNEG=k: q138's per-anchor cut — the bounded TopKScored
-      // aggregate vs the row_number() window baseline, at quantizer size
-      // k (the cell-size dial: pair volume is ~nprobe·n²/k). The claim
-      // under test: the aggregate's map-side partials bound the anchor
-      // exchange at kTop rows per (anchor, task), so its shuffle bytes
-      // stay flat while the window form shuffles EVERY scored pair.
+      // aggregate at quantizer size k (the cell-size dial: pair volume is
+      // ~nprobe·n²/k). Its map-side partials bound the anchor exchange at
+      // kTop rows per (anchor, task), so its shuffle bytes stay flat.
       sys.env.get("STRESS_HARDNEG").map(_.toInt).foreach { k =>
-        import org.apache.spark.sql.DataFrame
         val nVec = spark.read.parquet(s"$dir/embeddings.parquet").count()
         val cents = queries.PipelineQueries.ivfCentsK(spark, dir, k)
-        def time(mk: => DataFrame): (Double, Long, Long) = {
-          val runs = (1 to 2).map { _ =>
-            totals.measure {
-              mk.write.format("noop").mode("overwrite").save()
-            }
+        val (aggS, aggSh, aggSp) = (1 to 2).map { _ =>
+          totals.measure {
+            queries.PipelineQueries.hardNegatives(spark, dir, cents, nprobe = 2, kTop = 5)
+              .write.format("noop").mode("overwrite").save()
           }
-          runs.last
-        }
-        val (aggS, aggSh, aggSp) = time(queries.PipelineQueries
-          .hardNegatives(spark, dir, cents, nprobe = 2, kTop = 5))
-        val (winS, winSh, winSp) = time(queries.PipelineQueries
-          .hardNegatives(spark, dir, cents, nprobe = 2, kTop = 5, viaWindow = true))
+        }.last
         println(s"""STRESS_HARDNEG {"corpus":"$tag","vectors":$nVec,"k":$k,""" +
-          s""""agg_warm_sec":$aggS,"agg_shuffle_bytes":$aggSh,"agg_spill":$aggSp,""" +
-          s""""win_warm_sec":$winS,"win_shuffle_bytes":$winSh,"win_spill":$winSp}""")
+          s""""agg_warm_sec":$aggS,"agg_shuffle_bytes":$aggSh,"agg_spill":$aggSp}""")
       }
       // STRESS_MARGIN=k: q142's ratio-margin mining at quantizer size k
       // (the oracle query pins k=8; pair volume is ~nprobe·n²/k so the

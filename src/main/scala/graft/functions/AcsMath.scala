@@ -100,18 +100,23 @@ object AcsMath {
   /** Standard error from a 90% margin: `m90 / 1.645`. */
   def se(m90: Column): Column = m90 / lit(Z90)
 
-  /** Aggregate (grouped) sum of an estimate with RSS-combined margin:
-    * estimate = `sum(est)`, m90 = `sqrt(sum(m90²))` — the reference's one
-    * non-standard aggregation semantics (`test/test_basic.py:197-207`,
-    * notebook cell 12: "sum() will sum the _m90 columns as root of summed
-    * squares").
+  /** The grouped margin law: root-sum-of-squares `sqrt(Σ m²)`, squared in
+    * double so an integral margin cannot overflow under ANSI.
     */
-  def aggSumM(est: Column, m90: Column): EstM90 =
-    EstM90(sum(d(est)), sqrt(sum(d(m90) * d(m90))))
+  private def rssAgg(m90: Column): Column = sqrt(sum(d(m90) * d(m90)))
+
+  /** Aggregate (grouped) sum of an estimate with RSS-combined margin:
+    * estimate = `sum(est)` in the column's own type, m90 = `sqrt(sum(m90²))`
+    * — the reference's one non-standard aggregation semantics
+    * (`test/test_basic.py:197-207`, notebook cell 12: "sum() will sum the
+    * _m90 columns as root of summed squares").
+    */
+  def aggSumM(est: Column, m90: Column): EstM90 = EstM90(sum(est), rssAgg(m90))
 
   /** Aggregate mean with RSS-scaled margin: estimate = `avg(est)`,
-    * m90 = `sqrt(sum(m90²)) / count` (margin of a mean of n estimates).
+    * m90 = `sqrt(sum(m90²)) / count(m90)` (margin of a mean of n estimates,
+    * n counting the non-null margins).
     */
   def aggMeanM(est: Column, m90: Column): EstM90 =
-    EstM90(avg(d(est)), sqrt(sum(d(m90) * d(m90))) / count(est))
+    EstM90(avg(est), rssAgg(m90) / count(m90))
 }

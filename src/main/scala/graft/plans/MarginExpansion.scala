@@ -1,9 +1,12 @@
 package graft.plans
 
+import org.apache.spark.sql.GraftSqlBridge
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAlias, UnresolvedAttribute, UnresolvedFunction}
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, Literal, NamedExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, NamedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, Project}
 import org.apache.spark.sql.catalyst.rules.Rule
+
+import graft.functions.AcsMath
 
 /** Analyzer resolution rule giving SQL users the census pairing
   * convention ([[graft.CensusFrame.selectCensus]]): a `with_m90(col)`
@@ -14,9 +17,10 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * In an aggregate select list the expansion follows the grouped
   * semantics of [[graft.CensusFrame.groupBySum]] (ref
   * `test/test_basic.py:197-207`, notebook cell 12): estimates are summed
-  * and margins combine as root-sum-of-squares, so
+  * and margins combine as root-sum-of-squares ([[AcsMath.aggSumM]]), so
   * `SELECT g, with_m90(qty) FROM t GROUP BY g` becomes
-  * `SELECT g, sum(qty) AS qty, sqrt(sum(power(qty_m90, 2))) AS qty_m90`.
+  * `SELECT g, sum(qty) AS qty, sqrt(sum(qty_m90 * qty_m90)) AS qty_m90`
+  * (the margin squared in double).
   * Any other position (WHERE, GROUP BY, nested inside an expression)
   * fails analysis with an actionable message instead of the generic
   * "undefined function".
@@ -59,14 +63,11 @@ object MarginExpansionRule extends Rule[LogicalPlan] {
     Seq(est.asInstanceOf[NamedExpression], m90)
   }
 
-  /** Grouped expansion: `sum(est) AS est, sqrt(sum(power(m90, 2))) AS est_m90`. */
+  /** Grouped expansion: [[AcsMath.aggSumM]]'s pair, named `est, est_m90`. */
   private def expandAgg(arg: Expression): Seq[NamedExpression] = {
     val (name, est, m90) = pair(arg)
-    def fn(f: String, args: Expression*) =
-      UnresolvedFunction(f, args.toSeq, isDistinct = false)
-    Seq(
-      Alias(fn("sum", est), name)(),
-      Alias(fn("sqrt", fn("sum", fn("power", m90, Literal(2.0d)))), name + "_m90")())
+    AcsMath.aggSumM(GraftSqlBridge.column(est), GraftSqlBridge.column(m90)).named(name)
+      .map(c => GraftSqlBridge.expression(c).asInstanceOf[NamedExpression])
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan.resolveOperatorsUp {

@@ -110,7 +110,7 @@ object AcsQueries {
           dsum(a, 2).as("a"),
           // m90² sums are order-dependent in double; round after sqrt —
           // the ~1e-10 cross-engine jitter is far below 1e-6
-          round(sqrt(sum(am * am)), 6).as("a_m90"),
+          round(AcsMath.aggSumM(a, am).m90, 6).as("a_m90"),
           count(lit(1)).as("n"))
         .orderBy(col("l_returnflag"))
     }, Some(s"""
@@ -128,7 +128,7 @@ object AcsQueries {
         .groupBy(col("l_returnflag"))
         .agg(
           davg(a, 2).as("a_mean"),
-          round(sqrt(sum(am * am)) / count(lit(1)), 6).as("a_mean_m90"),
+          round(AcsMath.aggMeanM(a, am).m90, 6).as("a_mean_m90"),
           count(lit(1)).as("n"))
         .orderBy(col("l_returnflag"))
     }, Some(s"""
@@ -173,8 +173,8 @@ object AcsQueries {
       FROM lineitem $Key""")),
 
     // ---- with_m90 inside an aggregate select list: the rule expands to
-    // the groupBySum RSS semantics — sum(qty) AS qty,
-    // sqrt(sum(power(qty_m90, 2))) AS qty_m90 — so SQL users get grouped
+    // the groupBySum RSS semantics (AcsMath.aggSumM) — sum(qty) AS qty,
+    // sqrt(sum(qty_m90 * qty_m90)) AS qty_m90 — so SQL users get grouped
     // margin propagation for free (VERDICT r2 #7). Group sums of doubles
     // are order-dependent, so both sides round to 6 (same mitigation as
     // q35/q38; 60k-row sums carry ~1e-9 absolute error, far below it). ----

@@ -43,23 +43,20 @@ object PipelineQueries {
     * real corpus layout (multi-file, or row groups written at ~128 MB)
     * splits naturally, the probe sees a multi-split scan, and the
     * exchange never enters the plan. `spark.graft.kernelSpread`
-    * (auto|on|off, default auto) forces either side — PlanShapeSpec
-    * pins the scale plan with `off`, and the dial documents the knob for
-    * cluster deployments.
+    * (auto|on|off, default auto; any other value throws) forces either
+    * side — PlanShapeSpec pins the scale plan with `off`, and the dial
+    * documents the knob for cluster deployments.
     */
   private[graft] def spreadForKernels(df: DataFrame,
       key: String = "doc_id"): DataFrame = {
     val s = df.sparkSession
-    // NonFatal, not Throwable (r19): an OOM/fatal error here must
-    // propagate, not be masked into "spread off"
-    val mode =
-      try s.conf.get("spark.graft.kernelSpread", "auto")
-      catch { case NonFatal(_) => "auto" }
-    val spread = mode match {
+    val spread = s.conf.get("spark.graft.kernelSpread", "auto") match {
       case "on" => true
       case "off" => false
-      case _ =>
+      case "auto" =>
         (try df.inputFiles.length catch { case NonFatal(_) => 8 }) < 8
+      case other => throw new IllegalArgumentException(
+        s"spark.graft.kernelSpread must be one of auto|on|off, got '$other'")
     }
     if (spread) df.repartition(s.sparkContext.defaultParallelism, col(key))
     else df
@@ -154,15 +151,13 @@ object PipelineQueries {
     Models.cached(s"ivf:$d:k=$k,rounds=2")(Ivf.train(embs(s, d), k, 2))
 
   /** q138's body, parameterized for the stress harness: per-anchor top
-    * `kTop` different-label neighbors over cell-bucketed candidates.
-    * `viaWindow` swaps the bounded [[graft.functions.TopK]] aggregate
-    * for the row_number() window baseline it exists to out-shuffle —
-    * semantically identical (min-k ≡ rank ≤ k under the same total
-    * order), kept ONLY so `STRESS_HARDNEG` can measure the gap.
+    * `kTop` different-label neighbors over cell-bucketed candidates, cut
+    * by the bounded [[graft.functions.TopK]] aggregate (its map-side
+    * partials move ≤ `kTop` rows per anchor and task, where a
+    * row_number() window would shuffle every scored pair).
     */
   private[graft] def hardNegatives(s: SparkSession, d: String,
-      cents: Ivf.Centroids, nprobe: Int, kTop: Int,
-      viaWindow: Boolean = false): DataFrame = {
+      cents: Ivf.Centroids, nprobe: Int, kTop: Int): DataFrame = {
     val e = embs(s, d)
     // Per-side norms are computed ONCE per vector and carried through
     // the join, so each scored pair costs one dot product instead of
@@ -196,25 +191,14 @@ object PipelineQueries {
       (col("qn") * col("nn")), 6)
     val pairs = anchors.join(cand, Seq("cid"))
       .filter(col("qlabel") =!= col("nlabel") && col("qid") =!= col("neg_id"))
-    if (viaWindow) {
-      val w = Window.partitionBy(col("qid"))
-        .orderBy(col("cosine").desc, col("neg_id"))
-      pairs.select(col("qid"), pairCos.as("cosine"), col("neg_id"))
-        .withColumn("neg_rank", row_number().over(w))
-        .filter(col("neg_rank") <= kTop)
-        .select(col("qid").as("anchor_id"), col("neg_rank"), col("neg_id"),
-          col("cosine"))
-        .orderBy(col("anchor_id"), col("neg_rank"))
-    } else {
-      pairs.select(col("qid"),
-          struct((-pairCos).as("ncos"), col("neg_id").as("nid")).as("sn"))
-        .groupBy(col("qid"))
-        .agg(graft.functions.TopK.scored(col("sn"), kTop).as("negs"))
-        .select(col("qid").as("anchor_id"), posexplode(col("negs")))
-        .select(col("anchor_id"), (col("pos") + 1).as("neg_rank"),
-          col("col.nid").as("neg_id"), (-col("col.ncos")).as("cosine"))
-        .orderBy(col("anchor_id"), col("neg_rank"))
-    }
+    pairs.select(col("qid"),
+        struct((-pairCos).as("ncos"), col("neg_id").as("nid")).as("sn"))
+      .groupBy(col("qid"))
+      .agg(graft.functions.TopK.scored(col("sn"), kTop).as("negs"))
+      .select(col("qid").as("anchor_id"), posexplode(col("negs")))
+      .select(col("anchor_id"), (col("pos") + 1).as("neg_rank"),
+        col("col.nid").as("neg_id"), (-col("col.ncos")).as("cosine"))
+      .orderBy(col("anchor_id"), col("neg_rank"))
   }
   private[graft] def pqBooks(s: SparkSession, d: String): Pq.Codebooks =
     Models.cached(s"pq:$d:rounds=1")(Pq.train(embs(s, d), rounds = 1))

@@ -87,24 +87,13 @@ object CensusApi {
       rows: Seq[Seq[String]]): DataFrame =
     DriverFrame(spark, StructType(header.map(StructField(_, StringType, nullable = true))), rows)
 
-  /** Dataset catalog search over `{Host}.json` (`api.search_datasets`). */
+  /** Dataset catalog search over `{Host}.json` (`api.search_datasets`);
+    * a failed catalog fetch raises.
+    */
   def searchDatasets(pattern: String, fetchFn: String => String = httpGet): Seq[DatasetRef] = {
-    implicit val formats: Formats = DefaultFormats
     val rx = pattern.r
-    (JsonMethods.parse(fetchFn(s"$Host.json")) \ "dataset") match {
-      case JArray(ds) => ds.flatMap { d =>
-        val title = (d \ "title").extractOrElse[String]("")
-        val id = (d \ "identifier").extractOrElse[String]("")
-        val base = (d \ "distribution") match {
-          case JArray(dist :: _) => (dist \ "accessURL").extractOrElse[String]("")
-          case _ => ""
-        }
-        if (rx.findFirstIn(title).isDefined || rx.findFirstIn(id).isDefined)
-          Some(DatasetRef(id, title, base))
-        else None
-      }
-      case _ => Nil
-    }
+    parseCatalog(fetchFn).filter(d =>
+      rx.findFirstIn(d.title).isDefined || rx.findFirstIn(d.id).isDefined)
   }
 
   /** `api.get_dataset('ACSSF5Y2015')`-style accessor. The two ids the
@@ -141,42 +130,43 @@ object CensusApi {
     * caller minting lambdas per call can't grow the map without bound.
     */
   private val catalogCache =
-    new java.util.concurrent.ConcurrentHashMap[AnyRef, Seq[(String, String)]]()
+    new java.util.concurrent.ConcurrentHashMap[AnyRef, Seq[DatasetRef]]()
   private val MaxCachedCatalogs = 32
 
-  /** identifier → first `distribution.accessURL`, in catalog order. */
-  private def parseCatalog(fetchFn: String => String): Option[Seq[(String, String)]] = {
+  /** The catalog's entries in order: `identifier`, `title` and the first
+    * `distribution.accessURL` (empty when missing).
+    */
+  private def parseCatalog(fetchFn: String => String): Seq[DatasetRef] = {
     implicit val formats: Formats = DefaultFormats
-    scala.util.Try(JsonMethods.parse(fetchFn(s"$Host.json")) \ "dataset").toOption.map {
-      case JArray(ds) =>
-        ds.flatMap { d =>
-          val ident = (d \ "identifier").extractOrElse[String]("")
-          (d \ "distribution") match {
-            case JArray(dist :: _) =>
-              Option((dist \ "accessURL").extractOrElse[String](""))
-                .filter(_.nonEmpty).map(ident -> _)
-            case _ => None
-          }
+    (JsonMethods.parse(fetchFn(s"$Host.json")) \ "dataset") match {
+      case JArray(ds) => ds.map { d =>
+        val base = (d \ "distribution") match {
+          case JArray(dist :: _) => (dist \ "accessURL").extractOrElse[String]("")
+          case _ => ""
         }
+        DatasetRef((d \ "identifier").extractOrElse[String](""),
+          (d \ "title").extractOrElse[String](""), base)
+      }
       case _ => Nil
     }
   }
 
   /** Catalog lookup for [[getDataset]]: match `identifier` exactly or by
     * trailing path segment (the live catalog publishes identifiers as
-    * `https://api.census.gov/data/id/<id>` URLs). The catalog is fetched
-    * and parsed once per transport, then consulted in-memory.
+    * `https://api.census.gov/data/id/<id>` URLs) among entries with an
+    * access URL. The catalog is fetched and parsed once per transport,
+    * then consulted in-memory.
     */
   private[sources] def catalogBasePath(id: String,
       fetchFn: String => String): Option[String] = {
     val catalog = Option(catalogCache.get(fetchFn)).getOrElse {
-      val parsed = parseCatalog(fetchFn)
+      val parsed = scala.util.Try(parseCatalog(fetchFn)).toOption
       if (catalogCache.size < MaxCachedCatalogs)
         parsed.foreach(catalogCache.putIfAbsent(fetchFn, _))
       parsed.getOrElse(Nil)
     }
     catalog.collectFirst {
-      case (ident, base) if ident == id || ident.endsWith("/" + id) => base
+      case d if d.basePath.nonEmpty && (d.id == id || d.id.endsWith("/" + id)) => d.basePath
     }
   }
 

@@ -228,22 +228,27 @@ object CensusReporter {
       geoid: String, cache: Boolean = true,
       fetch: String => String = CensusApi.httpGet): CensusFrame = {
     val u = CensusReporterUrl(s"censusreporter:$tableId/$summaryLevel/$geoid")
-    val json = getResource(u, cache, fetch = fetch)
-    CensusReporterDecoder.toFrame(spark, CensusReporterDecoder.decode(json, tableId))
+    frame(spark, getResource(u, cache, fetch = fetch), tableId)
   }
 
   /** Load from a local JSON file (offline path used by tests/fixtures). */
-  def loadJsonFile(spark: SparkSession, path: String, tableId: String): CensusFrame = {
-    val json = new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)
-    CensusReporterDecoder.toFrame(spark, CensusReporterDecoder.decode(json, tableId))
-  }
+  def loadJsonFile(spark: SparkSession, path: String, tableId: String): CensusFrame =
+    frame(spark, readFile(path), tableId)
 
   /** Load from a classpath resource. */
-  def loadJsonResource(spark: SparkSession, resource: String, tableId: String): CensusFrame = {
+  def loadJsonResource(spark: SparkSession, resource: String, tableId: String): CensusFrame =
+    frame(spark, readResource(resource), tableId)
+
+  private def frame(spark: SparkSession, json: String, tableId: String): CensusFrame =
+    CensusReporterDecoder.toFrame(spark, CensusReporterDecoder.decode(json, tableId))
+
+  private[sources] def readFile(path: String): String =
+    new String(Files.readAllBytes(Paths.get(path)), StandardCharsets.UTF_8)
+
+  private[sources] def readResource(resource: String): String = {
     val in = getClass.getClassLoader.getResourceAsStream(resource)
     require(in != null, s"resource not found: $resource")
-    val json = new String(in.readAllBytes(), StandardCharsets.UTF_8)
-    CensusReporterDecoder.toFrame(spark, CensusReporterDecoder.decode(json, tableId))
+    try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
   }
 }
 
@@ -256,8 +261,7 @@ object SourceRegistry {
   @volatile private var registry: Map[String, Loader] = Map(
     "censusreporter" -> { (spark, url) =>
       val u = CensusReporterUrl(url)
-      val json = CensusReporter.getResource(u)
-      CensusReporterDecoder.toFrame(spark, CensusReporterDecoder.decode(json, u.tableId))
+      CensusReporter.load(spark, u.tableId, u.summaryLevel, u.geoid)
     })
 
   def register(schemePrefix: String, loader: Loader): Unit =

@@ -2,15 +2,17 @@ package graft.sources
 
 import java.util
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.connector.read.{LocalScan, ScanBuilder}
 import org.apache.spark.sql.sources.DataSourceRegister
-import org.apache.spark.sql.types.{DoubleType, StringType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
+
+import graft.schema.CensusMeta
 
 /** DataSource V2 wrapper so the census source participates in the normal
   * reader surface (SURVEY S3/S6 "optional polish, DSv2 wrapper"):
@@ -21,99 +23,63 @@ import org.apache.spark.unsafe.types.UTF8String
   *     .option("table", "B17001")
   *     .load()
   *
-  * The payload is decoded once on the driver (tables are small — 628×120
-  * for B17001/140); rows ship to executors inside the serialized
-  * partition. Column metadata (census code/title/index/position) rides on
-  * the schema's StructField.metadata exactly as with the driver-side
-  * loader, so `df.census` works on the result.
+  * The payload is read through the loaders' own readers and decoded once
+  * per load on the driver (tables are small — 628×120 for B17001/140):
+  * Spark asks for the schema and then the table with the same options, so
+  * the table decoded for the schema is reused. The scan is a `LocalScan`
+  * whose rows come from [[DriverFrame]]'s converter; Spark plans it as a
+  * `LocalTableScanExec`, so a plain `load().collect()` starts no job.
+  * Column metadata (census code/title/index/position) rides on the
+  * schema's StructField.metadata exactly as with the driver-side loader,
+  * so `df.census` works on the result.
   */
 class CensusReporterDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "censusreporter"
 
+  /** The last options decoded and their table. */
+  private var decoded: Option[(Map[String, String], CRTable)] = None
+
   private def decode(options: CaseInsensitiveStringMap): CRTable = {
-    val tableId = Option(options.get("table"))
-      .orElse(Option(options.get("url")).map(u => CensusReporterUrl(u).tableId))
-      .getOrElse(throw new IllegalArgumentException(
-        "censusreporter source needs option 'table' (or a 3-part 'url')"))
-    val json =
-      if (options.containsKey("file")) {
-        new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(options.get("file"))),
-          java.nio.charset.StandardCharsets.UTF_8)
-      } else if (options.containsKey("resource")) {
-        val in = getClass.getClassLoader.getResourceAsStream(options.get("resource"))
-        require(in != null, s"resource not found: ${options.get("resource")}")
-        new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-      } else {
-        val url = Option(options.get("url")).getOrElse(throw new IllegalArgumentException(
+    val key = options.asScala.toMap
+    decoded.collect { case (`key`, t) => t }.getOrElse {
+      lazy val url = Option(options.get("url")).map(CensusReporterUrl(_))
+      val tableId = Option(options.get("table")).orElse(url.map(_.tableId))
+        .getOrElse(throw new IllegalArgumentException(
+          "censusreporter source needs option 'table' (or a 3-part 'url')"))
+      val json = Option(options.get("file")).map(CensusReporter.readFile)
+        .orElse(Option(options.get("resource")).map(CensusReporter.readResource))
+        .orElse(url.map(CensusReporter.getResource(_,
+          cache = !"false".equalsIgnoreCase(options.get("cache")))))
+        .getOrElse(throw new IllegalArgumentException(
           "censusreporter source needs one of: 'url', 'file', 'resource'"))
-        CensusReporter.getResource(CensusReporterUrl(url),
-          cache = !"false".equalsIgnoreCase(options.get("cache")))
-      }
-    CensusReporterDecoder.decode(json, tableId)
+      val t = CensusReporterDecoder.decode(json, tableId)
+      decoded = Some(key -> t)
+      t
+    }
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    graft.schema.CensusMeta.schema(decode(options).columns)
+    CensusMeta.schema(decode(options).columns)
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
-      properties: util.Map[String, String]): Table = {
-    val t = decode(new CaseInsensitiveStringMap(properties))
-    new CensusReporterTable(t, graft.schema.CensusMeta.schema(t.columns))
-  }
+      properties: util.Map[String, String]): Table =
+    new CensusReporterTable(decode(new CaseInsensitiveStringMap(properties)))
 
   override def supportsExternalMetadata(): Boolean = false
 }
 
-private[sources] class CensusReporterTable(t: CRTable, tableSchema: StructType)
-    extends Table with SupportsRead {
+private[sources] class CensusReporterTable(t: CRTable) extends Table with SupportsRead {
+  private val tableSchema = CensusMeta.schema(t.columns)
+
   override def name(): String = "censusreporter"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder with Scan with Batch {
-      override def build(): Scan = this
+    () => new LocalScan {
       override def readSchema(): StructType = tableSchema
-      override def toBatch: Batch = this
-      override def planInputPartitions(): Array[InputPartition] = {
-        // one partition is right-sized: a census table is ≤ a few thousand
-        // rows; real scale comes from loading many tables in parallel
-        val cells: Array[Array[Any]] = t.rows.map(_.toArray).toArray
-        Array(CensusRowsPartition(cells))
-      }
-      override def createReaderFactory(): PartitionReaderFactory =
-        new CensusReaderFactory(tableSchema)
+      override def rows(): Array[InternalRow] =
+        DriverFrame.relation(tableSchema, t.rows).data.toArray
     }
-}
-
-private[sources] final case class CensusRowsPartition(rows: Array[Array[Any]])
-    extends InputPartition
-
-private[sources] class CensusReaderFactory(schema: StructType)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val rows = partition.asInstanceOf[CensusRowsPartition].rows
-    new PartitionReader[InternalRow] {
-      private var i = -1
-      override def next(): Boolean = { i += 1; i < rows.length }
-      override def get(): InternalRow = {
-        val r = rows(i)
-        val values = new Array[Any](r.length)
-        var j = 0
-        while (j < r.length) {
-          values(j) = (schema.fields(j).dataType, r(j)) match {
-            case (_, null) => null
-            case (StringType, v) => UTF8String.fromString(v.toString)
-            case (DoubleType, v: java.lang.Number) => v.doubleValue()
-            case (_, v) => v
-          }
-          j += 1
-        }
-        new GenericInternalRow(values)
-      }
-      override def close(): Unit = ()
-    }
-  }
 }

@@ -24,9 +24,15 @@ import org.apache.spark.sql.types.StructType
   * job.
   */
 private[graft] object DriverFrame {
-  def apply(spark: SparkSession, schema: StructType, rows: Seq[Seq[Any]]): DataFrame = {
+  def apply(spark: SparkSession, schema: StructType, rows: Seq[Seq[Any]]): DataFrame =
+    GraftSqlBridge.ofRows(spark, relation(schema, rows))
+
+  /** The one converter of decoded rows to Spark rows; the DSv2 scan
+    * ([[CensusReporterDataSource]]) serves this relation's `data`.
+    */
+  private[sources] def relation(schema: StructType, rows: Seq[Seq[Any]]): LocalRelation = {
     val output = schema.fields.toIndexedSeq.map(f =>
       AttributeReference(f.name, f.dataType, f.nullable, f.metadata)())
-    GraftSqlBridge.ofRows(spark, LocalRelation.fromExternalRows(output, rows.map(Row.fromSeq)))
+    LocalRelation.fromExternalRows(output, rows.map(Row.fromSeq))
   }
 }

@@ -9,7 +9,10 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftSqlBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
 
-  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** The Catalyst expression of `c`, converted now (an analyzer rule
+    * building expressions from `Column`s needs them converted).
+    */
+  def expression(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
 
   def registerFunction(spark: SparkSession, name: String,
       builder: Seq[Expression] => Expression): Unit =

@@ -47,6 +47,24 @@ class CensusFrameSpec extends AnyFunSuite {
       Seq("geoid", "col0", "col0_m90", "col2", "col2_m90"))
   }
 
+  test("groupBySum/groupByMean square integral margins in double (no ANSI overflow)") {
+    import spark.implicits._
+    // 50000² overflows int and 4e9² overflows long; both are exact in double
+    Seq[(Seq[(String, Long, Long)], String)](
+      (Seq(("a", 1L, 50000L), ("a", 2L, 50000L)), "int"),
+      (Seq(("a", 1L, 4000000000L), ("a", 2L, 4000000000L)), "long")).foreach {
+      case (rows, t) =>
+        val df = rows.toDF("g", "e", "e_m90")
+          .select(col("g"), col("e").cast(t).as("e"), col("e_m90").cast(t).as("e_m90"))
+        val m = rows.head._3.toDouble
+        val rss = math.sqrt(m * m + m * m)
+        val sum = CensusFrame(df).groupBySum("g").df.select("e", "e_m90").head()
+        assert(sum.getLong(0) == 3L && sum.getDouble(1) == rss, s"$t: $sum")
+        val mean = CensusFrame(df).groupByMean("g").df.select("e", "e_m90").head()
+        assert(mean.getDouble(0) == 1.5 && mean.getDouble(1) == rss / 2, s"$t: $mean")
+    }
+  }
+
   test("naming views relabel and preserve metadata (notebook cells 2-3)") {
     val titled = cf.titledColumns
     assert(titled.df.columns.contains("Synthetic column 0"))

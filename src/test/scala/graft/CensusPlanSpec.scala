@@ -120,6 +120,18 @@ class CensusPlanSpec extends AnyFunSuite {
     assert(derivedJobs == 0, s"derived-measure collect ran $derivedJobs jobs")
   }
 
+  test("a DSv2 load is a local scan: load().collect() runs no job") {
+    var rows: Array[org.apache.spark.sql.Row] = null
+    val df = spark.read.format("censusreporter")
+      .option("resource", "censusreporter/acs_fixture.json").option("table", "B17001").load()
+    val jobs = jobsOf(spark) { rows = df.collect() }
+    assert(df.queryExecution.executedPlan
+      .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec],
+      df.queryExecution.executedPlan.toString)
+    assert(rows.map(_.toSeq).toSeq == fixtureTable.rows)
+    assert(jobs == 0, s"DSv2 load().collect() ran $jobs jobs")
+  }
+
   test("grouped with_m90 SQL and groupBySum over a decoded frame run no job") {
     val cf = CensusReporterDecoder.toFrame(spark, fixtureTable)
     cf.df.createOrReplaceTempView("job_lock")

@@ -133,6 +133,21 @@ class CensusSourceSpec extends AnyFunSuite {
     assert(titled.df.columns.contains("Total"))
   }
 
+  test("selectCensus pairs margins by metadata on the titled and code-title views") {
+    val cf = CensusReporter.loadJsonResource(spark, "censusreporter/acs_fixture.json", "B17001")
+    val titled = cf.titledColumns
+    assert(titled.m90Name("Total") == "B17001001_m90")
+    assert(titled.selectCensus("geoid", "Total").df.columns.toSeq ==
+      Seq("geoid", "Total", "B17001001_m90"))
+    assert(titled.selectCensus("geoid", "001").df.columns.toSeq ==
+      Seq("geoid", "Total", "B17001001_m90"))
+    val ct = cf.ctColumns
+    assert(ct.selectCensus("geoid", "B17001001").df.columns.toSeq ==
+      Seq("geoid geoid", "B17001001 Total", "B17001001_m90"))
+    // a margin selected on its own stays alone
+    assert(ct.selectCensus("B17001001_m90").df.columns.toSeq == Seq("B17001001_m90"))
+  }
+
   test("SourceRegistry dispatches censusreporter scheme (S6)") {
     SourceRegistry.register("fixture", (s, _) =>
       CensusReporter.loadJsonResource(s, "censusreporter/acs_fixture.json", "B17001"))

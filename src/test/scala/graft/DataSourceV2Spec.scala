@@ -43,6 +43,25 @@ class DataSourceV2Spec extends AnyFunSuite {
     assert(e.getMessage.contains("table"))
   }
 
+  test("one load decodes once: getTable reuses the table decoded for the schema") {
+    val dir = java.nio.file.Files.createTempDirectory("dsv2-once")
+    val file = dir.resolve("acs.json")
+    val in = getClass.getClassLoader.getResourceAsStream("censusreporter/acs_fixture.json")
+    try java.nio.file.Files.copy(in, file) finally in.close()
+    val opts = new java.util.HashMap[String, String]()
+    opts.put("file", file.toString)
+    opts.put("table", "B17001")
+    val provider = new sources.CensusReporterDataSource
+    val schema = provider.inferSchema(
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap(opts))
+    java.nio.file.Files.delete(file)
+    val table = provider.getTable(schema, Array.empty, opts)
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+    val scan = table.newScanBuilder(
+      org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
+    assert(scan.asInstanceOf[org.apache.spark.sql.connector.read.LocalScan].rows().length == 3)
+  }
+
   test("one-column table through DSv2") {
     val df = read.option("table", "B01003").load()
     assert(df.columns.toSeq == Seq("geoid", "name", "B01003001", "B01003001_m90"))

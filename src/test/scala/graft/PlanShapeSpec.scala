@@ -25,6 +25,14 @@ class PlanShapeSpec extends AnyFunSuite {
     try body finally spark.conf.unset("spark.graft.kernelSpread")
   }
 
+  test("a kernelSpread value other than auto|on|off fails loudly") {
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val e = withKernelSpread("of") {
+      intercept[IllegalArgumentException](queries.PipelineQueries.spreadForKernels(docs))
+    }
+    assert(e.getMessage.contains("auto|on|off") && e.getMessage.contains("'of'"), e.getMessage)
+  }
+
   test("q06: all filters pushed to the parquet scan") {
     val p = planOf("q06_forecast_revenue")
     assert(p.contains("PushedFilters:"))

@@ -87,15 +87,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config(GraftConf.ObjAggFallbackKey, GraftConf.ObjAggFallbackEntries)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftConf.session(s"local[$cpus]", cpus.toInt).getOrCreate()
     // ERROR, not WARN: the q91/q99/q117 global windows over ~3-row source
     // frames emit a WindowExec warning PER RUN, and that stderr flood has
     // pushed the result JSON line out of the driver's bounded output-tail

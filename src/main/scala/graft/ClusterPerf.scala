@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Multi-JVM PERF rig for the third-decade analytics spillers (VERDICT
   * r13 task 3): q154/q156 at 1000× spill 790 MB / 7.7 GB under
   * `local[32]` + 32 static shuffle partitions — a partition-count
@@ -34,20 +32,9 @@ object ClusterPerf {
       sys.exit(2)
     }
     val Array(master, dir, queryCsv, parts, advisoryMB) = args.take(5)
-    // executors are forked plain-java processes (ClusterSmoke's
-    // discipline): they need this JVM's classpath (the graft classes
-    // live in sbt's dependency classpath, not SPARK_HOME/jars) and the
-    // JDK17 --add-opens set spark-submit would inject
-    val cp = System.getProperty("java.class.path")
-    val moduleOpts =
-      org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions()
     val execMem = sys.env.getOrElse("CLUSTERPERF_EXECUTOR_MEM", "8g")
-    val spark = SparkSession.builder()
-      .master(master)
-      .config("spark.executor.extraClassPath", cp)
-      .config("spark.executor.extraJavaOptions", moduleOpts)
+    val spark = GraftConf.session(master, parts.toInt)
       .config("spark.executor.memory", execMem)
-      .config("spark.sql.shuffle.partitions", parts)
       .config("spark.sql.adaptive.enabled", "true")
       // CLUSTERPERF_COALESCE=0 gives the STATIC control: AQE on (join
       // planning unchanged) but partition count pinned at the initial
@@ -60,11 +47,6 @@ object ClusterPerf {
       // ignores the advisory target when coalescing would reduce
       // parallelism below the cluster's slot count
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config(GraftConf.ObjAggFallbackKey, GraftConf.ObjAggFallbackEntries)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val totals = operators.PhaseStats.stageTotals(spark.sparkContext)

@@ -1,6 +1,19 @@
 package graft
 
-/** Session settings every graft entry point applies.
+import org.apache.spark.launcher.JavaModuleOptions
+import org.apache.spark.sql.SparkSession
+
+/** The one session recipe every graft entry point builds from.
+  *
+  * [[session]] installs [[GraftExtensions]], runs the session in UTC (the
+  * testdata's naive timestamps then read as their stored wall times, as
+  * DuckDB reads them), turns the UI off and raises the object-hash
+  * aggregate threshold below. On a `local-cluster` master the executors
+  * are forked plain-java processes, so it also hands them this JVM's
+  * class path (the graft classes are not in `SPARK_HOME/jars`) and the
+  * JDK17 `--add-opens` set spark-submit would inject. Callers add only
+  * their own settings: app name, executor memory, AQE or state-store
+  * dials.
   *
   * `objectHashAggregate.sortBased.fallbackThreshold` (default 128):
   * Spark falls back from hash- to sort-based aggregation once a task's
@@ -27,4 +40,18 @@ package graft
 object GraftConf {
   val ObjAggFallbackKey = "spark.sql.objectHashAggregate.sortBased.fallbackThreshold"
   val ObjAggFallbackEntries = (1 << 18).toString
+
+  def session(master: String, shufflePartitions: Int): SparkSession.Builder = {
+    val b = SparkSession.builder()
+      .master(master)
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
+      .config(ObjAggFallbackKey, ObjAggFallbackEntries)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .withExtensions(new GraftExtensions)
+    if (master.startsWith("local-cluster"))
+      b.config("spark.executor.extraClassPath", System.getProperty("java.class.path"))
+        .config("spark.executor.extraJavaOptions", JavaModuleOptions.defaultModuleOptions())
+    else b
+  }
 }

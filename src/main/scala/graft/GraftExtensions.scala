@@ -10,8 +10,7 @@ import graft.functions.{CountMinSketchMd5, DotProduct, TopKScored}
   * expressions in every session without imperative registration:
   *
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions …
-  * or
-  *   SparkSession.builder().withExtensions(new GraftExtensions)
+  * or, in graft's own entry points, [[GraftConf.session]].
   *
   * (SURVEY §2.8 / the prompt's tier-(c) registration mechanism; the
   * functions themselves stay tier-(b) expressions.)

@@ -102,15 +102,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outFile = args.lift(1).getOrElse("PLANS.md")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config(GraftConf.ObjAggFallbackKey, GraftConf.ObjAggFallbackEntries)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftConf.session("local[4]", 4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // the audit documents the SCALE shape: pin the kernel-spread
     // workaround off so the local single-row-group testdata's extra

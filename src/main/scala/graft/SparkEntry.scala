@@ -28,7 +28,7 @@ object SparkEntry {
     */
   def entry(spark: SparkSession): DataFrame = {
     val d = "/root/testdata/sf0.001"
-    val li = spark.read.parquet(s"$d/lineitem.parquet")
+    val li = Tables(spark, d, "lineitem")
     val a = col("l_quantity")
     val am = lit(1.0) + lit(10.0) * col("l_tax")
     val b = lit(100.0) * col("l_discount")

@@ -653,32 +653,19 @@ object StreamStress {
     // STREAM_STRESS_MASTER=local-cluster[W,C,M]: run the streaming
     // harness on a pseudo-cluster — real forked executor JVMs with
     // their OWN heaps and RocksDB instances — instead of local[cpus]
-    // (the Stress/ClusterPerf discipline: executors are plain java
-    // processes and need this JVM's classpath plus the JDK17
-    // --add-opens set; needs SPARK_HOME for the worker launch).
+    // (needs SPARK_HOME for the worker launch).
     // STREAM_STRESS_EXECUTOR_MEM sizes each executor heap. This is the
     // rig the r17 state-store prescription (changelog ON, default
     // partitions) is re-validated on: RocksDB compaction and the
     // fold's shuffles actually cross process boundaries here.
     val master = sys.env.getOrElse("STREAM_STRESS_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .master(master)
-      // state-store shuffle partitions bound per-batch task count AND
-      // RocksDB instance count; 8 matches a per-executor share of a
-      // real deployment better than 32 local threads would
-      .config("spark.sql.shuffle.partitions", stateParts)
-      .config(GraftConf.ObjAggFallbackKey, GraftConf.ObjAggFallbackEntries)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
+    // state-store shuffle partitions bound per-batch task count AND
+    // RocksDB instance count; 8 matches a per-executor share of a
+    // real deployment better than 32 local threads would
+    val builder0 = GraftConf.session(master, stateParts.toInt)
     val spark = (if (master.startsWith("local-cluster"))
-      builder0
-        .config("spark.executor.extraClassPath",
-          System.getProperty("java.class.path"))
-        .config("spark.executor.extraJavaOptions",
-          org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
-        .config("spark.executor.memory",
-          sys.env.getOrElse("STREAM_STRESS_EXECUTOR_MEM", "8g"))
+      builder0.config("spark.executor.memory",
+        sys.env.getOrElse("STREAM_STRESS_EXECUTOR_MEM", "8g"))
     else builder0).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     if (sys.env.getOrElse("STREAM_STRESS_PROVIDER", "rocksdb") == "rocksdb")

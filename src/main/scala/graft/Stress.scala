@@ -31,7 +31,7 @@ object Stress {
       factor: Int): Unit = {
     val out = new java.io.File(s"$outDir/documents.parquet")
     if (out.exists()) return
-    val base = spark.read.parquet(s"$baseDir/documents.parquet")
+    val base = queries.Tables(spark, baseDir, "documents")
     val reps = explode(sequence(lit(0), lit(factor - 1))).as("r")
     val perturbed = base.select(col("*"), reps)
       .withColumn("tag",
@@ -64,7 +64,7 @@ object Stress {
       outDir: String, factor: Int): Unit = {
     val out = new java.io.File(s"$outDir/embeddings.parquet")
     if (out.exists()) return
-    val base = spark.read.parquet(s"$baseDir/embeddings.parquet")
+    val base = queries.Tables(spark, baseDir, "embeddings")
     val reps = explode(sequence(lit(0), lit(factor - 1))).as("r")
     val jittered = base.select(col("*"), reps)
       .withColumn("e2",
@@ -240,27 +240,13 @@ object Stress {
       sys.env.getOrElse("STRESS_SHUFFLE_PARTITIONS", cpus)
     // STRESS_MASTER=local-cluster[W,C,M]: run the harness on a pseudo-
     // cluster — real forked executor JVMs with their OWN heaps — instead
-    // of local[cpus] (the ClusterPerf discipline: executors are plain
-    // java processes and need this JVM's classpath plus the JDK17
-    // --add-opens set; needs SPARK_HOME + SPARK_SCALA_VERSION for the
+    // of local[cpus] (needs SPARK_HOME + SPARK_SCALA_VERSION for the
     // worker launch). STRESS_EXECUTOR_MEM sizes each executor heap.
     val master = sys.env.getOrElse("STRESS_MASTER", s"local[$cpus]")
-    val builder = SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config(GraftConf.ObjAggFallbackKey, GraftConf.ObjAggFallbackEntries)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
+    val builder = GraftConf.session(master, shufflePartitions.toInt)
     val spark = (if (master.startsWith("local-cluster"))
-      builder
-        .config("spark.executor.extraClassPath",
-          System.getProperty("java.class.path"))
-        .config("spark.executor.extraJavaOptions",
-          org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions())
-        .config("spark.executor.memory",
-          sys.env.getOrElse("STRESS_EXECUTOR_MEM", "8g"))
+      builder.config("spark.executor.memory",
+        sys.env.getOrElse("STRESS_EXECUTOR_MEM", "8g"))
     else builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val totals = operators.PhaseStats.stageTotals(spark.sparkContext)
@@ -278,8 +264,8 @@ object Stress {
       genScaledEmbeddings(spark, baseDir, scaledDir, factor)
     if (sys.env.get("STRESS_GEN_EVENTS").contains("1"))
       genScaledEvents(spark, baseDir, scaledDir, factor)
-    val nBase = spark.read.parquet(s"$baseDir/documents.parquet").count()
-    val nScaled = spark.read.parquet(s"$scaledDir/documents.parquet").count()
+    val nBase = queries.Tables(spark, baseDir, "documents").count()
+    val nScaled = queries.Tables(spark, scaledDir, "documents").count()
 
     // STRESS_QUERIES narrows the set for targeted re-measurement after a
     // single-query optimization (the full trio is the default protocol)
@@ -383,7 +369,7 @@ object Stress {
             s""""spilled_bytes":${times.last._3},"kept":$kept}"""
         }
         println(s"""STRESS_SEMDEDUP {"corpus":"$tag","vectors":${
-          spark.read.parquet(s"$dir/embeddings.parquet").count()},""" +
+          queries.Tables(spark, dir, "embeddings").count()},""" +
           s""""runs":{${sd.mkString(",")}}}""")
       }
       // STRESS_BANDS=4,6: the recall dial the recovery section
@@ -491,7 +477,7 @@ object Stress {
       // size k — the per-row k vs k1+|cell| cosine claim, measured
       sys.env.get("STRESS_TWOLEVEL").map(_.toInt).foreach { k =>
         import org.apache.spark.sql.DataFrame
-        val e = spark.read.parquet(s"$dir/embeddings.parquet")
+        val e = queries.Tables(spark, dir, "embeddings")
         val cents = queries.PipelineQueries.ivfCentsK(spark, dir, k)
         val k1 = math.max(2, math.round(math.sqrt(k.toDouble)).toInt)
         val (coarse, coarseOf) =
@@ -521,7 +507,7 @@ object Stress {
       // ~nprobe·n²/k). Its map-side partials bound the anchor exchange at
       // kTop rows per (anchor, task), so its shuffle bytes stay flat.
       sys.env.get("STRESS_HARDNEG").map(_.toInt).foreach { k =>
-        val nVec = spark.read.parquet(s"$dir/embeddings.parquet").count()
+        val nVec = queries.Tables(spark, dir, "embeddings").count()
         val cents = queries.PipelineQueries.ivfCentsK(spark, dir, k)
         val (aggS, aggSh, aggSp) = (1 to 2).map { _ =>
           totals.measure {
@@ -536,7 +522,7 @@ object Stress {
       // (the oracle query pins k=8; pair volume is ~nprobe·n²/k so the
       // corpus-scaled k is the production dial, as in q132/q138)
       sys.env.get("STRESS_MARGIN").map(_.toInt).foreach { k =>
-        val nVec = spark.read.parquet(s"$dir/embeddings.parquet").count()
+        val nVec = queries.Tables(spark, dir, "embeddings").count()
         val cents = queries.PipelineQueries.ivfCentsK(spark, dir, k)
         val runs = (1 to 2).map { _ =>
           totals.measure {

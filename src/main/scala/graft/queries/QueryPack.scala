@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.{DecimalType, DoubleType, StructType}
 
 /** A declared engine capability: a Spark query over the driver testdata plus
   * (when SQL-expressible) an equivalent DuckDB oracle query. The driver
@@ -15,57 +15,49 @@ final case class Q(
     /** headline queries are also timed by Bench at sf0.1 */
     bench: Boolean = false)
 
+/** The testdata tables, each read with its one declared layout — no
+  * schema-inference job per read. The layouts are the files' footers,
+  * identical at sf0.001, sf0.01 and sf0.1. Dates and `events.ts` are
+  * parquet TIMESTAMP(MICROS) with no zone; declared `TIMESTAMP`, they read
+  * as the stored micros under the UTC sessions of [[graft.GraftConf]],
+  * which is the DuckDB oracle's naive reading of the same files.
+  *
+  * A file of another layout fails its read: a column of another type
+  * (a STRING `doc_id`, an INT64 or TIMESTAMP(NANOS) `ts`) raises
+  * `PARQUET_COLUMN_DATA_TYPE_MISMATCH`; only lossless widenings (an INT32
+  * `n_chars`) read. A declared column absent from a file reads as null,
+  * so a narrower file of the same names stays readable.
+  *
+  * Scan parallelism: the testdata ships ONE row group per file, so each
+  * scan stage runs on a single core locally. A repartition-after-scan was
+  * measured and REJECTED: the extra exchange defeats map-side combine
+  * (bench: 5.2s → 16.9s). On a cluster the writer sizes row groups and
+  * scans split naturally.
+  */
 object Tables {
+  /** The declared layout of each testdata table, by table name. */
+  val schema: Map[String, StructType] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey LONG, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> "s_suppkey LONG, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey LONG, p_name STRING, p_brand STRING, p_type STRING, " +
+      "p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey LONG, o_custkey LONG, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey LONG, l_partkey LONG, l_suppkey LONG, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, " +
+      "l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING, " +
+      "l_linestatus STRING, l_shipdate TIMESTAMP"),
+    "events" -> ("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, " +
+      "value DOUBLE, props STRING"),
+    "documents" -> "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG",
+    "embeddings" -> "vec_id LONG, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (t, ddl) => t -> StructType.fromDDL(ddl) }
+
   def apply(s: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
-      // events.ts has shipped in two physical layouts across testdata
-      // generations; normalize both to session-zone TIMESTAMP so every
-      // downstream window/asof/date_format sees one type (sessions run
-      // UTC, so the NTZ cast is wall-time-preserving and matches the
-      // DuckDB oracle, which reads the same file as a naive timestamp).
-      // The legacy nanosAsLong conf is session-global, so it is set ONLY
-      // when the footer actually carries TIMESTAMP(NANOS) — the guard
-      // matches the failure MESSAGE, not just the exception type, so an
-      // unrelated read failure (missing path, corrupt footer) rethrows
-      // instead of mutating session state out from under a concurrent
-      // tenant (the EventsStream.readStream discipline).
-      val raw =
-        try s.read.parquet(s"$dir/events.parquet")
-        catch {
-          case e @ (_: org.apache.spark.sql.AnalysisException
-               | _: org.apache.spark.SparkException)
-              if String.valueOf(e.getMessage).contains("NANOS") =>
-            s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            s.read.parquet(s"$dir/events.parquet")
-        }
-      raw.withColumn("ts", normalizedTs(raw.schema))
-    } else s.read.parquet(s"$dir/$name.parquet")
-
-  /** ts-layout dispatch, shared with the streaming source:
-    *  - INT64 nanos (old TIMESTAMP(NANOS) files under nanosAsLong):
-    *    floor-divide to micros — integer DIV, not double division (nanos
-    *    ~1.7e18 exceeds double's 53-bit mantissa); floor matches DuckDB's
-    *    nanos→micros truncation.
-    *  - TIMESTAMP_NTZ (micros files when inferTimestampNTZ is on): cast
-    *    to TIMESTAMP — identity on the stored micros under UTC sessions.
-    *  - TIMESTAMP: already what downstream expects.
-    */
-  def normalizedTs(schema: org.apache.spark.sql.types.StructType): Column =
-    schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        timestamp_micros(expr("ts DIV 1000"))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        col("ts").cast(org.apache.spark.sql.types.TimestampType)
-      case _ => col("ts")
-    }
-
-  // Note on scan parallelism: the testdata ships ONE row group per file,
-  // so each scan stage (with its fused filters/partial aggregates) runs on
-  // a single core locally. A repartition-after-scan was measured and
-  // REJECTED: the extra exchange defeats map-side combine and costs more
-  // than the fused single-task pipeline saves (bench: 5.2s → 16.9s). On a
-  // real cluster the writer controls row-group size (~128 MB), scans split
-  // naturally, and no rebalancing is needed.
+    s.read.schema(schema(name)).parquet(s"$dir/$name.parquet")
 }
 
 /** Cross-engine float determinism helpers.

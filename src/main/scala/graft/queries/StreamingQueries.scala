@@ -77,9 +77,9 @@ object StreamingQueries {
     // verbatim and has DuckDB replay Spark's merge rule exactly: a session
     // is [min(ts), max(ts) + gap), and an event starts a NEW session iff
     // ts - prev_ts >= gap at microsecond precision (Spark merges only on
-    // strict overlap). DuckDB reads the parquet ts as TIMESTAMP_NS; the
-    // cast to TIMESTAMP truncates to micros exactly like the Spark-side
-    // nanos DIV 1000 (see Tables). ----
+    // strict overlap). The cast to TIMESTAMP is the identity on the
+    // files' micros ts, which Spark reads as its declared TIMESTAMP
+    // (see Tables). ----
     Q("q86_session_window", (s, d) => {
       EventsStream.sessionAgg(Tables(s, d, "events"))
         .orderBy(col("user_id"), col("sstart"))

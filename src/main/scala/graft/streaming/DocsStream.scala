@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.StructType
 
 import graft.operators.TextOps
 
@@ -36,13 +35,10 @@ import graft.operators.TextOps
   */
 object DocsStream {
 
-  val docsSchema: StructType = StructType.fromDDL(
-    "doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG")
-
   /** File-source stream over a directory of documents parquet. */
   def readStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream.schema(docsSchema)
+    spark.readStream.schema(graft.queries.Tables.schema("documents"))
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(dir)
 
   /** The [[TextOps]] banding plus the doc's shingle-hash set (the

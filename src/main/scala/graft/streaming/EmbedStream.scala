@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
-import org.apache.spark.sql.types.StructType
 
 import graft.operators.Ivf
 
@@ -32,13 +31,10 @@ import graft.operators.Ivf
   */
 object EmbedStream {
 
-  val embSchema: StructType = StructType.fromDDL(
-    "vec_id LONG, embedding ARRAY<FLOAT>, label INT")
-
   /** File-source stream over a directory of embeddings parquet. */
   def readStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Int = 1): DataFrame =
-    spark.readStream.schema(embSchema)
+    spark.readStream.schema(graft.queries.Tables.schema("embeddings"))
       .option("maxFilesPerTrigger", maxFilesPerTrigger).parquet(dir)
 
   /** Scalar twin of [[graft.operators.TextOps.cosine]] (6-dec HALF_UP),

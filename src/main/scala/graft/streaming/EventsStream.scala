@@ -33,50 +33,17 @@ final case class RetentionState(cohort: Long, seen: Array[Long])
   */
 object EventsStream {
 
-  /** File-source stream over a directory of events parquet. The stream
-    * source needs a declared schema, and the files' physical ts layout has
-    * varied across testdata generations (INT64 nanos vs TIMESTAMP micros)
-    * — so probe it from the existing footers with a batch read, then apply
-    * the same ts normalization as the batch loader
-    * ([[graft.queries.Tables.normalizedTs]]): parity with the batch twin
-    * stays by construction.
+  /** File-source stream over a directory of events parquet, read with
+    * the batch loader's declared layout ([[graft.queries.Tables]]): an
+    * empty landing directory needs no footer, and a file of another `ts`
+    * layout fails its batch instead of being reinterpreted.
     */
   def readStream(spark: SparkSession, dir: String,
       maxFilesPerTrigger: Option[Int] = None): DataFrame = {
-    // probe can fail two ways: (a) the dir is empty (no parquet footers
-    // yet — normal for a file stream watching a landing directory) →
-    // fall back to the declared nanos-long layout, the generator's
-    // historical default; (b) the footer carries TIMESTAMP(NANOS) →
-    // set the session-global legacy conf ONLY then (the Tables
-    // discipline — a micros-era file never mutates session state) and
-    // re-probe, falling back to the declared layout if still unreadable.
-    val fileSchema =
-      try spark.read.parquet(dir).schema
-      catch {
-        case e @ (_: org.apache.spark.sql.AnalysisException
-                | _: org.apache.spark.SparkException)
-            if String.valueOf(e.getMessage).contains("NANOS") =>
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-          // the re-probe is guarded too (files can vanish between
-          // probes): still unreadable → the declared layout, as doc'd
-          try spark.read.parquet(dir).schema
-          catch { case scala.util.control.NonFatal(_) => declaredSchema }
-        case _: org.apache.spark.sql.AnalysisException => declaredSchema
-      }
-    val reader = spark.readStream.schema(fileSchema)
+    val reader = spark.readStream.schema(graft.queries.Tables.schema("events"))
     maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
     reader.parquet(dir)
-      .withColumn("ts", graft.queries.Tables.normalizedTs(fileSchema))
   }
-
-  /** Declared fallback schema for an empty landing directory: the raw
-    * file layout with ts as parquet TIMESTAMP(NANOS) read as nano longs
-    * (what every testdata generation before the micros switch shipped,
-    * and what [[graft.queries.Tables.normalizedTs]] converts).
-    */
-  private[streaming] val declaredSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "event_id LONG, ts LONG, user_id LONG, event_type STRING, value DOUBLE, props STRING")
 
   /** Tumbling 10-minute windowed counts/sums per event type, 30-minute
     * watermark. Works on batch and streaming frames alike.

@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -68,29 +65,6 @@ class CensusPlanSpec extends AnyFunSuite {
     assert(grouped.count() == 1)
   }
 
-  /** Count the jobs `body` starts, by job group, so concurrent suites'
-    * jobs are not counted.
-    */
-  private def jobsOf(s: SparkSession)(body: => Unit): Int = {
-    val sc = s.sparkContext
-    val group = s"census-plan-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      GraftSqlBridge.drainListenerBus(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get()
-  }
-
   test("a VRE load + replicate-MOE collect runs one job; derived measures on a " +
       "decoded frame run none") {
     val dir = java.nio.file.Files.createTempDirectory("varrep-jobs")
@@ -101,7 +75,7 @@ class CensusPlanSpec extends AnyFunSuite {
     val path = dir.resolve("vr.csv")
     java.nio.file.Files.write(path, (header +: rows).mkString("", "\n", "\n").getBytes)
     var moe: Array[org.apache.spark.sql.Row] = null
-    val vreJobs = jobsOf(spark) {
+    val vreJobs = TestSpark.jobsOf(spark) {
       val df = VarRep.loadVarRep(spark, path.toString)
       moe = df.select(col("GEOID"),
         VarRep.replicateMoe(col("ESTIMATE"), col("replicates")).as("m")).collect()
@@ -110,7 +84,7 @@ class CensusPlanSpec extends AnyFunSuite {
     assert(vreJobs == 1, s"VRE load + collect ran $vreJobs jobs")
 
     val cf = CensusReporterDecoder.toFrame(spark, fixtureTable)
-    val derivedJobs = jobsOf(spark) {
+    val derivedJobs = TestSpark.jobsOf(spark) {
       val f = cf.addRse("001")
       val w = f.withPairs("share" -> f.proportion("002", "001"),
         "sum" -> f.sumM("003", "004"))
@@ -124,7 +98,7 @@ class CensusPlanSpec extends AnyFunSuite {
     var rows: Array[org.apache.spark.sql.Row] = null
     val df = spark.read.format("censusreporter")
       .option("resource", "censusreporter/acs_fixture.json").option("table", "B17001").load()
-    val jobs = jobsOf(spark) { rows = df.collect() }
+    val jobs = TestSpark.jobsOf(spark) { rows = df.collect() }
     assert(df.queryExecution.executedPlan
       .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec],
       df.queryExecution.executedPlan.toString)
@@ -145,7 +119,7 @@ class CensusPlanSpec extends AnyFunSuite {
     val est = cf.df.collect().map(r => r.getAs[Double]("B17001001")).sum
     val jobs = queries.map { case (name, q) =>
       var rows: Array[org.apache.spark.sql.Row] = null
-      val n = jobsOf(spark) { rows = q().collect() }
+      val n = TestSpark.jobsOf(spark) { rows = q().collect() }
       assert(rows.length == 1 && rows.head.getDouble(1) == est, name)
       name -> n
     }

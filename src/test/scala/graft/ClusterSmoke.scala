@@ -86,22 +86,7 @@ object ClusterSmoke {
     val master = args(0)
     val sfDir = args(1)
     val names = args(2).split(",").toSeq
-    val cp = System.getProperty("java.class.path")
-    // executors are forked plain-java processes: they need the graft
-    // classes (this JVM's classpath) and the same JDK17 --add-opens set
-    // spark-submit would inject (public launcher API, so no drift)
-    val moduleOpts = org.apache.spark.launcher.JavaModuleOptions.defaultModuleOptions()
-    val spark = SparkSession.builder()
-      .master(master)
-      .appName("graft-cluster-smoke")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config(GraftConf.ObjAggFallbackKey, GraftConf.ObjAggFallbackEntries)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.executor.extraClassPath", cp)
-      .config("spark.executor.extraJavaOptions", moduleOpts)
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val spark = GraftConf.session(master, 8).appName("graft-cluster-smoke").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val exit = try {
       val driverPid = ProcessHandle.current().pid()

@@ -147,8 +147,8 @@ class PretrainStreamSpec extends AnyFunSuite {
 
   test("null-text docs flow as ineligible markers instead of killing " +
       "the query (ST18n)") {
-    // docsSchema declares text nullable and the batch chain tolerates
-    // null texts (null canonical class, coalesce'd ckey); the typed
+    // the declared documents layout leaves text nullable and the batch
+    // chain tolerates null texts (null canonical class, coalesce'd ckey); the typed
     // encoder in signals() has primitive fields, so without the
     // null-coalescing this crashed the whole query
     import org.apache.spark.sql.Row

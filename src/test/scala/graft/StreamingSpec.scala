@@ -1245,9 +1245,9 @@ class StreamingSpec extends AnyFunSuite {
 
   test("stream defined on an EMPTY landing dir uses the declared schema; " +
       "files arriving later are processed (ADVICE r8)") {
-    // production file streams are defined BEFORE data lands; the schema
-    // probe has no footers to read and must fall back to the declared
-    // nanos-long layout instead of throwing at definition time
+    // production file streams are defined BEFORE data lands; the stream
+    // reads the declared events layout, so it needs no footers and does
+    // not throw at definition time
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val landing = java.nio.file.Files.createTempDirectory("events-landing").toString
@@ -1262,17 +1262,18 @@ class StreamingSpec extends AnyFunSuite {
       q.processAllAvailable() // zero-data batch on the empty dir: no throw
       assert(spark.table("empty_landing").count() == 0)
       // files arrive in the layout the declared schema promises (ts =
-      // INT64 nanos): batch 1 spans 100 min; batch 2 is 2 h later so the
-      // watermark closes batch 1's windows and append mode emits them
-      val base = 1700000000000000000L
-      def land(offsetNanos: Long, ids: Range): Unit =
-        ids.map(i => (i.toLong, base + offsetNanos + i * 60000000000L,
+      // TIMESTAMP micros): batch 1 spans 100 min; batch 2 is 2,000 h later
+      // so the watermark closes batch 1's windows and append mode emits them
+      val base = 1700000000000000L
+      def land(offsetMicros: Long, ids: Range): Unit =
+        ids.map(i => (i.toLong, base + offsetMicros + i * 60000000L,
             i.toLong % 5, "click", 1.0, """{"k":1}"""))
           .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+          .withColumn("ts", timestamp_micros(col("ts")))
           .coalesce(1).write.mode("append").parquet(landing)
       land(0L, 1 to 100)
       q.processAllAvailable()
-      land(7200000000000L * 1000, 101 to 110) // +2 h
+      land(7200000000L * 1000, 101 to 110) // +2,000 h
       q.processAllAvailable()
       val emitted = spark.table("empty_landing")
       assert(emitted.count() > 0,

@@ -1,22 +1,40 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import graft.schema.{CensusMeta, ColMeta}
 
 /** One shared local SparkSession for all suites (single forked test JVM). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config(GraftConf.ObjAggFallbackKey, GraftConf.ObjAggFallbackEntries)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new GraftExtensions)
-      .getOrCreate()
+    val s = GraftConf.session("local[4]", 4).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Spark jobs `body` starts on `s`, counted under a job group of its
+    * own so concurrent suites' jobs are not counted.
+    */
+  def jobsOf(s: SparkSession)(body: => Unit): Int = {
+    val sc = s.sparkContext
+    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
+    val n = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          n.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "job count")
+    try body
+    finally {
+      sc.clearJobGroup()
+      GraftSqlBridge.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    n.get()
   }
 
   def resource(path: String): String =

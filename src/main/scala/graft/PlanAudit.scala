@@ -67,7 +67,7 @@ object PlanAudit {
     "q123_sq8_quantize" -> "128-double scale model as literals; byte encode map-side",
     "q124_mixture_materialize" -> "two-level prefix sum per (source, md5-prefix bucket); offsets+targets broadcast",
     "q125_ann_recall" -> "two bounded top-10 artifacts; overlap join is 10×10",
-    "q127_containment_inverted" -> "shingles as rows (codegen window, no interpreted HOF scan stage); posting lists built in one agg; df-cap bounds pair fan-out",
+    "q127_containment_inverted" -> "shingles as rows from the fused ShingleRows generator, map-side (no interpreted HOF, no token exchange); posting lists built in one agg; df-cap bounds pair fan-out",
     "q129_source_cap" -> "salted pre-cap window bounds the per-source window to K×nSalts rows — a hot domain never lands in one sort",
     "q132_semantic_dedup" -> "map-side IVF assignment; pairwise bounded per cell (one cid shuffle); survivors via anti-join",
     "q133_stratified_split" -> "two-level prefix sum per source; (source,bucket) offsets and totals broadcast",
@@ -116,7 +116,7 @@ object PlanAudit {
     sb ++= "data-size-independent; regenerate with `sbt \"runMain graft.PlanAudit\"`).\n"
     sb ++= "Audited with `spark.graft.kernelSpread=off` — the SCALE plan; the\n"
     sb ++= "local single-split layout adds one documented spread exchange on the\n"
-    sb ++= "kernel-heavy paths (PlanShapeSpec pins both modes).\n"
+    sb ++= "kernel-heavy paths (PlanShapeSpec pins the `off` plan and the `auto` exchange).\n"
     sb ++= "`shuffles` counts non-broadcast `Exchange`s — the only places data\n"
     sb ++= "moves between executors; `codegen` counts whole-stage-codegen spans.\n"
     sb ++= "Each property below is regression-locked in `PlanShapeSpec`.\n\n"

@@ -738,18 +738,7 @@ object Stress {
                 pinned
               }),
               evalPred = evalPred,
-              repAnchoredNearDup = repAnchored,
-              // STRESS_PRETRAIN_BUCKETED=1|0: stage the per-doc edge
-              // payload as a bucketed-by-doc_id table before the verify
-              // joins (the PageRank pre-layout discipline) — the stage-2
-              // prepare A/B. "auto" (or any future default probe) defers
-              // to the library's survivor-count gate; the harness pins an
-              // EXPLICIT side by default so A/B rows stay labeled by what
-              // actually ran
-              bucketedEdgeBase = sys.env.get("STRESS_PRETRAIN_BUCKETED") match {
-                case Some("auto") => None
-                case v => Some(v.contains("1"))
-              })
+              repAnchoredNearDup = repAnchored)
             // ONE execution of the unmaterialized tail: q160's output is
             // one row per stage-5 survivor (stages 6-7 never filter), so
             // out_rows is the s5 manifest count — a second count() here
@@ -762,14 +751,8 @@ object Stress {
           val handle = run.finish()
           val rowsJson = stageRows.map { case (k, v) => s""""$k":$v""" }
             .mkString("{", ",", "}")
-          // the knob only applies to the rep-anchored form (q160Frame
-          // consults bucketedEdgeBase under repAnchoredNearDup alone) —
-          // label the row by what actually ran, not by the env
-          val bucketedRan = repAnchored &&
-            sys.env.get("STRESS_PRETRAIN_BUCKETED").contains("1")
           println(s"""STRESS_PRETRAIN_E2E {"corpus":"$tag","form":"$form","docs":${
             if (tag == "base") nBase else nScaled},"budget":$budget,""" +
-            s""""bucketed":$bucketedRan,""" +
             s""""wall_sec":$wall,"shuffle_write_bytes":$shW,""" +
             s""""spilled_bytes":$sp,"out_rows":$outRows,""" +
             s""""stage_rows":$rowsJson,"stages":${handle.json},""" +

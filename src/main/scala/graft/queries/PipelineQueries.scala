@@ -31,32 +31,34 @@ object PipelineQueries {
     * and every per-row kernel fused into it (MinHash signatures, shingle
     * hash sets, gram streams, canonicalization) — runs as a SINGLE task
     * no matter how many cores the session has. When the frame's file
-    * scan cannot split (fewer than 8 input files, the same probe
-    * q127Frame uses), spread the slim input rows across the session's
-    * cores with one explicit hash exchange BEFORE the expensive
-    * projection. numPartitions is passed explicitly so AQE's
-    * small-partition coalescing cannot fold the tiny local exchange back
-    * into one partition; the hash key keeps the exchange deterministic
-    * (no round-robin, no sort-before-repartition pass).
+    * scan cannot split (fewer than 8 input files), spread the slim
+    * input rows across the session's cores with one explicit hash
+    * exchange BEFORE the expensive projection. numPartitions is passed
+    * explicitly so AQE's small-partition coalescing cannot fold the tiny
+    * local exchange back into one partition; the hash key keeps the
+    * exchange deterministic (no round-robin, no sort-before-repartition
+    * pass).
     *
     * This is a local-parallelism workaround, NOT the scale plan: any
     * real corpus layout (multi-file, or row groups written at ~128 MB)
     * splits naturally, the probe sees a multi-split scan, and the
     * exchange never enters the plan. `spark.graft.kernelSpread`
-    * (auto|on|off, default auto; any other value throws) forces either
-    * side — PlanShapeSpec pins the scale plan with `off`, and the dial
-    * documents the knob for cluster deployments.
+    * (auto|off, default auto; any other value throws): `off` pins the
+    * scale plan on any input — PlanShapeSpec and PlanAudit use it. There
+    * is no `on`: a multi-split input already parallelizes.
+    *
+    * This is the ONE split probe of the query pack: every kernel-heavy
+    * path that wants the spread wraps its own input in it.
     */
   private[graft] def spreadForKernels(df: DataFrame,
       key: String = "doc_id"): DataFrame = {
     val s = df.sparkSession
     val spread = s.conf.get("spark.graft.kernelSpread", "auto") match {
-      case "on" => true
       case "off" => false
       case "auto" =>
         (try df.inputFiles.length catch { case NonFatal(_) => 8 }) < 8
       case other => throw new IllegalArgumentException(
-        s"spark.graft.kernelSpread must be one of auto|on|off, got '$other'")
+        s"spark.graft.kernelSpread must be one of auto|off, got '$other'")
     }
     if (spread) df.repartition(s.sparkContext.defaultParallelism, col(key))
     else df
@@ -172,21 +174,20 @@ object PipelineQueries {
           1, nprobe)).as("pc"))
       .select(col("qid"), col("qlabel"), col("qv"), col("qn"),
         col("pc.cid").as("cid"))
-    val cand0 = e.select(col("vec_id").as("neg_id"), col("label").as("nlabel"),
-      col("embedding").as("nv"), sqrt(TextOps.norm2(col("embedding"))).as("nn"),
-      Ivf.bestCell(cents, col("embedding")).as("cid"))
     // Under a broadcast join the pair stage inherits the candidate
-    // SCAN's partitioning; a small single-row-group input (the driver
+    // side's partitioning; a small single-row-group input (the driver
     // testdata is one row group per file) would serialize the whole
-    // ~nprobe·n²/k scoring onto ONE task. Re-split tiny scans to the
-    // session's parallelism — the candidate rows are narrow, so the
-    // round-robin exchange is noise. Every real multi-split corpus
-    // skips this branch, and at scale the anchors outgrow the broadcast
-    // threshold anyway: the join shuffles both sides on cid and the
-    // pair stage parallelizes across the k cells (the quantizer dial).
-    val par = s.sparkContext.defaultParallelism
-    val cand = if (cand0.rdd.getNumPartitions < par)
-      cand0.repartition(par) else cand0
+    // ~nprobe·n²/k scoring onto ONE task. The candidate rows spread
+    // AFTER their projection: spread before it, the pair stage's
+    // codegen evaluates the deferred `nn` once per scored PAIR instead
+    // of once per vector (measured at sf0.1: pair-stage CPU 1.8 → 2.8 s,
+    // q138 wall +25%). At scale the anchors outgrow the broadcast
+    // threshold anyway: the join shuffles both sides on cid and the pair
+    // stage parallelizes across the k cells (the quantizer dial).
+    val cand = spreadForKernels(e.select(col("vec_id").as("neg_id"),
+      col("label").as("nlabel"), col("embedding").as("nv"),
+      sqrt(TextOps.norm2(col("embedding"))).as("nn"),
+      Ivf.bestCell(cents, col("embedding")).as("cid")), "neg_id")
     val pairCos = round(TextOps.dot(col("qv"), col("nv")) /
       (col("qn") * col("nn")), 6)
     val pairs = anchors.join(cand, Seq("cid"))
@@ -264,7 +265,7 @@ object PipelineQueries {
 
   /** Delete the dirs directly under `root` whose name matches `name`
     * (its first group the owning pid) and whose owner is dead — crash
-    * leftovers of [[ivfPqIndex]] and q160's edge-base staging.
+    * leftovers of [[ivfPqIndex]].
     * Best-effort: any IO failure (a dir another sweep already removed,
     * permissions) is ignored — a leftover dir costs disk, not
     * correctness.
@@ -581,26 +582,26 @@ object PipelineQueries {
     */
   private[graft] def verifiedEdges(s: SparkSession, d: String,
       hotCap: Int = 256, pruneBroadcastLimit: Long = 1000000L): DataFrame =
-    verifiedEdgesOf(edgeBase(docs(s, d)), d, hotCap, pruneBroadcastLimit)
+    verifiedEdgesOf(edgeBase(spreadForKernels(docs(s, d))), d, hotCap,
+      pruneBroadcastLimit)
 
   /** The per-doc edge payload: (doc_id, 4 band keys from the 8-hash
     * MinHash signature, sorted shingle-hash set) of every
     * verification-eligible (>= 3 tokens) doc - both kernels map-side in
     * one pass over the text.
-    */
-  /** `spread = false` keeps the scan-fused single-pass shape even on
-    * single-split local inputs: callers whose plans REPLICATE the
-    * payload lineage into several differently-pruned subplans (q87's
-    * exact-collapse + fixpoint, the q160/q161 composed stages) pay the
-    * spread exchange once per copy — ReuseExchange cannot dedupe
-    * exchanges with different pruned children — and measured slower
-    * with it (q87 2.96→3.62 s, q161 5.20→6.10 s); the single-copy
-    * verify pipelines (q72/q128) measured faster (q72 2.35→2.07 s).
+    *
+    * It runs over its input as given. Callers that read the corpus once
+    * (q72/q128's [[verifiedEdges]], q130) wrap it in [[spreadForKernels]]
+    * first (q72 2.35→2.07 s). Callers whose plans REPLICATE the payload
+    * lineage into several differently-pruned subplans (q87's exact-
+    * collapse + fixpoint, the q160/q161 composed stages) do not: each
+    * copy would pay its own spread exchange — ReuseExchange cannot
+    * dedupe exchanges with different pruned children — and measured
+    * slower (q87 2.96→3.62 s, q161 5.20→6.10 s).
     */
   private def edgeBase(docsDf: DataFrame,
-      extra: Seq[(String, org.apache.spark.sql.Column)] = Nil,
-      spread: Boolean = true): DataFrame =
-    (if (spread) spreadForKernels(docsDf) else docsDf)
+      extra: Seq[(String, org.apache.spark.sql.Column)] = Nil): DataFrame =
+    docsDf
       .filter(TextOps.eligible(col("text")))
       .select(Seq(col("doc_id"), TextOps.signature(col("text")).as("sig"),
         TextOps.shingleSet(col("text")).as("shset")) ++
@@ -704,55 +705,33 @@ object PipelineQueries {
       edges AS (SELECT doc_a AS src, doc_b AS dst FROM ver
                 UNION ALL SELECT doc_b, doc_a FROM ver)"""
 
-  /** q127's frame, exposed for the spec that forces BOTH shingle-stream
-    * modes (map-side ShinglesK vs windowed lead) and asserts identical
-    * results. `forceMapSide` overrides the split-count probe.
+  /** q127's frame, exposed for the spec that runs BOTH shingle-stream
+    * forms (through `spark.graft.kernelSpread`) and asserts identical
+    * results.
     */
-  private[graft] def q127Frame(s: SparkSession, d: String,
-      forceMapSide: Option[Boolean] = None): DataFrame = {
+  private[graft] def q127Frame(s: SparkSession, d: String): DataFrame = {
     val dfCap = 50
 
-      // shingles as ROWS, not arrays: posexplode the words (codegen'd
-      // generate), then lead-by-1/2 over the per-doc window. Spark's
-      // higher-order array functions are CodegenFallback (interpreted,
-      // ~10us per element measured) and the whole array pipeline runs
-      // inside the scan stage — one task when the input is one row
-      // group. The window form is codegen-friendly row work that
-      // parallelizes across the word-stream exchange, and the sample
-      // filter runs as a plain row predicate before the distinct, so
-      // the distinct shuffle carries 1/4 of the shingle stream.
-      // Shingle-stream strategy is SPLIT-AWARE (probed once per
-      // dataset, memoized like the models):
+      // shingles as ROWS from the fused ShingleRows generator, not
+      // explode(shingles_k(...)): InferFiltersFromGenerate would
+      // synthesize size(shingles_k(text, 3)) > 0 with the kernel INLINED
+      // into the pushed filter — the shingle kernel running 2x per doc
+      // (the repo's documented gotcha). The stream is SPLIT-AWARE
+      // through [[spreadForKernels]]:
       //  - multi-split input (real corpus layouts, the 32-file stress
-      //    corpora, any cluster deployment): shingles come map-side
-      //    from the native codegen'd ShinglesK + explode — the full
-      //    token stream never crosses the wire; the first exchange is
-      //    the sampled distinct (1/4 of the shingle stream).
+      //    corpora, any cluster deployment): shingles come map-side —
+      //    the full token stream never crosses the wire; the first
+      //    exchange is the sampled distinct (1/4 of the shingle stream).
       //  - single-row-group input (the driver testdata ships ONE row
       //    group per file, so the scan stage is one local task): the
-      //    window form pays a token-stream exchange purely to spread
-      //    shingle work across cores — a local-parallelism workaround,
-      //    not the scale plan.
-      // Both produce the identical (doc_id, sh) multiset → identical
-      // results (spec-locked, both modes forced); the oracle is
-      // unchanged.
-      val multiSplit = forceMapSide.getOrElse(Models.cached(s"q127split:$d")(
-        java.lang.Boolean.valueOf(docs(s, d).inputFiles.length >= 8)).booleanValue)
-      // the fused ShingleRows generator, not explode(shingles_k(...)):
-      // InferFiltersFromGenerate would synthesize size(shingles_k(text,
-      // 3)) > 0 with the kernel INLINED into the pushed filter — the
-      // shingle kernel running 2x per doc in the very branch that exists
-      // for scan-stage performance (the repo's documented gotcha).
-      // Single-split inputs take the SAME generator behind one kernel-
-      // spread exchange of the doc rows — this replaced the windowed-
-      // lead form, which paid a one-row-PER-TOKEN exchange plus two
-      // window sorts for the same parallelism (clean full-bench min
-      // 1.168 → 1.092 s at sf0.1, and strictly fewer exchanged bytes;
-      // the forms are result-identical, spec-locked)
-      val shDocs = if (multiSplit) docs(s, d)
-        else docs(s, d).repartition(
-          s.sparkContext.defaultParallelism, col("doc_id"))
-      val shRows = shDocs.select(col("doc_id"),
+      //    same generator runs behind one kernel-spread exchange of the
+      //    doc rows — a local-parallelism workaround, not the scale
+      //    plan. It replaced the windowed-lead form, which paid a
+      //    one-row-PER-TOKEN exchange plus two window sorts for the same
+      //    parallelism (clean full-bench min 1.168 → 1.092 s at sf0.1).
+      // Both forms produce the identical (doc_id, sh) multiset →
+      // identical results (spec-locked); the oracle is unchanged.
+      val shRows = spreadForKernels(docs(s, d)).select(col("doc_id"),
         graft.functions.TextFunctions.shingleRows(col("text"), 3))
       // native hash32 (r19): this sampling filter runs once per
       // GENERATED shingle row — the hottest expression in the query —
@@ -811,10 +790,8 @@ object PipelineQueries {
     * under k tokens) — result-identical, spec-locked against the
     * compositional form in TextExprSpec.
     */
-  private[graft] def gramStream8(df: DataFrame,
-      spread: Boolean = true): DataFrame =
-    (if (spread) spreadForKernels(df) else df)
-      .select(col("doc_id"), explode(
+  private[graft] def gramStream8(df: DataFrame): DataFrame =
+    df.select(col("doc_id"), explode(
         graft.functions.TextFunctions.gramHashArray(col("text"), 8)).as("g"))
 
   /** The eval-suite bloom — the one place the filter is sized, so
@@ -844,7 +821,7 @@ object PipelineQueries {
   private[graft] def contaminationFracFrame(s: SparkSession, d: String,
       evalPred: org.apache.spark.sql.Column, bloomKey: String): DataFrame = {
     import graft.functions.BloomFunctions
-    val grams = gramStream8(docs(s, d))
+    val grams = gramStream8(spreadForKernels(docs(s, d)))
     val evalGrams = grams.filter(evalPred).select(col("g")).distinct()
     val bloom = trainEvalBloom(bloomKey, evalGrams)
     val trainGrams = grams.filter(!evalPred)
@@ -1427,7 +1404,7 @@ object PipelineQueries {
         // carries the identical text
         first(col("text")).as("text"))
       val nodes = pinReleasingPrior(s"q87nodes:$d",
-        edgeBase(collapsed, Seq("fp" -> col("fp")), spread = false))
+        edgeBase(collapsed, Seq("fp" -> col("fp"))))
       val docNode = withFp.select(col("doc_id"), col("fp"))
         .join(nodes.select(col("fp"), col("doc_id").as("node_id")), "fp")
         .select(col("doc_id"), col("node_id"))
@@ -1590,7 +1567,8 @@ object PipelineQueries {
       // one kernel pass (minhash bands + shingle sets) over the corpus,
       // pinned: every sub-run below reads these blocks, standing in for
       // the materialized edgeBase snapshot a production run would load
-      val base = pinReleasingPrior(s"q130base:$d", edgeBase(all))
+      val base = pinReleasingPrior(s"q130base:$d",
+        edgeBase(spreadForKernels(all)))
       // 1) the PRIOR SNAPSHOT's labels: history docs, history-only edges
       val eHist = verifiedEdgesOf(base.filter(!isDelta), s"$d#cchist",
         256, 1000000L)
@@ -1634,7 +1612,7 @@ object PipelineQueries {
     Q("q88_decontaminate", (s, d) => {
       // the shared fused gram kernel (r19) — was an inlined copy of the
       // same explode(array_distinct(shingles))+hash32 law
-      val grams = gramStream8(docs(s, d))
+      val grams = gramStream8(spreadForKernels(docs(s, d)))
       val evalGrams = grams.filter(col("doc_id") % 10 === 7).select(col("g")).distinct()
       val contaminated = grams.filter(col("doc_id") % 10 =!= 7)
         .join(broadcast(evalGrams), "g").select(col("doc_id")).distinct()
@@ -1668,7 +1646,7 @@ object PipelineQueries {
     // only thing the build aggregation exchanges. ----
     Q("q101_bloom_decontaminate", (s, d) => {
       import graft.functions.BloomFunctions
-      val grams = gramStream8(docs(s, d))
+      val grams = gramStream8(spreadForKernels(docs(s, d)))
       val evalGrams = grams.filter(col("doc_id") % 10 === 7).select(col("g")).distinct()
       val bloom = trainEvalBloom(s"evalgrams:$d", evalGrams)
       val contaminated = grams.filter(col("doc_id") % 10 =!= 7)
@@ -4212,15 +4190,12 @@ object PipelineQueries {
     * 1000× e2e ladder: the stage-2 prepare's shuffle AND its spill live
     * here).
     */
-  private def repAnchoredEdges(docsDf: DataFrame,
-      spread: Boolean = true): DataFrame =
-    // both the band keys and the shingle payloads come from [[edgeBase]]
-    // (Catalyst column-prunes the unused column from each branch)
-    repAnchoredEdgesFromBase(edgeBase(docsDf, spread = spread))
-
-  private def repAnchoredEdgesFromBase(base: DataFrame): DataFrame = {
+  private[graft] def repAnchoredEdges(docsDf: DataFrame): DataFrame = {
     import graft.functions.SetFunctions
     import graft.operators.Dedup
+    // both the band keys and the shingle payloads come from [[edgeBase]]
+    // (Catalyst column-prunes the unused column from each branch)
+    val base = edgeBase(docsDf)
     val bands = Dedup.bandRows(base, Seq("doc_id"))
     // the rep groupBy's (band, bkey) exchange and the rep join's are
     // identical subplans — ReuseExchange dedupes the banding pass
@@ -4235,12 +4210,6 @@ object PipelineQueries {
     ver.union(ver.select(col("dst").as("src"), col("src").as("dst")))
   }
 
-  /** [[repAnchoredEdges]] exposed for the parity spec that locks it to
-    * the payload-carrying batch-twin derivation.
-    */
-  private[graft] def repAnchoredEdgesOf(docsDf: DataFrame): DataFrame =
-    repAnchoredEdges(docsDf)
-
   /** q160's composed pretrain-prep chain. `budget` is the stage-5 token
     * budget; `stageRun` (stageNo, stageName, buildSurvivors) → survivors
     * lets the stress harness run EACH STAGE'S WHOLE CONSTRUCTION —
@@ -4254,65 +4223,11 @@ object PipelineQueries {
     * corpora pass `(doc_id DIV factor) % 10 == 7` instead, because their
     * ids are base*factor+r and the raw mod would select "replica r≡7 of
     * EVERY doc" — making every kept doc contaminated by its own replica.
-    *
-    * `bucketedEdgeBase` — SHIP RULE (r17 single-JVM, r18 cross-JVM,
-    * both measured): `None` (the default) auto-gates on the stage-1
-    * survivor count, with a TOPOLOGY-AWARE threshold — ≥
-    * [[BucketedEdgeBaseAutoMinDocs]] when the session runs in ONE JVM
-    * (`local[*]`), ≥ [[BucketedEdgeBaseAutoMinDocsMultiExec]] when real
-    * executors exist. The staging write is a fixed toll (one bucket
-    * shuffle of the edge payload) that the co-partitioned verify joins
-    * must repay, and where the exchanges run decides how fast the
-    * repayment accrues:
-    *
-    *  - single JVM (exchanges are memory-speed): crossover between
-    *    334k survivors (LOSES: e2e 24.6 → 31.3 s at x100) and 3.3M
-    *    (WINS: 72.1 → 69.7 s, prepare 45.6 → 9.8 s, spill → 0) — r17.
-    *  - two-executor rig (exchanges cross process sockets): staging
-    *    WINS already at 334k survivors (e2e 63.7 → 34.3 s, −46%;
-    *    prepare 30.8 → 8.1 s) and still LOSES at 35k (e2e 13.9 →
-    *    17.7 s — the toll has nothing to repay); at 3.3M the knob's
-    *    own term keeps winning (stage-2 staging+prepare 56–64 →
-    *    32.5 s clean; prepare 50.4 → 8.4 s) while e2e is dominated by
-    *    unrelated-stage IO noise on the shared-disk rig — r18,
-    *    consistent with r16's independent −25% e2e at the same size.
-    *    The multi-exec threshold 100k is the log-midpoint of the
-    *    (35k LOSES, 334k WINS) bracket.
-    *
-    * The 100 TB regime is the multi-executor row. Explicit `Some(_)`
-    * overrides for harness A/Bs.
     */
-  private[graft] val BucketedEdgeBaseAutoMinDocs = 2000000L
-
-  /** Cross-JVM auto-gate threshold — see [[BucketedEdgeBaseAutoMinDocs]]. */
-  private[graft] val BucketedEdgeBaseAutoMinDocsMultiExec = 100000L
-
-  /** Per-invocation token for the ephemeral edge-base staging table —
-    * see the naming comment at the staging site. */
-  private val edgeBaseSeq = new java.util.concurrent.atomic.AtomicLong
-
-  /** This host's token in staging-table names — lowercase alnum only
-    * (table identifiers), bounded. Pid liveness is only meaningful for
-    * processes of THIS host, so the sweep below matches on it: on an
-    * NFS-class warehouse that java.io.File can list but other HOSTS
-    * also write, a dead-here pid can belong to another host's LIVE run
-    * (r17 ADVICE) — host-scoping makes the sweep safe there instead of
-    * merely no-op on remote schemes.
-    */
-  private lazy val edgeBaseHostToken: String =
-    (try java.net.InetAddress.getLocalHost.getHostName
-     catch { case NonFatal(_) => "unknown" })
-      .toLowerCase.replaceAll("[^a-z0-9]", "").take(32) match {
-      case "" => "unknown"
-      case h => h
-    }
-
   private[graft] def q160Frame(s: SparkSession, d: String, budget: Long,
       stageRun: Option[(Int, String, () => DataFrame) => DataFrame] = None,
       evalPred: org.apache.spark.sql.Column = col("doc_id") % 10 === 7,
-      repAnchoredNearDup: Boolean = false,
-      bucketedEdgeBase: Option[Boolean] = None)
-      : DataFrame = {
+      repAnchoredNearDup: Boolean = false): DataFrame = {
     // the pin key carries EVERY dial that changes a stage's content
     // (budget, stage-2 form, eval law): q160 and q161 run the same
     // chain with different dials, and a shared key would release the
@@ -4365,97 +4280,11 @@ object PipelineQueries {
     // base corpus, rep form over-kept 1 of 4,758 at 10× (one marginal
     // link the pairwise form closes transitively).
     val s2 = stage(2, "neardup_fixpoint") {
-      // best-effort on BOTH halves: this runs inside a finally, where a
-      // transient metastore error must neither mask the primary
-      // exception nor fail a stage whose returned frame no longer
-      // needs the table
-      def dropStaged(tbl: String): Unit = {
-        try s.sql(s"DROP TABLE IF EXISTS $tbl")
-        catch { case NonFatal(_) => () }
-        val wh = new org.apache.hadoop.fs.Path(
-          s.conf.get("spark.sql.warehouse.dir"), tbl.toLowerCase)
-        try wh.getFileSystem(s.sparkContext.hadoopConfiguration)
-          .delete(wh, true)
-        catch { case NonFatal(_) => () }
-      }
-      var stagedTbl: Option[String] = None
-      // auto mode: under the default pinReleasingPrior path (and every
-      // harness stageRun in this repo) the s1 manifest is checkpointed,
-      // so counting it is one cheap pass over pinned ids — the
-      // threshold is the measured staging-toll crossover for the
-      // session's TOPOLOGY (see the knob's scaladoc: cross-JVM
-      // exchanges repay the staging toll ~20× earlier than in-process
-      // ones). More than one entry in the executor list means real
-      // executor JVMs exist (local[*] reports only the driver). A
-      // caller-supplied stageRun that does NOT materialize pays a
-      // second stage-1 aggregation here; such a caller should pass an
-      // explicit Some(_) instead of auto.
-      val multiExec =
-        s.sparkContext.statusTracker.getExecutorInfos.length > 1
-      val useBucketed = bucketedEdgeBase.getOrElse(
-        repAnchoredNearDup && s1.count() >= (if (multiExec)
-          BucketedEdgeBaseAutoMinDocsMultiExec
-        else BucketedEdgeBaseAutoMinDocs))
-      val edges = if (repAnchoredNearDup) {
-        if (useBucketed) {
-          // the PageRank writeBucketedEdges discipline applied to the
-          // verify prepare: stage the per-doc edge payload ONCE as a
-          // bucketed-by-doc_id table, so BOTH shingle-attachment joins
-          // in repAnchoredEdgesFromBase read co-partitioned scans (each
-          // join keys the sh side on the STORED doc_id) and only the
-          // slim pair frames move — unbucketed, the fixpoint prepare's
-          // exchanges carry the shingle table twice, the cross-JVM
-          // traffic the e2e rig attributed at 5M docs
-          val nb = s.conf.get("spark.sql.shuffle.partitions").toInt
-          // a FULL digest of the staging key plus a PER-INVOCATION
-          // (pid, seq) token: the digest keeps distinct corpus/
-          // predicate pairs apart, and the token keeps two concurrent
-          // calls on the SAME pair apart — the table is ephemeral
-          // (dropped in the finally below), so one caller's drop must
-          // never delete files another caller's round-0 prepare is
-          // still scanning
-          val tbl = "graft_q160_edgebase_" + java.security.MessageDigest
-            .getInstance("MD5").digest(s"$d:$evalPred".getBytes("UTF-8"))
-            .map("%02x".format(_)).mkString +
-            s"_h${edgeBaseHostToken}_p${ProcessHandle.current().pid()}" +
-            s"_${edgeBaseSeq.incrementAndGet()}"
-          stagedTbl = Some(tbl)
-          // the per-invocation (host, pid, seq) token makes the name
-          // fresh among LIVE writers, so the only possible blocker is a
-          // crashed process's orphaned warehouse dir (its crash skipped
-          // the finally; a fresh metastore doesn't know the table, but
-          // the LOCATION blocks a managed-table create) — sweep this
-          // host's dead-pid dirs, then drop THIS name unconditionally:
-          // the sweep alone cannot cover an OS-recycled pid whose new
-          // JVM restarts the seq at 1 and collides exactly with the
-          // orphan (r17 ADVICE); dropStaged is idempotent and cheap.
-          // The sweep matches this host's token only (see
-          // edgeBaseHostToken)
-          sweepDeadPidDirs(s.conf.get("spark.sql.warehouse.dir"),
-            ("^graft_q160_edgebase_[0-9a-f]{32}_h" +
-              java.util.regex.Pattern.quote(edgeBaseHostToken) +
-              "_p(\\d+)_\\d+$").r)
-          dropStaged(tbl)
-          edgeBase(d1, spread = false).write.mode("overwrite").format("parquet")
-            .bucketBy(nb, "doc_id").sortBy("doc_id").saveAsTable(tbl)
-          // parquet erases the shingle array's containsNull=false, which
-          // the jaccard_sorted type check requires — the identity
-          // coalesce re-establishes it map-side (no nulls exist; the
-          // projection preserves the bucketed scan's partitioning)
-          repAnchoredEdgesFromBase(s.table(tbl).select(col("doc_id"),
-            col("bkeys"),
-            transform(col("shset"), x => coalesce(x, lit(0L))).as("shset")))
-        } else repAnchoredEdges(d1, spread = false)
-      } else verifiedEdgesOf(edgeBase(d1, spread = false),
-        s"q160:$d", 256, 1000000L)
-      try graft.operators.Dedup
+      val edges = if (repAnchoredNearDup) repAnchoredEdges(d1)
+        else verifiedEdgesOf(edgeBase(d1), s"q160:$d", 256, 1000000L)
+      graft.operators.Dedup
         .keepListToFixpoint(d1.select(col("doc_id")), edges)
         .filter(col("is_kept")).select(col("doc_id"))
-      // keepListToFixpoint PINS the edge lineage eagerly in its round-0
-      // prepare, so by the time it returns the staged table has been
-      // fully consumed — drop it (and its warehouse files) instead of
-      // leaving one staging table per corpus/predicate pair behind
-      finally stagedTbl.foreach(dropStaged)
     }
 
     // stage 3 — n-gram decontamination (q101, [[q160Decontaminated]])
@@ -4498,14 +4327,14 @@ object PipelineQueries {
   private[graft] def q160Decontaminated(all: DataFrame, d: String,
       s2: DataFrame, evalPred: org.apache.spark.sql.Column): DataFrame = {
     val ws = TextOps.tokens(col("text"))
-    val evalGrams = gramStream8(all.filter(evalPred), spread = false)
+    val evalGrams = gramStream8(all.filter(evalPred))
       .select(col("g")).distinct()
     // key carries the eval predicate: a stress run's DIV-based law must
     // not reuse a bloom trained under the default mod law (or vice versa)
     val bloom = trainEvalBloom(s"evalgrams:$d:$evalPred", evalGrams)
     val trainSide = all.join(s2, Seq("doc_id"), "left_semi")
       .filter(!evalPred)
-    val contaminated = gramStream8(trainSide, spread = false)
+    val contaminated = gramStream8(trainSide)
       .filter(graft.functions.BloomFunctions.mightContain(bloom, col("g")))
       .join(evalGrams, "g").select(col("doc_id")).distinct()
     trainSide.join(contaminated, Seq("doc_id"), "left_anti")

@@ -304,7 +304,7 @@ object PretrainStream {
   def sink(history: DataFrame, evalPred: Column, bloomKey: String,
       labelsRoot: String, storeRoot: String): PretrainSink = {
     import graft.queries.PipelineQueries
-    val evalGrams = PipelineQueries.gramStream8(history.filter(evalPred), spread = false)
+    val evalGrams = PipelineQueries.gramStream8(history.filter(evalPred))
       .select(col("g")).distinct().cache()
     val bloom = PipelineQueries.trainEvalBloom(bloomKey, evalGrams)
     val fn = (batch: DataFrame, epochId: Long) => {
@@ -319,7 +319,7 @@ object PretrainStream {
           .select(col("doc_id"), col("source"), col("n_tokens"), col("ttr"))
         val withText = docsB.join(
           history.select(col("doc_id"), col("text")), Seq("doc_id"), "left")
-        val cont = PipelineQueries.gramStream8(withText, spread = false)
+        val cont = PipelineQueries.gramStream8(withText)
           .filter(graft.functions.BloomFunctions.mightContain(bloom, col("g")))
           .join(evalGrams, "g").select(col("doc_id")).distinct()
           .withColumn("contaminated", lit(true))
@@ -477,7 +477,7 @@ object PretrainStream {
         }
       }
     }
-    val evalGrams = PipelineQueries.gramStream8(history.filter(evalPred), spread = false)
+    val evalGrams = PipelineQueries.gramStream8(history.filter(evalPred))
       .select(col("g")).distinct().cache()
     try {
       val bloom = PipelineQueries.trainEvalBloom(bloomKey, evalGrams)
@@ -511,7 +511,7 @@ object PretrainStream {
         val resolved = withText.filter(col("text").isNotNull)
           .filter(!evalPred)
         val still = withText.filter(col("text").isNull)
-        val cont = PipelineQueries.gramStream8(resolved, spread = false)
+        val cont = PipelineQueries.gramStream8(resolved)
           .filter(graft.functions.BloomFunctions.mightContain(bloom, col("g")))
           .join(evalGrams, "g").select(col("doc_id")).distinct()
           .withColumn("contaminated", lit(true))

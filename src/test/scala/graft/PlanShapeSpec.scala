@@ -25,12 +25,15 @@ class PlanShapeSpec extends AnyFunSuite {
     try body finally spark.conf.unset("spark.graft.kernelSpread")
   }
 
-  test("a kernelSpread value other than auto|on|off fails loudly") {
+  test("a kernelSpread value other than auto|off fails loudly") {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    val e = withKernelSpread("of") {
-      intercept[IllegalArgumentException](queries.PipelineQueries.spreadForKernels(docs))
+    Seq("of", "on").foreach { bad =>
+      val e = withKernelSpread(bad) {
+        intercept[IllegalArgumentException](queries.PipelineQueries.spreadForKernels(docs))
+      }
+      assert(e.getMessage.contains("auto|off") && e.getMessage.contains(s"'$bad'"),
+        e.getMessage)
     }
-    assert(e.getMessage.contains("auto|on|off") && e.getMessage.contains("'of'"), e.getMessage)
   }
 
   test("q06: all filters pushed to the parquet scan") {

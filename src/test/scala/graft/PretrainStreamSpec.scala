@@ -219,7 +219,7 @@ class PretrainStreamSpec extends AnyFunSuite {
       .groupBy(col("c")).agg(min(col("doc_id")).as("doc_id"))
       .select(col("doc_id"))
     val d1 = docs.join(s1, Seq("doc_id"), "left_semi")
-    val expected = PipelineQueries.repAnchoredEdgesOf(d1)
+    val expected = PipelineQueries.repAnchoredEdges(d1)
       .filter(col("src") > col("dst"))
       .select(col("src"), col("dst")).distinct().collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet

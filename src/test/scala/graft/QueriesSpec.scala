@@ -60,20 +60,29 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   /** q127's shingle stream has two split-aware physical forms: the pure
-    * map-side ShingleRows generator (multi-split corpora — no doc
-    * exchange at all) and the same generator behind one kernel-spread
-    * doc exchange (single-row-group local testdata — pays one slim
-    * exchange to parallelize; replaced the windowed-lead form, which
-    * moved one row per TOKEN). Both must produce the bit-identical
-    * query result.
+    * map-side ShingleRows generator (multi-split corpora, or
+    * `spark.graft.kernelSpread=off` — no doc exchange at all) and the
+    * same generator behind one kernel-spread doc exchange (`auto` on
+    * single-row-group local testdata — pays one slim exchange to
+    * parallelize; replaced the windowed-lead form, which moved one row
+    * per TOKEN). Both must produce the bit-identical query result.
     */
   test("q127 map-side and windowed shingle streams produce identical results") {
-    def rows(forceMapSide: Boolean) =
-      queries.PipelineQueries.q127Frame(spark, dir, Some(forceMapSide))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-        .toSet
-    val mapSide = rows(forceMapSide = true)
-    val windowed = rows(forceMapSide = false)
+    def run(mode: String): (Set[(Long, Long, Long, Double)], String) = {
+      spark.conf.set("spark.graft.kernelSpread", mode)
+      try {
+        val df = queries.PipelineQueries.q127Frame(spark, dir)
+        (df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+          r.getDouble(3))).toSet, df.queryExecution.executedPlan.toString)
+      } finally spark.conf.unset("spark.graft.kernelSpread")
+    }
+    val (mapSide, mapSidePlan) = run("off")
+    val (windowed, windowedPlan) = run("auto")
+    // not vacuous: `auto` really runs the doc_id spread exchange here,
+    // and `off` really runs without it
+    assert(windowedPlan.contains("REPARTITION_BY_NUM") &&
+      windowedPlan.contains("hashpartitioning(doc_id"), windowedPlan)
+    assert(!mapSidePlan.contains("REPARTITION_BY_NUM"), mapSidePlan)
     assert(mapSide.nonEmpty)
     assert(mapSide == windowed,
       s"diff: ${(mapSide diff windowed) ++ (windowed diff mapSide)}")
@@ -1215,6 +1224,24 @@ class QueriesSpec extends AnyFunSuite {
       s"rep form LOST survivors: ${(pairwise diff repAnchored).take(10)}")
   }
 
+  test("q161's stage 2 starts no Spark job outside the fixpoint's own phases") {
+    // the rep form's stage 2 is edge construction (lazy) plus the
+    // keep-list fixpoint, whose prepare and rounds run under their own
+    // PhaseStats job groups — so nothing else may run a job while the
+    // stage is built (no survivor count, no staging write). q161 only:
+    // q160's pairwise form runs its memoized bucket probe on first use.
+    var outside = -1
+    queries.PipelineQueries.q160Frame(spark, dir, 6000L,
+      stageRun = Some((i, _, mk) => {
+        var built: org.apache.spark.sql.DataFrame = null
+        if (i == 2) outside = TestSpark.jobsOf(spark) { built = mk() }
+        else built = mk()
+        built.localCheckpoint()
+      }),
+      repAnchoredNearDup = true).queryExecution.logical // construct only
+    assert(outside == 0, s"stage 2 started $outside job(s) outside the fixpoint")
+  }
+
   test("rep-anchored id-join edges == the payload-carrying batch-twin derivation") {
     // q160/q161's stage-2 rep form uses the q157 id-join discipline (no
     // shingle payload on the band explode); the streaming batch twin
@@ -1225,7 +1252,7 @@ class QueriesSpec extends AnyFunSuite {
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     def norm(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
       df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val idJoin = norm(queries.PipelineQueries.repAnchoredEdgesOf(docs)
+    val idJoin = norm(queries.PipelineQueries.repAnchoredEdges(docs)
       .select(col("src"), col("dst")))
     val twin = graft.streaming.DocsStream.nearDupVerifiedBatch(docs, docs)
       .select(col("doc_id").as("src"), col("dup_of").as("dst")).distinct()

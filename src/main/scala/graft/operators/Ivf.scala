@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
 
@@ -145,9 +146,16 @@ object Ivf {
 
   /** The flat argmax cid as a composable map-side expression (the same
     * ranking as [[assign]]: rounded cosine desc, ties → lowest cid).
+    * Declared non-null, which it is (the argmax of a non-empty array of
+    * non-null structs, whatever the embedding): a join on a nullable
+    * cid infers an `isnotnull` filter that the optimizer pushes below the
+    * projection, so the k cosines would run twice per row.
     */
-  def bestCell(cents: Centroids, emb: Column): Column =
-    bestStruct(cents, emb).getField("cid")
+  def bestCell(cents: Centroids, emb: Column): Column = {
+    require(cents.nonEmpty, "bestCell needs at least one centroid")
+    GraftSqlBridge.column(KnownNotNull(
+      GraftSqlBridge.expression(bestStruct(cents, emb).getField("cid"))))
+  }
 
   /** The trained centroid table as a (vec_id, embedding) frame, so the
     * centroids themselves can be [[train]]ed over — the input to the

@@ -176,8 +176,9 @@ object CensusReporterDecoder {
   * local-relation builder, is the right shape; the lazy Catalyst plan
   * begins at the frame. Derived measures and aggregates over the frame
   * (`groupBySum`, grouped `with_m90` SQL) are folded on the driver by the
-  * optimizer, so a census request starts no Spark job; only a VRE load
-  * ([[VarRep.loadVarRep]]) runs one, its file scan.
+  * optimizer, so a census request starts no Spark job; a VRE load
+  * ([[VarRep.loadVarRep]]) decodes its CSV on the driver into the same
+  * kind of frame and starts none either.
   */
 object CensusReporter {
 

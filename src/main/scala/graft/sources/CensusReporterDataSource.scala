@@ -80,6 +80,6 @@ private[sources] class CensusReporterTable(t: CRTable) extends Table with Suppor
     () => new LocalScan {
       override def readSchema(): StructType = tableSchema
       override def rows(): Array[InternalRow] =
-        DriverFrame.relation(tableSchema, t.rows).data.toArray
+        DriverFrame.internalRows(tableSchema, t.rows).toArray
     }
 }

@@ -2,7 +2,8 @@ package graft.sources
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, CreateArray, UnsafeProjection}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, StringType, StructField, StructType}
 
@@ -59,7 +60,7 @@ object VarRep {
     * file per load, and would read an all-digit GEOID such as
     * `01001020100` as a number, losing its leading zero.
     */
-  private val varRepSchema: StructType = StructType(
+  private[graft] val varRepSchema: StructType = StructType(
     Seq("TBLID" -> StringType, "GEOID" -> StringType, "ORDER" -> IntegerType,
       "TITLE" -> StringType, "CME" -> StringType, "ESTIMATE" -> DoubleType,
       "MOE" -> DoubleType).map { case (n, t) => StructField(n, t) } ++
@@ -69,14 +70,30 @@ object VarRep {
     * the 80 wide replicate columns into one array column for the variance
     * math — the scalable layout (one shuffle key, no 80-column fanout).
     * The header must name [[varRepSchema]]'s columns in order
-    * (`enforceSchema=false`): a file of another layout fails its read
-    * instead of being read by position.
+    * (`enforceSchema=false`): a file of another layout fails here, not by
+    * being read by position.
+    *
+    * The load is eager and runs on the driver: Spark's own CSV reader
+    * ([[org.apache.spark.sql.GraftSqlBridge.readCsv]], the code of one
+    * `spark.read.csv` task, so header check, PERMISSIVE nulls and number
+    * parsing are Spark's) decodes each line, and a projection packs it into
+    * the 8-column layout before the next line is read. The result is a
+    * [[DriverFrame]], so the replicate MOE over it folds on the driver and
+    * a VRE request starts no Spark job. Driver memory: one VRE file covers
+    * one table in one state — 8,771 rows for DC, about 395k (≈ 8k tracts ×
+    * 49 lines) for the largest state — at about 0.8 KB per packed row, so
+    * ≈ 330 MB at the largest; the reference's `get_varrep_dataframe` holds
+    * the same file in memory.
     */
   def loadVarRep(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.schema(varRepSchema)
-      .option("header", "true").option("enforceSchema", "false").csv(path)
-    raw.select(raw.columns.toIndexedSeq.filterNot(repNames.toSet).map(raw(_)) :+
-      array(repNames.map(raw(_)): _*).as("replicates"): _*)
+    val fields = varRepSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
+      BoundReference(i, f.dataType, f.nullable) }
+    val packed = fields.take(7) :+ CreateArray(fields.drop(7))
+    val pack = UnsafeProjection.create(packed)
+    val schema = StructType(varRepSchema.take(7) :+
+      StructField("replicates", packed.last.dataType, packed.last.nullable))
+    DriverFrame.ofInternalRows(spark, schema, GraftSqlBridge.readCsv(spark, path,
+      varRepSchema, Map("header" -> "true", "enforceSchema" -> "false"))(pack(_).copy()))
   }
 
   /** URL of a published ACS Variance Replicate Estimates file — the
@@ -110,8 +127,8 @@ object VarRep {
   /** Fetch a remote VRE file to a local CSV path, consulting the cache
     * first (same shape as CensusReporter.getResource: injectable
     * transport, cache-hit skips the fetch entirely). With `cache=false`
-    * the CSV still lands in the cache dir (the Spark reader needs a
-    * path) but is always re-fetched.
+    * the CSV still lands in the cache dir ([[loadVarRep]] reads a path)
+    * but is always re-fetched.
     */
   def fetchVarRep(year: Int, tableId: String, summaryLevel: String, state: String,
       cache: Boolean = true,

@@ -26,6 +26,37 @@ object GraftSqlBridge {
       plan: catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** Spark's line-mode CSV file reader, run on the driver: `path`'s
+    * lines from the Hadoop line reader a file scan uses (`\n`, `\r` or
+    * `\r\n`), the header checked against `schema` and every line parsed
+    * by `UnivocityParser` — the code one `spark.read.csv` task runs on
+    * its split, with the options built the way the file source builds
+    * them (session time zone, corrupt-record column name). The parser
+    * reuses its row object, so `f` must copy what it keeps.
+    */
+  def readCsv[A](spark: SparkSession, path: String, schema: types.StructType,
+      options: Map[String, String])(f: catalyst.InternalRow => A): Seq[A] = {
+    import catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityParser}
+    val sqlConf = spark.asInstanceOf[classic.SparkSession].sessionState.conf
+    val opts = new CSVOptions(options, sqlConf.csvColumnPruning,
+      sqlConf.sessionLocalTimeZone, sqlConf.columnNameOfCorruptRecord)
+    val hadoopConf = spark.asInstanceOf[classic.SparkSession].sessionState.newHadoopConf()
+    val file = new org.apache.hadoop.fs.Path(path)
+    val length = file.getFileSystem(hadoopConf).getFileStatus(file).getLen
+    val lines = new execution.datasources.HadoopFileLinesReader(
+      execution.datasources.PartitionedFile(catalyst.InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPath(file), 0, length),
+      opts.lineSeparatorInRead, hadoopConf)
+    try {
+      val parser = new UnivocityParser(schema, schema, opts)
+      val header = new CSVHeaderChecker(schema, opts, s"CSV file: $path",
+        isStartOfFile = true)
+      UnivocityParser.parseIterator(
+        lines.map(l => new String(l.getBytes, 0, l.getLength, opts.charset)),
+        parser, header, schema).map(f).toVector
+    } finally lines.close()
+  }
+
   def addStrategy(spark: SparkSession,
       strategy: execution.SparkStrategy): Unit = {
     val exp = spark.asInstanceOf[classic.SparkSession].experimental

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -65,8 +65,8 @@ class CensusPlanSpec extends AnyFunSuite {
     assert(grouped.count() == 1)
   }
 
-  test("a VRE load + replicate-MOE collect runs one job; derived measures on a " +
-      "decoded frame run none") {
+  test("a VRE load + replicate-MOE collect and derived measures on a decoded " +
+      "frame run no job") {
     val dir = java.nio.file.Files.createTempDirectory("varrep-jobs")
     val header = (Seq("TBLID", "GEOID", "ORDER", "TITLE", "CME", "ESTIMATE", "MOE") ++
       (1 to 80).map(i => s"Var_Rep$i")).mkString(",")
@@ -75,13 +75,18 @@ class CensusPlanSpec extends AnyFunSuite {
     val path = dir.resolve("vr.csv")
     java.nio.file.Files.write(path, (header +: rows).mkString("", "\n", "\n").getBytes)
     var moe: Array[org.apache.spark.sql.Row] = null
+    var plan: LogicalPlan = null
     val vreJobs = TestSpark.jobsOf(spark) {
       val df = VarRep.loadVarRep(spark, path.toString)
-      moe = df.select(col("GEOID"),
-        VarRep.replicateMoe(col("ESTIMATE"), col("replicates")).as("m")).collect()
+      val q = df.select(col("GEOID"),
+        VarRep.replicateMoe(col("ESTIMATE"), col("replicates")).as("m"))
+      moe = q.collect()
+      plan = q.queryExecution.optimizedPlan
     }
     assert(moe.length == 5 && moe.forall(_.getDouble(1) == math.sqrt(4.0) * 1.645))
-    assert(vreJobs == 1, s"VRE load + collect ran $vreJobs jobs")
+    assert(vreJobs == 0, s"VRE load + collect ran $vreJobs jobs")
+    // the MOE is folded on the driver: no file scan, no projection left
+    assert(plan.isInstanceOf[LocalRelation], plan.treeString)
 
     val cf = CensusReporterDecoder.toFrame(spark, fixtureTable)
     val derivedJobs = TestSpark.jobsOf(spark) {

@@ -335,6 +335,50 @@ class CensusSourceSpec extends AnyFunSuite {
     assert(messages.exists(_.contains("CSV header")), messages.mkString(" | "))
   }
 
+  test("VarRep rows equal Spark's CSV file reader's on adversarial files") {
+    import org.apache.spark.sql.functions._
+    def line(geo: String = "g1", title: String = "Total", est: String = "100",
+        moe: String = "5", rep1: String = "101"): String =
+      (Seq("B01001", geo, "1", title, "", est, moe, rep1) ++ Seq.fill(79)("99.5"))
+        .mkString(",")
+    val header = varRepHeader.mkString(",")
+    val files = Seq(
+      "CRLF line endings" -> Seq(header, line(), line("g2")).mkString("", "\r\n", "\r\n"),
+      "a trailing blank line" -> Seq(header, line(), line("g2")).mkString("", "\n", "\n\n"),
+      "header only" -> s"$header\n",
+      "an empty numeric field" -> Seq(header, line(moe = "")).mkString("", "\n", "\n"),
+      "a non-numeric replicate" -> Seq(header, line(rep1 = "n/a")).mkString("", "\n", "\n"),
+      "a quoted TITLE with a comma" ->
+        Seq(header, line(title = "\"Total, all ages\"")).mkString("", "\n", "\n"),
+      "an all-digit GEOID with a leading zero" ->
+        Seq(header, line(geo = "01001020100")).mkString("", "\n", "\n"),
+      "a null ESTIMATE" -> Seq(header, line(est = "")).mkString("", "\n", "\n"))
+    val dir = java.nio.file.Files.createTempDirectory("varrep-parity")
+    def withMoe(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("*"), VarRep.replicateMoe(col("ESTIMATE"), col("replicates")).as("m"))
+        .collect().map(_.toSeq).toSeq
+    val got = files.zipWithIndex.map { case ((name, text), i) =>
+      val path = dir.resolve(s"vr$i.csv")
+      java.nio.file.Files.write(path, text.getBytes("UTF-8"))
+      val raw = spark.read.schema(VarRep.varRepSchema).option("header", "true")
+        .option("enforceSchema", "false").csv(path.toString)
+      val reps = raw.columns.toIndexedSeq.drop(7)
+      val expected = withMoe(raw.select(raw.columns.toIndexedSeq.take(7).map(raw(_)) :+
+        array(reps.map(raw(_)): _*).as("replicates"): _*))
+      val rows = withMoe(VarRep.loadVarRep(spark, path.toString))
+      assert(rows == expected, name)
+      name -> rows
+    }.toMap
+    assert(got("CRLF line endings").map(_(1)) == Seq("g1", "g2"))
+    assert(got("a trailing blank line").length == 2)
+    assert(got("header only").isEmpty)
+    assert(got("an empty numeric field").head(6) == null)
+    assert(got("a non-numeric replicate").head(7).asInstanceOf[collection.Seq[_]].head == null)
+    assert(got("a quoted TITLE with a comma").head(3) == "Total, all ages")
+    assert(got("an all-digit GEOID with a leading zero").head(1) == "01001020100")
+    assert(got("a null ESTIMATE").head(8) == null)
+  }
+
   test("VarRep remote fetch: URL construction, zip unwrap, cache-hit skips fetch") {
     import org.apache.spark.sql.functions._
     // mirror of the reference's get_varrep_dataframe(2015,'B01001','140',

@@ -101,6 +101,19 @@ class IvfSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
     assert(c3 == Seq(1.0, 0.0), s"empty cluster 3 must keep its seed, got $c3")
   }
 
+  test("bestCell is non-nullable and agrees across the inline and data forms") {
+    val cents = Ivf.train(e, 8, 2)
+    // 57 half-length copies of cell 0: the same rounded cosines, so the
+    // lowest-cid tie-break keeps every assignment while k > InlineFormMaxK
+    val wide = cents ++ (8L until 65L).map(i => i -> cents.head._2.map(_ * 0.5))
+    def cells(c: Ivf.Centroids) = {
+      val df = e.select(col("vec_id"), Ivf.bestCell(c, col("embedding")).as("cid"))
+      assert(!df.schema("cid").nullable)
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    }
+    assert(cells(wide) == cells(cents))
+  }
+
   test("inline and data-driven scoring encodings are bit-identical") {
     // the size-threshold dispatch in rankedCells/bestStruct must be
     // semantics-free: the data-driven form (one Literal payload +

@@ -543,6 +543,16 @@ class PlanShapeSpec extends AnyFunSuite {
       s"the per-anchor cut must not be a window over all scored pairs:\n$p")
   }
 
+  test("q138: the candidate side evaluates bestCell's argmax once per vector") {
+    // a nullable cid would make the join infer isnotnull(cid), pushed
+    // below the candidate projection as a second copy of the k cosines
+    val plan = SparkEntry.queries("q138_hard_negatives")(spark, dir)
+      .queryExecution.optimizedPlan
+    val argmaxes = plan.collect { case n => n.expressions }.flatten
+      .flatMap(_.collect { case a: org.apache.spark.sql.catalyst.expressions.ArrayMax => a })
+    assert(argmaxes.length == 1, plan.treeString)
+  }
+
   test("q141: the DSIR bucket-ratio table broadcast-joins back onto the " +
       "feature stream; the bucket agg partial-aggregates map-side") {
     val p = planOf("q141_dsir_resample")

@@ -65,8 +65,7 @@ class CensusPlanSpec extends AnyFunSuite {
     assert(grouped.count() == 1)
   }
 
-  test("a VRE load + replicate-MOE collect and derived measures on a decoded " +
-      "frame run no job") {
+  test("a VRE load + MOE collect and derived measures on a decoded frame run no job") {
     val dir = java.nio.file.Files.createTempDirectory("varrep-jobs")
     val header = (Seq("TBLID", "GEOID", "ORDER", "TITLE", "CME", "ESTIMATE", "MOE") ++
       (1 to 80).map(i => s"Var_Rep$i")).mkString(",")

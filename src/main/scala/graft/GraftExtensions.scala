@@ -25,6 +25,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // sanity check, so `with_m90(c)` is rewritten away before anything
     // tries to resolve it as a function.
     e.injectHintResolutionRule(_ => graft.plans.MarginExpansionRule)
+    // Normalization leg: a driver frame's stacked projections collapse
+    // before the optimizer, so they fold on the driver once.
+    e.injectPlanNormalizationRule(_ => graft.plans.CollapseLocalProjects)
     // Optimizer leg: aggregates over driver-local rows run on the driver.
     e.injectOptimizerRule(_ => graft.plans.LocalAggregate)
     e.injectFunction((

@@ -213,6 +213,86 @@ case class L2DistSq(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
+/** Native sum of squared deviations of a numeric array from a numeric
+  * scalar, `Σ (values(i) − center)²` — the kernel of the replicate
+  * variance ([[graft.sources.VarRep.replicateVariance]]). It is
+  * [[L2DistSq]] against the center repeated once per element, without
+  * building that array: the same left fold in element order in doubles, so
+  * bit-identical to `aggregate(values, 0.0, (acc, v) => acc + (v - center)
+  * * (v - center))` (spec-locked), and an int-typed input cannot overflow.
+  *
+  * Null semantics follow that fold: a null array gives NULL, an empty
+  * array gives 0 (whatever the center), and otherwise a null center or a
+  * null element (when the schema admits one) gives NULL.
+  */
+case class SumSqDev(left: Expression, right: Expression)
+    extends BinaryExpression {
+
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "sum_sq_dev"
+
+  override def nullable: Boolean =
+    left.nullable || right.nullable || VecKernel.elemNullable(left)
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    right.dataType match {
+      case FloatType | DoubleType | IntegerType | LongType =>
+        VecKernel.checkNumericArrays(prettyName, left, left)
+      case t => org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+        s"$prettyName requires a numeric center, got $t")
+    }
+
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val a = left.eval(input).asInstanceOf[ArrayData]
+    if (a == null) return null
+    val n = a.numElements()
+    if (n == 0) return 0.0
+    val c = right.eval(input)
+    if (c == null) return null
+    val center = c.asInstanceOf[Number].doubleValue
+    val (t, elemN) = (VecKernel.elemType(left), VecKernel.elemNullable(left))
+    var acc = 0.0
+    var i = 0
+    while (i < n) {
+      if (elemN && a.isNullAt(i)) return null
+      val d = VecKernel.get(a, t, i) - center
+      acc += d * d
+      i += 1
+    }
+    acc
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+    val (a, c) = (left.genCode(ctx), right.genCode(ctx))
+    val (i, n, acc, d) =
+      (ctx.freshName("i"), ctx.freshName("n"), ctx.freshName("acc"), ctx.freshName("d"))
+    ev.copy(code = code"""
+      |${a.code}
+      |boolean ${ev.isNull} = ${a.isNull};
+      |double ${ev.value} = 0.0;
+      |if (!${ev.isNull} && ${a.value}.numElements() > 0) {
+      |  ${c.code}
+      |  ${ev.isNull} = ${c.isNull};
+      |  if (!${ev.isNull}) {
+      |    final int $n = ${a.value}.numElements();
+      |    double $acc = 0.0;
+      |    for (int $i = 0; $i < $n; $i++) {
+      |      ${VecKernel.nullGuard(VecKernel.elemNullable(left), a.value.toString, i, ev.isNull.toString)}
+      |      final double $d = ${VecKernel.getter(a.value.toString, i, VecKernel.elemType(left))} - (double) ${c.value};
+      |      $acc += $d * $d;
+      |    }
+      |    if (!${ev.isNull}) { ${ev.value} = $acc; }
+      |  }
+      |}
+    """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
 /** Native element-wise difference `a(i) - b(i)` of two numeric array
   * columns, as `array<double>` — the residual kernel of the IVF-PQ
   * index build ([[graft.operators.Pq.residual]]): the HOF form
@@ -304,6 +384,11 @@ object VectorFunctions {
   def d2Native(a: Column, b: Column): Column =
     GraftSqlBridge.column(L2DistSq(
       GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
+
+  /** Column API for [[SumSqDev]]: `Σ (values(i) − center)²`. */
+  def sumSqDev(values: Column, center: Column): Column =
+    GraftSqlBridge.column(SumSqDev(
+      GraftSqlBridge.expression(values), GraftSqlBridge.expression(center)))
 
   /** Column API for [[VectorSub]]. */
   def subNative(a: Column, b: Column): Column =

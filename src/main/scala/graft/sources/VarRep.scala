@@ -74,26 +74,41 @@ object VarRep {
     * being read by position.
     *
     * The load is eager and runs on the driver: Spark's own CSV reader
-    * ([[org.apache.spark.sql.GraftSqlBridge.readCsv]], the code of one
-    * `spark.read.csv` task, so header check, PERMISSIVE nulls and number
-    * parsing are Spark's) decodes each line, and a projection packs it into
-    * the 8-column layout before the next line is read. The result is a
+    * ([[org.apache.spark.sql.GraftSqlBridge.readCsv]], the code of a
+    * `spark.read.csv` scan, so header check, PERMISSIVE nulls and number
+    * parsing are Spark's) decodes the file in line-aligned byte ranges,
+    * one per driver core with at least 1 MB each, on a shared daemon pool.
+    * Only the range at offset 0 checks the header; a compressed file is one
+    * range. Each range packs its lines into the 8-column layout with its
+    * own projection, and the rows are kept in file order. The result is a
     * [[DriverFrame]], so the replicate MOE over it folds on the driver and
-    * a VRE request starts no Spark job. Driver memory: one VRE file covers
-    * one table in one state — 8,771 rows for DC, about 395k (≈ 8k tracts ×
-    * 49 lines) for the largest state — at about 0.8 KB per packed row, so
-    * ≈ 330 MB at the largest; the reference's `get_varrep_dataframe` holds
-    * the same file in memory.
+    * a VRE request starts no Spark job.
+    *
+    * Driver bound: one VRE file covers one table in one state — 8,771 rows
+    * for DC, about 395k (≈ 8k tracts × 49 lines, 171 MB) for the largest
+    * state — at about 0.8 KB per packed row, so ≈ 330 MB held at the
+    * largest; the reference's `get_varrep_dataframe` holds the same file
+    * in memory. Measured warm with `local[3]` on a 4-vCPU VM (3 ranges),
+    * the DC file (3.8 MB) loads in 70–90 ms and the largest in 1.6–2.2 s,
+    * 2.7–3.6 s with its MOE collected; read as one range they took
+    * 110–150 ms and 3.5–4.4 s.
     */
-  def loadVarRep(spark: SparkSession, path: String): DataFrame = {
+  def loadVarRep(spark: SparkSession, path: String): DataFrame =
+    loadVarRep(spark, path, None)
+
+  /** [[loadVarRep]] with the range count of an uncompressed file forced. */
+  private[graft] def loadVarRep(spark: SparkSession, path: String,
+      ranges: Option[Int]): DataFrame = {
     val fields = varRepSchema.fields.toIndexedSeq.zipWithIndex.map { case (f, i) =>
       BoundReference(i, f.dataType, f.nullable) }
     val packed = fields.take(7) :+ CreateArray(fields.drop(7))
-    val pack = UnsafeProjection.create(packed)
     val schema = StructType(varRepSchema.take(7) :+
       StructField("replicates", packed.last.dataType, packed.last.nullable))
     DriverFrame.ofInternalRows(spark, schema, GraftSqlBridge.readCsv(spark, path,
-      varRepSchema, Map("header" -> "true", "enforceSchema" -> "false"))(pack(_).copy()))
+      varRepSchema, Map("header" -> "true", "enforceSchema" -> "false"), ranges) { () =>
+      val pack = UnsafeProjection.create(packed)
+      pack(_).copy()
+    })
   }
 
   /** URL of a published ACS Variance Replicate Estimates file — the
@@ -154,16 +169,15 @@ object VarRep {
       fetchVarRep(year, tableId, summaryLevel, state, cache, cacheDir, fetch).toString)
 
   /** Successive-difference-replication variance: `4/80 · Σ (repᵢ − est)²`,
-    * computed by the codegen'd [[graft.functions.L2DistSq]] kernel against
-    * the estimate repeated once per replicate: the same left fold in
-    * element order as `aggregate(replicates, 0.0, (acc, r) => acc +
-    * (r - est) * (r - est))`, so bit-identical to it, but in doubles, so an
-    * int-typed input cannot overflow. A null array, estimate or replicate
-    * gives null; an empty array gives 0. MOE at 90%: `1.645 · sqrt(variance)`.
+    * computed by the codegen'd [[graft.functions.SumSqDev]] kernel: the
+    * same left fold in element order as `aggregate(replicates, 0.0,
+    * (acc, r) => acc + (r - est) * (r - est))`, so bit-identical to it,
+    * but in doubles, so an int-typed input cannot overflow. A null array
+    * gives null; an empty array gives 0; otherwise a null estimate or
+    * replicate gives null. MOE at 90%: `1.645 · sqrt(variance)`.
     */
   def replicateVariance(est: Column, replicates: Column): Column =
-    VectorFunctions.d2Native(replicates, array_repeat(est, size(replicates))) *
-      lit(4.0 / 80.0)
+    VectorFunctions.sumSqDev(replicates, est) * lit(4.0 / 80.0)
 
   def replicateMoe(est: Column, replicates: Column): Column =
     sqrt(replicateVariance(est, replicates)) * lit(graft.functions.AcsMath.Z90)

@@ -1,6 +1,8 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.ArrayRepeat
+import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
 import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -74,18 +76,22 @@ class CensusPlanSpec extends AnyFunSuite {
     val path = dir.resolve("vr.csv")
     java.nio.file.Files.write(path, (header +: rows).mkString("", "\n", "\n").getBytes)
     var moe: Array[org.apache.spark.sql.Row] = null
-    var plan: LogicalPlan = null
+    var (analyzed, plan): (LogicalPlan, LogicalPlan) = (null, null)
     val vreJobs = TestSpark.jobsOf(spark) {
       val df = VarRep.loadVarRep(spark, path.toString)
       val q = df.select(col("GEOID"),
         VarRep.replicateMoe(col("ESTIMATE"), col("replicates")).as("m"))
       moe = q.collect()
+      analyzed = q.queryExecution.analyzed
       plan = q.queryExecution.optimizedPlan
     }
     assert(moe.length == 5 && moe.forall(_.getDouble(1) == math.sqrt(4.0) * 1.645))
     assert(vreJobs == 0, s"VRE load + collect ran $vreJobs jobs")
     // the MOE is folded on the driver: no file scan, no projection left
     assert(plan.isInstanceOf[LocalRelation], plan.treeString)
+    // and its kernel builds no repeated-estimate array per row
+    Seq(analyzed, plan).foreach(p => assert(
+      !p.exists(_.expressions.exists(_.exists(_.isInstanceOf[ArrayRepeat]))), p.treeString))
 
     val cf = CensusReporterDecoder.toFrame(spark, fixtureTable)
     val derivedJobs = TestSpark.jobsOf(spark) {
@@ -96,6 +102,52 @@ class CensusPlanSpec extends AnyFunSuite {
         .collect().length == 3)
     }
     assert(derivedJobs == 0, s"derived-measure collect ran $derivedJobs jobs")
+  }
+
+  test("a derived-measure request over a driver frame folds its projections once") {
+    val cf = CensusReporterDecoder.toFrame(spark, fixtureTable)
+    def request(c: CensusFrame): DataFrame = {
+      val f = c.addRse("001")
+      val names = Seq("share", "sum", "ratio", "prod")
+      val w = f.withPairs("share" -> f.proportion("002", "001"), "sum" -> f.sumM("003", "004"),
+        "ratio" -> f.ratio("003", "002"), "prod" -> f.product("002", "003"))
+      w.df.select((Seq("geoid", "B17001001_rse") ++ names.flatMap(n => Seq(n, n + "_m90")))
+        .map(w.df(_)): _*)
+    }
+    val q = request(cf)
+    var rows: Array[org.apache.spark.sql.Row] = null
+    val jobs = TestSpark.jobsOf(spark) { rows = q.collect() }
+    assert(jobs == 0, s"derived-measure collect ran $jobs jobs")
+    val qe = q.queryExecution
+    // addRse, withPairs and select reach the optimizer as one Project
+    assert(qe.normalized.collect { case p: Project => p }.size == 1, qe.normalized.treeString)
+    assert(qe.tracker.rules(ConvertToLocalRelation.ruleName).numEffectiveInvocations == 1)
+    qe.optimizedPlan match {
+      case l: LocalRelation => assert(l.output.map(_.name) == q.columns.toSeq)
+      case p => fail(p.treeString)
+    }
+    // the same request over the same rows read from an RDD, folded by no rule
+    val scanned = request(cf.copy(df = spark.createDataFrame(cf.df.rdd, cf.df.schema)))
+    assert(rows.toSeq == scanned.collect().toSeq)
+  }
+
+  test("a column the top select drops is not evaluated, as over a file-backed frame") {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.ansi.enabled", "true")
+    val local = DriverFrame(s, new org.apache.spark.sql.types.StructType()
+      .add("k", "string").add("v", "int").add("z", "int"), Seq(Seq("a", 1, 0), Seq("b", 2, 0)))
+    val dir = java.nio.file.Files.createTempDirectory("collapse-ansi").resolve("t").toString
+    local.write.parquet(dir)
+    Seq("driver frame" -> local, "file-backed frame" -> s.read.parquet(dir)).foreach {
+      case (name, df) =>
+        val derived = df.select(col("k"), col("v"), (col("v") / col("z")).as("bad"))
+        assert(derived.select("k", "v").orderBy("k").collect().map(r =>
+          (r.getString(0), r.getInt(1))).toSeq == Seq(("a", 1), ("b", 2)), name)
+        val e = intercept[Exception](derived.collect())
+        val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        assert(chain.exists(t => String.valueOf(t.getMessage).contains("DIVIDE_BY_ZERO")),
+          s"$name: $e")
+    }
   }
 
   test("a DSv2 load is a local scan: load().collect() runs no job") {

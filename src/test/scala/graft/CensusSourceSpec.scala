@@ -335,6 +335,16 @@ class CensusSourceSpec extends AnyFunSuite {
     assert(messages.exists(_.contains("CSV header")), messages.mkString(" | "))
   }
 
+  /** Line start offsets of `bytes` (`\n`, `\r` or `\r\n` ends a line). */
+  private def lineStarts(bytes: Array[Byte]): Seq[Int] =
+    0 +: bytes.indices.filter { i =>
+      bytes(i) == '\n' || (bytes(i) == '\r' && (i + 1 == bytes.length || bytes(i + 1) != '\n'))
+    }.map(_ + 1).filter(_ < bytes.length)
+
+  /** The byte range bounds the decoder cuts an uncompressed file into. */
+  private def rangeBounds(length: Int, k: Int): Seq[Int] =
+    (0 to k).map(i => (length.toLong * i / k).toInt)
+
   test("VarRep rows equal Spark's CSV file reader's on adversarial files") {
     import org.apache.spark.sql.functions._
     def line(geo: String = "g1", title: String = "Total", est: String = "100",
@@ -342,41 +352,99 @@ class CensusSourceSpec extends AnyFunSuite {
       (Seq("B01001", geo, "1", title, "", est, moe, rep1) ++ Seq.fill(79)("99.5"))
         .mkString(",")
     val header = varRepHeader.mkString(",")
+    def lf(lines: String*): String = lines.mkString("", "\n", "\n")
+    // a CRLF file whose middle byte is the \n of a \r\n: two ranges split it
+    val crlfSplit = (0 until 2000).iterator.map { pad =>
+      Seq(header, line(), line("g2"), line("g3", title = "T" * pad))
+        .mkString("", "\r\n", "\r\n")
+    }.find { t => val m = t.length / 2; t(m) == '\n' && t(m - 1) == '\r' }.get
     val files = Seq(
       "CRLF line endings" -> Seq(header, line(), line("g2")).mkString("", "\r\n", "\r\n"),
+      "a CRLF split between its \\r and \\n" -> crlfSplit,
       "a trailing blank line" -> Seq(header, line(), line("g2")).mkString("", "\n", "\n\n"),
       "header only" -> s"$header\n",
-      "an empty numeric field" -> Seq(header, line(moe = "")).mkString("", "\n", "\n"),
-      "a non-numeric replicate" -> Seq(header, line(rep1 = "n/a")).mkString("", "\n", "\n"),
-      "a quoted TITLE with a comma" ->
-        Seq(header, line(title = "\"Total, all ages\"")).mkString("", "\n", "\n"),
-      "an all-digit GEOID with a leading zero" ->
-        Seq(header, line(geo = "01001020100")).mkString("", "\n", "\n"),
-      "a null ESTIMATE" -> Seq(header, line(est = "")).mkString("", "\n", "\n"))
+      "a line across a range boundary" -> lf(header, line(), line("g2", title = "T" * 300),
+        line("g3")),
+      "a range that holds no line start" -> lf(header, line(title = "T" * 4000), line("g2")),
+      "an empty numeric field" -> lf(header, line(moe = "")),
+      "a non-numeric replicate" -> lf(header, line(rep1 = "n/a")),
+      "a quoted TITLE with a comma" -> lf(header, line(title = "\"Total, all ages\"")),
+      "an all-digit GEOID with a leading zero" -> lf(header, line(geo = "01001020100")),
+      "a null ESTIMATE" -> lf(header, line(est = "")),
+      "a gzip'd file" -> lf(header, line(), line("g2"), line("g3")))
     val dir = java.nio.file.Files.createTempDirectory("varrep-parity")
     def withMoe(df: org.apache.spark.sql.DataFrame) =
       df.select(col("*"), VarRep.replicateMoe(col("ESTIMATE"), col("replicates")).as("m"))
         .collect().map(_.toSeq).toSeq
     val got = files.zipWithIndex.map { case ((name, text), i) =>
-      val path = dir.resolve(s"vr$i.csv")
-      java.nio.file.Files.write(path, text.getBytes("UTF-8"))
+      val bytes = text.getBytes("UTF-8")
+      val gzip = name == "a gzip'd file"
+      val path = dir.resolve(if (gzip) s"vr$i.csv.gz" else s"vr$i.csv")
+      val out = java.nio.file.Files.newOutputStream(path)
+      try {
+        if (gzip) {
+          val z = new java.util.zip.GZIPOutputStream(out)
+          z.write(bytes); z.finish()
+        } else out.write(bytes)
+      } finally out.close()
       val raw = spark.read.schema(VarRep.varRepSchema).option("header", "true")
         .option("enforceSchema", "false").csv(path.toString)
       val reps = raw.columns.toIndexedSeq.drop(7)
       val expected = withMoe(raw.select(raw.columns.toIndexedSeq.take(7).map(raw(_)) :+
         array(reps.map(raw(_)): _*).as("replicates"): _*))
-      val rows = withMoe(VarRep.loadVarRep(spark, path.toString))
-      assert(rows == expected, name)
-      name -> rows
+      // a forced range count applies to an uncompressed file only
+      val byRanges = (1 to 5).map(k => k -> withMoe(VarRep.loadVarRep(spark, path.toString,
+        Some(k))))
+      byRanges.foreach { case (k, rows) => assert(rows == expected, s"$name, $k ranges") }
+      assert(withMoe(VarRep.loadVarRep(spark, path.toString)) == expected, name)
+      name -> (bytes, byRanges.head._2)
     }.toMap
-    assert(got("CRLF line endings").map(_(1)) == Seq("g1", "g2"))
-    assert(got("a trailing blank line").length == 2)
-    assert(got("header only").isEmpty)
-    assert(got("an empty numeric field").head(6) == null)
-    assert(got("a non-numeric replicate").head(7).asInstanceOf[collection.Seq[_]].head == null)
-    assert(got("a quoted TITLE with a comma").head(3) == "Total, all ages")
-    assert(got("an all-digit GEOID with a leading zero").head(1) == "01001020100")
-    assert(got("a null ESTIMATE").head(8) == null)
+    def rows(name: String) = got(name)._2
+    assert(rows("CRLF line endings").map(_(1)) == Seq("g1", "g2"))
+    assert(rows("a CRLF split between its \\r and \\n").map(_(1)) == Seq("g1", "g2", "g3"))
+    assert(rows("a trailing blank line").length == 2)
+    assert(rows("header only").isEmpty)
+    assert(rows("a line across a range boundary").map(_(1)) == Seq("g1", "g2", "g3"))
+    assert(rows("a range that holds no line start").map(_(1)) == Seq("g1", "g2"))
+    assert(rows("an empty numeric field").head(6) == null)
+    assert(rows("a non-numeric replicate").head(7).asInstanceOf[collection.Seq[_]].head == null)
+    assert(rows("a quoted TITLE with a comma").head(3) == "Total, all ages")
+    assert(rows("an all-digit GEOID with a leading zero").head(1) == "01001020100")
+    assert(rows("a null ESTIMATE").head(8) == null)
+    assert(rows("a gzip'd file").map(_(1)) == Seq("g1", "g2", "g3"))
+    // the files hold the boundary cases they are named for
+    val straddle = got("a line across a range boundary")._1
+    assert((2 to 5).forall(k => !rangeBounds(straddle.length, k).init.tail
+      .forall(lineStarts(straddle).contains)))
+    val long = got("a range that holds no line start")._1
+    assert(rangeBounds(long.length, 5).sliding(2).exists { case Seq(a, b) =>
+      !lineStarts(long).exists(s => s >= a && s < b) })
+  }
+
+  test("concurrent VarRep loads share one bounded pool of daemon decode threads") {
+    import org.apache.spark.sql.functions._
+    val paths = Seq(1, 2).map { f =>
+      writeVarRep(java.nio.file.Files.createTempDirectory(s"varrep-pool$f"), varRepHeader,
+        (1 to 400).map(r => Seq("B01001", s"f$f-g$r", "1", "Total", "",
+          (100 * f + r).toString, "5") ++ Seq.fill(80)((100 * f + r + 1).toString)))
+    }
+    def moes(path: String) = VarRep.loadVarRep(spark, path, Some(4))
+      .select(col("GEOID"), VarRep.replicateMoe(col("ESTIMATE"), col("replicates")))
+      .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    val want = paths.map(moes)
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val runs = (1 to 3).flatMap(_ => paths.map(p => Future(moes(p))))
+    val results = runs.map(Await.result(_, scala.concurrent.duration.Duration(120, "s")))
+    results.grouped(2).foreach(r => assert(r == want))
+    assert(want.map(_.map(_._1)) == Seq(1, 2).map(f => (1 to 400).map(r => s"f$f-g$r")))
+    assert(want.flatten.forall(_._2 == 1.645 * math.sqrt(4.0)))
+    import scala.jdk.CollectionConverters._
+    val decoders = Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(_.getName.startsWith("graft-csv-decode"))
+    assert(decoders.nonEmpty)
+    assert(decoders.forall(_.isDaemon), decoders.map(_.getName))
+    assert(decoders.size <= Runtime.getRuntime.availableProcessors, decoders.map(_.getName))
   }
 
   test("VarRep remote fetch: URL construction, zip unwrap, cache-hit skips fetch") {

@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.VarRep
 
 /** Differential property: [[VarRep.replicateVariance]] (the native
-  * `L2DistSq` kernel against the repeated estimate) is bit-identical to
+  * `SumSqDev` kernel of the replicates about the estimate) is bit-identical to
   * the higher-order `aggregate` fold it replaced, on int and double
   * inputs with null estimates, null replicates, null arrays and empty
   * arrays, through both the codegen'd and the interpreted path.

@@ -85,9 +85,10 @@ object Bench {
     } catch { case _: Throwable => -1 }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftConf.session(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val env = HarnessEnv.load()
+    val sfDir = env(HarnessEnv.SfDir)
+    val cpus = env(HarnessEnv.Cpus)
+    val spark = GraftConf.session(s"local[$cpus]", cpus).getOrCreate()
     // ERROR, not WARN: the q91/q99/q117 global windows over ~3-row source
     // frames emit a WindowExec warning PER RUN, and that stderr flood has
     // pushed the result JSON line out of the driver's bounded output-tail
@@ -103,10 +104,8 @@ object Bench {
     // `degraded:true` — so a driver artifact is either clean or
     // self-labeled, never silently inflated. The gate runs BEFORE the
     // warm-up and cache probes so those also see the quiet box.
-    val quietLoad =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIET_LOAD", "1.0").toDouble
-    val quietBudgetSec =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIET_WAIT_SEC", "300").toInt
+    val quietLoad = env(HarnessEnv.BenchQuietLoad)
+    val quietBudgetSec = env(HarnessEnv.BenchQuietWaitSec)
     // hypervisor steal is sampled over 3 s as part of the gate: two
     // round-13 runs started on a quiet box and were then contaminated
     // by a 3-4% steal storm — the storms are minutes-long, so refusing
@@ -117,8 +116,7 @@ object Bench {
       if (a._1 < 0 || b._1 < 0 || b._2 <= a._2) -1.0
       else 100.0 * (b._1 - a._1) / (b._2 - a._2).toDouble
     }
-    val quietSteal =
-      sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIET_STEAL", "1.0").toDouble
+    val quietSteal = env(HarnessEnv.BenchQuietSteal)
     def boxBusy(): Boolean = {
       val l = loadAvg(); val j = competingJvms()
       // unreadable /proc (-1) never blocks the gate
@@ -179,11 +177,9 @@ object Bench {
     // distribution is visible IN the artifact instead of discovered by
     // re-running: min≈median ⇒ trust the number; median>>min ⇒ the run
     // was contaminated, compare mins only.
-    // parameterized locally (driver always uses the defaults): RUNS for
-    // quicker/sturdier local iterations, QUERIES to time a subset
-    val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
+    val runs = env(HarnessEnv.BenchRuns)
     val heavyRuns = math.max(runs, 5)
-    val subset = sys.env.get("SPARK_GRAFT_BENCH_QUERIES").map(_.split(",").toSet)
+    val subset = env(HarnessEnv.BenchQueries)
     val loadStart = loadAvg()
     val jvmsStart = competingJvms()
     val stealStart = cpuJiffies()
@@ -391,7 +387,7 @@ object Bench {
     val driftJson = driftWarns.map { case (q, p, m) =>
       s"""{"q":"$q","prior_min":${f3(p)},"min":${f3(m)}}""" }
       .mkString("[", ",", "]")
-    val env = s""""env":{"load_start":$loadStart,"load_end":${loadAvg()},""" +
+    val envJson = s""""env":{"load_start":$loadStart,"load_end":${loadAvg()},""" +
       s""""competing_jvms_start":$jvmsStart,"competing_jvms_end":${competingJvms()},""" +
       s""""cpu_governor":"${cpuGovernor()}","cpu_steal_pct":${f3(stealPct)},""" +
       s""""scan_probe_cold":${f3(scanCold)},"scan_probe_warm":${f3(scanWarm)},""" +
@@ -416,7 +412,7 @@ object Bench {
       s""""build":$build,"builds_paid":$buildsPaid,""" +
       s""""q146_rounds":$prRounds,"q87_rounds":$fixpointRounds,""" +
       s""""q128_rounds":$ccRounds,"q138_phase":$q138Phase,""" +
-      s""""q114_phase":$q114Phase,"sf":"$sfDir",$env}"""
+      s""""q114_phase":$q114Phase,"sf":"$sfDir",$envJson}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"), detail + "\n")
     catch { case _: Throwable => () }

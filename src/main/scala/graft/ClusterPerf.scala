@@ -31,16 +31,16 @@ object ClusterPerf {
         "usage: ClusterPerf <master> <sfDir> <queryCsv> <shufflePartitions> <advisoryMB>")
       sys.exit(2)
     }
+    val env = HarnessEnv.load()
     val Array(master, dir, queryCsv, parts, advisoryMB) = args.take(5)
-    val execMem = sys.env.getOrElse("CLUSTERPERF_EXECUTOR_MEM", "8g")
     val spark = GraftConf.session(master, parts.toInt)
-      .config("spark.executor.memory", execMem)
+      .config("spark.executor.memory", env(HarnessEnv.ClusterPerfExecutorMem))
       .config("spark.sql.adaptive.enabled", "true")
-      // CLUSTERPERF_COALESCE=0 gives the STATIC control: AQE on (join
-      // planning unchanged) but partition count pinned at the initial
-      // value — the configuration whose spill the prescription targets
+      // the static control keeps AQE on (join planning unchanged) with
+      // the partition count pinned at the initial value — the
+      // configuration whose spill the prescription targets
       .config("spark.sql.adaptive.coalescePartitions.enabled",
-        sys.env.getOrElse("CLUSTERPERF_COALESCE", "1") != "0")
+        env(HarnessEnv.ClusterPerfCoalesce))
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
         (advisoryMB.toLong << 20).toString)
       // honor the advisory SIZE: by default AQE prefers parallelism and

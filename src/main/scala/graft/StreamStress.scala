@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 
@@ -34,10 +36,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, T
   * window is no-data batches at 2 Hz, not a busy loop.
   *
   * Run: `sbt "runMain graft.StreamStress"` after `tools/stress_sf1.sh`
-  * has generated `/tmp/graft_stress/x10`. `STREAM_STRESS_DIR` overrides
-  * the corpus; `STREAM_STRESS_PROVIDER=hdfs` drops the RocksDB override.
-  * Results land in PLANS.md by hand — a measurement tool, not a gate.
-  * `StreamStressSpec` runs the same path gated behind
+  * has generated `/tmp/graft_stress/x10`. Its settings (corpus, state
+  * store `rocksdb|hdfs`, modes) are the `STREAM_STRESS_*` rows of
+  * [[HarnessEnv]]. Results land in PLANS.md by hand — a measurement
+  * tool, not a gate. `StreamStressSpec` runs the same path gated behind
   * `GRAFT_STREAM_STRESS=1`.
   */
 object StreamStress {
@@ -47,14 +49,19 @@ object StreamStress {
       stateRowsPeak: Long, stateRowsFinal: Long, evicted: Long,
       stateBytesPeak: Long, wallSec: Double)
 
-  /** Accumulating progress listener — immune to recentProgress eviction. */
+  /** Accumulating progress listener — immune to recentProgress eviction.
+    * State figures are kept per stateful operator, in plan order. */
   private final class ProgressAccumulator extends StreamingQueryListener {
-    val inputRows = new java.util.concurrent.atomic.AtomicLong
-    val dataBatches = new java.util.concurrent.atomic.AtomicInteger
-    val evicted = new java.util.concurrent.atomic.AtomicLong
-    val stateRowsPeak = new java.util.concurrent.atomic.AtomicLong(-1)
-    val stateBytesPeak = new java.util.concurrent.atomic.AtomicLong(-1)
-    val stateRowsLast = new java.util.concurrent.atomic.AtomicLong(-1)
+    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
+    final class OpState(val name: String) {
+      val evicted = new AtomicLong
+      val rowsPeak = new AtomicLong(-1)
+      val bytesPeak = new AtomicLong(-1)
+      val rowsLast = new AtomicLong(-1)
+    }
+    val inputRows = new AtomicLong
+    val dataBatches = new AtomicInteger
+    private val ops = new java.util.concurrent.ConcurrentHashMap[Int, OpState]()
     override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
     override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
     override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
@@ -63,12 +70,42 @@ object StreamStress {
         inputRows.addAndGet(p.numInputRows)
         dataBatches.incrementAndGet()
       }
-      p.stateOperators.headOption.foreach { s =>
-        evicted.addAndGet(s.numRowsRemoved)
-        stateRowsPeak.getAndUpdate(c => math.max(c, s.numRowsTotal))
-        stateBytesPeak.getAndUpdate(c => math.max(c, s.memoryUsedBytes))
-        stateRowsLast.set(s.numRowsTotal)
+      p.stateOperators.zipWithIndex.foreach { case (s, i) =>
+        val o = ops.computeIfAbsent(i, _ => new OpState(s.operatorName))
+        o.evicted.addAndGet(s.numRowsRemoved)
+        o.rowsPeak.getAndUpdate(c => math.max(c, s.numRowsTotal))
+        o.bytesPeak.getAndUpdate(c => math.max(c, s.memoryUsedBytes))
+        o.rowsLast.set(s.numRowsTotal)
       }
+    }
+    /** The first stateful operator (the one keyed state of the single-
+      * state twins); -1 figures when the query has none. */
+    def head: OpState = Option(ops.get(0)).getOrElse(new OpState(""))
+    def json: String = (0 until ops.size).map { i =>
+      val o = ops.get(i)
+      s"""{"op":"${o.name}","rows_peak":${o.rowsPeak.get},""" +
+        s""""bytes_peak":${o.bytesPeak.get}}"""
+    }.mkString("[", ",", "]")
+  }
+
+  /** Writes `df` range-partitioned and sorted on `key` into `parts` files
+    * whose mtimes follow the key order, reversed when `descending`: the
+    * file source replays by modification time.
+    */
+  private def stageInOrder(df: org.apache.spark.sql.DataFrame, key: String,
+      parts: Int, dir: String, descending: Boolean = false): Unit = {
+    import org.apache.spark.sql.functions.col
+    df.repartitionByRange(parts, col(key)).sortWithinPartitions(col(key))
+      .write.mode("overwrite").parquet(dir)
+    val files = new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
+    files.zipWithIndex.foreach { case (f, i) =>
+      // a rejected mtime update silently degrades the ordered replay to
+      // arbitrary file order (for events: mass watermark drops) — fail
+      // loudly instead of measuring the wrong regime
+      require(f.setLastModified(
+        1000000000L + (if (descending) files.length - i else i + 1) * 10000L),
+        s"setLastModified rejected on $f — ordered replay broken")
     }
   }
 
@@ -115,10 +152,10 @@ object StreamStress {
         batches = acc.dataBatches.get,
         inputRows = acc.inputRows.get,
         candidates = nCand,
-        stateRowsPeak = acc.stateRowsPeak.get,
-        stateRowsFinal = acc.stateRowsLast.get,
-        evicted = acc.evicted.get,
-        stateBytesPeak = acc.stateBytesPeak.get,
+        stateRowsPeak = acc.head.rowsPeak.get,
+        stateRowsFinal = acc.head.rowsLast.get,
+        evicted = acc.head.evicted.get,
+        stateBytesPeak = acc.head.bytesPeak.get,
         wallSec = (System.nanoTime() - t0) / 1e9)
     } finally {
       q.stop()
@@ -172,11 +209,7 @@ object StreamStress {
     val want = operators.Dedup.connectedComponents(docsInEdges, e)
     val diff = labels.join(want, Seq("doc_id", "rep"), "left_anti").count() +
       want.join(labels, Seq("doc_id", "rep"), "left_anti").count()
-    val walls = {
-      var w = List.empty[Double]
-      val it = epochWalls.iterator(); while (it.hasNext) w ::= it.next()
-      w.reverse
-    }
+    val walls = epochWalls.asScala.toList
     def f2(d: Double) = math.round(d * 100) / 100.0
     println(s"""STREAMSTRESS_LABELS {"corpus":"$corpus","docs":$nDocs,""" +
       s""""epochs":${walls.size},"label_rows":$labelRows,""" +
@@ -212,7 +245,7 @@ object StreamStress {
     * bottleneck, not the store).
     */
   private def analyticsMode(spark: SparkSession, corpus: String,
-      which: String): Unit = {
+      which: String, mft: Int): Unit = {
     import org.apache.spark.sql.functions.{col, countDistinct}
     val dir = new java.io.File(corpus).getParent
     val batch = graft.queries.Tables(spark, dir, "events")
@@ -247,18 +280,7 @@ object StreamStress {
     val fresh = java.nio.file.Files.exists(fpFile) &&
       java.nio.file.Files.readString(fpFile).trim == srcFp
     if (!fresh) {
-      batch.repartitionByRange(32, col("ts"))
-        .sortWithinPartitions(col("ts"))
-        .write.mode("overwrite").parquet(ordered)
-      val parts = new java.io.File(ordered).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        // a rejected mtime update silently degrades the time-ordered
-        // replay to arbitrary file order (mass watermark drops) — fail
-        // loudly instead of measuring the wrong regime
-        require(f.setLastModified(1000000000L + i * 10000L),
-          s"setLastModified rejected on $f — staged replay order broken")
-      }
+      stageInOrder(batch, "ts", 32, ordered)
       java.nio.file.Files.writeString(fpFile, srcFp + "\n")
     }
     val transform: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame =
@@ -268,7 +290,6 @@ object StreamStress {
         case "retention" => graft.streaming.EventsStream.retentionActivations()
         case "paths" => graft.streaming.EventsStream.sessionPaths
         case "paths_rollup" => graft.streaming.EventsStream.sessionPathRollup
-        case other => sys.error(s"unknown STREAM_STRESS_ANALYTICS mode: $other")
       }
     val acc = new ProgressAccumulator
     spark.streams.addListener(acc)
@@ -283,8 +304,8 @@ object StreamStress {
     val t0 = System.nanoTime()
     // stream from the staged time-ordered directory (never the x-dir
     // root — it also holds the other tables)
-    val q = transform(graft.streaming.EventsStream.readStream(spark, ordered,
-        Some(sys.env.getOrElse("STREAM_STRESS_MFT", "2").toInt)))
+    val q = transform(
+        graft.streaming.EventsStream.readStream(spark, ordered, Some(mft)))
       .writeStream
       .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
         val b0 = System.nanoTime()
@@ -294,22 +315,22 @@ object StreamStress {
     try q.processAllAvailable()
     finally { q.stop(); spark.streams.removeListener(acc) }
     val wall = (System.nanoTime() - t0) / 1e9
+    val st = acc.head
     val bytesPerRow =
-      if (acc.stateRowsPeak.get > 0)
-        acc.stateBytesPeak.get.toDouble / acc.stateRowsPeak.get
+      if (st.rowsPeak.get > 0) st.bytesPeak.get.toDouble / st.rowsPeak.get
       else -1.0
     println(s"""STREAMSTRESS_ANALYTICS {"op":"$which","corpus":"$dir",""" +
       s""""events":$nEvents,"users":$users,"signup_users":$signups,""" +
       s""""batches":${acc.dataBatches.get},"emitted":${emitted.get},""" +
-      s""""state_rows_peak":${acc.stateRowsPeak.get},""" +
-      s""""state_rows_final":${acc.stateRowsLast.get},""" +
-      s""""state_bytes_peak":${acc.stateBytesPeak.get},""" +
+      s""""state_rows_peak":${st.rowsPeak.get},""" +
+      s""""state_rows_final":${st.rowsLast.get},""" +
+      s""""state_bytes_peak":${st.bytesPeak.get},""" +
       s""""bytes_per_row":${math.round(bytesPerRow * 10) / 10.0},""" +
       s""""provider":"${spark.conf.getOption(
         "spark.sql.streaming.stateStore.providerClass")
         .map(_.split('.').last).getOrElse("hdfs-default")}",""" +
       s""""partitions":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
-      s""""mft":${sys.env.getOrElse("STREAM_STRESS_MFT", "2")},""" +
+      s""""mft":$mft,""" +
       s""""changelog":${spark.conf.getOption(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
         .getOrElse("false")},""" +
@@ -334,16 +355,8 @@ object StreamStress {
     import graft.streaming.DocsStream
     val docs = spark.read.parquet(corpus)
     val staged = java.nio.file.Files.createTempDirectory("verified-rev").toString
-    docs.repartitionByRange(16, col("doc_id"))
-      .sortWithinPartitions(col("doc_id"))
-      .write.mode("overwrite").parquet(staged)
-    val parts = new java.io.File(staged).listFiles()
-      .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-    // part-00000 holds the LOWEST ids — newest mtime, so it lands last
-    parts.zipWithIndex.foreach { case (f, i) =>
-      require(f.setLastModified(1000000000L + (parts.length - i) * 10000L),
-        s"setLastModified rejected on $f — reversed replay order broken")
-    }
+    // the LOWEST ids get the newest mtime, so they land last
+    stageInOrder(docs, "doc_id", 16, staged, descending = true)
     val acc = new ProgressAccumulator
     spark.streams.addListener(acc)
     val before = DocsStream.displacedReps(spark).value
@@ -386,8 +399,8 @@ object StreamStress {
     got.unpersist(); want.unpersist()
     println(s"""STREAMSTRESS_VERIFIED {"corpus":"$corpus","docs":$nDocs,""" +
       s""""displaced":$displaced,"overconnect_merges":$overConnect,""" +
-      s""""state_rows_peak":${acc.stateRowsPeak.get},""" +
-      s""""state_bytes_peak":${acc.stateBytesPeak.get},""" +
+      s""""state_rows_peak":${acc.head.rowsPeak.get},""" +
+      s""""state_bytes_peak":${acc.head.bytesPeak.get},""" +
       s""""label_missing":$missing,"label_extra":$extra,""" +
       s""""components_stream":${comps._1},"components_batch":${comps._2},""" +
       s""""label_ok":${missing == 0 && extra == 0},""" +
@@ -414,11 +427,11 @@ object StreamStress {
     *    under-merge → survivors a superset); displacement/relink counts
     *    reported.
     */
-  private def pretrainMode(spark: SparkSession, corpus: String,
-      nDocs: Long, budget: Long): Unit = {
+  private def pretrainMode(spark: SparkSession, env: HarnessEnv.Env,
+      corpus: String, nDocs: Long, budget: Long): Unit = {
     import org.apache.spark.sql.functions._
     import graft.streaming.{DocsStream, PretrainStream}
-    val factor = sys.env.getOrElse("STRESS_FACTOR", "10").toInt
+    val factor = env(HarnessEnv.StressFactor)
     // replicated ids are base*factor+r — lift the eval law to the base
     // id (the STRESS_PRETRAIN_E2E discipline; raw mod would make every
     // doc self-contaminated via its replicas)
@@ -426,45 +439,13 @@ object StreamStress {
     val tablesDir = new java.io.File(corpus).getParent
     val docs = spark.read.parquet(corpus)
 
-    // per-operator state accumulator (the composed query carries TWO
-    // keyed states; ProgressAccumulator only reads the head)
-    final class MultiStateAcc extends StreamingQueryListener {
-      val inputRows = new java.util.concurrent.atomic.AtomicLong
-      val rowsPeak = new java.util.concurrent.ConcurrentHashMap[
-        Int, java.util.concurrent.atomic.AtomicLong]()
-      val bytesPeak = new java.util.concurrent.ConcurrentHashMap[
-        Int, java.util.concurrent.atomic.AtomicLong]()
-      val names = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-      override def onQueryStarted(
-          e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        if (p.numInputRows > 0) inputRows.addAndGet(p.numInputRows)
-        p.stateOperators.zipWithIndex.foreach { case (s, i) =>
-          names.put(i, s.operatorName)
-          rowsPeak.computeIfAbsent(i,
-            _ => new java.util.concurrent.atomic.AtomicLong(-1))
-            .getAndUpdate(c => math.max(c, s.numRowsTotal))
-          bytesPeak.computeIfAbsent(i,
-            _ => new java.util.concurrent.atomic.AtomicLong(-1))
-            .getAndUpdate(c => math.max(c, s.memoryUsedBytes))
-        }
-      }
-      def json: String = (0 until names.size).map { i =>
-        s"""{"op":"${names.get(i)}","rows_peak":${rowsPeak.get(i).get},""" +
-          s""""bytes_peak":${bytesPeak.get(i).get}}"""
-      }.mkString("[", ",", "]")
-    }
-
     def diff(a: org.apache.spark.sql.DataFrame,
         b: org.apache.spark.sql.DataFrame): Long =
       a.except(b).count() + b.except(a).count()
 
     def replay(tag: String, stagedDir: String): Unit = {
-      val acc = new MultiStateAcc
+      // the composed query carries TWO keyed states: state_ops reports each
+      val acc = new ProgressAccumulator
       spark.streams.addListener(acc)
       val labelsRoot = java.nio.file.Files
         .createTempDirectory(s"pretrain-stress-labels-$tag").toString
@@ -482,21 +463,19 @@ object StreamStress {
         s"stress-pretrain:$tag:$storeRoot", labelsRoot, storeRoot)
       val dBefore = PretrainStream.displacedReps(spark).value
       val oBefore = PretrainStream.overConnectMerges(spark).value
-      // STREAM_STRESS_FOLD_PARTITIONS: scope the shuffle-partition conf
-      // AWAY from the fold's jobs. The session conf at query START sizes
-      // the state stores (that's STREAM_STRESS_PARTITIONS); the sink's
-      // batch jobs read the MICRO-BATCH session's conf at action time
-      // (b.sparkSession — the cloned streaming session), so setting it
-      // per batch changes fold-job parallelism without touching store
+      // The session conf at query START sizes the state stores; the
+      // sink's batch jobs read the MICRO-BATCH session's conf at action
+      // time (b.sparkSession — the cloned streaming session), so setting
+      // it per batch changes fold-job parallelism without touching store
       // partitioning — the r16 negative's mechanism (b), isolated.
-      val foldParts = sys.env.get("STREAM_STRESS_FOLD_PARTITIONS")
+      val foldParts = env(HarnessEnv.StreamFoldPartitions)
       val t0 = System.nanoTime()
       val q = PretrainStream
         .signals(DocsStream.readStream(spark, stagedDir, 2), docs)
         .writeStream
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, e: Long) =>
           foldParts.foreach(p =>
-            b.sparkSession.conf.set("spark.sql.shuffle.partitions", p))
+            b.sparkSession.conf.set("spark.sql.shuffle.partitions", p.toString))
           val m0 = System.nanoTime()
           b.persist()
           b.count()
@@ -562,12 +541,9 @@ object StreamStress {
       // Only stages 1-2 are pinned — the hook returns the later stages
       // lazily and the tail frame is dropped unexecuted, so this run
       // never materializes the stage-3..7 work it doesn't read.
-      // STREAM_STRESS_PRETRAIN_SKIP_PAIRWISE=1 skips the check (the
-      // pairwise edge set is the documented raw-clique OOM boundary at
-      // the 1000x replicated corpus — ~10^9 edges); underkeep reads -1.
+      // Skipped, underkeep reads -1.
       val underKeep =
-        if (sys.env.get("STREAM_STRESS_PRETRAIN_SKIP_PAIRWISE")
-            .contains("1")) -1L
+        if (env(HarnessEnv.StreamSkipPairwise)) -1L
         else {
           val stagesP = scala.collection.mutable.Map[Int,
             org.apache.spark.sql.DataFrame]()
@@ -578,16 +554,8 @@ object StreamStress {
             evalPred = evalPred)
           ids(notEval(stagesP(2))).except(ids(kept2)).count()
         }
-      val walls = {
-        var w = List.empty[Double]
-        val it = epochWalls.iterator(); while (it.hasNext) w ::= it.next()
-        w.reverse
-      }
-      val matWalls = {
-        var w = List.empty[Double]
-        val it = epochMatWalls.iterator(); while (it.hasNext) w ::= it.next()
-        w.reverse
-      }
+      val walls = epochWalls.asScala.toList
+      val matWalls = epochMatWalls.asScala.toList
       def f2(d: Double) = math.round(d * 100) / 100.0
       println(s"""STREAMSTRESS_PRETRAIN {"corpus":"$corpus","order":"$tag",""" +
         s""""docs":$nDocs,"budget":$budget,""" +
@@ -611,108 +579,75 @@ object StreamStress {
         s""""wall_sec":${f2(wall)}}""")
     }
 
-    // STREAM_STRESS_PRETRAIN_ORDER: ordered | asis | both (default) —
     // the third-decade corpus runs each replay in its own invocation
-    val which = sys.env.getOrElse("STREAM_STRESS_PRETRAIN_ORDER", "both")
+    val which = env(HarnessEnv.StreamPretrainOrder)
     if (which == "ordered" || which == "both") {
-      // ordered staging: id-ascending file order (verifiedMode's idiom,
-      // ascending mtimes)
       val staged = java.nio.file.Files
         .createTempDirectory("pretrain-ordered").toString
-      docs.repartitionByRange(16, col("doc_id"))
-        .sortWithinPartitions(col("doc_id"))
-        .write.mode("overwrite").parquet(staged)
-      val parts = new java.io.File(staged).listFiles()
-        .filter(_.getName.startsWith("part-")).sortBy(_.getName)
-      parts.zipWithIndex.foreach { case (f, i) =>
-        require(f.setLastModified(1000000000L + (i + 1) * 10000L),
-          s"setLastModified rejected on $f — ordered replay broken")
-      }
+      stageInOrder(docs, "doc_id", 16, staged)
       replay("ordered", staged)
     }
     if (which == "asis" || which == "both") replay("asis", corpus)
   }
 
   def main(args: Array[String]): Unit = {
-    // STREAM_STRESS_EMBED=1: drive the EMBEDDING stream
-    // (EmbedStream.semanticNearDup) over the scaled jittered corpus
-    // instead of the document stream — state here is cells holding up
-    // to `cap` exemplar VECTORS (k×cap×dim bound), so the interesting
-    // readouts are state bytes vs that bound and TTL collapse.
-    val embedMode = sys.env.get("STREAM_STRESS_EMBED").contains("1")
-    val corpus = sys.env.getOrElse("STREAM_STRESS_DIR",
-      if (embedMode) "/tmp/graft_stress/x10/embeddings.parquet"
-      else if (sys.env.contains("STREAM_STRESS_ANALYTICS"))
-        "/tmp/graft_stress/x10/events.parquet"
-      else "/tmp/graft_stress/x10/documents.parquet")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // STREAM_STRESS_PARTITIONS: the state-store partition lever for the
-    // ST17 wall experiment — more partitions = more parallel store
-    // instances per batch (and more per-batch task/commit overhead)
-    val stateParts = sys.env.getOrElse("STREAM_STRESS_PARTITIONS", "8")
-    // STREAM_STRESS_MASTER=local-cluster[W,C,M]: run the streaming
-    // harness on a pseudo-cluster — real forked executor JVMs with
-    // their OWN heaps and RocksDB instances — instead of local[cpus]
-    // (needs SPARK_HOME for the worker launch).
-    // STREAM_STRESS_EXECUTOR_MEM sizes each executor heap. This is the
-    // rig the r17 state-store prescription (changelog ON, default
-    // partitions) is re-validated on: RocksDB compaction and the
-    // fold's shuffles actually cross process boundaries here.
-    val master = sys.env.getOrElse("STREAM_STRESS_MASTER", s"local[$cpus]")
+    val env = HarnessEnv.load()
+    import HarnessEnv._
+    // embed mode: state here is cells holding up to `cap` exemplar
+    // VECTORS (k×cap×dim bound), so the interesting readouts are state
+    // bytes vs that bound and TTL collapse
+    val embedMode = env(StreamEmbed)
+    val analytics = env(StreamAnalytics)
+    val corpus = env(StreamDir).getOrElse("/tmp/graft_stress/x10/" +
+      (if (embedMode) "embeddings" else if (analytics.nonEmpty) "events"
+       else "documents") + ".parquet")
+    // a local-cluster master is the rig the r17 state-store prescription
+    // (changelog ON, default partitions) is re-validated on: RocksDB
+    // compaction and the fold's shuffles cross process boundaries there
+    val master = env(StreamMaster).getOrElse(s"local[${env(Cpus)}]")
     // state-store shuffle partitions bound per-batch task count AND
     // RocksDB instance count; 8 matches a per-executor share of a
     // real deployment better than 32 local threads would
-    val builder0 = GraftConf.session(master, stateParts.toInt)
+    val builder0 = GraftConf.session(master, env(StreamPartitions))
     val spark = (if (master.startsWith("local-cluster"))
-      builder0.config("spark.executor.memory",
-        sys.env.getOrElse("STREAM_STRESS_EXECUTOR_MEM", "8g"))
+      builder0.config("spark.executor.memory", env(StreamExecutorMem))
     else builder0).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    if (sys.env.getOrElse("STREAM_STRESS_PROVIDER", "rocksdb") == "rocksdb")
+    if (env(StreamProvider) == "rocksdb")
       spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // STREAM_STRESS_ROCKSDB_CHANGELOG=1: checkpoint the RocksDB
-    // CHANGELOG instead of snapshotting full SST files per commit —
-    // the second ST17 wall lever (commit cost scales with delta, not
-    // store size)
-    if (sys.env.get("STREAM_STRESS_ROCKSDB_CHANGELOG").contains("1"))
+    // changelog checkpointing makes commit cost scale with the delta,
+    // not the store size
+    if (env(StreamChangelog))
       spark.conf.set(
         "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
         "true")
     val nDocs = spark.read.parquet(corpus).count()
+    val pretrain = env(StreamPretrain)
+    if (env(StreamLabels)) labelsMode(spark, corpus, nDocs)
+    else if (env(StreamVerified)) verifiedMode(spark, corpus, nDocs)
+    else if (pretrain.nonEmpty) pretrainMode(spark, env, corpus, nDocs, pretrain.get)
+    else if (analytics.nonEmpty)
+      analytics.foreach(analyticsMode(spark, corpus, _, env(StreamMft)))
+    else nearDupMode(spark, env, corpus, nDocs)
+    spark.stop()
+    if (pretrain.nonEmpty) sys.exit(0)
+  }
 
-    if (sys.env.get("STREAM_STRESS_LABELS").contains("1")) {
-      labelsMode(spark, corpus, nDocs)
-      spark.stop()
-      return
-    }
-
-    if (sys.env.get("STREAM_STRESS_VERIFIED").contains("1")) {
-      verifiedMode(spark, corpus, nDocs)
-      spark.stop()
-      return
-    }
-
-    sys.env.get("STREAM_STRESS_PRETRAIN").map(_.toLong).foreach { budget =>
-      pretrainMode(spark, corpus, nDocs, budget)
-      spark.stop()
-      sys.exit(0)
-    }
-
-    if (sys.env.contains("STREAM_STRESS_ANALYTICS")) {
-      sys.env("STREAM_STRESS_ANALYTICS").split(",").filter(_.nonEmpty)
-        .foreach(analyticsMode(spark, corpus, _))
-      spark.stop()
-      return
-    }
-
+  /** The default mode: the near-dup candidates stream (the semantic
+    * near-dup over embeddings under STREAM_STRESS_EMBED) under lifetime
+    * and horizon dedup, printed as one STREAMSTRESS line.
+    */
+  private def nearDupMode(spark: SparkSession, env: HarnessEnv.Env,
+      corpus: String, nDocs: Long): Unit = {
+    val embedMode = env(HarnessEnv.StreamEmbed)
     // embed mode: train the corpus-scaled quantizer ONCE (a build step,
     // like the batch q132), then both configs stream against its literal
     val mkEmbed: Option[(String, Int, Long) => org.apache.spark.sql.DataFrame] =
       if (!embedMode) None
       else {
-        val k = sys.env.getOrElse("STREAM_STRESS_K", "80").toInt
-        val cap = sys.env.getOrElse("STREAM_STRESS_CAP", "1024").toInt
+        val k = env(HarnessEnv.StreamK)
+        val cap = env(HarnessEnv.StreamCap)
         val cents = operators.Ivf.train(spark.read.parquet(corpus), k, 2)
         // same routing dial as the batch q132 pipeline: corpus-scaled k
         // assigns through the two-level path (k1 + nprobe·|cell| cosines
@@ -758,6 +693,5 @@ object StreamStress {
       "spark.sql.streaming.stateStore.providerClass").getOrElse("hdfs-default")}",""" +
       s""""ttl0":${j(unbounded, if (embedMode) of1 - of0 else -1L)},""" +
       s""""ttl5s":${j(horizon, if (embedMode) of2 - of1 else -1L)}}""")
-    spark.stop()
   }
 }

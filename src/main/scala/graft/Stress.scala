@@ -227,164 +227,120 @@ object Stress {
   }
 
   def main(args: Array[String]): Unit = {
+    val env = HarnessEnv.load()
+    import HarnessEnv._
     val root = args.headOption.getOrElse("/tmp/graft_stress")
-    val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val factor = sys.env.getOrElse("STRESS_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // STRESS_SHUFFLE_PARTITIONS decouples the shuffle width from the
-    // local core count: at the third decade (100M events) 32 partitions
-    // put ~3M rows in every sort buffer and the window family spills —
-    // a partition-count artifact, not an operator property. A cluster
-    // sizes partitions to data (AQE or conf); this dial measures that.
-    val shufflePartitions =
-      sys.env.getOrElse("STRESS_SHUFFLE_PARTITIONS", cpus)
-    // STRESS_MASTER=local-cluster[W,C,M]: run the harness on a pseudo-
-    // cluster — real forked executor JVMs with their OWN heaps — instead
-    // of local[cpus] (needs SPARK_HOME + SPARK_SCALA_VERSION for the
-    // worker launch). STRESS_EXECUTOR_MEM sizes each executor heap.
-    val master = sys.env.getOrElse("STRESS_MASTER", s"local[$cpus]")
-    val builder = GraftConf.session(master, shufflePartitions.toInt)
+    val baseDir = env(SfDir)
+    val factor = env(StressFactor)
+    val cpus = env(Cpus)
+    val master = env(StressMaster).getOrElse(s"local[$cpus]")
+    val builder = GraftConf.session(master, cpus)
     val spark = (if (master.startsWith("local-cluster"))
-      builder.config("spark.executor.memory",
-        sys.env.getOrElse("STRESS_EXECUTOR_MEM", "8g"))
+      builder.config("spark.executor.memory", env(StressExecutorMem))
     else builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val totals = operators.PhaseStats.stageTotals(spark.sparkContext)
 
+    val names = env(StressQueries)
     val scaledDir = s"$root/x$factor"
     genScaled(spark, baseDir, scaledDir, factor)
-    if (sys.env.get("STRESS_SEMDEDUP").contains("1") ||
-        sys.env.contains("STRESS_TWOLEVEL") ||
-        sys.env.contains("STRESS_HARDNEG") ||
-        sys.env.contains("STRESS_MARGIN") ||
-        sys.env.get("STRESS_GEN_EMBED").contains("1") ||
+    if (env(StressSemdedup) || env(StressHardneg).nonEmpty ||
+        env(StressMargin).nonEmpty || env(StressGenEmbed) ||
         // queries that read both tables (e.g. the hybrid-RRF fusion)
         // need the scaled embeddings alongside the scaled documents
-        sys.env.get("STRESS_QUERIES").exists(_.contains("q150")))
+        names.exists(_.startsWith("q150")))
       genScaledEmbeddings(spark, baseDir, scaledDir, factor)
-    if (sys.env.get("STRESS_GEN_EVENTS").contains("1"))
+    if (env(StressGenEvents))
       genScaledEvents(spark, baseDir, scaledDir, factor)
     val nBase = queries.Tables(spark, baseDir, "documents").count()
     val nScaled = queries.Tables(spark, scaledDir, "documents").count()
+    // cold run (first plan + codegen), then a warm run; report both —
+    // superlinearity shows in the warm number
+    def coldWarm(body: => Unit): String = {
+      val runs = (1 to 2).map(_ => totals.measure(body))
+      val (warm, shW, sp) = runs.last
+      s""""cold_sec":${runs.head._1},"warm_sec":$warm,""" +
+        s""""shuffle_write_bytes":$shW,"spilled_bytes":$sp"""
+    }
+    def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
-    // STRESS_QUERIES narrows the set for targeted re-measurement after a
-    // single-query optimization (the full trio is the default protocol)
-    val names = sys.env.get("STRESS_QUERIES")
-      .map(_.split(",").toSeq.filter(_.nonEmpty)) // "" → none (semdedup-only runs)
-      .getOrElse(Seq("q127_containment_inverted", "q72_neardup_keep",
-        "q124_mixture_materialize"))
     Seq("base" -> baseDir, s"x$factor" -> scaledDir).foreach { case (tag, dir) =>
+      val rows = if (tag == "base") nBase else nScaled
       val qs = names.map { name =>
-        val fn = SparkEntry.queries(name)
-        // cold run (first plan + codegen), then a warm run; report both —
-        // superlinearity shows in the warm number
-        val times = (1 to 2).map { _ =>
-          totals.measure {
-            fn(spark, dir).write.format("noop").mode("overwrite").save()
-          }
-        }
-        val (warmT, shW, sp) = times.last
-        s""""$name":{"cold_sec":${times.head._1},"warm_sec":$warmT,""" +
-          s""""shuffle_write_bytes":$shW,"spilled_bytes":$sp}"""
+        s""""$name":{${coldWarm(noop(SparkEntry.queries(name)(spark, dir)))}}"""
       }
-      // STRESS_CENSUS=0 skips the (corpus-sized) shingle census for
-      // targeted re-measurements that don't touch the q127 dials
-      val census = if (sys.env.get("STRESS_CENSUS").contains("0")) "{}"
+      val census = if (!env(StressCensus)) "{}"
         else truncationCensus(spark, dir, dfCap = 50)
           .toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }
           .mkString("{", ",", "}")
-      val rows = if (tag == "base") nBase else nScaled
       println(s"""STRESS {"corpus":"$tag","dir":"$dir","docs":$rows,""" +
         s""""queries":{${qs.mkString(",")}},"q127_census":$census}""")
-      // STRESS_INVARIANTS=1: the oracle-independent fixpoint checks (see
-      // fixpointInvariants) — run at the scales the DuckDB oracle can't
-      if (sys.env.get("STRESS_INVARIANTS").contains("1"))
+      // the oracle-independent fixpoint checks (see fixpointInvariants)
+      // run at the scales the DuckDB oracle can't
+      if (env(StressInvariants))
         println(s"""STRESS_INVARIANTS {"corpus":"$tag",""" +
           s""""q87":${fixpointInvariants(spark, dir)}}""")
-      // STRESS_CONTAM=1: q163 under the REALISTIC eval regime — a
-      // FIXED-SIZE eval suite (the r=0 replica of each base eval doc:
-      // real benchmarks don't grow with the training corpus) against a
-      // corpus-scaled training side. The raw doc_id%10 law is the
-      // measured degenerate worst case (every doc self-contaminated by
-      // its replicas); a corpus-scaled suite (all replicas eval) is the
+      // q163 under the REALISTIC eval regime — a FIXED-SIZE eval suite
+      // (the r=0 replica of each base eval doc: real benchmarks don't
+      // grow with the training corpus) against a corpus-scaled training
+      // side. The raw doc_id%10 law is the measured degenerate worst
+      // case (every doc self-contaminated by its replicas); a
+      // corpus-scaled suite (all replicas eval) is the
       // intermediate measured in r15 (eval inventory ~50M grams
       // saturates the 2^16 bloom → every train gram reaches the exact
       // join: 29-36 s / 2 GB shuffle / ~720 MB spill at 5M docs). This
       // row is the shipped regime: the bloom prunes map-side and the
       // exact join is bounded by TRUE contamination (here the jittered
       // replicas of eval base docs — planted truth at ~10% of docs).
-      // STRESS_CONTAM_LAW picks the eval regime on scaled corpora:
-      // realistic (default — fixed suite, r=0 replicas only), scaled
-      // (every replica of an eval base doc is eval — the inventory
-      // grows with the corpus, the bloom-saturation probe), degenerate
-      // (raw doc_id%10 — every doc self-contaminated by its replicas).
-      if (sys.env.get("STRESS_CONTAM").contains("1")) {
-        val law = sys.env.getOrElse("STRESS_CONTAM_LAW", "realistic")
+      // The scaled law (every replica of an eval base doc is eval) grows
+      // the inventory with the corpus: the bloom-saturation probe.
+      if (env(StressContam)) {
+        val law = env(StressContamLaw)
         val evalPred = if (tag == "base") col("doc_id") % 10 === 7
           else law match {
             case "degenerate" => col("doc_id") % 10 === 7
             case "scaled" => expr(s"(doc_id DIV $factor) % 10 = 7")
-            case _ => expr(
+            case "realistic" => expr(
               s"(doc_id DIV $factor) % 10 = 7 AND doc_id % $factor = 0")
           }
-        val times = (1 to 2).map { _ =>
-          totals.measure {
-            // the cache key carries the LAW: a scaled-regime filter must
-            // never be served to a realistic-regime run (or vice versa)
-            queries.PipelineQueries.contaminationFracFrame(spark, dir,
-              evalPred, s"evalgrams:stress:$tag:$law:$dir")
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-        println(s"""STRESS_CONTAM {"corpus":"$tag","law":"$law","docs":${
-          if (tag == "base") nBase else nScaled},""" +
-          s""""cold_sec":${times.head._1},"warm_sec":${times.last._1},""" +
-          s""""shuffle_write_bytes":${times.last._2},""" +
-          s""""spilled_bytes":${times.last._3}}""")
+        // the cache key carries the LAW: a scaled-regime filter must
+        // never be served to a realistic-regime run (or vice versa)
+        val t = coldWarm(noop(queries.PipelineQueries.contaminationFracFrame(
+          spark, dir, evalPred, s"evalgrams:stress:$tag:$law:$dir")))
+        println(s"""STRESS_CONTAM {"corpus":"$tag","law":"$law","docs":$rows,$t}""")
       }
-      // STRESS_SEMDEDUP=1: q132's quantizer-size dial. At the scaled
-      // corpus the BASE k (cells grow factor× → pairwise grows factor²)
-      // is measured against k scaled with the corpus (cells stay
-      // constant-sized → pairwise grows ~factor) — the measured basis
-      // for the "k is the dial" sizing rule in the q132 comment.
-      if (sys.env.get("STRESS_SEMDEDUP").contains("1")) {
-        // default dial ladder: base k vs corpus-scaled k; override with
-        // STRESS_SEMDEDUP_KS=8,80 when 8×factor would make the literal
+      // q132's quantizer-size dial. At the scaled corpus the BASE k
+      // (cells grow factor× → pairwise grows factor²) is measured against
+      // k scaled with the corpus (cells stay constant-sized → pairwise
+      // grows ~factor) — the measured basis for the "k is the dial"
+      // sizing rule in the q132 comment.
+      if (env(StressSemdedup)) {
+        // override the ladder when 8×factor would make the literal
         // centroid argmax expression itself the bottleneck (k=800 at
         // 100× — at that size a real deployment shards assignment by
         // probing a centroid INDEX, i.e. recursive IVF, not a literal)
-        val ks = sys.env.get("STRESS_SEMDEDUP_KS")
-          .map(_.split(",").toSeq.filter(_.nonEmpty).map(_.toInt))
+        val ks = env(StressSemdedupKs)
           .getOrElse(if (tag == "base") Seq(8) else Seq(8, 8 * factor))
         val sd = ks.map { k =>
-          val times = (1 to 2).map { _ =>
-            totals.measure {
-              queries.PipelineQueries.q132Frame(spark, dir, k)
-                .write.format("noop").mode("overwrite").save()
-            }
-          }
+          val t = coldWarm(noop(queries.PipelineQueries.q132Frame(spark, dir, k)))
           val kept = queries.PipelineQueries.q132Frame(spark, dir, k).count()
-          s""""k$k":{"cold_sec":${times.head._1},"warm_sec":${times.last._1},""" +
-            s""""shuffle_write_bytes":${times.last._2},""" +
-            s""""spilled_bytes":${times.last._3},"kept":$kept}"""
+          s""""k$k":{$t,"kept":$kept}"""
         }
         println(s"""STRESS_SEMDEDUP {"corpus":"$tag","vectors":${
           queries.Tables(spark, dir, "embeddings").count()},""" +
           s""""runs":{${sd.mkString(",")}}}""")
       }
-      // STRESS_BANDS=4,6: the recall dial the recovery section
-      // prescribes, measured. Rebuilds the near-dup labeling with a
-      // b×2-band candidate stage (2b minhashes from the same fused
-      // kernel) through a deliberately SIMPLE pipeline — banded buckets
-      // → distinct pairs → exact sorted-set Jaccard ≥ 0.5 → star CC —
-      // so the 4-vs-6 comparison isolates the band count, then runs the
-      // same planted-truth partition compare as STRESS_TRUTH.
-      if (sys.env.contains("STRESS_BANDS") && tag != "base") {
+      // the recall dial the recovery section prescribes, measured. Rebuilds
+      // the near-dup labeling with a b×2-band candidate stage (2b minhashes
+      // from the same fused kernel) through a deliberately SIMPLE pipeline —
+      // banded buckets → distinct pairs → exact sorted-set Jaccard ≥ 0.5 →
+      // star CC — so the 4-vs-6 comparison isolates the band count, then runs
+      // the same planted-truth partition compare as STRESS_TRUTH.
+      if (env(StressBands).nonEmpty && tag != "base") {
         val baseLab = SparkEntry.queries("q87_neardup_fixpoint")(spark, baseDir)
           .select(col("doc_id").as("base_id"), col("rep").as("truth_rep"))
           .cache()
-        val results = sys.env("STRESS_BANDS").split(",")
-          .toSeq.filter(_.nonEmpty).map(_.toInt).map { b =>
+        val results = env(StressBands).get.map { b =>
           val t0 = System.nanoTime()
           val corpus = queries.Tables(spark, dir, "documents")
           val banded = operators.Dedup.bandRows(corpus
@@ -435,7 +391,7 @@ object Stress {
         println(s"""STRESS_BANDS {"corpus":"$tag",""" +
           s""""runs":{${results.mkString(",")}}}""")
       }
-      // STRESS_TRUTH=1: planted-structure recovery. The replicated corpus
+      // planted-structure recovery. The replicated corpus
       // has KNOWN cluster truth — replica r of base doc b is a (near-)dup
       // of b by construction, so the true partition of the scaled corpus
       // is the base corpus's q87 partition lifted through base_id =
@@ -446,7 +402,7 @@ object Stress {
       // otherwise the split/merge counts localize the recall loss to
       // banding (splits) or verify false-positives (merges). One narrow
       // aggregation — no pairwise anything.
-      if (sys.env.get("STRESS_TRUTH").contains("1") && tag != "base") {
+      if (env(StressTruth) && tag != "base") {
         val scaled = SparkEntry.queries("q87_neardup_fixpoint")(spark, dir)
           .select(col("doc_id"), col("rep"))
         val base = SparkEntry.queries("q87_neardup_fixpoint")(spark, baseDir)
@@ -473,146 +429,71 @@ object Stress {
           s""""exact_recovery":${splits == 0 && merges == 0 &&
             truthClusters == scaledClusters}}""")
       }
-      // STRESS_TWOLEVEL=k: flat vs two-level assignment cost at quantizer
-      // size k — the per-row k vs k1+|cell| cosine claim, measured
-      sys.env.get("STRESS_TWOLEVEL").map(_.toInt).foreach { k =>
-        import org.apache.spark.sql.DataFrame
-        val e = queries.Tables(spark, dir, "embeddings")
-        val cents = queries.PipelineQueries.ivfCentsK(spark, dir, k)
-        val k1 = math.max(2, math.round(math.sqrt(k.toDouble)).toInt)
-        val (coarse, coarseOf) =
-          operators.Models.cached(s"ivfcoarse:$dir:k=$k,k1=$k1,rounds=2")(
-            operators.Ivf.coarsen(spark, cents, k1, 2))
-        def time(mk: => DataFrame): Double = {
-          val runs = (1 to 2).map { _ =>
-            val t0 = System.nanoTime()
-            mk.write.format("noop").mode("overwrite").save()
-            (System.nanoTime() - t0) / 1e9
-          }
-          runs.last // warm
-        }
-        val flatS = time(operators.Ivf.assign(e, cents))
-        val twoS = time(
-          operators.Ivf.assignTwoLevel(e, cents, coarse, coarseOf))
-        // the broadcast-handle encoding (member payload off the task
-        // binary) must cost the same wall — its win is shipped bytes
-        val twoBcS = time(
-          operators.Ivf.assignTwoLevelBc(e, cents, coarse, coarseOf))
-        println(s"""STRESS_TWOLEVEL {"corpus":"$tag","vectors":${e.count()},""" +
-          s""""k":$k,"k1":$k1,"flat_warm_sec":$flatS,"twolevel_warm_sec":$twoS,""" +
-          s""""twolevel_bc_warm_sec":$twoBcS}""")
-      }
-      // STRESS_HARDNEG=k: q138's per-anchor cut — the bounded TopKScored
+      // q138's per-anchor cut — the bounded TopKScored
       // aggregate at quantizer size k (the cell-size dial: pair volume is
       // ~nprobe·n²/k). Its map-side partials bound the anchor exchange at
       // kTop rows per (anchor, task), so its shuffle bytes stay flat.
-      sys.env.get("STRESS_HARDNEG").map(_.toInt).foreach { k =>
+      env(StressHardneg).foreach { k =>
         val nVec = queries.Tables(spark, dir, "embeddings").count()
         val cents = queries.PipelineQueries.ivfCentsK(spark, dir, k)
         val (aggS, aggSh, aggSp) = (1 to 2).map { _ =>
-          totals.measure {
-            queries.PipelineQueries.hardNegatives(spark, dir, cents, nprobe = 2, kTop = 5)
-              .write.format("noop").mode("overwrite").save()
-          }
+          totals.measure(noop(
+            queries.PipelineQueries.hardNegatives(spark, dir, cents, nprobe = 2, kTop = 5)))
         }.last
         println(s"""STRESS_HARDNEG {"corpus":"$tag","vectors":$nVec,"k":$k,""" +
           s""""agg_warm_sec":$aggS,"agg_shuffle_bytes":$aggSh,"agg_spill":$aggSp}""")
       }
-      // STRESS_MARGIN=k: q142's ratio-margin mining at quantizer size k
-      // (the oracle query pins k=8; pair volume is ~nprobe·n²/k so the
-      // corpus-scaled k is the production dial, as in q132/q138)
-      sys.env.get("STRESS_MARGIN").map(_.toInt).foreach { k =>
+      // the oracle query pins k=8; pair volume is ~nprobe·n²/k so the
+      // corpus-scaled k is the production dial, as in q132/q138
+      env(StressMargin).foreach { k =>
         val nVec = queries.Tables(spark, dir, "embeddings").count()
         val cents = queries.PipelineQueries.ivfCentsK(spark, dir, k)
-        val runs = (1 to 2).map { _ =>
-          totals.measure {
-            queries.PipelineQueries.marginMining(spark, dir, cents)
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-        val (warmS, shW, sp) = runs.last
-        println(s"""STRESS_MARGIN {"corpus":"$tag","vectors":$nVec,"k":$k,""" +
-          s""""cold_sec":${runs.head._1},"warm_sec":$warmS,""" +
-          s""""shuffle_write_bytes":$shW,"spilled_bytes":$sp}""")
+        val t = coldWarm(noop(queries.PipelineQueries.marginMining(spark, dir, cents)))
+        println(s"""STRESS_MARGIN {"corpus":"$tag","vectors":$nVec,"k":$k,$t}""")
       }
 
-      // STRESS_SUBSTR=k: q145's ExactSubstr at window size k (the oracle
-      // query pins K=8; Lee et al.'s production dial is K≈50 — same gram
-      // cardinality, fewer duplicated grams, longer excised spans)
-      sys.env.get("STRESS_SUBSTR").map(_.toInt).foreach { k =>
-        val runs = (1 to 2).map { _ =>
-          totals.measure {
-            queries.PipelineQueries.exactSubstr(spark, dir, k)
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-        val (warmS, shW, sp) = runs.last
-        val rows = if (tag == "base") nBase else nScaled
-        println(s"""STRESS_SUBSTR {"corpus":"$tag","docs":$rows,"k":$k,""" +
-          s""""cold_sec":${runs.head._1},"warm_sec":$warmS,""" +
-          s""""shuffle_write_bytes":$shW,"spilled_bytes":$sp}""")
+      // the oracle query pins K=8; Lee et al.'s production dial is K≈50
+      // — same gram cardinality, fewer duplicated grams, longer spans
+      env(StressSubstr).foreach { k =>
+        val t = coldWarm(noop(queries.PipelineQueries.exactSubstr(spark, dir, k)))
+        println(s"""STRESS_SUBSTR {"corpus":"$tag","docs":$rows,"k":$k,$t}""")
       }
 
-      // STRESS_CHUNK=C:O — q149's sliding-window chunker at a
-      // production dial (the oracle pins C=64/O=16 to keep sf output
-      // small; RAG passage indexing runs C≈512/O≈64). The claim under
-      // test: the operator is pure map-side — per-doc fan-out
+      // the oracle pins C=64/O=16 to keep sf output small; RAG passage
+      // indexing runs C≈512/O≈64. The claim under test: the operator is
+      // pure map-side — per-doc fan-out
       // ⌈n/(C−O)⌉ is bounded by document length, never corpus size —
       // so the only shuffle is the output sort of already-sliced rows
       // and wall/shuffle scale linearly with docs at ANY dial. The
       // count() drain (not noop-write of the sorted frame) keeps the
       // measurement on the chunker, with the sort's exchange included.
-      sys.env.get("STRESS_CHUNK").foreach { spec =>
-        val Array(c, o) = spec.split(":").map(_.toInt)
+      env(StressChunk).foreach { case Seq(c, o) =>
         var nChunks = 0L
-        val runs = (1 to 2).map { _ =>
-          totals.measure {
-            nChunks = queries.PipelineQueries.chunkOverlap(spark, dir, c, o)
-              .count()
-          }
+        val t = coldWarm {
+          nChunks = queries.PipelineQueries.chunkOverlap(spark, dir, c, o).count()
         }
-        val (warmS, shW, sp) = runs.last
-        val rows = if (tag == "base") nBase else nScaled
         println(s"""STRESS_CHUNK {"corpus":"$tag","docs":$rows,""" +
-          s""""chunk_size":$c,"overlap":$o,"chunks":$nChunks,""" +
-          s""""cold_sec":${runs.head._1},"warm_sec":$warmS,""" +
-          s""""shuffle_write_bytes":$shW,"spilled_bytes":$sp}""")
+          s""""chunk_size":$c,"overlap":$o,"chunks":$nChunks,$t}""")
       }
 
-      // STRESS_BM25=1: q147's single-projection BM25 at corpus scale —
-      // the claim under test: the model is ONE map-side-combined stats
-      // pass and scoring never explodes or joins, so shuffle bytes stay
-      // flat (only the score>0 survivors reach the bounded top-k agg)
-      if (sys.env.get("STRESS_BM25").contains("1")) {
-        val runs = (1 to 2).map { _ =>
-          totals.measure {
-            queries.PipelineQueries.bm25TopK(spark, dir)
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-        val (warmS, shW, sp) = runs.last
-        val rows = if (tag == "base") nBase else nScaled
-        println(s"""STRESS_BM25 {"corpus":"$tag","docs":$rows,""" +
-          s""""cold_sec":${runs.head._1},"warm_sec":$warmS,""" +
-          s""""shuffle_write_bytes":$shW,"spilled_bytes":$sp}""")
+      // q147's BM25 at corpus scale — the claim under test: the model is
+      // ONE map-side-combined stats pass and scoring never explodes or
+      // joins, so shuffle bytes stay flat (only the score>0 survivors
+      // reach the bounded top-k agg)
+      if (env(StressBm25)) {
+        val t = coldWarm(noop(queries.PipelineQueries.bm25TopK(spark, dir)))
+        println(s"""STRESS_BM25 {"corpus":"$tag","docs":$rows,$t}""")
       }
 
-      // STRESS_EDITREP=1: q157's rep-verify at clone-cardinality scale —
-      // the claim under test: kernel calls per bucket are b−1 (not
-      // ~b²/2), so the verify stage stays LINEAR in corpus size on the
-      // clique corpus where the pairwise form (q152) is quadratic by
-      // construction. Prints the exact call census derived from the
-      // band-bucket sizes (rep = Σ(n−1), pairwise upper bound =
-      // Σ n(n−1)/2 over multi-member buckets) alongside the measured
-      // run, so "sub-quadratic" is a number, not an adjective.
-      if (sys.env.get("STRESS_EDITREP").contains("1")) {
-        val runs = (1 to 2).map { _ =>
-          totals.measure {
-            queries.PipelineQueries.editDistanceNearDupRep(spark, dir)
-              .write.format("noop").mode("overwrite").save()
-          }
-        }
-        val (warmS, shW, sp) = runs.last
+      // q157's rep-verify at clone-cardinality scale — the claim under test:
+      // kernel calls per bucket are b−1 (not ~b²/2), so the verify stage stays
+      // LINEAR in corpus size on the clique corpus where the pairwise form
+      // (q152) is quadratic by construction. Prints the exact call census
+      // derived from the band-bucket sizes (rep = Σ(n−1), pairwise upper bound
+      // = Σ n(n−1)/2 over multi-member buckets) alongside the measured run, so
+      // "sub-quadratic" is a number, not an adjective.
+      if (env(StressEditrep)) {
+        val t = coldWarm(noop(queries.PipelineQueries.editDistanceNearDupRep(spark, dir)))
         val (census, repCallsDistinct) = {
           // cached: the stats aggregate and BOTH sides of the distinct-
           // pair self-join derive from this — uncached, the corpus-wide
@@ -645,33 +526,22 @@ object Stress {
           bandedDocs.unpersist()
           (stats, distinctPairs)
         }
-        val rows = if (tag == "base") nBase else nScaled
         println(s"""STRESS_EDITREP {"corpus":"$tag","docs":$rows,""" +
           s""""rep_calls":$repCallsDistinct,""" +
           s""""rep_calls_band_bound":${census.getLong(0)},""" +
           s""""pairwise_calls":${census.getLong(1)},""" +
-          s""""max_bucket":${census.getLong(2)},""" +
-          s""""cold_sec":${runs.head._1},"warm_sec":$warmS,""" +
-          s""""shuffle_write_bytes":$shW,"spilled_bytes":$sp}""")
+          s""""max_bucket":${census.getLong(2)},$t}""")
       }
 
-      // STRESS_DIVERSITY=1: q151's exact-vs-HLL dial. The claim under
-      // test: the approx form collapses the (source, gram) dedup
-      // exchange to one mergeable sketch per (source, task) — shuffle
-      // bytes drop by orders of magnitude at equal wall or better,
-      // and every per-source estimate stays within 3·rsd of exact.
-      if (sys.env.get("STRESS_DIVERSITY").contains("1")) {
+      // q151's exact-vs-HLL dial. The claim under test: the approx form
+      // collapses the (source, gram) dedup exchange to one mergeable
+      // sketch per (source, task) — shuffle bytes drop by orders of
+      // magnitude at equal wall or better, and every per-source estimate
+      // stays within 3·rsd of exact.
+      if (env(StressDiversity)) {
         val forms = Seq("exact" -> false, "approx" -> true).map {
-          case (label, ap) =>
-            val runs = (1 to 2).map { _ =>
-              totals.measure {
-                queries.PipelineQueries.ngramDiversity(spark, dir, approx = ap)
-                  .write.format("noop").mode("overwrite").save()
-              }
-            }
-            val (warmS, shW, sp) = runs.last
-            s""""$label":{"cold_sec":${runs.head._1},"warm_sec":$warmS,""" +
-              s""""shuffle_write_bytes":$shW,"spilled_bytes":$sp}"""
+          case (label, ap) => s""""$label":{${coldWarm(noop(
+            queries.PipelineQueries.ngramDiversity(spark, dir, approx = ap)))}}"""
         }
         val err = {
           val ex = queries.PipelineQueries.ngramDiversity(spark, dir)
@@ -690,32 +560,28 @@ object Stress {
         println(s"""STRESS_DIVERSITY {"corpus":"$tag",""" +
           forms.mkString(",") + s""","max_rel_err":$err}""")
       }
-      // STRESS_PRETRAIN_E2E=budget: the composed q160 pretrain-prep DAG
-      // (canonical dedup → near-dup fixpoint → decontaminate → quality
-      // gate → mixture materialize → split → pack) as ONE run with
-      // per-stage job-group attribution — the stage interactions
-      // (fixpoint checkpoint pressure feeding windows, cross-stage AQE
-      // re-planning) that single-query bench rows can't see. Each stage
-      // runs inside its own PhaseStats phase (the stageRun hook covers
-      // the stage's ENTIRE construction, eager work included); phase 6
+      // the composed q160 pretrain-prep DAG (canonical dedup → near-dup
+      // fixpoint → decontaminate → quality gate → mixture materialize → split
+      // → pack) as ONE run with per-stage job-group attribution — the stage
+      // interactions (fixpoint checkpoint pressure feeding windows,
+      // cross-stage AQE re-planning) that single-query bench rows can't see.
+      // Each stage runs inside its own PhaseStats phase (the stageRun hook
+      // covers the stage's ENTIRE construction, eager work included); phase 6
       // is the unmaterialized tail (split + pack + output). Stage 2's
-      // shuffle/spill largely lands in the fixpoint's OWN epoch (its
-      // internal phases re-tag the job group), so the fixpoint rounds
-      // are reported alongside; stage walls are exact regardless.
-      sys.env.get("STRESS_PRETRAIN_E2E").map(_.toLong).foreach { budget =>
-        // STRESS_PRETRAIN_REP: "1" → stage 2 uses the rep-anchored edge
-        // form (the flat-memory shape for clique-heavy corpora — the
-        // pairwise form's edge set is ~b²/2 per planted b-member clique,
-        // ~10⁹ rows at 1000×); "both" → run both forms and print the
-        // stage-2 survivor agreement (planted-truth: the replicated
-        // variants all verify against their bucket rep, so the forms
-        // must agree exactly here). Unset → pairwise (the oracle form).
-        val forms: Seq[(String, Boolean)] =
-          sys.env.get("STRESS_PRETRAIN_REP") match {
-            case Some("both") => Seq("pairwise" -> false, "rep" -> true)
-            case Some("1") => Seq("rep" -> true)
-            case _ => Seq("pairwise" -> false)
-          }
+      // shuffle/spill largely lands in the fixpoint's OWN epoch (its internal
+      // phases re-tag the job group), so the fixpoint rounds are reported
+      // alongside; stage walls are exact regardless.
+      env(StressPretrainE2e).foreach { budget =>
+        // the rep-anchored edge form is the flat-memory shape for
+        // clique-heavy corpora (the pairwise form's edge set is ~b²/2 per
+        // planted b-member clique, ~10⁹ rows at 1000×); on the planted
+        // corpus the replicated variants all verify against their bucket
+        // rep, so the two forms must agree exactly
+        val forms = env(StressPretrainRep) match {
+          case "both" => Seq("pairwise" -> false, "rep" -> true)
+          case "rep" => Seq("rep" -> true)
+          case "pairwise" => Seq("pairwise" -> false)
+        }
         val s2Manifests = scala.collection.mutable.LinkedHashMap[
           String, org.apache.spark.sql.DataFrame]()
         forms.foreach { case (form, repAnchored) =>
@@ -751,8 +617,8 @@ object Stress {
           val handle = run.finish()
           val rowsJson = stageRows.map { case (k, v) => s""""$k":$v""" }
             .mkString("{", ",", "}")
-          println(s"""STRESS_PRETRAIN_E2E {"corpus":"$tag","form":"$form","docs":${
-            if (tag == "base") nBase else nScaled},"budget":$budget,""" +
+          println(s"""STRESS_PRETRAIN_E2E {"corpus":"$tag","form":"$form",""" +
+            s""""docs":$rows,"budget":$budget,""" +
             s""""wall_sec":$wall,"shuffle_write_bytes":$shW,""" +
             s""""spilled_bytes":$sp,"out_rows":$outRows,""" +
             s""""stage_rows":$rowsJson,"stages":${handle.json},""" +
@@ -780,14 +646,14 @@ object Stress {
       }
     }
 
-    // STRESS_PAGERANK=iters: q146's engine on its own scale ladder — a
+    // q146's engine on its own scale ladder — a
     // generated md5-derived skewed graph (hub bias via min-of-two-draws
     // targets), base 20k nodes vs 20k×factor, ~10 out-edges per node
     // symmetrized. Measured: per-run wall/shuffle/spill AND the oracle-
     // independent invariant a 9-dec-rounded damped walk must satisfy at
     // ANY scale — total rank mass = 1 within N·5e-10 rounding drift
     // (the PageRank analogue of STRESS_INVARIANTS' fixpoint checks).
-    sys.env.get("STRESS_PAGERANK").map(_.toInt).foreach { iters =>
+    env(StressPagerank).foreach { iters =>
       def hmod(tag: String, m: Long) =
         conv(substring(md5(concat_ws("_", lit(tag), col("src"), col("j"))),
           1, 8), 16, 10).cast("long") % m
@@ -812,65 +678,18 @@ object Stress {
             graph(n).repartition(32).write.mode("overwrite").parquet(gpath)
           val edges = spark.read.parquet(gpath)
           var agg: org.apache.spark.sql.Row = null
-          val runs = (1 to 2).map { _ =>
-            totals.measure {
-              agg = graft.operators.PageRank.run(edges, iters)
-                .agg(sum(col("pr")), count(lit(1))).head()
-            }
+          val t = coldWarm {
+            agg = graft.operators.PageRank.run(edges, iters)
+              .agg(sum(col("pr")), count(lit(1))).head()
           }
           val (mass, nodes) = (agg.getDouble(0), agg.getLong(1))
-          val (warmS, shW, sp) = runs.last
           val massOk = math.abs(mass - 1.0) < nodes * 5e-10
           // per-phase attribution of the warm run (0 = prepare): the
           // same rows Bench persists — drift adjudication per stage
           val rounds = graft.operators.PageRank.lastRunStatsJson
           println(s"""STRESS_PAGERANK {"corpus":"$gtag","nodes":$nodes,""" +
-            s""""edges":${edges.count()},"iters":$iters,""" +
-            s""""cold_sec":${runs.head._1},"warm_sec":$warmS,""" +
-            s""""shuffle_write_bytes":$shW,"spilled_bytes":$sp,""" +
+            s""""edges":${edges.count()},"iters":$iters,$t,""" +
             s""""mass":$mass,"mass_ok":$massOk,"rounds":$rounds}""")
-          // STRESS_PAGERANK_BUCKETED=1: same graph through the
-          // bucketed-by-src layout (an external table beside the plain
-          // parquet) — the prepare-time delta the bucketing prescription
-          // claims is rounds[0] here vs rounds[0] above; per-round and
-          // mass numbers must be bit-identical (layout, not semantics)
-          if (sys.env.get("STRESS_PAGERANK_BUCKETED").contains("1")) {
-            val tbl = s"pr_edges_bucketed_$n"
-            // fingerprint the bucketed table against the SOURCE graph
-            // parquet (file names+sizes), not bare tableExists — a
-            // regenerated graph must invalidate its bucketed twin (the
-            // same stale-cache class the _GENLAW marker fixes for events)
-            val srcFp = Option(new java.io.File(gpath).listFiles())
-              .getOrElse(Array.empty).sortBy(_.getName)
-              .map(f => s"${f.getName}:${f.length}").mkString(";")
-            val btPath = s"$root/pr_edges_bucketed_$n"
-            val btMarker =
-              java.nio.file.Paths.get(s"$btPath/_SRC_FINGERPRINT")
-            val btFresh = spark.catalog.tableExists(tbl) &&
-              java.nio.file.Files.exists(btMarker) &&
-              java.nio.file.Files.readString(btMarker).trim == srcFp
-            if (!btFresh) {
-              spark.sql(s"DROP TABLE IF EXISTS $tbl")
-              graft.operators.PageRank.writeBucketedEdges(edges, tbl,
-                buckets = 32, path = Some(btPath))
-              java.nio.file.Files.writeString(btMarker, srcFp + "\n")
-            }
-            val bruns = (1 to 2).map { _ =>
-              totals.measure {
-                agg = graft.operators.PageRank.run(spark.table(tbl), iters)
-                  .agg(sum(col("pr")), count(lit(1))).head()
-              }
-            }
-            val (bmass, bnodes) = (agg.getDouble(0), agg.getLong(1))
-            val (bwarm, bshW, bsp) = bruns.last
-            val brounds = graft.operators.PageRank.lastRunStatsJson
-            println(s"""STRESS_PAGERANK_BUCKETED {"corpus":"$gtag",""" +
-              s""""nodes":$bnodes,"iters":$iters,""" +
-              s""""cold_sec":${bruns.head._1},"warm_sec":$bwarm,""" +
-              s""""shuffle_write_bytes":$bshW,"spilled_bytes":$bsp,""" +
-              s""""mass":$bmass,"mass_ok":${math.abs(bmass - 1.0) < bnodes * 5e-10},""" +
-              s""""rounds":$brounds}""")
-          }
       }
     }
     spark.stop()

@@ -9,9 +9,13 @@ object Verify {
     val (sfDir, outDir, only) = args match {
       case Array(s, o) => (s, o, None)
       case Array(s, o, f) => (s, o, Some(f.split(",").toSet))
+      case _ =>
+        System.err.println("usage: Verify <sfDir> <outDir> [queryCsv]")
+        sys.exit(2)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftConf.session(s"local[$cpus]", cpus.toInt).getOrCreate()
+    val env = HarnessEnv.load()
+    val cpus = env(HarnessEnv.Cpus)
+    val spark = GraftConf.session(s"local[$cpus]", cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Each result is published via temp-dir + atomic rename, with any
@@ -52,7 +56,8 @@ object Verify {
         ran += 1
       } catch { case e: Throwable =>
         failed ::= name
-        System.err.println(s"[verify] $name failed: ${e.getMessage}"); if (sys.env.contains("GRAFT_VERIFY_TRACE")) e.printStackTrace()
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        if (env(HarnessEnv.VerifyTrace)) e.printStackTrace()
       }
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

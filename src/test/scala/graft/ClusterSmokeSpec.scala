@@ -36,7 +36,7 @@ class ClusterSmokeSpec extends AnyFunSuite {
     * re-trains the Pq/Ivf/BPE models and pays cluster scheduling per
     * stage); run it once per round and record the result in PLANS.md.
     */
-  private val fullSurface = sys.env.contains("GRAFT_FULL_CLUSTER")
+  private val fullSurface = HarnessEnv.GateFullCluster.in(sys.env)
   private val names =
     (if (fullSurface) SparkEntry.queries.keys.toSeq.sorted
      else Seq(
@@ -47,7 +47,7 @@ class ClusterSmokeSpec extends AnyFunSuite {
        "q72_neardup_keep")) :+ ClusterSmoke.StreamCase
 
   test("queries produce identical digests under local-cluster[2,8,4096] (multi-JVM)") {
-    assume(!sys.env.contains("GRAFT_SKIP_CLUSTER_SMOKE"),
+    assume(!HarnessEnv.GateSkipClusterSmoke.in(sys.env),
       "GRAFT_SKIP_CLUSTER_SMOKE set")
     val sparkHome = sys.env.get("SPARK_HOME")
     assume(sparkHome.exists(h => new java.io.File(h, "sbin").isDirectory),

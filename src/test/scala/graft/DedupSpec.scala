@@ -325,7 +325,7 @@ class DedupSpec extends AnyFunSuite {
     //     tokens), which over ~45k perturbed replicas puts the expected
     //     stray count in low single digits; 8 is 4x the measurement,
     //     far below any real recall regression.
-    assume(sys.env.get("GRAFT_STRESS").contains("1"),
+    assume(HarnessEnv.GateStress.in(sys.env),
       "set GRAFT_STRESS=1 to run the 10x planted-recovery gate")
     val factor = 10
     val scaledDir = s"/tmp/graft_stress/x$factor"

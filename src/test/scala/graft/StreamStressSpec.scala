@@ -19,7 +19,7 @@ class StreamStressSpec extends AnyFunSuite {
   private val corpus = "/tmp/graft_stress/x10/documents.parquet"
 
   private def gated(): Unit = {
-    assume(sys.env.get("GRAFT_STREAM_STRESS").contains("1"),
+    assume(HarnessEnv.GateStreamStress.in(sys.env),
       "set GRAFT_STREAM_STRESS=1 to run the 10x streaming stress")
     assume(new java.io.File(corpus).exists(),
       s"stress corpus missing - run tools/stress_sf1.sh first")

@@ -144,8 +144,9 @@ final case class CensusFrame(df: DataFrame, release: Option[Release] = None) {
 
   /** Append `ref_rse` (ref `test/test_basic.py:97-101`), replacing a
     * column of that name in place. One `select` over an indexed column
-    * list rather than `withColumn`, whose project list inherits the
-    * frame output's collection type (see [[graft.sources.DriverFrame]]).
+    * list, which Spark collapses with the projections above it; over a
+    * driver frame, [[graft.plans.FoldDriverRelation]] then folds the
+    * collapsed projection into the frame's rows once.
     */
   def addRse(ref: String): CensusFrame = {
     val name = resolveName(ref) + "_rse"

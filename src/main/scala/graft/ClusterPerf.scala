@@ -26,14 +26,19 @@ package graft
 object ClusterPerf {
 
   def main(args: Array[String]): Unit = {
-    if (args.length < 5) {
-      System.err.println(
+    def usage(why: String): Nothing = {
+      System.err.println(s"$why\n" +
         "usage: ClusterPerf <master> <sfDir> <queryCsv> <shufflePartitions> <advisoryMB>")
       sys.exit(2)
     }
+    if (args.length != 5) usage(s"ClusterPerf takes 5 arguments, got ${args.length}")
+    val Array(master, dir, queryCsv, partsArg, advisoryArg) = args
+    def positive(name: String, raw: String): Int = raw.toIntOption.filter(_ > 0)
+      .getOrElse(usage(s"$name=$raw: not a positive integer"))
+    val parts = positive("shufflePartitions", partsArg)
+    val advisoryMB = positive("advisoryMB", advisoryArg)
     val env = HarnessEnv.load()
-    val Array(master, dir, queryCsv, parts, advisoryMB) = args.take(5)
-    val spark = GraftConf.session(master, parts.toInt)
+    val spark = GraftConf.session(master, parts)
       .config("spark.executor.memory", env(HarnessEnv.ClusterPerfExecutorMem))
       .config("spark.sql.adaptive.enabled", "true")
       // the static control keeps AQE on (join planning unchanged) with

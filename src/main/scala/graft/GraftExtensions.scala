@@ -18,6 +18,11 @@ import graft.functions.{CountMinSketchMd5, DotProduct, TopKScored}
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
+    // Driver-frame legs: the optimizer folds the operators over a
+    // DriverRelation leaf once; the planner scans a leaf left unfolded
+    // as a LocalTableScanExec, so neither starts a job.
+    e.injectOptimizerRule(_ => graft.plans.FoldDriverRelation)
+    e.injectPlannerStrategy(_ => graft.plans.DriverRelationStrategy)
     // Parser leg: adds `SHOW GRAFT QUERIES` (inventory introspection),
     // delegating everything else to the stock parser.
     e.injectParser((_, delegate) => new graft.plans.GraftSqlParser(delegate))
@@ -25,11 +30,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // sanity check, so `with_m90(c)` is rewritten away before anything
     // tries to resolve it as a function.
     e.injectHintResolutionRule(_ => graft.plans.MarginExpansionRule)
-    // Normalization leg: a driver frame's stacked projections collapse
-    // before the optimizer, so they fold on the driver once.
-    e.injectPlanNormalizationRule(_ => graft.plans.CollapseLocalProjects)
-    // Optimizer leg: aggregates over driver-local rows run on the driver.
-    e.injectOptimizerRule(_ => graft.plans.LocalAggregate)
     e.injectFunction((
       FunctionIdentifier("dot_product"),
       new ExpressionInfo(classOf[DotProduct].getName, "dot_product"),

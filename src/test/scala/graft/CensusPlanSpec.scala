@@ -1,17 +1,19 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.ArrayRepeat
-import org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation
-import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan, Project}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.plans.{DriverRelation, FoldDriverRelation}
 import graft.sources._
 
 /** Plan and job locks on the census request path: a decoded table becomes
-  * a frame without per-request Spark work, and its derived measures stay
-  * linear in the table's width.
+  * a frame without per-request Spark work, its derived measures fold once
+  * and stay linear in the table's width, and a warm request compiles no
+  * new class.
   */
 class CensusPlanSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -35,19 +37,14 @@ class CensusPlanSpec extends AnyFunSuite {
       t.rows)
   }
 
-  /** Spark's `ConvertToLocalRelation` (optimizer batch "LocalRelation
-    * early", before column pruning) evaluates each `Project` over a
-    * `LocalRelation` row by row with `InterpretedMutableProjection`, which
+  /** A projection's interpreted fallback (`InterpretedMutableProjection`)
     * indexes the project list per field: O(width²) per row when the list
-    * is a `List`. With that rule excluded, the optimized plan shows every
-    * `Project` the rule would have evaluated.
+    * is a `List`. With the fold rule excluded, the optimized plan shows
+    * every `Project` the rule would have evaluated.
     */
   test("no Project from addRse, withPairs or grouped with_m90 SQL carries a List") {
     val s = spark.newSession()
-    // LocalAggregate would fold the grouped plan (Projects and all) away.
-    s.conf.set("spark.sql.optimizer.excludedRules",
-      "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation," +
-        "graft.plans.LocalAggregate")
+    s.conf.set("spark.sql.optimizer.excludedRules", FoldDriverRelation.ruleName)
     val cf = CensusReporterDecoder.toFrame(s, fixtureTable)
     val derived = cf.addRse("001")
     val paired = derived.withPairs("share" -> derived.proportion("002", "001"))
@@ -88,7 +85,7 @@ class CensusPlanSpec extends AnyFunSuite {
     assert(moe.length == 5 && moe.forall(_.getDouble(1) == math.sqrt(4.0) * 1.645))
     assert(vreJobs == 0, s"VRE load + collect ran $vreJobs jobs")
     // the MOE is folded on the driver: no file scan, no projection left
-    assert(plan.isInstanceOf[LocalRelation], plan.treeString)
+    assert(plan.isInstanceOf[DriverRelation], plan.treeString)
     // and its kernel builds no repeated-estimate array per row
     Seq(analyzed, plan).foreach(p => assert(
       !p.exists(_.expressions.exists(_.exists(_.isInstanceOf[ArrayRepeat]))), p.treeString))
@@ -104,26 +101,34 @@ class CensusPlanSpec extends AnyFunSuite {
     assert(derivedJobs == 0, s"derived-measure collect ran $derivedJobs jobs")
   }
 
+  private def request(c: CensusFrame): DataFrame = {
+    val f = c.addRse("001")
+    val names = Seq("share", "sum", "ratio", "prod")
+    val w = f.withPairs("share" -> f.proportion("002", "001"), "sum" -> f.sumM("003", "004"),
+      "ratio" -> f.ratio("003", "002"), "prod" -> f.product("002", "003"))
+    w.df.select((Seq("geoid", "B17001001_rse") ++ names.flatMap(n => Seq(n, n + "_m90")))
+      .map(w.df(_)): _*)
+  }
+
   test("a derived-measure request over a driver frame folds its projections once") {
     val cf = CensusReporterDecoder.toFrame(spark, fixtureTable)
-    def request(c: CensusFrame): DataFrame = {
-      val f = c.addRse("001")
-      val names = Seq("share", "sum", "ratio", "prod")
-      val w = f.withPairs("share" -> f.proportion("002", "001"), "sum" -> f.sumM("003", "004"),
-        "ratio" -> f.ratio("003", "002"), "prod" -> f.product("002", "003"))
-      w.df.select((Seq("geoid", "B17001001_rse") ++ names.flatMap(n => Seq(n, n + "_m90")))
-        .map(w.df(_)): _*)
-    }
     val q = request(cf)
     var rows: Array[org.apache.spark.sql.Row] = null
     val jobs = TestSpark.jobsOf(spark) { rows = q.collect() }
     assert(jobs == 0, s"derived-measure collect ran $jobs jobs")
     val qe = q.queryExecution
-    // addRse, withPairs and select reach the optimizer as one Project
-    assert(qe.normalized.collect { case p: Project => p }.size == 1, qe.normalized.treeString)
-    assert(qe.tracker.rules(ConvertToLocalRelation.ruleName).numEffectiveInvocations == 1)
+    // addRse, withPairs and select reach the fold rule as one Project over
+    // the leaf, which it folds in one pass
+    val unfolded = spark.newSession()
+    unfolded.conf.set("spark.sql.optimizer.excludedRules", FoldDriverRelation.ruleName)
+    request(CensusReporterDecoder.toFrame(unfolded, fixtureTable)).queryExecution
+      .optimizedPlan match {
+        case Project(_, _: DriverRelation) =>
+        case p => fail(p.treeString)
+      }
+    assert(qe.tracker.rules(FoldDriverRelation.ruleName).numEffectiveInvocations == 1)
     qe.optimizedPlan match {
-      case l: LocalRelation => assert(l.output.map(_.name) == q.columns.toSeq)
+      case l: DriverRelation => assert(l.output.map(_.name) == q.columns.toSeq)
       case p => fail(p.treeString)
     }
     // the same request over the same rows read from an RDD, folded by no rule
@@ -183,7 +188,7 @@ class CensusPlanSpec extends AnyFunSuite {
   }
 
   test("an ANSI long-sum overflow fails collect with ARITHMETIC_OVERFLOW on both paths") {
-    Seq("", "graft.plans.LocalAggregate").foreach { excluded =>
+    Seq("", FoldDriverRelation.ruleName).foreach { excluded =>
       val s = spark.newSession()
       s.conf.set("spark.sql.ansi.enabled", "true")
       s.conf.set("spark.sql.optimizer.excludedRules", excluded)
@@ -195,6 +200,43 @@ class CensusPlanSpec extends AnyFunSuite {
       val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       assert(chain.exists(t => String.valueOf(t.getMessage).contains("ARITHMETIC_OVERFLOW")),
         s"excluded '$excluded': $e")
+    }
+  }
+
+  test("a warm repeat of a request per tier compiles no new class and runs no job") {
+    val dir = java.nio.file.Files.createTempDirectory("warm-compiles")
+    val vre = dir.resolve("vr.csv")
+    java.nio.file.Files.write(vre, ((Seq("TBLID", "GEOID", "ORDER", "TITLE", "CME",
+      "ESTIMATE", "MOE") ++ (1 to 80).map(i => s"Var_Rep$i")).mkString(",") +: (1 to 3).map(r =>
+      (Seq("B01001", s"g$r", r.toString, "Total", "", "100", "5") ++
+        (1 to 80).map(i => (100 + i % 7).toString)).mkString(",")))
+      .mkString("", "\n", "\n").getBytes)
+    val tiers = Seq[(String, () => Array[org.apache.spark.sql.Row])](
+      "derived measures" -> (() =>
+        request(CensusReporterDecoder.toFrame(spark, fixtureTable)).collect()),
+      "grouped with_m90" -> { () =>
+        CensusReporterDecoder.toFrame(spark, fixtureTable).df.createOrReplaceTempView("warm")
+        spark.sql("SELECT substr(geoid, 1, 9) AS grp, with_m90(B17001001) FROM warm " +
+          "GROUP BY substr(geoid, 1, 9)").collect()
+      },
+      "census api" -> { () =>
+        val df = CensusApi.toDataFrame(spark, Seq("NAME", "aE", "aM", "bE", "bM"),
+          Seq(Seq("p1", "10", "2", "4", "1"), Seq("p2", "20", "3", "5", "2")))
+        val f = CensusFrame(df.select(col("NAME") +: Seq("a", "b").flatMap(x => Seq(
+          col(x + "E").cast("double").as(x), col(x + "M").cast("double").as(x + "_m90"))): _*))
+          .addRse("a")
+        f.withPairs("share" -> f.proportion("b", "a")).df.collect()
+      },
+      "vre" -> (() => VarRep.loadVarRep(spark, vre.toString).select(col("GEOID"),
+        VarRep.replicateMoe(col("ESTIMATE"), col("replicates"))).collect()))
+    tiers.foreach { case (name, run) =>
+      val cold = run()
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      var warm: Array[org.apache.spark.sql.Row] = null
+      val jobs = TestSpark.jobsOf(spark) { warm = run() }
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      assert(warm.toSeq == cold.toSeq, name)
+      assert(compiled == 0 && jobs == 0, s"$name: warm repeat compiled $compiled, ran $jobs jobs")
     }
   }
 }

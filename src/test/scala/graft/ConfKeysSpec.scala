@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The library's own `spark.graft.*` settings are a closed set: a new
   * dial must be added here, in README and in a test that runs both of
   * its sides — never silently. Likewise the environment: only
-  * [[HarnessEnv]]'s table reads it.
+  * [[HarnessEnv]]'s table reads it; and driver frames: only
+  * [[graft.plans.FoldDriverRelation]] folds them.
   */
 class ConfKeysSpec extends AnyFunSuite {
   private def sources[A](read: Path => Seq[A]): Seq[A] = {
@@ -36,5 +37,22 @@ class ConfKeysSpec extends AnyFunSuite {
     }
     assert(readers == Seq("HarnessEnv.scala"),
       s"files reading the environment: ${readers.sorted.mkString(", ")}")
+  }
+
+  test("driver frames have one fold path") {
+    val localRelations = sources { f =>
+      val src = Files.readString(f)
+      if (f.toString.contains("/graft/sources/") &&
+          Seq("LocalRelation", "createDataFrame", "createDataset").exists(src.contains))
+        Seq(f.getFileName.toString) else Nil
+    }
+    assert(localRelations.isEmpty,
+      s"graft.sources files building a LocalRelation: ${localRelations.sorted.mkString(", ")}")
+    val folds = sources { f =>
+      val src = Files.readString(f)
+      Seq("CollapseLocalProjects", "ConvertToLocalRelation").filter(src.contains)
+        .map(n => s"${f.getFileName}: $n")
+    }
+    assert(folds.isEmpty, s"second driver-fold paths in src/main: ${folds.sorted.mkString(", ")}")
   }
 }

@@ -103,20 +103,26 @@ class HarnessEnvSpec extends AnyFunSuite {
       val exit = Process(cmd, None, env: _*).!(log)
       (exit, out.toString)
     }
+    val cluster = Seq("local[1]", "/tmp/sf", "q01")
+    // (main, arguments, environment, what the failure names); a bad
+    // argument exits 2 with the usage line, a bad setting exits non-zero
     Seq(
-      ("graft.Bench", Seq.empty[String], "SPARK_GRAFT_BENCH_RUNS" -> "three"),
-      ("graft.Verify", Seq("/tmp/sf", "/tmp/out"), "STRESS_TRUTH" -> "yes"),
-      ("graft.Stress", Seq.empty[String], "STRESS_FACTOR" -> "ten"),
-      ("graft.StreamStress", Seq.empty[String], "STREAM_STRESS_PROVIDER" -> "RocksDB"),
-      ("graft.ClusterPerf", Seq("local[1]", "/tmp/sf", "q01", "4", "64"),
-        "CLUSTERPERF_COALESCE" -> "off")
-    ).foreach { case (main, args, bad) =>
-      val (exit, out) = runMain(main, args, bad)
-      assert(exit != 0, s"$main exited 0 on ${bad._1}=${bad._2}:\n$out")
-      assert(out.contains(s"${bad._1}=${bad._2}"), s"$main:\n$out")
+      ("graft.Bench", Seq.empty[String], Seq("SPARK_GRAFT_BENCH_RUNS" -> "three"), ""),
+      ("graft.Verify", Seq("/tmp/sf", "/tmp/out"), Seq("STRESS_TRUTH" -> "yes"), ""),
+      ("graft.Stress", Seq.empty[String], Seq("STRESS_FACTOR" -> "ten"), ""),
+      ("graft.StreamStress", Seq.empty[String], Seq("STREAM_STRESS_PROVIDER" -> "RocksDB"), ""),
+      ("graft.ClusterPerf", cluster ++ Seq("4", "64"), Seq("CLUSTERPERF_COALESCE" -> "off"), ""),
+      ("graft.Verify", Seq("/tmp/sf"), Nil, "usage: Verify"),
+      ("graft.ClusterPerf", cluster ++ Seq("four", "64"), Nil, "shufflePartitions=four"),
+      ("graft.ClusterPerf", cluster ++ Seq("4", "0"), Nil, "advisoryMB=0"),
+      ("graft.ClusterPerf", cluster ++ Seq("4", "64", "extra"), Nil, "got 6")
+    ).foreach { case (main, args, env, named) =>
+      val (exit, out) = runMain(main, args, env: _*)
+      val want = env.map { case (k, v) => s"$k=$v" }.headOption.getOrElse(named)
+      assert(exit != 0 && (env.nonEmpty || exit == 2), s"$main exited $exit on $want:\n$out")
+      assert(out.contains(want), s"$main:\n$out")
+      assert(env.nonEmpty || out.contains(s"usage: ${main.stripPrefix("graft.")}"), out)
       assert(!out.contains("SparkContext"), s"$main started Spark:\n$out")
     }
-    val (exit, out) = runMain("graft.Verify", Seq("/tmp/sf"))
-    assert(exit == 2 && out.contains("usage: Verify"), out)
   }
 }

@@ -9,16 +9,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.DriverFrame
 
-/** [[graft.plans.LocalAggregate]]: an aggregate over a driver frame folds
-  * to its result, and everything the rule must not fold stays a Spark
-  * `Aggregate`. Every result is compared with a session that lists the
-  * rule in Spark's `spark.sql.optimizer.excludedRules`.
+/** [[graft.plans.FoldDriverRelation]]'s aggregates: an aggregate over a
+  * driver frame folds to its result, and everything the rule must not fold
+  * stays a Spark `Aggregate`. Every result is compared with a session that
+  * lists the rule in Spark's `spark.sql.optimizer.excludedRules`.
   */
 class LocalAggregateSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   lazy val reference: SparkSession = {
     val s = spark.newSession()
-    s.conf.set("spark.sql.optimizer.excludedRules", "graft.plans.LocalAggregate")
+    s.conf.set("spark.sql.optimizer.excludedRules", graft.plans.FoldDriverRelation.ruleName)
     s
   }
 

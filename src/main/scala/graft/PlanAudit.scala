@@ -88,8 +88,8 @@ object PlanAudit {
     "q149_chunk_overlap" -> "sliding-window chunking: pure map-side sequence+explode (fan-out bounded by doc length, never corpus size) + per-chunk slice/concat; the output sort is the only exchange",
     "q150_hybrid_rrf" -> "hybrid RRF retrieval: BM25 and dense rankings both end in bounded TopKScored partials, so the fusion full-outer join and window re-rank touch ≤2·k·|Q| rows regardless of corpus size; the dense pass is one map-side corpus scan against the |Q|-row broadcast anchor table",
     "q151_ngram_diversity" -> "per-source diversity profile: explode → partial-aggregated counts; the exact DISTINCT shuffles map-side-deduped (source, gram) pairs (approx_count_distinct is the one-pass 100 TB dial); the source-level join is tiny",
-    "q152_edit_distance_neardup" -> "edit-distance near-dup, bucket-local fused: each text crosses the wire once per band (never per pair); VerifiedEditPairs expands/band-skips/length-gates/verifies in place with the bit-parallel Myers kernel, per-member code points converted once; singleton buckets pruned payload-free; hot buckets (>4096) fall back to the pair-join form — 482 s → 2.0 s warm at 10×, spill eliminated at 100×",
-    "q157_edit_neardup_rep" -> "q152's verify at SUB-QUADRATIC cost: each bucket member verifies against the bucket-minimum representative only (b−1 Myers calls per bucket, never ~b²/2) and CC absorbs transitivity. Default plan is the id-join form — ids-only banding, min-per-bucket partial agg (no text in any aggregation buffer), ≤Σ(b−1) distinct pairs before texts move, codegen'd scalar Myers verify — measured 19.3M vs 10.8e9 kernel calls at 1000×/5M docs, 75.5 s warm on the default heap, zero spill; the fused VerifiedEditRep generator stays behind fused=true (path-parity-locked)",
+    "q152_edit_distance_neardup" -> "edit-distance near-dup, bucket-local (Dedup.verifyBuckets, q72's pipeline): each text crosses the wire once per band (never per pair); VerifiedEditPairs walks the i<j member pairs with the first-shared-band skip, length-gates and verifies in place with the bounded bit-parallel Myers kernel, per-member code points converted once; singleton buckets pruned payload-free; hot buckets (>4096) verify through Dedup.verifyPairs' pair join — 482 s → 2.0 s warm at 10×, spill eliminated at 100×",
+    "q157_edit_neardup_rep" -> "q152's verify at SUB-QUADRATIC cost: each bucket member verifies against the bucket-minimum representative only (b−1 Myers calls per bucket, never ~b²/2) and CC absorbs transitivity. Id-join plan — ids-only banding, min-per-bucket partial agg (no text in any aggregation buffer), ≤Σ(b−1) distinct pairs before texts move, then Dedup.verifyPairs' one text join per side into the length-gated, codegen'd scalar Myers verify — measured 19.3M vs 10.8e9 kernel calls at 1000×/5M docs, 75.5 s warm on the default heap, zero spill; the bucket-collect generator form OOMed the 8 GB heap there and was deleted",
     "q155_canonical_dedup" -> "Unicode-canonical exact dedup: NFC+casefold+whitespace-collapse canonical key is one map-side projection (native NfcNormalize, already-normalized fast path); the dedup is one partial-aggregated groupBy — clone classes collapse map-side, same plan as q40",
     "q153_funnel_steps" -> "ordered funnel: each step a conditional-min agg (map-side partial min per user before its exchange; event-type filter pushed to the scan) joined user-keyed to the previous step's ≤1-row-per-user table (AQE broadcast while it fits); final counts fold the step tables in ONE aggregation — no per-user event collection, no scalar-subquery cross join",
     "q154_retention_cohorts" -> "retention cohorts: (user, week) activity map-side-deduped before its one exchange; cohort anchor table ≤1 row/user; the (cohort, offset) rollup partial-aggregates; week offsets are exact integer day arithmetic",
@@ -128,14 +128,16 @@ object PlanAudit {
     sb ++= "| query | shuffles | broadcasts | joins | codegen spans | pushdown | why this shape scales |\n"
     sb ++= "|---|---|---|---|---|---|---|\n"
 
-    // q72's own audited plan is truncated at its eager localCheckpoint
-    // (the pinned edges appear as a LogicalRDD scan), so the verify
-    // pipeline the pin hides — bucket-local fused generator, singleton
-    // prune, hot fallback — is audited here UN-checkpointed as its own
-    // row. Not a SparkEntry query: this is q72's internal edge subtree.
+    // q72's audited plan is truncated at its eager localCheckpoint (the
+    // pinned edges appear as a LogicalRDD scan), and q161's stage pins
+    // hide its edge step the same way, so both verify pipelines are
+    // audited here UN-checkpointed as their own rows. Not SparkEntry
+    // queries: these are internal edge subtrees.
     val extra: Seq[(String, org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame, String)] = Seq(
       ("q72_verify_edges", s => graft.queries.PipelineQueries.verifiedEdges(s, sfDir),
-        "the verify pipeline q72 pins: bucket-local fused verify generator; singleton prune; payload crosses the wire once per band"))
+        "the verify pipeline q72 pins: bucket-local fused verify generator; singleton prune; payload crosses the wire once per band"),
+      ("q161_rep_edges", s => graft.queries.PipelineQueries.q161RepEdges(s, sfDir),
+        "q161's stage-2 edges over the stage-1 survivors (the stage pin hides them): ids-only banding, min-per-bucket partial agg, distinct (doc, rep) pairs before any shingle set moves, then one payload join per side into the codegen'd merge-scan Jaccard"))
 
     val allAudits: Seq[(String, org.apache.spark.sql.SparkSession => org.apache.spark.sql.DataFrame, String)] =
       audited.map { case (n, w) =>

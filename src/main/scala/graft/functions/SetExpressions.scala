@@ -199,37 +199,56 @@ case class JaccardSorted(left: Expression, right: Expression)
       newRight: Expression): JaccardSorted = copy(left = newLeft, right = newRight)
 }
 
-/** Bucket-local near-dup verification in ONE generator: takes a
-  * collected LSH bucket — `array<struct<doc_id, bkeys, shset>>`, the
-  * members of one (band, bkey) group — plus the bucket's band index, and
-  * emits the verified pairs `struct<doc_a, doc_b>` (ids ordered asc)
-  * whose sorted-set Jaccard meets `threshold`.
+/** The bucket walk both bucket-local verify generators share: takes a
+  * collected LSH bucket — `array<struct<doc_id, bkeys, payload>>`, the
+  * members of one (band, bkey) group — plus the bucket's band index,
+  * and emits one row per i<j member pair the subclass's [[verify]]
+  * keeps, ids ordered asc.
   *
   * Why a generator instead of `pair_combinations` → filter (tier (b→c)
   * escalation, measured): the compositional form materializes BOTH
-  * members' full payloads — two shingle sets, ~KBs — into an unsafe row
-  * for EVERY i<j pair before the filter can drop it. Within-bucket pair
-  * count is quadratic in bucket size, so at 100× replica scale that
-  * copy stream was the q72 wall time (~82 s warm, CPU-bound, after the
-  * shuffle was already linear). Here the payloads are read once into
-  * object arrays per bucket and each pair costs one merge scan; only
-  * the surviving (long, long) rows ever exist downstream.
+  * members' full payloads — two shingle sets or texts, ~KBs — into an
+  * unsafe row for EVERY i<j pair before the filter can drop it.
+  * Within-bucket pair count is quadratic in bucket size, so at 100×
+  * replica scale that copy stream was the q72 wall time (~82 s warm,
+  * CPU-bound, after the shuffle was already linear). Here each member's
+  * id, earlier band keys and payload are read ONCE per bucket into
+  * object arrays and each pair costs one [[verify]] call; only the
+  * surviving rows ever exist downstream.
   *
   * A pair is verified at its FIRST shared band only: pairs whose
   * `bkeys` already matched at an earlier band index are skipped (they
   * were emitted by that band's bucket), so each candidate pair costs
-  * one Jaccard across the whole job, not one per shared band.
+  * one verify across the whole job, not one per shared band, and the
+  * output is duplicate-free without a distinct. The band index comes
+  * from the caller, so it is checked: a negative band, or a member
+  * carrying fewer band keys than the band index, throws instead of
+  * reading past the key array.
+  *
+  * The threshold of each subclass is a constructor literal, not an
+  * evaluated child: it is fixed per plan.
   */
-case class VerifiedJaccardPairs(members: Expression, band: Expression,
-    threshold: Double)
-    extends Expression with Generator with CodegenFallback {
+abstract class BucketPairWalk[P <: AnyRef] extends Expression with Generator
+    with CodegenFallback {
 
-  override def children: Seq[Expression] = Seq(members, band)
-  override def prettyName: String = "verified_jaccard_pairs"
+  def members: Expression
+  def band: Expression
 
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("doc_a", LongType, nullable = false),
-    StructField("doc_b", LongType, nullable = false)))
+  /** The member struct's third field: its type, and how the type-check
+    * message and the null-field error name it. */
+  protected def payloadType: DataType
+  protected def payloadSql: String
+  protected def payloadName: String
+
+  /** Reads member `m`'s payload (struct field 2, non-null) once per
+    * bucket. */
+  protected def load(m: InternalRow): P
+
+  /** The output row for the pair (`lo` < `hi` ids, or equal), or null
+    * when the pair does not verify. */
+  protected def verify(a: P, b: P, lo: Long, hi: Long): InternalRow
+
+  final override def children: Seq[Expression] = Seq(members, band)
 
   override def checkInputDataTypes(): TypeCheckResult =
     (members.dataType, band.dataType) match {
@@ -244,45 +263,50 @@ case class VerifiedJaccardPairs(members: Expression, band: Expression,
       case (ArrayType(StructType(Array(
             StructField(_, LongType, _, _),
             StructField(_, ArrayType(StringType, false), _, _),
-            StructField(_, ArrayType(LongType, false), _, _))), false),
-          IntegerType) =>
+            StructField(_, pt, _, _))), false),
+          IntegerType) if pt == payloadType =>
         TypeCheckResult.TypeCheckSuccess
       case (m, b) => TypeCheckResult.TypeCheckFailure(
         s"$prettyName requires (array<struct<long, array<string> non-null " +
-          s"elems, array<bigint> non-null elems>> non-null elems, int), " +
-          s"got ($m, $b)")
+          s"elems, $payloadSql>> non-null elems, int), got ($m, $b)")
     }
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
+  final override def eval(input: InternalRow): IterableOnce[InternalRow] = {
     val v = members.eval(input)
     val bandV = band.eval(input)
     if (v == null || bandV == null) return Iterator.empty
+    val bandIdx = bandV.asInstanceOf[Int]
+    if (bandIdx < 0)
+      throw new IllegalArgumentException(s"$prettyName: band $bandIdx is negative")
     val arr = v.asInstanceOf[ArrayData]
     val n = arr.numElements()
     if (n < 2) return Iterator.empty
-    val bandIdx = bandV.asInstanceOf[Int]
-    // one materialization per bucket: ids, earlier band keys, sets
+    // one materialization per bucket: ids, earlier band keys, payloads
     val ids = new Array[Long](n)
     val earlier = new Array[Array[UTF8String]](n)
-    val sets = new Array[ArrayData](n)
+    val payloads = new Array[AnyRef](n)
     var i = 0
     while (i < n) {
       val m = arr.getStruct(i, 3)
       // the element types are non-null by the analysis check; the struct
       // FIELDS can still be nullable-typed (parquet ids are), so a null
       // field fails loudly here instead of as a garbage getLong read or
-      // an NPE inside the merge scan
+      // an NPE inside the verify
       if (m.isNullAt(0) || m.isNullAt(1) || m.isNullAt(2))
         throw new IllegalArgumentException(
           s"$prettyName: null member field in bucket struct " +
-            s"(doc_id/bkeys/shset must all be non-null)")
+            s"(doc_id/bkeys/$payloadName must all be non-null)")
       ids(i) = m.getLong(0)
       val bk = m.getArray(1)
+      if (bk.numElements() < bandIdx)
+        throw new IllegalArgumentException(
+          s"$prettyName: band $bandIdx needs $bandIdx earlier band keys per " +
+            s"member, doc_id ${ids(i)} has ${bk.numElements()}")
       val e = new Array[UTF8String](bandIdx)
       var k = 0
       while (k < bandIdx) { e(k) = bk.getUTF8String(k); k += 1 }
       earlier(i) = e
-      sets(i) = m.getArray(2)
+      payloads(i) = load(m)
       i += 1
     }
     new Iterator[InternalRow] {
@@ -302,12 +326,9 @@ case class VerifiedJaccardPairs(members: Expression, band: Expression,
             k += 1
           }
           if (!shared) {
-            val jac = SortedSetOps.jaccard(sets(a), sets(b))
-            if (jac != null && jac.doubleValue() >= threshold) {
-              val x = ids(a)
-              val y = ids(b)
-              return InternalRow(math.min(x, y), math.max(x, y))
-            }
+            val row = verify(payloads(a).asInstanceOf[P], payloads(b).asInstanceOf[P],
+              math.min(ids(a), ids(b)), math.max(ids(a), ids(b)))
+            if (row != null) return row
           }
         }
         null
@@ -318,39 +339,69 @@ case class VerifiedJaccardPairs(members: Expression, band: Expression,
       }
     }
   }
+}
+
+/** Bucket-local near-dup Jaccard verification: members carry their
+  * sorted shingle-hash set (`array<bigint>`, [[ShingleHashSet]]'s
+  * output); emits `struct<doc_a, doc_b>` for every pair whose
+  * merge-scan Jaccard meets `threshold`.
+  */
+case class VerifiedJaccardPairs(members: Expression, band: Expression,
+    threshold: Double)
+    extends BucketPairWalk[ArrayData] {
+
+  override def prettyName: String = "verified_jaccard_pairs"
+
+  override def elementSchema: StructType = StructType(Seq(
+    StructField("doc_a", LongType, nullable = false),
+    StructField("doc_b", LongType, nullable = false)))
+
+  override protected def payloadType: DataType = ArrayType(LongType, containsNull = false)
+  override protected def payloadSql: String = "array<bigint> non-null elems"
+  override protected def payloadName: String = "shset"
+
+  override protected def load(m: InternalRow): ArrayData = m.getArray(2)
+
+  override protected def verify(a: ArrayData, b: ArrayData, lo: Long,
+      hi: Long): InternalRow = {
+    val jac = SortedSetOps.jaccard(a, b)
+    if (jac != null && jac.doubleValue() >= threshold) InternalRow(lo, hi)
+    else null
+  }
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): VerifiedJaccardPairs =
     copy(members = newChildren(0), band = newChildren(1))
 }
 
-/** Bucket-local fused EDIT-DISTANCE verifier — [[VerifiedJaccardPairs]]'
-  * twin for q152, with the text payload in place of the shingle set.
+/** A bucket member's text with its code points, converted once per
+  * bucket and shared across the member's pairs. */
+final class CodePointText(val utf8: UTF8String) {
+  val cps: Array[Int] = EditDistance.toCodePoints(utf8)
+}
+
+/** Bucket-local EDIT-DISTANCE verification — [[VerifiedJaccardPairs]]'
+  * twin for q152, with the text payload in place of the shingle set;
+  * emits `struct<doc_a, doc_b, edit_dist, max_len>` for every pair
+  * within `distFrac` × the longer text.
   *
   * Why: the compose-then-join form shipped BOTH pair texts through two
   * pair-keyed exchanges — quadratic in clone-cluster size (measured at
   * 100× replica scale: 2.6 GB shuffle + 2.0 GB spill, 147 s warm). Here
   * a doc's text crosses the wire once per band; pairs expand, band-skip,
-  * and verify inside the generator, and only surviving (doc_a, doc_b,
-  * edit_dist, max_len) longs materialize as rows.
+  * and verify inside the generator.
   *
-  * Per-bucket cost discipline: each member's text converts to its
-  * code-point array ONCE (shared across its pairs); a pair whose length
-  * difference alone exceeds `distFrac × max_len` is rejected before any
-  * DP (edit distance ≥ length difference); byte-equal texts short-cut to
-  * distance 0; everything else runs the bit-parallel Myers kernel
-  * ([[EditDistance.distance]]). A pair sharing bands i < k is emitted at
-  * band i only (the carried earlier-band keys), so the output is
-  * duplicate-free without a distinct.
-  *
-  * `distFrac` is a constructor literal (not an evaluated child), same
-  * rationale as [[VerifiedJaccardPairs]]' threshold.
+  * Per-pair cost discipline: a pair whose length difference alone
+  * exceeds `distFrac × max_len` is rejected before any DP (edit distance
+  * ≥ length difference); byte-equal texts short-cut to distance 0;
+  * everything else runs the bounded bit-parallel Myers kernel
+  * ([[EditDistance.distanceBounded]]), which abandons a non-matching
+  * long pair after ~cap columns and is exact when kept.
   */
 case class VerifiedEditPairs(members: Expression, band: Expression,
     distFrac: Double)
-    extends Expression with Generator with CodegenFallback {
+    extends BucketPairWalk[CodePointText] {
 
-  override def children: Seq[Expression] = Seq(members, band)
   override def prettyName: String = "verified_edit_pairs"
 
   override def elementSchema: StructType = StructType(Seq(
@@ -359,211 +410,32 @@ case class VerifiedEditPairs(members: Expression, band: Expression,
     StructField("edit_dist", LongType, nullable = false),
     StructField("max_len", LongType, nullable = false)))
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    (members.dataType, band.dataType) match {
-      // same non-null element discipline as VerifiedJaccardPairs: the
-      // producing plan (collect_list of struct) is non-null by
-      // construction; anything else is rejected at analysis time
-      case (ArrayType(StructType(Array(
-            StructField(_, LongType, _, _),
-            StructField(_, ArrayType(StringType, false), _, _),
-            StructField(_, StringType, _, _))), false),
-          IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (m, b) => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires (array<struct<long, array<string> non-null " +
-          s"elems, string>> non-null elems, int), got ($m, $b)")
-    }
+  override protected def payloadType: DataType = StringType
+  override protected def payloadSql: String = "string"
+  override protected def payloadName: String = "text"
 
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = members.eval(input)
-    val bandV = band.eval(input)
-    if (v == null || bandV == null) return Iterator.empty
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n < 2) return Iterator.empty
-    val bandIdx = bandV.asInstanceOf[Int]
-    val ids = new Array[Long](n)
-    val earlier = new Array[Array[UTF8String]](n)
-    val texts = new Array[UTF8String](n)
-    val cps = new Array[Array[Int]](n)
-    var i = 0
-    while (i < n) {
-      val m = arr.getStruct(i, 3)
-      if (m.isNullAt(0) || m.isNullAt(1) || m.isNullAt(2))
-        throw new IllegalArgumentException(
-          s"$prettyName: null member field in bucket struct " +
-            s"(doc_id/bkeys/text must all be non-null)")
-      ids(i) = m.getLong(0)
-      val bk = m.getArray(1)
-      val e = new Array[UTF8String](bandIdx)
-      var k = 0
-      while (k < bandIdx) { e(k) = bk.getUTF8String(k); k += 1 }
-      earlier(i) = e
-      texts(i) = m.getUTF8String(2)
-      cps(i) = EditDistance.toCodePoints(texts(i))
-      i += 1
-    }
-    new Iterator[InternalRow] {
-      private var ii = 0
-      private var jj = 1
-      private var nextRow: InternalRow = advance()
-      private def advance(): InternalRow = {
-        while (ii < n - 1) {
-          val a = ii
-          val b = jj
-          jj += 1
-          if (jj == n) { ii += 1; jj = ii + 1 }
-          var shared = false
-          var k = 0
-          while (!shared && k < bandIdx) {
-            if (earlier(a)(k).equals(earlier(b)(k))) shared = true
-            k += 1
-          }
-          if (!shared) {
-            val la = cps(a).length
-            val lb = cps(b).length
-            val maxLen = math.max(la, lb)
-            val cap = distFrac * maxLen
-            // length gate: dist >= |la - lb|, so a gap past the cap
-            // can never verify — no DP
-            if (math.abs(la - lb) <= cap) {
-              // bounded kernel: a non-matching long pair abandons after
-              // ~cap columns instead of the full scan (exact when kept)
-              val dist =
-                if (texts(a).equals(texts(b))) 0
-                else EditDistance.distanceBounded(cps(a), cps(b),
-                  math.floor(cap).toInt)
-              if (dist >= 0 && dist <= cap) {
-                val x = ids(a)
-                val y = ids(b)
-                return InternalRow(math.min(x, y), math.max(x, y),
-                  dist.toLong, maxLen.toLong)
-              }
-            }
-          }
-        }
-        null
-      }
-      override def hasNext: Boolean = nextRow != null
-      override def next(): InternalRow = {
-        val r = nextRow; nextRow = advance(); r
-      }
-    }
+  override protected def load(m: InternalRow): CodePointText =
+    new CodePointText(m.getUTF8String(2))
+
+  override protected def verify(a: CodePointText, b: CodePointText, lo: Long,
+      hi: Long): InternalRow = {
+    val la = a.cps.length
+    val lb = b.cps.length
+    val maxLen = math.max(la, lb)
+    val cap = distFrac * maxLen
+    // length gate: dist >= |la - lb|, so a gap past the cap can never
+    // verify — no DP
+    if (math.abs(la - lb) > cap) return null
+    val dist =
+      if (a.utf8.equals(b.utf8)) 0
+      else EditDistance.distanceBounded(a.cps, b.cps, math.floor(cap).toInt)
+    if (dist >= 0 && dist <= cap) InternalRow(lo, hi, dist.toLong, maxLen.toLong)
+    else null
   }
 
   override protected def withNewChildrenInternal(
       newChildren: IndexedSeq[Expression]): VerifiedEditPairs =
     copy(members = newChildren(0), band = newChildren(1))
-}
-
-/** Bucket-REPRESENTATIVE edit-distance verifier — the sub-quadratic
-  * scale dial for [[VerifiedEditPairs]] at extreme clone cardinality
-  * (q157; the q118 streaming shape, batch-side).
-  *
-  * [[VerifiedEditPairs]] verifies all i<j member pairs: exact pair
-  * recall, but a b-member clone bucket pays ~b²/2 Myers calls — at
-  * 1000-member cliques that is the plan's one structural cliff (the
-  * round-11 verdict's task 1). A keep-list only needs CONNECTIVITY,
-  * so this form verifies each member against the bucket REPRESENTATIVE
-  * (the minimum doc_id — deterministic whatever order `collect_list`
-  * delivered) and lets connected components absorb transitivity:
-  * exactly b−1 kernel calls per bucket, O(b) by construction.
-  *
-  * Recall trade (spec-locked on the planted-clique corpus): an emitted
-  * edge is still an EXACT verified pair (precision 1 — every rep edge
-  * is also a [[VerifiedEditPairs]] edge, so rep components always
-  * REFINE pairwise components); a pair can be missed only when neither
-  * doc verifies against the rep in ANY of their shared bands. On clone
-  * cliques (the regime that makes b large) every member matches the
-  * rep and recall is total.
-  *
-  * Member payload is (doc_id, text) only — no band keys: the
-  * first-shared-band skip cannot apply (whether a pair verified in an
-  * earlier band depends on that bucket's rep, not on co-presence), so
-  * duplicate (rep, member) edges across bands are reconciled by the
-  * caller's `distinct` over identical rows instead.
-  */
-case class VerifiedEditRep(members: Expression, distFrac: Double)
-    extends UnaryExpression with Generator with CodegenFallback {
-
-  override def child: Expression = members
-  override def prettyName: String = "verified_edit_rep"
-
-  override def elementSchema: StructType = StructType(Seq(
-    StructField("doc_a", LongType, nullable = false),
-    StructField("doc_b", LongType, nullable = false),
-    StructField("edit_dist", LongType, nullable = false),
-    StructField("max_len", LongType, nullable = false)))
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    members.dataType match {
-      case ArrayType(StructType(Array(
-            StructField(_, LongType, _, _),
-            StructField(_, StringType, _, _))), false) =>
-        TypeCheckResult.TypeCheckSuccess
-      case m => TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires array<struct<long, string>> with " +
-          s"non-null elements, got $m")
-    }
-
-  override def eval(input: InternalRow): IterableOnce[InternalRow] = {
-    val v = members.eval(input)
-    if (v == null) return Iterator.empty
-    val arr = v.asInstanceOf[ArrayData]
-    val n = arr.numElements()
-    if (n < 2) return Iterator.empty
-    val ids = new Array[Long](n)
-    val texts = new Array[UTF8String](n)
-    var rep = 0
-    var i = 0
-    while (i < n) {
-      val m = arr.getStruct(i, 2)
-      if (m.isNullAt(0) || m.isNullAt(1))
-        throw new IllegalArgumentException(
-          s"$prettyName: null member field in bucket struct " +
-            s"(doc_id/text must both be non-null)")
-      ids(i) = m.getLong(0)
-      texts(i) = m.getUTF8String(1)
-      if (ids(i) < ids(rep)) rep = i
-      i += 1
-    }
-    val repId = ids(rep)
-    val repCps = EditDistance.toCodePoints(texts(rep))
-    val repText = texts(rep)
-    val r = rep
-    new Iterator[InternalRow] {
-      private var j = 0
-      private var nextRow: InternalRow = advance()
-      private def advance(): InternalRow = {
-        while (j < n) {
-          val b = j
-          j += 1
-          if (b != r) {
-            val cb = EditDistance.toCodePoints(texts(b))
-            val maxLen = math.max(repCps.length, cb.length)
-            val cap = distFrac * maxLen
-            if (math.abs(repCps.length - cb.length) <= cap) {
-              val dist =
-                if (repText.equals(texts(b))) 0
-                else EditDistance.distanceBounded(repCps, cb,
-                  math.floor(cap).toInt)
-              if (dist >= 0 && dist <= cap)
-                return InternalRow(repId, ids(b), dist.toLong, maxLen.toLong)
-            }
-          }
-        }
-        null
-      }
-      override def hasNext: Boolean = nextRow != null
-      override def next(): InternalRow = {
-        val row = nextRow; nextRow = advance(); row
-      }
-    }
-  }
-
-  override protected def withNewChildInternal(
-      newChild: Expression): VerifiedEditRep = copy(members = newChild)
 }
 
 object SortedSetOps {
@@ -632,15 +504,9 @@ object SetFunctions {
       GraftSqlBridge.expression(members), GraftSqlBridge.expression(band),
       distFrac))
 
-  /** Generator Column for [[VerifiedEditRep]]: yields `doc_a` (the
-    * bucket-minimum rep), `doc_b`, `edit_dist`, `max_len` — b−1 kernel
-    * calls per bucket, the sub-quadratic connectivity dial.
-    */
-  def verifiedEditRep(members: Column, distFrac: Double): Column =
-    GraftSqlBridge.column(VerifiedEditRep(
-      GraftSqlBridge.expression(members), distFrac))
-
-  /** SQL surface for all three kernels — same codegen'd expressions the
+  /** SQL surface for the set kernels (`shingle_hash_set`,
+    * `intersect_card_sorted`, `jaccard_sorted`) and the
+    * `verified_jaccard_pairs` generator — the same expressions the
     * Column API binds.
     */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {

@@ -1,9 +1,11 @@
 package graft.operators
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+
+import graft.functions.{EditDistance, SetFunctions}
 
 /** Near-dup banding frames and cluster-representative selection for
   * near-dup keep-lists (the step after candidate generation +
@@ -11,9 +13,11 @@ import org.apache.spark.sql.functions._
   *
   * This object is the one home of the near-dup law's FRAME-level parts:
   * the per-(doc, band) explode ([[bandRows]]), the band-sharing pair
-  * join ([[bandPairs]]), the bucket-size probe with its singleton prune
-  * and hot split ([[probeBuckets]]) and the bucket-minimum rep pairs
-  * ([[repPairs]]). The per-doc column laws they band over live in
+  * join ([[bandPairs]]), the bucket-minimum rep pairs ([[repPairs]]) and
+  * verification end to end: the bucket-local pipeline with its
+  * singleton prune and hot split ([[verifyBuckets]]) and the id-pair
+  * payload join ([[verifyPairs]]), each applying a caller-chosen
+  * [[Verifier]]. The per-doc column laws they band over live in
   * [[TextOps]].
   *
   * [[keepListToFixpoint]] runs min-label propagation over the verified
@@ -92,10 +96,95 @@ object Dedup {
     bands.join(reps, Seq("band", "bkey")).filter(col(rep) < col("doc_id"))
   }
 
+  /** One near-dup verify law in the two shapes this object runs it:
+    *  - `bucket(members, band)` is the generator over one collected
+    *    bucket, `array<struct<doc_id, bkeys, payload>>` plus its band
+    *    index ([[graft.functions.BucketPairWalk]]);
+    *  - `pairs` keeps the rows of a joined id-pair frame (`doc_a`,
+    *    `doc_b`, both payloads as `pay_a`, `pay_b`) that verify, with the
+    *    generator's output columns.
+    * `payload` names the per-doc column both shapes read.
+    */
+  final case class Verifier(payload: String,
+      bucket: (Column, Column) => Column,
+      pairs: DataFrame => DataFrame)
+
+  /** Sorted-set Jaccard ≥ `threshold` over the `shset` payload
+    * ([[TextOps.shingleSet]]); emits `doc_a`, `doc_b`. */
+  def jaccardAtLeast(threshold: Double): Verifier = Verifier("shset",
+    SetFunctions.verifiedJaccardPairs(_, _, threshold),
+    _.filter(SetFunctions.jaccardSorted(col("pay_a"), col("pay_b")) >= threshold)
+      .select(col("doc_a"), col("doc_b")))
+
+  /** Edit distance ≤ `distFrac` × the longer text over the `text`
+    * payload; emits `doc_a`, `doc_b`, `edit_dist`, `max_len`. The pair
+    * form applies the generator's length gate first (dist ≥ |len_a −
+    * len_b|, so the DP never runs on pairs the gap alone rejects), then
+    * the bounded Myers kernel: exact when kept, and it abandons a
+    * non-matching long pair after ~cap columns (dist is an integer, so
+    * dist ≤ frac·len ⟺ dist ≤ ⌊frac·len⌋ — the generator's cap).
+    */
+  def editWithin(distFrac: Double): Verifier = {
+    val (ta, tb) = (col("pay_a"), col("pay_b"))
+    val maxLen = greatest(length(ta), length(tb))
+    val cap = lit(distFrac) * maxLen
+    Verifier("text", SetFunctions.verifiedEditPairs(_, _, distFrac),
+      _.filter(abs(length(ta) - length(tb)) <= cap)
+        .select(col("doc_a"), col("doc_b"),
+          EditDistance.editDistanceBoundedNative(ta, tb, floor(cap).cast("int"))
+            .cast("long").as("edit_dist"),
+          maxLen.cast("long").as("max_len"))
+        .filter(col("edit_dist") >= 0))
+  }
+
+  /** Verifies an id-pair frame (`doc_a`, `doc_b`): joins `payload`'s
+    * `(doc_id, v.payload)` onto `doc_a`, then onto `doc_b`, and applies
+    * `v`'s pair law. Each side's payload shuffles once, keyed by its id
+    * — never once per band. The hot-bucket fallback of
+    * [[verifyBuckets]] and the rep-anchored pairs (q157, q161) run here.
+    */
+  def verifyPairs(pairs: DataFrame, payload: DataFrame, v: Verifier): DataFrame = {
+    def side(id: String, pay: String) =
+      payload.select(col("doc_id").as(id), col(v.payload).as(pay))
+    v.pairs(pairs.join(side("doc_a", "pay_a"), "doc_a")
+      .join(side("doc_b", "pay_b"), "doc_b"))
+  }
+
+  /** Bucket-local verification of a per-doc `(doc_id, bkeys, payload)`
+    * frame: every (band, bkey) bucket collects its members' id, band
+    * keys and payload once and `v`'s generator verifies the i<j member
+    * pairs in place, so a payload crosses the wire once per band, never
+    * once per candidate pair (the pair-join form is quadratic in
+    * clone-cluster size). [[probeBuckets]] drops the singleton buckets
+    * payload-free and splits off the buckets over `hotCap` members,
+    * which verify through [[verifyPairs]] over their banded pairs. A
+    * pair first banded in a hot bucket that also shares a later small
+    * bucket comes out of both paths; the distinct over their union
+    * removes it. `probeKey` keys the memoized probe — distinct inputs
+    * MUST use distinct keys.
+    */
+  def verifyBuckets(base: DataFrame, probeKey: String, hotCap: Int,
+      pruneBroadcastLimit: Long, v: Verifier): DataFrame = {
+    // band keys only - the light frame for bucket sizing and hot pairs
+    val light = bandRows(base, Seq("doc_id"))
+    val buckets = probeBuckets(light,
+      bandRows(base, Seq("doc_id", "bkeys", v.payload)),
+      probeKey, hotCap, pruneBroadcastLimit)
+    val small = buckets.small.groupBy(col("band"), col("bkey"))
+      .agg(collect_list(struct(col("doc_id"), col("bkeys"), col(v.payload))).as("ms"))
+      .select(v.bucket(col("ms"), col("band")))
+    // at every tested scale the hot set is empty and the fallback
+    // subplan - with its extra corpus scans - never enters the plan
+    buckets.hot.fold(small) { hot =>
+      val pairs = bandPairs(light.join(broadcast(hot), Seq("band", "bkey"), "left_semi"))
+      small.union(verifyPairs(pairs, base, v)).distinct()
+    }
+  }
+
   /** [[probeBuckets]]' result: the payload rows to verify bucket-locally
     * and, when any bucket is over `hotCap`, the hot `(band, bkey)` keys
-    * for the caller's pair-join fallback. */
-  final case class Buckets(small: DataFrame, hot: Option[DataFrame])
+    * for the pair-join fallback. */
+  private final case class Buckets(small: DataFrame, hot: Option[DataFrame])
 
   /** The bucket-size probe over a light `(band, bkey)` frame, applied to
     * a banded `payload` frame:
@@ -110,10 +199,10 @@ object Dedup {
     * Both counts ride ONE narrow aggregate, memoized under
     * `probeKey` + `hotCap` like the trained models: the bucket-size
     * profile is a corpus property, and re-probing on every construction
-    * would re-run the signature pass each bench round. Distinct inputs
-    * MUST use distinct keys. Absent subplans never enter the plan.
+    * would re-run the signature pass each bench round. Absent subplans
+    * never enter the plan.
     */
-  def probeBuckets(light: DataFrame, payload: DataFrame, probeKey: String,
+  private def probeBuckets(light: DataFrame, payload: DataFrame, probeKey: String,
       hotCap: Int, pruneBroadcastLimit: Long): Buckets = {
     val sizes = light.groupBy(col("band"), col("bkey"))
       .agg(count(lit(1)).as("n"))

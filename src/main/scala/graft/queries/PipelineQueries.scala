@@ -555,30 +555,25 @@ object PipelineQueries {
   /** Verified near-dup edges — q43's banded candidates at exact Jaccard
     * ≥ 0.5 — emitted in both directions as (src, dst).
     *
-    * Verification is BUCKET-LOCAL: each (band, bkey) bucket collects its
-    * members' (doc_id, band keys, shingle set) once and streams the i<j
-    * member pairs through the [[graft.functions.PairCombinations]]
-    * generator, verifying in place. A doc's shingle-set payload crosses
-    * the wire once per band (4×), not once per candidate pair — the
-    * pair-join form it replaces replicated both sets per pair, which is
-    * quadratic in clone-cluster size: at 100× replica scale (500k docs,
-    * ~100-member clusters) it measured 4.6 GB shuffle + 2.2 GB spill for
-    * q72 where this form's verify stage shuffles linearly in docs×bands.
-    * Each pair is verified once, at its FIRST shared band (later bands
-    * skip it by comparing the carried band keys).
+    * Verification is BUCKET-LOCAL ([[graft.operators.Dedup.verifyBuckets]]
+    * with the [[graft.functions.VerifiedJaccardPairs]] generator): a
+    * doc's shingle-set payload crosses the wire once per band (4×), not
+    * once per candidate pair — the pair-join form it replaces replicated
+    * both sets per pair, which is quadratic in clone-cluster size: at
+    * 100× replica scale (500k docs, ~100-member clusters) it measured
+    * 4.6 GB shuffle + 2.2 GB spill for q72 where this form's verify
+    * stage shuffles linearly in docs×bands.
     *
-    * The [[graft.operators.Dedup.probeBuckets]] prunes keep that linear
-    * bound TIGHT. The singleton prune matters because in a mostly-unique
-    * corpus (the 100 TB common case, and the base testdata) almost every
-    * bucket is a singleton: without it the bucket shuffle ships 4×
-    * corpus payload where the old pair-join form shipped almost nothing
-    * (measured at sf0.1: 11 MB vs 0.2 MB, 2.4× wall regression). Hot
-    * buckets fall back to the old pair-join form, restricted to those
-    * buckets, so only pathological buckets pay the quadratic shuffle. A
-    * pair first banded in a hot bucket that ALSO shares a later small
-    * bucket is emitted by both paths; the final distinct dedups. The
-    * resulting edge SET is bit-identical to the naive
-    * candidates→join→verify composition (spec-locked, all paths forced).
+    * The bucket probe's prunes keep that linear bound TIGHT. The
+    * singleton prune matters because in a mostly-unique corpus (the
+    * 100 TB common case, and the base testdata) almost every bucket is a
+    * singleton: without it the bucket shuffle ships 4× corpus payload
+    * where the old pair-join form shipped almost nothing (measured at
+    * sf0.1: 11 MB vs 0.2 MB, 2.4× wall regression). Hot buckets fall
+    * back to the pair-join form, restricted to those buckets, so only
+    * pathological buckets pay the quadratic shuffle. The resulting edge
+    * SET is bit-identical to the naive candidates→join→verify
+    * composition (spec-locked, all paths forced).
     */
   private[graft] def verifiedEdges(s: SparkSession, d: String,
       hotCap: Int = 256, pruneBroadcastLimit: Long = 1000000L): DataFrame =
@@ -610,41 +605,17 @@ object PipelineQueries {
         col("shset")) ++ extra.map { case (n, _) => col(n) }: _*)
 
   /** Edge-generation core over a prepared [[edgeBase]]-shaped frame
-    * (doc_id, bkeys, shset). `probeKey` keys the memoized bucket-size
-    * probe - distinct inputs MUST use distinct keys.
+    * (doc_id, bkeys, shset): bucket-local Jaccard ≥ 0.5 (see
+    * [[graft.functions.VerifiedJaccardPairs]] for why the
+    * compose-then-filter form was the 100x wall time). `probeKey` keys
+    * the memoized bucket-size probe - distinct inputs MUST use distinct
+    * keys.
     */
   private def verifiedEdgesOf(base: DataFrame, probeKey: String,
       hotCap: Int, pruneBroadcastLimit: Long): DataFrame = {
-    import graft.functions.SetFunctions
     import graft.operators.Dedup
-    // band keys only - the light frame for bucket sizing and hot candidates
-    val explSig = Dedup.bandRows(base, Seq("doc_id", "bkeys"))
-    // at every tested scale the hot set is empty and the fallback
-    // subplan - with its extra corpus scans - never enters the plan
-    val buckets = Dedup.probeBuckets(explSig,
-      Dedup.bandRows(base, Seq("doc_id", "bkeys", "shset")),
-      s"edgeprobe:$probeKey", hotCap, pruneBroadcastLimit)
-    // one fused generator per bucket: pair expansion, the
-    // first-shared-band skip (a pair sharing bands i < k verifies at
-    // band i only), and the merge-scan Jaccard all run over the bucket's
-    // object arrays - only surviving (doc_a, doc_b) longs are ever
-    // materialized as rows (see [[graft.functions.VerifiedJaccardPairs]]
-    // for why the compose-then-filter form was the 100x wall time)
-    val verSmall = buckets.small.groupBy(col("band"), col("bkey"))
-      .agg(collect_list(struct(col("doc_id"), col("bkeys"), col("shset"))).as("ms"))
-      .select(SetFunctions.verifiedJaccardPairs(col("ms"), col("band"), 0.5))
-    val ver = buckets.hot.fold(verSmall) { hotBuckets =>
-      val hotCand = Dedup.bandPairs(
-        explSig.join(broadcast(hotBuckets), Seq("band", "bkey"), "left_semi")
-          .select(col("band"), col("bkey"), col("doc_id")))
-      val shs = base.select(col("doc_id"), col("shset"))
-      val verHot = hotCand
-        .join(shs.select(col("doc_id").as("doc_a"), col("shset").as("sh_a")), "doc_a")
-        .join(shs.select(col("doc_id").as("doc_b"), col("shset").as("sh_b")), "doc_b")
-        .filter(SetFunctions.jaccardSorted(col("sh_a"), col("sh_b")) >= 0.5)
-        .select(col("doc_a"), col("doc_b"))
-      verSmall.union(verHot)
-    }.distinct()
+    val ver = Dedup.verifyBuckets(base, s"edgeprobe:$probeKey", hotCap,
+      pruneBroadcastLimit, Dedup.jaccardAtLeast(0.5)).distinct()
     ver.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .union(ver.select(col("doc_b").as("src"), col("doc_a").as("dst")))
   }
@@ -4057,14 +4028,13 @@ object PipelineQueries {
     // similarity ≥ 0.8 of the longer text. Catches the near-dups the
     // set-based verifiers miss-rank (token REORDERING leaves Jaccard
     // at 1.0 but edit distance sees it; small in-word typos shift
-    // whole shingles but cost 1 char edit). Scale shape: the candidate
-    // table joins the corpus twice to fetch pair texts (pair-keyed
-    // shuffles, no corpus self-join); the per-pair verify is the native
+    // whole shingles but cost 1 char edit). Scale shape: bucket-local
+    // verify (each text crosses the wire once per band, never per pair;
+    // see [[editDistanceNearDup]]); the per-pair verify is the native
     // bit-parallel Myers kernel ([[graft.functions.EditDistance]],
     // O(len²/64) words instead of the builtin's O(len²) decoded cells —
     // measured 524 s → seconds on the 10× clique corpus' 314k
-    // candidates); for multi-KB docs compose with a length gate and
-    // Ukkonen banding (kernel doc). ----
+    // candidates) behind a length gate, bounded at the distance cap. ----
     Q("q152_edit_distance_neardup", (s, d) => editDistanceNearDup(s, d),
       Some(q152OracleSql), bench = true),
 
@@ -4076,7 +4046,7 @@ object PipelineQueries {
     // kernel calls where the pairwise form pays ~500k. Every emitted
     // edge is still an exact verified pair (precision 1), so rep
     // components refine the pairwise form's — equal on clone cliques
-    // (spec-locked). Scale shape (id-join default): ids-only banding,
+    // (spec-locked). Scale shape (id-join): ids-only banding,
     // min-per-bucket partial agg (no text in any aggregation buffer —
     // executor memory flat at any clone cardinality), ≤Σ(b−1) distinct
     // pairs before texts move, texts shuffle exactly twice, codegen'd
@@ -4191,23 +4161,36 @@ object PipelineQueries {
     * here).
     */
   private[graft] def repAnchoredEdges(docsDf: DataFrame): DataFrame = {
-    import graft.functions.SetFunctions
     import graft.operators.Dedup
     // both the band keys and the shingle payloads come from [[edgeBase]]
     // (Catalyst column-prunes the unused column from each branch)
     val base = edgeBase(docsDf)
-    val bands = Dedup.bandRows(base, Seq("doc_id"))
     // the rep groupBy's (band, bkey) exchange and the rep join's are
     // identical subplans — ReuseExchange dedupes the banding pass
-    val pairs = Dedup.repPairs(bands)
-      .select(col("doc_id"), col("rep")).distinct()
-    val sh = base.select(col("doc_id"), col("shset").as("sh"))
-    val ver = pairs
-      .join(sh.select(col("doc_id"), col("sh").as("sh_a")), "doc_id")
-      .join(sh.select(col("doc_id").as("rep"), col("sh").as("sh_b")), "rep")
-      .filter(SetFunctions.jaccardSorted(col("sh_a"), col("sh_b")) >= 0.5)
-      .select(col("doc_id").as("src"), col("rep").as("dst"))
+    val pairs = Dedup.repPairs(Dedup.bandRows(base, Seq("doc_id")))
+      .select(col("doc_id").as("doc_a"), col("rep").as("doc_b")).distinct()
+    val ver = Dedup.verifyPairs(pairs, base, Dedup.jaccardAtLeast(0.5))
+      .select(col("doc_a").as("src"), col("doc_b").as("dst"))
     ver.union(ver.select(col("dst").as("src"), col("src").as("dst")))
+  }
+
+  /** q160/q161 stage 1's survivor ids: the minimum doc_id of each
+    * canonical text class (q155). Groups on the 128-bit md5 of the
+    * canonical form, not the form itself (r19, guide §2.3 shuffle fewer
+    * bytes): the exchange carries 32 fp chars per class instead of the
+    * full normalized TEXT — q87's accepted fp-collapse discipline.
+    */
+  private def canonicalSurvivorIds(all: DataFrame): DataFrame =
+    all.select(col("doc_id"), TextOps.canonicalKey(col("text")).as("cfp"))
+      .groupBy(col("cfp")).agg(min(col("doc_id")).as("doc_id"))
+      .select(col("doc_id"))
+
+  /** q161's stage-2 edges — [[repAnchoredEdges]] over the UN-pinned
+    * stage-1 survivors: the plan q161's stage pins hide, audited as its
+    * own PLANS.md row. */
+  private[graft] def q161RepEdges(s: SparkSession, d: String): DataFrame = {
+    val all = docs(s, d)
+    repAnchoredEdges(all.join(canonicalSurvivorIds(all), Seq("doc_id"), "left_semi"))
   }
 
   /** q160's composed pretrain-prep chain. `budget` is the stage-5 token
@@ -4247,15 +4230,7 @@ object PipelineQueries {
     // q160 5.62→6.10 s / q161 5.20→6.10 s with spreads on (quiet-box
     // subset A/B, r18). The per-stage pins already bound each stage's
     // single-task kernel pass to one copy.
-    val s1 = stage(1, "canonical_dedup") {
-      // group on the 128-bit md5 of the canonical form, not the form
-      // itself (r19, guide §2.3 shuffle fewer bytes): the exchange
-      // carries 32 fp chars per class instead of the full normalized
-      // TEXT — q87's accepted fp-collapse discipline
-      all.select(col("doc_id"), TextOps.canonicalKey(col("text")).as("cfp"))
-        .groupBy(col("cfp")).agg(min(col("doc_id")).as("doc_id"))
-        .select(col("doc_id"))
-    }
+    val s1 = stage(1, "canonical_dedup")(canonicalSurvivorIds(all))
     val d1 = all.join(s1, Seq("doc_id"), "left_semi")
 
     // stage 2 — near-dup fixpoint keep-list (q87) over the canonical
@@ -5060,136 +5035,50 @@ object PipelineQueries {
     * 0.2 in BOTH engines (each parses it to the same nearest double),
     * and edit_sim is canonicalized via the decimal-cast hop.
     *
-    * Verification is BUCKET-LOCAL, same shape as [[verifiedEdgesOf]]:
-    * the first (pair-join) form shipped both pair texts through two
-    * pair-keyed exchanges — quadratic in clone-cluster size, measured
-    * at 100× replica scale as 2.6 GB shuffle + 2.0 GB spill / 147 s
-    * warm. Here each doc's text crosses the wire once per band into its
-    * (band, bkey) bucket; [[graft.functions.VerifiedEditPairs]] expands
-    * the i<j member pairs in place (each member's code points converted
-    * once, length-gate before any DP, first-shared-band skip so every
-    * pair verifies exactly once) and only surviving id/dist/len longs
-    * materialize. [[graft.operators.Dedup.probeBuckets]] prunes the
-    * singleton buckets and splits off the ones past `hotCap`, which fall
-    * back to the pair-join form restricted to those buckets — then a
-    * final distinct reconciles the two paths (a fused-path pair can also
-    * appear via a hot band, never with a different dist).
+    * Verification is BUCKET-LOCAL, [[verifiedEdgesOf]]' pipeline
+    * ([[graft.operators.Dedup.verifyBuckets]]) with the
+    * [[graft.functions.VerifiedEditPairs]] generator, whose doc has the
+    * measured why and the per-pair cost discipline; buckets past
+    * `hotCap` verify through the pair-join form.
     */
   private[graft] def editDistanceNearDup(s: SparkSession, d: String,
       distFrac: Double = 0.2, hotCap: Int = 4096,
       pruneBroadcastLimit: Long = 1000000L): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
     import graft.operators.Dedup
-    val base = editBase(s, d)
-    val expl = Dedup.bandRows(base, Seq("doc_id", "bkeys", "text"))
-    val buckets = Dedup.probeBuckets(Dedup.bandRows(base, Nil), expl,
-      s"editprobe:$d", hotCap, pruneBroadcastLimit)
-    val fused = buckets.small.groupBy(col("band"), col("bkey"))
-      .agg(collect_list(struct(col("doc_id"), col("bkeys"), col("text"))).as("ms"))
-      .select(graft.functions.SetFunctions
-        .verifiedEditPairs(col("ms"), col("band"), distFrac))
-    val verified = buckets.hot.fold(fused) { hot =>
-      val t = base.select(col("doc_id"), col("text"))
-      val hotPairs = Dedup.bandPairs(
-          expl.join(broadcast(hot), Seq("band", "bkey"), "left_semi"))
-        .join(t.select(col("doc_id").as("doc_a"), col("text").as("ta")), "doc_a")
-        .join(t.select(col("doc_id").as("doc_b"), col("text").as("tb")), "doc_b")
-        .select(col("doc_a"), col("doc_b"),
-          graft.functions.EditDistance.editDistanceBoundedNative(
-              col("ta"), col("tb"),
-              floor(lit(distFrac) * greatest(length(col("ta")),
-                length(col("tb")))).cast("int"))
-            .cast("long").as("edit_dist"),
-          greatest(length(col("ta")), length(col("tb"))).cast("long")
-            .as("max_len"))
-        .filter(col("edit_dist") >= 0)
-      fused.union(hotPairs).distinct()
-    }
-    verified
-      .select(col("doc_a"), col("doc_b"), col("edit_dist"), col("max_len"),
-        (lit(1.0) - col("edit_dist").cast(DoubleType) /
-            col("max_len").cast(DoubleType))
-          .cast(DecimalType(18, 6)).cast(DoubleType).as("edit_sim"))
-      .orderBy(col("doc_a"), col("doc_b"))
+    withEditSim(Dedup.verifyBuckets(editBase(s, d), s"editprobe:$d", hotCap,
+      pruneBroadcastLimit, Dedup.editWithin(distFrac)))
   }
 
   /** q157's rep-verified edges: [[editDistanceNearDup]]'s sub-quadratic
-    * scale dial — within each (band, bkey) bucket every member verifies
-    * against the bucket REPRESENTATIVE (minimum doc_id) only, b−1 Myers
-    * calls per bucket instead of ~b²/2
-    * ([[graft.functions.VerifiedEditRep]]). The keep-list downstream
-    * needs CONNECTIVITY, not the full pair set: connected components
-    * absorb transitivity, and every emitted edge is still an exact
-    * verified pair, so rep components always REFINE the pairwise form's
-    * (spec-locked, with equality on planted clone cliques — the regime
-    * that makes buckets large). No hot-bucket fallback: a 10⁶-member
-    * clone bucket costs 10⁶−1 kernel calls here, which is the point.
+    * scale form (see the Q entry comment) — within each (band, bkey)
+    * bucket every member verifies against the bucket REPRESENTATIVE
+    * (minimum doc_id) only. No hot-bucket fallback: a 10⁶-member clone
+    * bucket costs 10⁶−1 kernel calls here, which is the point.
     *
-    * Two plans, path-parity-locked identical: the DEFAULT id-join form
-    * (ids-only banding, min-per-bucket partial agg, cross-band distinct
-    * BEFORE texts move, texts shuffled exactly twice, codegen'd scalar
-    * Myers verify — executor memory flat at any clone cardinality) and
-    * the `fused = true` bucket-collect generator (one scan, but the
-    * per-task open-bucket text footprint is executor-memory-bound at
-    * extreme cardinality — measured OOM at 8 GB / 5M docs where the
-    * id-join ran 75.5 s with zero spill).
+    * The id-join plan: only (doc_id, band, bkey) IDS flow through the
+    * banding — the rep per bucket is a partial-aggregated min over ids
+    * (no text ever sits in an aggregation buffer, so executor memory is
+    * flat at any clone cardinality), and the cross-band distinct
+    * collapses the pair set to ≤ Σ(b−1) unique (rep, member) pairs
+    * BEFORE [[graft.operators.Dedup.verifyPairs]] moves any text. A
+    * bucket-collect generator form measured OOM at 8 GB / 5M docs where
+    * this form ran 75.5 s with zero spill (PLANS.md Round 12), and was
+    * deleted.
     */
   private[graft] def editDistanceNearDupRep(s: SparkSession, d: String,
-      distFrac: Double = 0.2, pruneBroadcastLimit: Long = 1000000L,
-      fused: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.types.{DecimalType, DoubleType}
+      distFrac: Double = 0.2): DataFrame = {
     import graft.operators.Dedup
     val base = editBase(s, d)
-    val light = Dedup.bandRows(base, Seq("doc_id"))
-    val verified = if (fused) {
-      // fused generator path (texts collected per bucket; the one-scan
-      // shape, kept for path parity and as the q118 streaming analogue).
-      // Its per-task cost is the OPEN-BUCKET text footprint — at 16k-
-      // member clone buckets that is executor-memory-bound, which is
-      // why the id-join path below is the default.
-      // no hot split: a rep bucket costs b−1 kernel calls at any size
-      val pruned = Dedup.probeBuckets(light,
-        Dedup.bandRows(base, Seq("doc_id", "text")),
-        s"editrepprobe:$d", Int.MaxValue, pruneBroadcastLimit).small
-      pruned.groupBy(col("band"), col("bkey"))
-        .agg(collect_list(struct(col("doc_id"), col("text"))).as("ms"))
-        .select(graft.functions.SetFunctions
-          .verifiedEditRep(col("ms"), distFrac))
-        .distinct()
-    } else {
-      // DEFAULT: id-join form. Only (doc_id, band, bkey) IDS flow
-      // through the banding — the rep per bucket is a partial-
-      // aggregated min over ids (no text ever sits in an aggregation
-      // buffer, so executor memory is flat at any clone cardinality),
-      // the cross-band distinct collapses the pair set to ≤ Σ(b−1)
-      // unique (rep, member) pairs BEFORE any text moves, and the
-      // corpus texts shuffle exactly twice (keyed by doc_a / doc_b —
-      // never once per band). The verify is the codegen'd scalar Myers
-      // kernel with the same length gate the generator applies.
-      val pairs = Dedup.repPairs(light, "rep_id")
-        .select(col("rep_id").as("doc_a"), col("doc_id").as("doc_b"))
-        .distinct()
-      val t = base.select(col("doc_id"), col("text"))
-      pairs
-        .join(t.select(col("doc_id").as("doc_a"), col("text").as("ta")), "doc_a")
-        .join(t.select(col("doc_id").as("doc_b"), col("text").as("tb")), "doc_b")
-        // length gate first: dist ≥ |len_a − len_b|, so the DP never
-        // runs on pairs the gap alone rejects (mirrors the generator)
-        .filter(abs(length(col("ta")) - length(col("tb")))
-          <= lit(distFrac) * greatest(length(col("ta")), length(col("tb"))))
-        // bounded kernel: exact when kept, abandons a non-matching long
-        // pair after ~cap columns (dist integer, so dist ≤ frac·len ⟺
-        // dist ≤ ⌊frac·len⌋ — the generator's identical cap)
-        .select(col("doc_a"), col("doc_b"),
-          graft.functions.EditDistance.editDistanceBoundedNative(
-              col("ta"), col("tb"),
-              floor(lit(distFrac) * greatest(length(col("ta")),
-                length(col("tb")))).cast("int"))
-            .cast("long").as("edit_dist"),
-          greatest(length(col("ta")), length(col("tb"))).cast("long")
-            .as("max_len"))
-        .filter(col("edit_dist") >= 0)
-    }
+    val pairs = Dedup.repPairs(Dedup.bandRows(base, Seq("doc_id")), "rep_id")
+      .select(col("rep_id").as("doc_a"), col("doc_id").as("doc_b"))
+      .distinct()
+    withEditSim(Dedup.verifyPairs(pairs, base, Dedup.editWithin(distFrac)))
+  }
+
+  /** q152/q157's output: the verified (doc_a, doc_b, edit_dist, max_len)
+    * pairs with `edit_sim`, ordered. */
+  private def withEditSim(verified: DataFrame): DataFrame = {
+    import org.apache.spark.sql.types.{DecimalType, DoubleType}
     verified
       .select(col("doc_a"), col("doc_b"), col("edit_dist"), col("max_len"),
         (lit(1.0) - col("edit_dist").cast(DoubleType) /

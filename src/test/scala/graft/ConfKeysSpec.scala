@@ -9,8 +9,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** The library's own `spark.graft.*` settings are a closed set: a new
   * dial must be added here, in README and in a test that runs both of
   * its sides — never silently. Likewise the environment: only
-  * [[HarnessEnv]]'s table reads it; and driver frames: only
-  * [[graft.plans.FoldDriverRelation]] folds them.
+  * [[HarnessEnv]]'s table reads it; driver frames: only
+  * [[graft.plans.FoldDriverRelation]] folds them; and near-dup buckets:
+  * only [[graft.operators.Dedup]] probes and collects them.
   */
 class ConfKeysSpec extends AnyFunSuite {
   private def sources[A](read: Path => Seq[A]): Seq[A] = {
@@ -54,5 +55,19 @@ class ConfKeysSpec extends AnyFunSuite {
         .map(n => s"${f.getFileName}: $n")
     }
     assert(folds.isEmpty, s"second driver-fold paths in src/main: ${folds.sorted.mkString(", ")}")
+  }
+
+  test("near-dup buckets are probed and collected only in operators/Dedup") {
+    // the bucket-size probe and the per-bucket member collect (a struct
+    // led by doc_id) are the bucket-local verify pipeline's two steps:
+    // a file naming either outside Dedup is a second copy of it
+    val steps = Seq("probeBuckets(", """collect_list(struct(col("doc_id")""")
+    val homes = sources { f =>
+      val src = Files.readString(f)
+      steps.filter(src.contains)
+        .map(_ -> Paths.get("src/main/scala").relativize(f).toString)
+    }.groupMap(_._1)(_._2)
+    assert(homes == steps.map(_ -> Seq("graft/operators/Dedup.scala")).toMap,
+      s"bucket verify steps by file: $homes")
   }
 }

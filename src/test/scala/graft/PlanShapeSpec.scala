@@ -201,6 +201,19 @@ class PlanShapeSpec extends AnyFunSuite {
       s"bucket-local fused verify generator missing from the edge plan:\n$p")
   }
 
+  test("q161 rep edges (un-pinned stage 2): exchange count locked") {
+    // q161's stage pins hide its edge step from the query's own plan, so
+    // the step is read here over the un-pinned stage-1 survivors, after
+    // execution (the final adaptive plan, as PlanAudit reads it)
+    val df = withKernelSpread("off")(
+      graft.queries.PipelineQueries.q161RepEdges(spark, dir))
+    df.collect()
+    val p = df.queryExecution.executedPlan.toString
+    val shuffles = p.linesIterator.takeWhile(!_.contains("== Initial Plan =="))
+      .count(l => l.contains("Exchange") && !l.contains("BroadcastExchange"))
+    assert(shuffles == 4, s"q161 rep-edge exchanges moved ($shuffles):\n$p")
+  }
+
   test("q87: fixpoint keep-list stays cartesian-free (same kernel as q72)") {
     val p = planOf("q87_neardup_fixpoint")
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

@@ -959,15 +959,6 @@ class QueriesSpec extends AnyFunSuite {
     // kernel-call accounting: the rep form pays b−1 per bucket — on the
     // 8-member cliques that is ≤ 7·4 edges per clique vs 28·4 pairs
     assert(repEdges.length < pairEdges.length)
-    // path parity: the fused bucket-collect generator and the default
-    // id-join form are the same operator (q152's fused-vs-fallback
-    // discipline)
-    val fusedRows = PipelineQueries
-      .editDistanceNearDupRep(spark, tmp, fused = true)
-      .collect().map(_.toSeq).toSeq
-    val joinRows = PipelineQueries.editDistanceNearDupRep(spark, tmp)
-      .collect().map(_.toSeq).toSeq
-    assert(fusedRows == joinRows)
     // connectivity recall on the clone-clique regime: identical components
     val cp = components(pairEdges)
     val cr = components(repEdges)

@@ -185,6 +185,100 @@ class SetExprSpec extends AnyFunSuite {
     assert(run(0, Nil).isEmpty)
   }
 
+  /** The IllegalArgumentException in `e`'s cause chain (a task failure
+    * arrives wrapped in SparkExceptions). */
+  private def illegalArgument(e: Throwable): IllegalArgumentException =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case iae: IllegalArgumentException => iae }
+      .getOrElse(fail(s"no IllegalArgumentException in the cause chain of $e", e))
+
+  test("the bucket walk rejects a band its members' band keys cannot index") {
+    SetFunctions.register(spark)
+    // two members, one band key each, identical sets (Jaccard 1.0)
+    def pairs(band: Int) = spark.sql(
+      s"""SELECT verified_jaccard_pairs(
+            array(struct(1L, array('x'), array_compact(array(7L, 8L))),
+                  struct(2L, array('y'), array_compact(array(7L, 8L)))),
+            $band, 0.5)""").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(pairs(1) == Seq((1L, 2L)))
+    Seq(3, 5000).foreach { band =>
+      val e = illegalArgument(intercept[Exception](pairs(band)))
+      Seq("verified_jaccard_pairs", s"band $band", "has 1").foreach(w =>
+        assert(e.getMessage.contains(w), e.getMessage))
+    }
+    val neg = illegalArgument(intercept[Exception](pairs(-1)))
+    assert(neg.getMessage.contains("verified_jaccard_pairs") &&
+      neg.getMessage.contains("band -1"), neg.getMessage)
+  }
+
+  test("VerifiedEditPairs matches brute-force edit distance and skips " +
+      "earlier-shared bands") {
+    import spark.implicits._
+    import graft.functions.EditDistance
+    val frac = 0.2
+    def run(band: Int, ms: Seq[(Long, Seq[String], String)])
+        : Set[(Long, Long, Long, Long)] = {
+      val df = Seq((band, ms)).toDF("band", "msraw")
+        .select(col("band"), expr(
+          "transform(msraw, m -> struct(m._1 AS doc_id, " +
+            "array_compact(m._2) AS bkeys, m._3 AS text))").as("ms"))
+      df.select(SetFunctions.verifiedEditPairs(col("ms"), col("band"), frac))
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toSet
+    }
+    /** Every i<j pair sharing no band before `band`, within the cap. */
+    def bruteForce(band: Int, ms: Seq[(Long, Seq[String], String)])
+        : Set[(Long, Long, Long, Long)] =
+      ms.combinations(2).collect { case Seq(x, y)
+          if !(0 until band).exists(k => x._2(k) == y._2(k)) =>
+        val d = EditDistance.distance(
+          x._3.codePoints.toArray, y._3.codePoints.toArray)
+        val maxLen = math.max(x._3.codePointCount(0, x._3.length),
+          y._3.codePointCount(0, y._3.length))
+        (math.min(x._1, y._1), math.max(x._1, y._1), d.toLong, maxLen.toLong,
+          d <= frac * maxLen)
+      }.collect { case (a, b, d, l, true) => (a, b, d, l) }.toSet
+    val base = "the quick brown fox jumps over" // 30 code points, cap 6
+    val members = Seq(
+      (1L, Seq("x", "p", "r"), base),
+      (2L, Seq("x", "q", "s"), base.replace("quick", "quack")),  // d 1
+      (3L, Seq("y", "q", "t"), base),                            // == 1: d 0
+      (4L, Seq("z", "w", "t"), base + "s and"),                  // gap 5 ≤ 7
+      (5L, Seq("v", "u", "t"), base + " and runs"),              // gap 9 > 7
+      (6L, Seq("o", "n", "m"), "ünïcödé " + base.drop(8)),       // 30 cps
+      (7L, Seq("l", "k", "j"), "the QUICK brOwn fox jumps over")) // d 6 = cap
+    (0 to 2).foreach { band =>
+      assert(run(band, members) == bruteForce(band, members), s"band $band")
+    }
+    // equal texts verify at distance 0; a distance AT the cap verifies
+    assert(run(0, members).contains((1L, 7L, 6L, 30L)))
+    assert(run(0, members).contains((1L, 3L, 0L, 30L)))
+    // band 1 skips (1,2), which shared band 0; band 2 also skips (2,3)
+    assert(run(0, members).exists(p => p._1 == 1L && p._2 == 2L))
+    assert(!run(1, members).exists(p => p._1 == 1L && p._2 == 2L))
+    assert(run(1, members).exists(p => p._1 == 2L && p._2 == 3L))
+    assert(!run(2, members).exists(p => p._1 == 2L && p._2 == 3L))
+    // the length gate: a 9-code-point gap past the cap never verifies,
+    // a 5-code-point gap inside it does
+    assert(!run(0, members).exists(p => p._1 == 1L && p._2 == 5L))
+    assert(run(0, members).contains((1L, 4L, 5L, 35L)))
+    // unordered input yields ordered ids
+    assert(run(0, members.reverse) == run(0, members))
+    // singleton / empty buckets emit nothing
+    assert(run(0, members.take(1)).isEmpty)
+    assert(run(0, Nil).isEmpty)
+    // a null member field fails loudly, naming the function
+    val nullText = Seq((0, Seq((1L, Seq("x"), base), (2L, Seq("y"), null: String))))
+      .toDF("band", "msraw")
+      .select(col("band"), expr(
+        "transform(msraw, m -> struct(m._1 AS doc_id, " +
+          "array_compact(m._2) AS bkeys, m._3 AS text))").as("ms"))
+    val e = illegalArgument(intercept[Exception](nullText
+      .select(SetFunctions.verifiedEditPairs(col("ms"), col("band"), frac)).collect()))
+    assert(e.getMessage.contains("verified_edit_pairs") &&
+      e.getMessage.contains("null member field"), e.getMessage)
+  }
+
   test("verify stage stays inside whole-stage codegen (no interpreted fallback)") {
     val df = docs.filter(size(split(col("text"), " ")) >= 3)
       .select(col("doc_id"),

@@ -97,9 +97,6 @@ object AcsMath {
   def rse(est: Column, m90: Column): Column =
     d(m90) / lit(Z90) / d(est) * lit(100.0)
 
-  /** Standard error from a 90% margin: `m90 / 1.645`. */
-  def se(m90: Column): Column = m90 / lit(Z90)
-
   /** The grouped margin law: root-sum-of-squares `sqrt(Σ m²)`, squared in
     * double so an integral margin cannot overflow under ANSI.
     */

@@ -66,8 +66,8 @@ object BloomFunctions {
     * regime degrade at the budget you chose, not at a constant you
     * forgot. `floorItems`/`floorBits` keep small inventories on the old
     * dials so a filter is never sized DOWN below the pinned defaults;
-    * `maxBits` caps the task-literal budget (default 2^29 bits = 64 MB
-    * — one torrent-broadcast task binary per probing stage) — past it
+    * `MaxBits` caps the task-literal budget (2^29 bits = 64 MB — one
+    * torrent-broadcast task binary per probing stage) — past it
     * the TRUE item count still drives the hash-function choice, so fp
     * degrades GRACEFULLY (e.g. 100M items at 64 MB → k=4, fp ≈ 8%,
     * still pruning 92%) instead of saturating. The count runs once per
@@ -83,18 +83,17 @@ object BloomFunctions {
     */
   /** NOTE: `keys` must be the DISTINCT key frame — the sizing count is
     * a row count, and a non-distinct frame inflates n (a 10×-duplicated
-    * gram stream would size straight to `maxBits`). Every dial is part
+    * gram stream would size straight to `MaxBits`). Every dial is part
     * of the cache key, so same-tag calls at different dials never serve
     * each other's filter.
     */
   def trainBloomSizedCached(tag: String, keys: => DataFrame, key: => Column,
-      fpp: Double, floorItems: Long, floorBits: Long,
-      maxBits: Long = 1L << 29): Column =
+      fpp: Double, floorItems: Long, floorBits: Long): Column =
     bloomCache.computeIfAbsent(
-      s"$tag|sized|fpp=$fpp|floor=$floorItems/$floorBits|max=$maxBits",
+      s"$tag|sized|fpp=$fpp|floor=$floorItems/$floorBits",
       _ => {
         val n = math.max(keys.count(), floorItems)
-        val bits = math.min(maxBits, math.max(floorBits,
+        val bits = math.min(MaxBits, math.max(floorBits,
           math.ceil(-n * math.log(fpp) / (math.log(2) * math.log(2))).toLong))
         // build under a CLONED session (same SparkContext, private
         // SQLConf) so the raised clamps are SCOPED to this one build:
@@ -127,6 +126,9 @@ object BloomFunctions {
 
   private val bloomCache =
     new java.util.concurrent.ConcurrentHashMap[String, Column]()
+
+  /** The sized filter's bit budget: 2^29 bits = 64 MB. */
+  private val MaxBits = 1L << 29
 
   /** Probe: true when `key` MIGHT be in the filter (false positives
     * possible at the configured bits-per-item rate, false negatives

@@ -87,30 +87,19 @@ object ShingleHashSet {
     * encoding of the space-joined shingle, because the separator is the
     * single byte 0x20 and (in UTF-8) 0x20 can only BE the space
     * character — multi-byte sequences all have the high bit set. Token
-    * boundaries from byte-level 0x20 scanning therefore equal
-    * `String.split(" ", -1)`'s (empty tokens included), and each
+    * boundaries from byte-level 0x20 scanning ([[Utf8Tokens]]) therefore
+    * equal `String.split(" ", -1)`'s (empty tokens included), and each
     * shingle's digest equals `md5(utf8(w_i + " " + .. + w_{i+k-1}))`
     * bit for bit.
     */
   def compute(text: UTF8String, k: Int): ArrayData = {
     val b = text.getBytes // one bounded copy per row; no decode
-    val len = b.length
-    var nTok = 1
-    var i = 0
-    while (i < len) { if (b(i) == 0x20) nTok += 1; i += 1 }
-    if (nTok < k) return ArrayData.toArrayData(Array.empty[Long])
-    // starts(j) = byte offset of token j; sentinel starts(nTok) = len + 1
-    // so `starts(i + k) - 1` uniformly names the end of token i+k-1
-    // (the offset of the separating space, or len for the last token)
-    val starts = new Array[Int](nTok + 1)
-    var t = 1
-    i = 0
-    while (i < len) { if (b(i) == 0x20) { starts(t) = i + 1; t += 1 }; i += 1 }
-    starts(nTok) = len + 1
-    val n = nTok - k + 1
+    val starts = Utf8Tokens.starts(b, k)
+    if (starts == null) return ArrayData.toArrayData(Array.empty[Long])
+    val n = starts.length - k
     val md = digests.get()
     val hs = new Array[Long](n)
-    i = 0
+    var i = 0
     while (i < n) {
       val from = starts(i)
       md.reset()

@@ -157,10 +157,8 @@ object MinHashSig {
     * forwarder on the companion class). Returns null for < 3 tokens.
     *
     * Operates on the UTF8String's UTF-8 BYTES directly (the
-    * [[ShingleHashSet]] discipline): token boundaries from byte-level
-    * 0x20 scanning equal `String.split(" ", -1)`'s (0x20 can only BE the
-    * space character in UTF-8 — every byte of a multi-byte sequence has
-    * the high bit set), and the byte run from the start of token i to
+    * [[ShingleHashSet]] discipline): token boundaries come from
+    * [[Utf8Tokens]], and the byte run from the start of token i to
     * the end of token i+2 IS the UTF-8 encoding of the space-joined
     * 3-shingle. The digest therefore equals
     * `md5(utf8(j + "|" + w_i + " " + w_{i+1} + " " + w_{i+2}))` bit for
@@ -173,23 +171,13 @@ object MinHashSig {
     */
   def compute(text: UTF8String, nHashes: Int): ArrayData = {
     val b = text.getBytes
-    val len = b.length
-    var nTok = 1
-    var i = 0
-    while (i < len) { if (b(i) == 0x20) nTok += 1; i += 1 }
-    if (nTok < 3) return null
-    // starts(j) = byte offset of token j; sentinel starts(nTok) = len + 1
-    // so `starts(i + 3) - 1` uniformly names the end of token i+2
-    val starts = new Array[Int](nTok + 1)
-    var t = 1
-    i = 0
-    while (i < len) { if (b(i) == 0x20) { starts(t) = i + 1; t += 1 }; i += 1 }
-    starts(nTok) = len + 1
+    val starts = Utf8Tokens.starts(b, 3)
+    if (starts == null) return null
     val md = digests.get()
     val out = digestBuf.get()
     val mins = Array.fill(nHashes)(Long.MaxValue)
-    val n = nTok - 2
-    i = 0
+    val n = starts.length - 3
+    var i = 0
     while (i < n) {
       val from = starts(i)
       val slen = starts(i + 3) - 1 - from
@@ -398,6 +386,34 @@ case class Md5Hash32(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** Token boundaries of a UTF-8 text split on the single byte 0x20: they
+  * equal `String.split(" ", -1)`'s, empty tokens included, because 0x20
+  * can only BE the space character in UTF-8 (every byte of a multi-byte
+  * sequence has the high bit set).
+  */
+private[functions] object Utf8Tokens {
+
+  /** `starts(j)` = byte offset of token j, plus the sentinel
+    * `starts(nTok) = b.length + 1`, so `starts(i + k) - 1` uniformly names
+    * the end of token i+k-1 (the offset of the separating space, or
+    * `b.length` for the last token); the token count is
+    * `starts.length - 1`. Null below `minTokens` tokens.
+    */
+  def starts(b: Array[Byte], minTokens: Int): Array[Int] = {
+    val len = b.length
+    var nTok = 1
+    var i = 0
+    while (i < len) { if (b(i) == 0x20) nTok += 1; i += 1 }
+    if (nTok < minTokens) return null
+    val starts = new Array[Int](nTok + 1)
+    var t = 1
+    i = 0
+    while (i < len) { if (b(i) == 0x20) { starts(t) = i + 1; t += 1 }; i += 1 }
+    starts(nTok) = len + 1
+    starts
+  }
+}
+
 object Md5Hash32 {
 
   private val digests: ThreadLocal[MessageDigest] =
@@ -427,26 +443,15 @@ object GramHashArray {
     ThreadLocal.withInitial(() => new Array[Byte](16))
 
   /** Distinct k-gram hashes in first-occurrence order. Token boundaries
-    * from byte-level 0x20 scanning equal `split(" ", -1)`'s (0x20 cannot
-    * occur inside a UTF-8 multi-byte sequence); dedup probes compare the
-    * gram BYTE RUNS themselves, so distinctness is exactly string
-    * distinctness; md5 runs once per distinct gram.
+    * come from [[Utf8Tokens]]; dedup probes compare the gram BYTE RUNS
+    * themselves, so distinctness is exactly string distinctness; md5
+    * runs once per distinct gram.
     */
   def compute(text: UTF8String, k: Int): Array[Long] = {
     val b = text.getBytes
-    val len = b.length
-    var nTok = 1
-    var i = 0
-    while (i < len) { if (b(i) == 0x20) nTok += 1; i += 1 }
-    if (nTok < k) return Array.emptyLongArray
-    // starts(j) = byte offset of token j; sentinel starts(nTok) = len + 1
-    // so `starts(i + k) - 1` uniformly names the end of token i+k-1
-    val starts = new Array[Int](nTok + 1)
-    var t = 1
-    i = 0
-    while (i < len) { if (b(i) == 0x20) { starts(t) = i + 1; t += 1 }; i += 1 }
-    starts(nTok) = len + 1
-    val n = nTok - k + 1
+    val starts = Utf8Tokens.starts(b, k)
+    if (starts == null) return Array.emptyLongArray
+    val n = starts.length - k
     // open-addressing table at load ≤ 0.5; slots hold position + 1
     val cap = Integer.highestOneBit(math.max(4, 2 * n - 1)) << 1
     val mask = cap - 1
@@ -455,7 +460,7 @@ object GramHashArray {
     val out16 = digestBuf.get()
     val out = new Array[Long](n)
     var m = 0
-    i = 0
+    var i = 0
     while (i < n) {
       val from = starts(i)
       val glen = starts(i + k) - 1 - from

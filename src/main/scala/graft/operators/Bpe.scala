@@ -27,7 +27,8 @@ import org.apache.spark.sql.functions._
   * driver-side merge loop reproduces EXACTLY those padded-replace
   * semantics (see [[applyMergeToks]]), so the learned table is
   * bit-identical to the per-round-corpus-scan formulation the oracle
-  * unrolls.
+  * unrolls. Corpus frames carry the text in a `text` column (and
+  * [[tokenCounts]] its id in `doc_id`), as every pipeline table does.
   */
 object Bpe {
 
@@ -65,9 +66,9 @@ object Bpe {
     * word, ascending — deterministic), executed as a TakeOrdered, so
     * driver memory is bounded by N regardless of corpus pathology.
     */
-  def wordFreq(docs: DataFrame, textCol: String = "text",
-      minCount: Long = 1L, maxWords: Int = Int.MaxValue): Seq[(String, Long)] = {
-    val agg = docs.select(explode(split(col(textCol), " ")).as("word"))
+  def wordFreq(docs: DataFrame, minCount: Long = 1L,
+      maxWords: Int = Int.MaxValue): Seq[(String, Long)] = {
+    val agg = docs.select(explode(split(col("text"), " ")).as("word"))
       .filter(length(col("word")) > 0)
       .groupBy(col("word")).agg(count(lit(1)).as("n"))
       .filter(col("n") >= minCount)
@@ -177,8 +178,8 @@ object Bpe {
     * the driver-side weighted merge loop — corpus scan count is
     * independent of `rounds`.
     */
-  def train(docs: DataFrame, rounds: Int, textCol: String = "text"): Seq[Merge] =
-    trainFromFreq(wordFreq(docs, textCol), rounds)
+  def train(docs: DataFrame, rounds: Int): Seq[Merge] =
+    trainFromFreq(wordFreq(docs), rounds)
 
   /** Host twin of [[applyMerges]]: Java `String.replace` IS the padded
     * leftmost-non-overlapping semantics the expression chain uses, so
@@ -208,11 +209,10 @@ object Bpe {
     * deterministic, and bit-identical to the expression path on any
     * table size both can run ([[applyMergesHost]] ≡ [[applyMerges]]).
     */
-  def tokenCounts(docs: DataFrame, merges: Seq[Merge],
-      textCol: String = "text"): DataFrame = {
+  def tokenCounts(docs: DataFrame, merges: Seq[Merge]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select(col("doc_id").cast("long"), col(textCol)).as[(Long, String)]
+    docs.select(col("doc_id").cast("long"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
         it.map { case (id, text) =>
           val words = text.split(" ").filter(_.nonEmpty)

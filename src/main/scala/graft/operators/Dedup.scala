@@ -232,9 +232,9 @@ object Dedup {
     * recent [[connectedComponents]] run, same shape. */
   def lastCcStatsJson: String = PhaseStats.last(CcTag).json
 
-  /** @param docs  one row per document; `idCol` must be its unique id
+  /** @param docs  one row per document, keyed by its unique `doc_id`
     * @param edges verified near-dup pairs in BOTH directions, columns
-    *              `src`, `dst` (same type as `idCol`)
+    *              `src`, `dst` (same type as `doc_id`)
     * @param checkpointDir when set, every round checkpoints RELIABLY to
     *              this directory (HDFS/object store on a cluster) instead
     *              of to executor-local blocks, so losing an executor
@@ -245,19 +245,19 @@ object Dedup {
     *         consume (write/collect) before the SparkContext that
     *         produced it goes away.
     */
-  def keepListToFixpoint(docs: DataFrame, edges: DataFrame, idCol: String = "doc_id",
+  def keepListToFixpoint(docs: DataFrame, edges: DataFrame,
       maxRounds: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
-    val idType = docs.select(col(idCol)).schema.head.dataType
+    val idType = docs.select(col("doc_id")).schema.head.dataType
     // one propagation round over the pinned edges: `prev` keeps the
     // round's input label so the fold can count changes
     def step(e: DataFrame)(state: DataFrame): DataFrame = {
-      val labels = state.select(col(idCol), col("rep"))
+      val labels = state.select(col("doc_id"), col("rep"))
       val nbr = e.join(
-          labels.select(col(idCol).as("nbr_id"), col("rep").as("nrep")),
+          labels.select(col("doc_id").as("nbr_id"), col("rep").as("nrep")),
           col("dst") === col("nbr_id"))
         .groupBy(col("src")).agg(min(col("nrep")).as("minrep"))
-      labels.join(nbr, labels(idCol) === nbr("src"), "left")
-        .select(col(idCol), col("rep").as("prev"),
+      labels.join(nbr, labels("doc_id") === nbr("src"), "left")
+        .select(col("doc_id"), col("rep").as("prev"),
           least(col("rep"), coalesce(col("minrep"), col("rep"))).as("rep"))
     }
     val (labels, _) = Pin.iterate[Long](docs.sparkSession.sparkContext,
@@ -272,7 +272,7 @@ object Dedup {
       val (e, releaseE) =
         Pin.pin(edges.select(col("src"), col("dst")), checkpointDir)
       val (l, releaseL) = Pin.pin(
-        docs.select(col(idCol), col(idCol).as("rep")), checkpointDir)
+        docs.select(col("doc_id"), col("doc_id").as("rep")), checkpointDir)
       Pin.Start(l, releaseL, -1L, step(e), releaseE)
     }(
       // the convergence test rides in the materializing pass: a separate
@@ -280,11 +280,12 @@ object Dedup {
       // more per round. The fold is DETERMINISTIC (an aggregate over the
       // pinned UnsafeRows — a retried task recomputes the same count,
       // unlike an accumulator, which could only over-count).
-      fold = _.aggregate(0L)( // prev/rep share idCol's type
+      fold = _.aggregate(0L)( // prev/rep share doc_id's type
         (n, r) => n + (if (r.get(1, idType) != r.get(2, idType)) 1L else 0L),
         _ + _),
       done = (round, _, changed) => round > 0 && changed == 0)
-    labels.select(col(idCol), col("rep")).withColumn("is_kept", col(idCol) === col("rep"))
+    labels.select(col("doc_id"), col("rep"))
+      .withColumn("is_kept", col("doc_id") === col("rep"))
   }
 
   /** Connected components by alternating LARGE-STAR / SMALL-STAR rounds
@@ -338,21 +339,19 @@ object Dedup {
     *
     * Accepts edges in either or both directions; orientation, self-loop
     * removal, and dedup happen on entry. Output contract matches
-    * [[keepListToFixpoint]] exactly: (idCol, rep = component min,
+    * [[keepListToFixpoint]] exactly: (doc_id, rep = component min,
     * is_kept = id == rep) — spec-locked equal on random graphs.
     */
   def connectedComponents(docs: DataFrame, edges: DataFrame,
-      idCol: String = "doc_id", maxRounds: Int = 40,
-      checkpointDir: Option[String] = None): DataFrame =
-    connectedComponentsWithRounds(docs, edges, idCol, maxRounds, checkpointDir)._1
+      maxRounds: Int = 40, checkpointDir: Option[String] = None): DataFrame =
+    connectedComponentsWithRounds(docs, edges, maxRounds, checkpointDir)._1
 
   /** [[connectedComponents]], also returning the number of alternating
     * rounds that ran (for convergence-rate assertions and stress
     * accounting — a chain of length L must finish in ~log₂ L rounds, not
     * L). */
   def connectedComponentsWithRounds(docs: DataFrame, edges: DataFrame,
-      idCol: String = "doc_id", maxRounds: Int = 40,
-      checkpointDir: Option[String] = None): (DataFrame, Int) = {
+      maxRounds: Int = 40, checkpointDir: Option[String] = None): (DataFrame, Int) = {
     val spark = docs.sparkSession
     // orient each undirected edge once as (src > dst); tolerate single-
     // or both-direction inputs and drop self-loops. The explicit
@@ -437,10 +436,10 @@ object Dedup {
     // edge to its component minimum (min(dst) guards the contract even
     // if a future edit relaxes the invariant)
     val reps = e.groupBy(col("src").as("cc_id")).agg(min(col("dst")).as("cc_rep"))
-    val labels = docs.select(col(idCol))
-      .join(reps, col(idCol) === col("cc_id"), "left")
-      .select(col(idCol), coalesce(col("cc_rep"), col(idCol)).as("rep"))
-      .withColumn("is_kept", col(idCol) === col("rep"))
+    val labels = docs.select(col("doc_id"))
+      .join(reps, col("doc_id") === col("cc_id"), "left")
+      .select(col("doc_id"), coalesce(col("cc_rep"), col("doc_id")).as("rep"))
+      .withColumn("is_kept", col("doc_id") === col("rep"))
     (labels, rounds)
   }
 }

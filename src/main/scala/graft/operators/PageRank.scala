@@ -27,10 +27,16 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType}
   * real cluster) so round N's plan never replays rounds 1..N-1, and
   * the previous round's blocks are released as soon as the next is
   * materialized. The share table is computed and pinned ONCE — the
-  * out-weight normalization never re-runs. On a real cluster the
-  * share table would be bucketed by `src` so the per-round join
-  * reshuffles only the rank table (|V| rows, 2 columns), never the
-  * edge set.
+  * out-weight normalization never re-runs. The damping is fixed at
+  * d = 0.85 (the q146 oracle hard-codes the same value).
+  *
+  * Deployment recipe for a link graph stored between runs: write it
+  * bucketed by `src` (`edges.write.bucketBy(n, "src").sortBy("src")
+  * .saveAsTable(name)`) and pass `spark.table(name)` to [[run]]. The
+  * scan's HashPartitioning(src, n) then feeds the out-weight aggregate
+  * and co-partitions the edges⋈outW join, so prepare moves no |E| rows
+  * except the one dst alignment repartition (plan-locked in
+  * PlanShapeSpec; measured prepare 10.23 → 6.52 s at 40M edges, PLANS.md).
   *
   * Cross-engine determinism (the repo convention — see
   * [[graft.queries.Det]]): per-edge contributions are IEEE products
@@ -71,44 +77,31 @@ object PageRank {
     * the stress harness lines). */
   def lastRunStatsJson: String = PhaseStats.last(Tag).json
 
-  /** Bucketed-by-src edge storage — the cluster-scale layout the class
-    * doc prescribes, as code: write the link graph ONCE with this, pass
-    * `spark.table(name)` to [[run]]/[[prepare]], and the out-weight
-    * aggregate and share join run with NO |E|-row exchange — the scan's
-    * HashPartitioning(src, buckets) feeds the `groupBy(src)` directly
-    * and co-partitions the edges⋈outW join (plan-locked in
-    * PlanShapeSpec). The only |E| movement left in prepare is the one
-    * dst-alignment repartition the per-round exchange-elision rests on
-    * (bucketing can serve ONE key; src owns the storage layout because
-    * the normalization and join both key on it).
-    */
-  def writeBucketedEdges(edges: DataFrame, table: String,
-      buckets: Int = 32, path: Option[String] = None): Unit = {
-    val w = edges.select(col("src"), col("dst"), col("w"))
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, "src").sortBy("src")
-    path.fold(w)(p => w.option("path", p)).saveAsTable(table)
-  }
+  /** d in the update above (teleport probability 1 − d). */
+  private val Damping = 0.85
 
   /** @param edges directed weighted edges: `src`, `dst` (long), `w`
     *              (long > 0); (src, dst) pairs must be unique
-    * @param iters fixed number of damped rounds (oracle-replayable —
-    *              convergence detection would make the round count
-    *              data-dependent, which callers can layer on top)
-    * @param damping d in the update above (teleport prob = 1-d)
+    * @param iters fixed number of damped rounds, at least 1
+    *              (oracle-replayable — convergence detection would make
+    *              the round count data-dependent, which callers can
+    *              layer on top)
     * @param checkpointDir reliable-checkpoint dir for real clusters
     *              (defaults to executor-local blocks — see [[Dedup]])
     * @return (nid, pr): one row per node that has at least one
     *         out-edge, pr rounded to 9 decimals
     */
-  def run(edges: DataFrame, iters: Int, damping: Double = 0.85,
-      checkpointDir: Option[String] = None): DataFrame =
+  def run(edges: DataFrame, iters: Int,
+      checkpointDir: Option[String] = None): DataFrame = {
+    // zero rounds would return the unrounded pr₀ = 1/n
+    require(iters >= 1, s"PageRank needs iters >= 1, got $iters")
     Pin.iterate[Long](edges.sparkSession.sparkContext, Tag, iters,
         checkpointDir, s"PageRank ran past its $iters rounds") {
-      val prep = prepare(edges, damping, checkpointDir)
-      Pin.Start(prep.pr, prep.releasePr, 0L, step(prep, _, damping),
+      val prep = prepare(edges, checkpointDir)
+      Pin.Start(prep.pr, prep.releasePr, 0L, step(prep, _),
         () => { prep.releaseShares(); prep.releaseNodes() })
     }(fold = _.count(), done = (round, _, _) => round >= iters)._1
+  }
 
   /** The pinned per-run frames one damped round steps over (exposed
     * `private[graft]` so PlanShapeSpec can lock the round's physical
@@ -133,8 +126,7 @@ object PageRank {
       .repartition(col("dst"))
   }
 
-  private[graft] def prepare(edges: DataFrame, damping: Double,
-      checkpointDir: Option[String]): Prep = {
+  private[graft] def prepare(edges: DataFrame, checkpointDir: Option[String]): Prep = {
     // out-weight normalization, once: share(u,v) = w / W(u) — an IEEE
     // division of two exact longs, identical in any engine.
     // Pinned REPARTITIONED BY dst: with the rank side broadcast, each
@@ -177,7 +169,7 @@ object PageRank {
     // Past that, a shuffle-hash hint keeps the exchange but drops the
     // per-round edge sort; on a real cluster shares would be bucketed
     // by src so only the |V|-row rank table moves (see class doc).
-    Prep(shares, nodes, pr, (1.0 - damping) / n, n <= 4000000L,
+    Prep(shares, nodes, pr, (1.0 - Damping) / n, n <= 4000000L,
       releaseShares, releaseNodes, releasePr)
   }
 
@@ -186,8 +178,7 @@ object PageRank {
     * dst-aligned share blocks, COMPLETE map-side combine, one
     * |V|-row exchange, co-partitioned left join back onto the nodes.
     */
-  private[graft] def step(prep: Prep, pr: DataFrame,
-      damping: Double): DataFrame = {
+  private[graft] def step(prep: Prep, pr: DataFrame): DataFrame = {
     // per-edge contributions canonicalized at 9 decimals via the
     // decimal CAST (not round(): the engines' round() disagree by one
     // ULP on products landing at exact .5 boundaries; the double→
@@ -206,7 +197,7 @@ object PageRank {
     // in CAST(… AS DOUBLE) (see q146OracleSql)
     prep.nodes.join(contrib, col("nid") === col("dst"), "left")
       .select(col("nid"),
-        (lit(prep.teleport) + lit(damping) * coalesce(col("s"), lit(0.0)))
+        (lit(prep.teleport) + lit(Damping) * coalesce(col("s"), lit(0.0)))
           .cast(DecimalType(20, 9)).cast(DoubleType).as("pr"))
   }
 }

@@ -43,18 +43,6 @@ object Skew {
       .agg(sum(col("__partial")).as(valueName))
   }
 
-  /** Salted distinct-count: exact, two-phase. Phase 1 dedups (key, value)
-    * pairs spread by value-hash; phase 2 counts per key.
-    */
-  def saltedCountDistinct(df: DataFrame, keys: Seq[String], value: Column,
-      valueName: String): DataFrame = {
-    val keyCols = keys.map(col)
-    df.select(keyCols :+ value.as("__v"): _*)
-      .distinct() // shuffles on (keys, value) — no hot single-key reducer
-      .groupBy(keyCols: _*)
-      .agg(count(col("__v")).as(valueName))
-  }
-
   /** Salted broadcast join for a skewed build side is unnecessary —
     * `broadcast()` already avoids the shuffle entirely; for skewed
     * shuffle joins rely on AQE (`spark.sql.adaptive.skewJoin.enabled`,

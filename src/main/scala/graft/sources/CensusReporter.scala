@@ -232,10 +232,6 @@ object CensusReporter {
     frame(spark, getResource(u, cache, fetch = fetch), tableId)
   }
 
-  /** Load from a local JSON file (offline path used by tests/fixtures). */
-  def loadJsonFile(spark: SparkSession, path: String, tableId: String): CensusFrame =
-    frame(spark, readFile(path), tableId)
-
   /** Load from a classpath resource. */
   def loadJsonResource(spark: SparkSession, resource: String, tableId: String): CensusFrame =
     frame(spark, readResource(resource), tableId)

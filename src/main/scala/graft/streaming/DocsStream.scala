@@ -141,17 +141,16 @@ object DocsStream {
     * data passes `eventTimeCol` (a timestamp column on the stream, e.g.
     * crawl time): the bucket then expires when the WATERMARK passes
     * `ttlMs` past its newest event — replay speed stops mattering (the
-    * ST18te discipline, on the standalone twin; ST11te pins it).
-    * `watermarkDelay` is the usual bounded-disorder allowance. One keyed
-    * state, so no chained-stateful opt-out is needed here.
+    * ST18te discipline, on the standalone twin; ST11te pins it). The
+    * watermark allows no disorder (0 s delay). One keyed state, so no
+    * chained-stateful opt-out is needed here.
     */
   def nearDupCandidates(docs: DataFrame, ttlMs: Long = 0L,
-      eventTimeCol: Option[String] = None,
-      watermarkDelay: String = "0 seconds"): DataFrame = {
+      eventTimeCol: Option[String] = None): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     val eventTime = eventTimeCol.isDefined
-    val src = eventTimeCol.map(c => docs.withWatermark(c, watermarkDelay))
+    val src = eventTimeCol.map(c => docs.withWatermark(c, "0 seconds"))
       .getOrElse(docs)
     banded(src, eventTimeCol)
       .select(col("band"), col("bkey"), col("doc_id"), col("ts"))
@@ -316,14 +315,13 @@ object DocsStream {
     * [[nearDupCandidates]] (connectivity-exact under any order).
     */
   def nearDupVerified(stream: DataFrame, history: DataFrame,
-      ttlMs: Long = 0L, eventTimeCol: Option[String] = None,
-      watermarkDelay: String = "0 seconds"): DataFrame = {
+      ttlMs: Long = 0L, eventTimeCol: Option[String] = None): DataFrame = {
     val spark = stream.sparkSession
     import spark.implicits._
     val displaced = displacedReps(spark)
     val overConnect = overConnectMerges(spark)
     val eventTime = eventTimeCol.isDefined
-    val src = eventTimeCol.map(c => stream.withWatermark(c, watermarkDelay))
+    val src = eventTimeCol.map(c => stream.withWatermark(c, "0 seconds"))
       .getOrElse(stream)
     // 5th field: the displaced pair's IN-HANDLER jaccard (−1 marks a
     // normal candidate, verified downstream against history). One

@@ -291,7 +291,8 @@ object EventsStream {
     * within-watermark disorder — the watermark-finalized complement of
     * [[funnelCompletions]] (which emits EAGERLY and freezes the anchor,
     * trading out-of-order losses for latency; this form trades latency
-    * for exactness).
+    * for exactness). The watermark trails by 30 minutes, as in every
+    * other query here.
     *
     * Semantics: identical to batch q153 — t1 = the user's MINIMUM view
     * time, t2 = min click in (t1, t1+W], t3 = min purchase in (t2,
@@ -333,14 +334,13 @@ object EventsStream {
     * watermark covers.
     */
   def funnelCompletionsExact(windowMicros: Long = 86400000000L,
-      watermarkDelay: String = "30 minutes",
       tombstoneTtlMs: Long = 0L)(events: DataFrame): DataFrame = {
     import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
     import org.apache.spark.sql.Encoders
     val spark = events.sparkSession
     import spark.implicits._
     events
-      .withWatermark("ts", watermarkDelay)
+      .withWatermark("ts", "30 minutes")
       // the raw ts column rides along UNUSED: the event-time-timeout
       // checker requires the watermarked attribute itself in the
       // grouped child output (a derived unix_micros column drops the

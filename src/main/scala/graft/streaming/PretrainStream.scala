@@ -118,10 +118,10 @@ object PretrainStream {
     * mattering (the ST15x discipline, applied to the composed stream;
     * ST18te pins it). The column rides the handlers as a passenger and
     * the intermediate frame re-declares it (`withWatermark`) so the
-    * second keyed state can arm event-time timeouts too;
-    * `watermarkDelay` is the usual bounded-disorder allowance. Timeout
-    * timestamps are clamped just past the current watermark, so a
-    * late-arriving straggler can never arm an already-expired timeout.
+    * second keyed state can arm event-time timeouts too; the watermark
+    * allows no disorder (0 s delay). Timeout timestamps are clamped just
+    * past the current watermark, so a late-arriving straggler can never
+    * arm an already-expired timeout.
     *
     * Event-time mode requires the session conf
     * `spark.sql.streaming.statefulOperator.checkCorrectness.enabled=false`:
@@ -132,19 +132,17 @@ object PretrainStream {
     * output row carries the event timestamp of a row that arrived in
     * the SAME micro-batch (nothing is replayed from state), so stage 2
     * sees exactly the lateness profile of the source, already bounded
-    * by `watermarkDelay`. The opt-out disables the heuristic, not a
-    * real safety property of this query shape (ST18te locks the
-    * behavior).
+    * by the watermark. The opt-out disables the heuristic, not a real
+    * safety property of this query shape (ST18te locks the behavior).
     */
   def signals(stream: DataFrame, history: DataFrame, ttlMs: Long = 0L,
-      eventTimeCol: Option[String] = None,
-      watermarkDelay: String = "0 seconds"): DataFrame = {
+      eventTimeCol: Option[String] = None): DataFrame = {
     val spark = stream.sparkSession
     import spark.implicits._
     val displaced = displacedReps(spark)
     val overConnect = overConnectMerges(spark)
     val eventTime = eventTimeCol.isDefined
-    val s0 = eventTimeCol.map(c => stream.withWatermark(c, watermarkDelay))
+    val s0 = eventTimeCol.map(c => stream.withWatermark(c, "0 seconds"))
       .getOrElse(stream)
     val tsCol = eventTimeCol.map(col)
       .getOrElse(lit(null).cast("timestamp")).as("ts")
@@ -228,7 +226,7 @@ object PretrainStream {
     // the second keyed state needs its own event-time declaration (the
     // first operator's output is a fresh schema; the engine's global
     // watermark still advances from the SOURCE timestamps)
-    val rows = if (eventTime) rows0.withWatermark("ts", watermarkDelay)
+    val rows = if (eventTime) rows0.withWatermark("ts", "0 seconds")
       else rows0
 
     // stage 2 — (band, bucket) rep state, the nearDupVerified handler

@@ -111,16 +111,15 @@ object GraftSqlBridge {
     * SparkListener metrics immediately after an action races the bus —
     * the final stage's completion event may still be queued. A stopped
     * context's bus was drained by `stop()`; a bus that never empties
-    * within the timeout is reported, not thrown, since the caller is
-    * only reading metrics.
+    * within 30 s is reported, not thrown, since the caller is only
+    * reading metrics.
     */
-  def drainListenerBus(sc: org.apache.spark.SparkContext,
-      timeoutMs: Long = 30000L): Unit =
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     if (!sc.isStopped) {
-      try sc.listenerBus.waitUntilEmpty(timeoutMs)
+      try sc.listenerBus.waitUntilEmpty(30000L)
       catch { case _: java.util.concurrent.TimeoutException =>
-        System.err.println(s"[metrics] WARNING: listener bus not drained " +
-          s"in $timeoutMs ms; stage metrics read now may be incomplete")
+        System.err.println("[metrics] WARNING: listener bus not drained " +
+          "in 30 s; stage metrics read now may be incomplete")
       }
     }
 

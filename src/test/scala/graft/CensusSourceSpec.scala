@@ -148,6 +148,46 @@ class CensusSourceSpec extends AnyFunSuite {
     assert(ct.selectCensus("B17001001_m90").df.columns.toSeq == Seq("B17001001_m90"))
   }
 
+  test("schemaMeta lists each code's estimate then its margin, at its frame position") {
+    val cf = CensusReporter.loadJsonResource(spark, "censusreporter/acs_fixture.json", "B17001")
+    val meta = cf.schemaMeta
+    assert(meta.map(_.code) == cf.df.columns.toSeq)
+    assert(meta.map(_.position) == meta.indices)
+    // SURVEY §1.2: the key columns, then 7 codes as 14 entries — the '.5'
+    // pseudo header is dropped
+    val census = meta.drop(2)
+    assert(meta.take(2).map(_.code) == Seq("geoid", "name"))
+    assert(census.map(_.code) == (1 to 7).flatMap { i =>
+      val code = f"B17001$i%03d"
+      Seq(code, code + "_m90")
+    })
+    assert(census.grouped(2).forall { case Seq(e, m) =>
+      !e.isM90 && m.isM90 && m.index == e.index && m.position == e.position + 1
+    })
+  }
+
+  test("selectPairs keeps only the keys and the named pairs, valued as withPairs") {
+    val cf = CensusReporter.loadJsonResource(spark, "censusreporter/acs_fixture.json", "B17001")
+    val r = cf.ratio("B17001002", "B17001001")
+    val selected = cf.selectPairs(Seq("geoid"), "r" -> r).df
+    assert(selected.columns.toSeq == Seq("geoid", "r", "r_m90"))
+    val viaWith = cf.withPairs("r" -> r).df.select("geoid", "r", "r_m90")
+    assert(selected.collect().toSet == viaWith.collect().toSet)
+    assert(selected.count() == 3)
+  }
+
+  test("previewTranspose holds each column's first n values, in schema order") {
+    val cf = CensusReporter.loadJsonResource(spark, "censusreporter/acs_fixture.json", "B17001")
+    val rows = cf.df.collect().toSeq
+    for (n <- Seq(2, 5)) { // 5 is past the fixture's 3 rows
+      val preview = cf.previewTranspose(n)
+      assert(preview.map(_._1) == cf.df.columns.toSeq)
+      preview.zipWithIndex.foreach { case ((_, values), i) =>
+        assert(values == rows.take(n).map(_.get(i)))
+      }
+    }
+  }
+
   test("SourceRegistry dispatches censusreporter scheme (S6)") {
     SourceRegistry.register("fixture", (s, _) =>
       CensusReporter.loadJsonResource(s, "censusreporter/acs_fixture.json", "B17001"))

@@ -10,12 +10,15 @@ import org.scalatest.funsuite.AnyFunSuite
   * dial must be added here, in README and in a test that runs both of
   * its sides — never silently. Likewise the environment: only
   * [[HarnessEnv]]'s table reads it; driver frames: only
-  * [[graft.plans.FoldDriverRelation]] folds them; and near-dup buckets:
-  * only [[graft.operators.Dedup]] probes and collects them.
+  * [[graft.plans.FoldDriverRelation]] folds them; near-dup buckets:
+  * only [[graft.operators.Dedup]] probes and collects them; and every
+  * definition in src/main has a reader.
   */
 class ConfKeysSpec extends AnyFunSuite {
-  private def sources[A](read: Path => Seq[A]): Seq[A] = {
-    val root = Paths.get("src/main/scala")
+  private def sources[A](read: Path => Seq[A]): Seq[A] = sourcesIn("src/main/scala")(read)
+
+  private def sourcesIn[A](dir: String)(read: Path => Seq[A]): Seq[A] = {
+    val root = Paths.get(dir)
     assert(Files.isDirectory(root), s"run from the project root: $root")
     scala.util.Using.resource(Files.walk(root)) { files =>
       files.iterator().asScala.filter(_.toString.endsWith(".scala")).toSeq
@@ -69,5 +72,30 @@ class ConfKeysSpec extends AnyFunSuite {
     }.groupMap(_._1)(_._2)
     assert(homes == steps.map(_ -> Seq("graft/operators/Dedup.scala")).toMap,
       s"bucket verify steps by file: $homes")
+  }
+
+  test("every def in src/main is referenced outside its own declaration") {
+    // a name counts as referenced when its whole-token occurrences in
+    // src/main, src/test and perfbench/src outnumber its declarations.
+    // An `override def` implements an inherited member the engine calls,
+    // so it declares nothing new; main/apply/unapply are called by name
+    // by the JVM or the compiler.
+    val ident = "[A-Za-z_][A-Za-z0-9_]*".r
+    val decl = "(?<![A-Za-z0-9_])def\\s+([A-Za-z_][A-Za-z0-9_]*)".r
+    val tokens = Seq("src/main/scala", "src/test/scala", "perfbench/src")
+      .flatMap(d => sourcesIn(d)(f => ident.findAllIn(Files.readString(f)).toSeq))
+      .groupMapReduce(identity)(_ => 1)(_ + _)
+    val decls = sources { f =>
+      val src = Files.readString(f)
+      decl.findAllMatchIn(src).map { m =>
+        val line = src.substring(src.lastIndexOf('\n', m.start) + 1, m.start)
+        (m.group(1), line.contains("override"))
+      }.toSeq
+    }
+    val declared = decls.groupMapReduce(_._1)(_ => 1)(_ + _)
+    val unread = decls.collect { case (n, false) => n }.distinct
+      .filterNot(Set("main", "apply", "unapply"))
+      .filter(n => tokens.getOrElse(n, 0) <= declared(n))
+    assert(unread.isEmpty, s"defs no code references: ${unread.sorted.mkString(", ")}")
   }
 }

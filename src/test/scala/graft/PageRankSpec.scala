@@ -73,6 +73,15 @@ class PageRankSpec extends AnyFunSuite {
     }
   }
 
+  test("iters below 1 is refused, naming the value") {
+    // zero rounds would hand back the unrounded pr₀ = 1/n
+    val edges = sym((1L, 2L, 1L), (2L, 3L, 1L))
+    for (k <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](PageRank.run(edges, iters = k))
+      assert(e.getMessage.contains(s"got $k"), e.getMessage)
+    }
+  }
+
   test("a run leaves only its returned round pinned") {
     val edges = sym((1L, 2L, 5L), (1L, 3L, 1L), (1L, 4L, 1L), (4L, 5L, 2L))
     val sc = spark.sparkContext

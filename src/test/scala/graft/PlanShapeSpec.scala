@@ -659,9 +659,9 @@ class PlanShapeSpec extends AnyFunSuite {
     val e0 = (1L to 400L).map(i => (i % 50, (i * 7) % 50, i % 3 + 1))
       .toDF("src", "dst", "w").filter(col("src") =!= col("dst"))
       .groupBy("src", "dst").agg(max("w").as("w"))
-    val prep = graft.operators.PageRank.prepare(e0, 0.85, None)
+    val prep = graft.operators.PageRank.prepare(e0, None)
     try {
-      val p = graft.operators.PageRank.step(prep, prep.pr, 0.85)
+      val p = graft.operators.PageRank.step(prep, prep.pr)
         .queryExecution.executedPlan.toString
       // rank side rides a broadcast join over the pinned share blocks —
       // the |E|-row side must never shuffle or sort inside a round
@@ -699,7 +699,9 @@ class PlanShapeSpec extends AnyFunSuite {
       .toDF("src", "dst", "w").filter(col("src") =!= col("dst"))
       .groupBy("src", "dst").agg(max("w").as("w"))
     val tbl = "graft_pr_edges_bucketed_spec"
-    graft.operators.PageRank.writeBucketedEdges(edges, tbl, buckets = 4)
+    // the class doc's deployment recipe: edges stored bucketed by src
+    edges.write.mode("overwrite").format("parquet")
+      .bucketBy(4, "src").sortBy("src").saveAsTable(tbl)
     try {
       val p = graft.operators.PageRank.sharesOf(spark.table(tbl))
         .queryExecution.executedPlan.toString

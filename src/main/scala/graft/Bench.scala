@@ -7,11 +7,6 @@ object Bench {
       .split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** Number of OTHER running java processes. Concurrent JVMs distort
-    * timings badly on this box (one round's driver artifacts were ~17%
-    * inflated by an overlapping run); recording the count makes a
-    * contaminated bench self-identifying instead of a silent regression.
-    */
   /** CPU steal jiffies + total jiffies from /proc/stat's cpu line —
     * hypervisor steal is invisible to load average and was a suspect in
     * the round-8 driver-vs-builder artifact disagreement (same code,
@@ -61,6 +56,11 @@ object Bench {
     }.mkString("{", ",", "}")
   }
 
+  /** Number of OTHER running java processes. Concurrent JVMs distort
+    * timings badly on this box (one round's driver artifacts were ~17%
+    * inflated by an overlapping run); recording the count makes a
+    * contaminated bench self-identifying instead of a silent regression.
+    */
   private def competingJvms(): Int =
     try {
       // exclude this JVM and its ancestor chain (the sbt launcher that
@@ -221,27 +221,28 @@ object Bench {
     // threshold (unreadable /proc, -1, counts as clean — same permissive
     // rule as the gate)
     def clean(t: Timed): Boolean = t.stealPct <= quietSteal
-    val roundSnapshots = scala.collection.mutable.Map[String, String]()
+    // per query, its last timed run measured as one PhaseStats run: the
+    // wall, jobs, shuffle-write and spill of every job it started, and
+    // the rows of each PhaseStats run nested in it (the iterative
+    // operators' prepare and rounds) — drift flags are adjudicated from
+    // the artifact instead of a same-box A/B
+    val phases = scala.collection.mutable.LinkedHashMap[String, String]()
     val results: Seq[(String, Seq[Timed])] = SparkEntry.benchQueries
       .filter(n => subset.forall(_.contains(n))).map { name =>
       // drain cross-query GC debt so query N's tail latency isn't
       // query N-1's garbage — part of the heavy-tail noise story
       System.gc()
       val fn = SparkEntry.queries(name)
-      // q114/q138 flagged lineage-untouched drift in r14 with no
-      // mechanical adjudication row; wrap their runs in a single
-      // PhaseStats phase so the LAST run's exact shuffle/spill rides in
-      // the artifact (the q146/q87/q128 discipline, without needing an
-      // iterative operator to host the stats)
-      val phased = Set("q138_hard_negatives", "q114_bpe_encode")
-      def timed(): Timed =
-        if (!phased.contains(name)) timeOnce(fn)
-        else {
-          val run = graft.operators.PhaseStats.start(spark.sparkContext, name)
-          val t = run.phase(0)(timeOnce(fn))
-          roundSnapshots(s"${name.split('_').head}_phase") = run.finish().json
-          t
+      def timed(): Timed = {
+        var t: Timed = null
+        val total = graft.operators.PhaseStats.measure(spark.sparkContext, name) {
+          t = timeOnce(fn)
         }
+        val runs = graft.operators.PhaseStats.last(name).inner
+          .map(h => s""""${h.tag}":${h.json}""").mkString("{", ",", "}")
+        phases(name) = s"""{"total":${total.json},"runs":$runs}"""
+        t
+      }
       val base = (1 to runs).map(_ => timed())
       def best(ts: Seq[Timed]) = ts.map(_.sec).min
       // the ≥5-run tier is UNIFORM (r17 verdict task 4): it used to
@@ -270,22 +271,6 @@ object Bench {
         else extended
       val times =
         if (retried.exists(clean)) retried else retried :+ timed()
-      // snapshot per-phase rows IMMEDIATELY after this query's timing
-      // loop — several queries share the iterative operators (q157/q130
-      // also run CC), so reading the "last run" at artifact-writer time
-      // would attribute another query's rounds
-      name match {
-        case "q146_pagerank" =>
-          roundSnapshots("q146_rounds") =
-            graft.operators.PageRank.lastRunStatsJson
-        case "q87_neardup_fixpoint" =>
-          roundSnapshots("q87_rounds") =
-            graft.operators.Dedup.lastFixpointStatsJson
-        case "q128_cc_largestar" =>
-          roundSnapshots("q128_rounds") =
-            graft.operators.Dedup.lastCcStatsJson
-        case _ => ()
-      }
       name -> times
     }
     // drift census vs the prior committed artifact (both directions —
@@ -343,21 +328,6 @@ object Bench {
     val build = graft.operators.Models.buildTimes.toSeq.sortBy(_._1)
       .map { case (k, v) => "\"" + k.replace("\"", "'") + "\":" + f3(v) }
       .mkString("{", ",", "}")
-    // q146's per-phase attribution (phase 0 = prepare, 1..N = damped
-    // rounds; wall + job-group-exact shuffle/spill) from the LAST timed
-    // run — the heaviest headline query has a ~70% box-sensitivity band,
-    // and with per-round rows in the artifact a drift flag is
-    // adjudicated from the artifact alone instead of a same-box A/B
-    // per-phase rows for the iterative family (q146 pagerank, q87
-    // fixpoint, q128 CC) from the per-query snapshots above — q87/q128
-    // both flagged drift in r13 with untouched lineage and the
-    // adjudication had to fall back to plausibility; now it reads from
-    // the artifact like q146's
-    val prRounds = roundSnapshots.getOrElse("q146_rounds", "[]")
-    val fixpointRounds = roundSnapshots.getOrElse("q87_rounds", "[]")
-    val ccRounds = roundSnapshots.getOrElse("q128_rounds", "[]")
-    val q138Phase = roundSnapshots.getOrElse("q138_phase", "[]")
-    val q114Phase = roundSnapshots.getOrElse("q114_phase", "[]")
     // per-run build seconds for queries that paid any model build —
     // the q114 first-run amortization made visible per run
     val buildsPaid = results
@@ -410,9 +380,8 @@ object Bench {
       s""""n_no_clean_window":$nNoClean,"queries_median":$qsMed,""" +
       s""""queries_clean":$qsClean,"queries_runs":$qsRuns,""" +
       s""""build":$build,"builds_paid":$buildsPaid,""" +
-      s""""q146_rounds":$prRounds,"q87_rounds":$fixpointRounds,""" +
-      s""""q128_rounds":$ccRounds,"q138_phase":$q138Phase,""" +
-      s""""q114_phase":$q114Phase,"sf":"$sfDir",$envJson}"""
+      s""""phases":${phases.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")},""" +
+      s""""sf":"$sfDir",$envJson}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_detail.json"), detail + "\n")
     catch { case _: Throwable => () }

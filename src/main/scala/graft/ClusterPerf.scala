@@ -54,7 +54,6 @@ object ClusterPerf {
       .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val totals = operators.PhaseStats.stageTotals(spark.sparkContext)
     // multi-process proof, same discipline as ClusterSmoke: the numbers
     // below mean nothing if the tasks never left the driver JVM
     val driverPid = ProcessHandle.current().pid()
@@ -68,13 +67,15 @@ object ClusterPerf {
     queryCsv.split(",").filter(_.nonEmpty).foreach { name =>
       val fn = SparkEntry.queries(name)
       val times = (1 to 2).map { _ =>
-        totals.measure(fn(spark, dir).write.format("noop").mode("overwrite").save())
+        operators.PhaseStats.measure(spark.sparkContext, name)(
+          fn(spark, dir).write.format("noop").mode("overwrite").save())
       }
-      val (warm, shW, sp) = times.last
+      val warm = times.last
       println(s"""CLUSTERPERF {"query":"$name","master":"$master",""" +
         s""""initial_partitions":$parts,"advisory_mb":$advisoryMB,""" +
-        s""""cold_sec":${times.head._1},"warm_sec":$warm,""" +
-        s""""shuffle_write_bytes":$shW,"spilled_bytes":$sp}""")
+        s""""cold_sec":${times.head.wallSec},"warm_sec":${warm.wallSec},""" +
+        s""""shuffle_write_bytes":${warm.shuffleWriteBytes},""" +
+        s""""spilled_bytes":${warm.spillBytes}}""")
     }
     spark.stop()
     // local-cluster leaves non-daemon RPC threads; exit explicitly

@@ -3,7 +3,9 @@ package graft
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+
+import graft.operators.PhaseStats
 
 /** Scale-stress for the STREAMING near-dup path (the one [EXT] family
   * whose batch twins have three decades of measurements but whose state
@@ -29,9 +31,9 @@ import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, T
   * (`FlatMapGroupsWithStateExec.shouldRunAnotherBatch` is always true),
   * so `processAllAvailable()` never returns on the TTL config, and the
   * no-data batch stream evicts data batches out of the bounded
-  * `recentProgress` buffer. Progress is therefore accumulated in a
-  * [[StreamingQueryListener]] (robust to eviction) and the TTL drain is
-  * detected by polling the listener's cumulative input-row count; the
+  * `recentProgress` buffer. Progress is therefore read from
+  * [[PhaseStats.progress]] (robust to eviction) and the TTL drain is
+  * detected by polling its cumulative input-row count; the
   * TTL config also paces batches with a 500 ms trigger so the post-drain
   * window is no-data batches at 2 Hz, not a busy loop.
   *
@@ -48,45 +50,6 @@ object StreamStress {
       batches: Int, inputRows: Long, candidates: Long,
       stateRowsPeak: Long, stateRowsFinal: Long, evicted: Long,
       stateBytesPeak: Long, wallSec: Double)
-
-  /** Accumulating progress listener — immune to recentProgress eviction.
-    * State figures are kept per stateful operator, in plan order. */
-  private final class ProgressAccumulator extends StreamingQueryListener {
-    import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-    final class OpState(val name: String) {
-      val evicted = new AtomicLong
-      val rowsPeak = new AtomicLong(-1)
-      val bytesPeak = new AtomicLong(-1)
-      val rowsLast = new AtomicLong(-1)
-    }
-    val inputRows = new AtomicLong
-    val dataBatches = new AtomicInteger
-    private val ops = new java.util.concurrent.ConcurrentHashMap[Int, OpState]()
-    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-      val p = e.progress
-      if (p.numInputRows > 0) {
-        inputRows.addAndGet(p.numInputRows)
-        dataBatches.incrementAndGet()
-      }
-      p.stateOperators.zipWithIndex.foreach { case (s, i) =>
-        val o = ops.computeIfAbsent(i, _ => new OpState(s.operatorName))
-        o.evicted.addAndGet(s.numRowsRemoved)
-        o.rowsPeak.getAndUpdate(c => math.max(c, s.numRowsTotal))
-        o.bytesPeak.getAndUpdate(c => math.max(c, s.memoryUsedBytes))
-        o.rowsLast.set(s.numRowsTotal)
-      }
-    }
-    /** The first stateful operator (the one keyed state of the single-
-      * state twins); -1 figures when the query has none. */
-    def head: OpState = Option(ops.get(0)).getOrElse(new OpState(""))
-    def json: String = (0 until ops.size).map { i =>
-      val o = ops.get(i)
-      s"""{"op":"${o.name}","rows_peak":${o.rowsPeak.get},""" +
-        s""""bytes_peak":${o.bytesPeak.get}}"""
-    }.mkString("[", ",", "]")
-  }
 
   /** Writes `df` range-partitioned and sorted on `key` into `parts` files
     * whose mtimes follow the key order, reversed when `descending`: the
@@ -121,8 +84,6 @@ object StreamStress {
         None): Result = {
     import org.apache.spark.sql.functions.{count, lit}
     val t0 = System.nanoTime()
-    val acc = new ProgressAccumulator
-    spark.streams.addListener(acc)
     val cands = mkCands.map(f => f(corpusDir, maxFilesPerTrigger, ttlMs))
       .getOrElse {
         val stream = graft.streaming.DocsStream.readStream(
@@ -132,34 +93,36 @@ object StreamStress {
     val name = s"stream_stress_$tag"
     val writer = cands.writeStream
       .format("memory").queryName(name).outputMode("append")
-    val q: StreamingQuery =
+    val q: StreamingQuery = PhaseStats.startStream(spark.sparkContext) {
       (if (ttlMs > 0) writer.trigger(Trigger.ProcessingTime("500 milliseconds"))
        else writer).start()
+    }
     try {
       if (ttlMs == 0) q.processAllAvailable()
       else {
         val deadline = System.currentTimeMillis + 600000
-        while (acc.inputRows.get < expectRows &&
+        def drained = PhaseStats.progress(q).inputRows
+        while (drained < expectRows &&
             System.currentTimeMillis < deadline) Thread.sleep(500)
-        require(acc.inputRows.get >= expectRows,
-          s"drain timeout: ${acc.inputRows.get} of $expectRows rows")
+        require(drained >= expectRows,
+          s"drain timeout: $drained of $expectRows rows")
         // the post-drain idle: no-data batches at 2 Hz fire the
         // processing-time timeouts as buckets pass the horizon
         Thread.sleep(afterDrainMs)
       }
       val nCand = spark.table(name).agg(count(lit(1))).head().getLong(0)
+      val acc = PhaseStats.progress(q)
       Result(
-        batches = acc.dataBatches.get,
-        inputRows = acc.inputRows.get,
+        batches = acc.dataBatches,
+        inputRows = acc.inputRows,
         candidates = nCand,
-        stateRowsPeak = acc.head.rowsPeak.get,
-        stateRowsFinal = acc.head.rowsLast.get,
-        evicted = acc.head.evicted.get,
-        stateBytesPeak = acc.head.bytesPeak.get,
+        stateRowsPeak = acc.head.rowsPeak,
+        stateRowsFinal = acc.head.rowsLast,
+        evicted = acc.head.evicted,
+        stateBytesPeak = acc.head.bytesPeak,
         wallSec = (System.nanoTime() - t0) / 1e9)
     } finally {
       q.stop()
-      spark.streams.removeListener(acc)
       spark.sql(s"DROP TABLE IF EXISTS $name")
     }
   }
@@ -291,8 +254,6 @@ object StreamStress {
         case "paths" => graft.streaming.EventsStream.sessionPaths
         case "paths_rollup" => graft.streaming.EventsStream.sessionPathRollup
       }
-    val acc = new ProgressAccumulator
-    spark.streams.addListener(acc)
     val emitted = new java.util.concurrent.atomic.AtomicLong
     // sink-body wall: foreachBatch's count() EXECUTES the batch (the df
     // is lazy), so this is the time inside micro-batch execution —
@@ -304,27 +265,28 @@ object StreamStress {
     val t0 = System.nanoTime()
     // stream from the staged time-ordered directory (never the x-dir
     // root — it also holds the other tables)
-    val q = transform(
-        graft.streaming.EventsStream.readStream(spark, ordered, Some(mft)))
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        val b0 = System.nanoTime()
-        emitted.addAndGet(df.count())
-        sinkNanos.addAndGet(System.nanoTime() - b0); ()
-      }.start()
-    try q.processAllAvailable()
-    finally { q.stop(); spark.streams.removeListener(acc) }
+    val q = PhaseStats.startStream(spark.sparkContext) {
+      transform(graft.streaming.EventsStream.readStream(spark, ordered, Some(mft)))
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          val b0 = System.nanoTime()
+          emitted.addAndGet(df.count())
+          sinkNanos.addAndGet(System.nanoTime() - b0); ()
+        }.start()
+    }
+    try q.processAllAvailable() finally q.stop()
     val wall = (System.nanoTime() - t0) / 1e9
+    val acc = PhaseStats.progress(q)
     val st = acc.head
     val bytesPerRow =
-      if (st.rowsPeak.get > 0) st.bytesPeak.get.toDouble / st.rowsPeak.get
+      if (st.rowsPeak > 0) st.bytesPeak.toDouble / st.rowsPeak
       else -1.0
     println(s"""STREAMSTRESS_ANALYTICS {"op":"$which","corpus":"$dir",""" +
       s""""events":$nEvents,"users":$users,"signup_users":$signups,""" +
-      s""""batches":${acc.dataBatches.get},"emitted":${emitted.get},""" +
-      s""""state_rows_peak":${st.rowsPeak.get},""" +
-      s""""state_rows_final":${st.rowsLast.get},""" +
-      s""""state_bytes_peak":${st.bytesPeak.get},""" +
+      s""""batches":${acc.dataBatches},"emitted":${emitted.get},""" +
+      s""""state_rows_peak":${st.rowsPeak},""" +
+      s""""state_rows_final":${st.rowsLast},""" +
+      s""""state_bytes_peak":${st.bytesPeak},""" +
       s""""bytes_per_row":${math.round(bytesPerRow * 10) / 10.0},""" +
       s""""provider":"${spark.conf.getOption(
         "spark.sql.streaming.stateStore.providerClass")
@@ -357,19 +319,19 @@ object StreamStress {
     val staged = java.nio.file.Files.createTempDirectory("verified-rev").toString
     // the LOWEST ids get the newest mtime, so they land last
     stageInOrder(docs, "doc_id", 16, staged, descending = true)
-    val acc = new ProgressAccumulator
-    spark.streams.addListener(acc)
     val before = DocsStream.displacedReps(spark).value
     val beforeOc = DocsStream.overConnectMerges(spark).value
     val outDir = java.nio.file.Files.createTempDirectory("verified-edges").toString
     val t0 = System.nanoTime()
-    val q = DocsStream.nearDupVerified(DocsStream.readStream(spark, staged, 2), docs)
-      .writeStream
-      .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
-        df.write.mode("append").parquet(outDir); ()
-      }.start()
-    try q.processAllAvailable()
-    finally { q.stop(); spark.streams.removeListener(acc) }
+    val q = PhaseStats.startStream(spark.sparkContext) {
+      DocsStream.nearDupVerified(DocsStream.readStream(spark, staged, 2), docs)
+        .writeStream
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          df.write.mode("append").parquet(outDir); ()
+        }.start()
+    }
+    try q.processAllAvailable() finally q.stop()
+    val acc = PhaseStats.progress(q)
     val wall = (System.nanoTime() - t0) / 1e9
     val displaced = DocsStream.displacedReps(spark).value - before
     val overConnect = DocsStream.overConnectMerges(spark).value - beforeOc
@@ -399,8 +361,8 @@ object StreamStress {
     got.unpersist(); want.unpersist()
     println(s"""STREAMSTRESS_VERIFIED {"corpus":"$corpus","docs":$nDocs,""" +
       s""""displaced":$displaced,"overconnect_merges":$overConnect,""" +
-      s""""state_rows_peak":${acc.head.rowsPeak.get},""" +
-      s""""state_bytes_peak":${acc.head.bytesPeak.get},""" +
+      s""""state_rows_peak":${acc.head.rowsPeak},""" +
+      s""""state_bytes_peak":${acc.head.bytesPeak},""" +
       s""""label_missing":$missing,"label_extra":$extra,""" +
       s""""components_stream":${comps._1},"components_batch":${comps._2},""" +
       s""""label_ok":${missing == 0 && extra == 0},""" +
@@ -444,9 +406,6 @@ object StreamStress {
       a.except(b).count() + b.except(a).count()
 
     def replay(tag: String, stagedDir: String): Unit = {
-      // the composed query carries TWO keyed states: state_ops reports each
-      val acc = new ProgressAccumulator
-      spark.streams.addListener(acc)
       val labelsRoot = java.nio.file.Files
         .createTempDirectory(s"pretrain-stress-labels-$tag").toString
       val storeRoot = java.nio.file.Files
@@ -470,25 +429,27 @@ object StreamStress {
       // partitioning — the r16 negative's mechanism (b), isolated.
       val foldParts = env(HarnessEnv.StreamFoldPartitions)
       val t0 = System.nanoTime()
-      val q = PretrainStream
-        .signals(DocsStream.readStream(spark, stagedDir, 2), docs)
-        .writeStream
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, e: Long) =>
-          foldParts.foreach(p =>
-            b.sparkSession.conf.set("spark.sql.shuffle.partitions", p.toString))
-          val m0 = System.nanoTime()
-          b.persist()
-          b.count()
-          val e0 = System.nanoTime()
-          epochMatWalls.add((e0 - m0) / 1e9)
-          try sinkH.fn(b, e) finally b.unpersist(false)
-          epochWalls.add((System.nanoTime() - e0) / 1e9)
-          ()
-        }.start()
-      try q.processAllAvailable()
-      finally {
-        q.stop(); spark.streams.removeListener(acc); sinkH.release()
+      val q = PhaseStats.startStream(spark.sparkContext) {
+        PretrainStream
+          .signals(DocsStream.readStream(spark, stagedDir, 2), docs)
+          .writeStream
+          .foreachBatch { (b: org.apache.spark.sql.DataFrame, e: Long) =>
+            foldParts.foreach(p =>
+              b.sparkSession.conf.set("spark.sql.shuffle.partitions", p.toString))
+            val m0 = System.nanoTime()
+            b.persist()
+            b.count()
+            val e0 = System.nanoTime()
+            epochMatWalls.add((e0 - m0) / 1e9)
+            try sinkH.fn(b, e) finally b.unpersist(false)
+            epochWalls.add((System.nanoTime() - e0) / 1e9)
+            ()
+          }.start()
       }
+      try q.processAllAvailable()
+      finally { q.stop(); sinkH.release() }
+      // the composed query carries TWO keyed states: state_ops reports each
+      val acc = PhaseStats.progress(q)
       val wall = (System.nanoTime() - t0) / 1e9
       val displaced = PretrainStream.displacedReps(spark).value - dBefore
       val overConnect = PretrainStream.overConnectMerges(spark).value - oBefore
@@ -559,7 +520,7 @@ object StreamStress {
       def f2(d: Double) = math.round(d * 100) / 100.0
       println(s"""STREAMSTRESS_PRETRAIN {"corpus":"$corpus","order":"$tag",""" +
         s""""docs":$nDocs,"budget":$budget,""" +
-        s""""epochs":${walls.size},"input_rows":${acc.inputRows.get},""" +
+        s""""epochs":${walls.size},"input_rows":${acc.inputRows},""" +
         s""""store_rows":${store.count()},"label_rows":${labels.count()},""" +
         s""""sig3_rows":${sig3.count()},"out_rows":${streamOut.count()},""" +
         s""""state_ops":${acc.json},""" +

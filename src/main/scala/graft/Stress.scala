@@ -239,7 +239,8 @@ object Stress {
       builder.config("spark.executor.memory", env(StressExecutorMem))
     else builder).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val totals = operators.PhaseStats.stageTotals(spark.sparkContext)
+    def measure(body: => Unit) =
+      operators.PhaseStats.measure(spark.sparkContext, "stress")(body)
 
     val names = env(StressQueries)
     val scaledDir = s"$root/x$factor"
@@ -257,10 +258,11 @@ object Stress {
     // cold run (first plan + codegen), then a warm run; report both —
     // superlinearity shows in the warm number
     def coldWarm(body: => Unit): String = {
-      val runs = (1 to 2).map(_ => totals.measure(body))
-      val (warm, shW, sp) = runs.last
-      s""""cold_sec":${runs.head._1},"warm_sec":$warm,""" +
-        s""""shuffle_write_bytes":$shW,"spilled_bytes":$sp"""
+      val runs = (1 to 2).map(_ => measure(body))
+      val warm = runs.last
+      s""""cold_sec":${runs.head.wallSec},"warm_sec":${warm.wallSec},""" +
+        s""""shuffle_write_bytes":${warm.shuffleWriteBytes},""" +
+        s""""spilled_bytes":${warm.spillBytes}"""
     }
     def noop(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
@@ -436,12 +438,13 @@ object Stress {
       env(StressHardneg).foreach { k =>
         val nVec = queries.Tables(spark, dir, "embeddings").count()
         val cents = queries.PipelineQueries.ivfCentsK(spark, dir, k)
-        val (aggS, aggSh, aggSp) = (1 to 2).map { _ =>
-          totals.measure(noop(
+        val agg = (1 to 2).map { _ =>
+          measure(noop(
             queries.PipelineQueries.hardNegatives(spark, dir, cents, nprobe = 2, kTop = 5)))
         }.last
         println(s"""STRESS_HARDNEG {"corpus":"$tag","vectors":$nVec,"k":$k,""" +
-          s""""agg_warm_sec":$aggS,"agg_shuffle_bytes":$aggSh,"agg_spill":$aggSp}""")
+          s""""agg_warm_sec":${agg.wallSec},"agg_shuffle_bytes":${agg.shuffleWriteBytes},""" +
+          s""""agg_spill":${agg.spillBytes}}""")
       }
       // the oracle query pins k=8; pair volume is ~nprobe·n²/k so the
       // corpus-scaled k is the production dial, as in q132/q138
@@ -562,15 +565,14 @@ object Stress {
       }
       // the composed q160 pretrain-prep DAG (canonical dedup → near-dup
       // fixpoint → decontaminate → quality gate → mixture materialize → split
-      // → pack) as ONE run with per-stage job-group attribution — the stage
+      // → pack) as ONE run with per-stage job-tag attribution — the stage
       // interactions (fixpoint checkpoint pressure feeding windows,
       // cross-stage AQE re-planning) that single-query bench rows can't see.
       // Each stage runs inside its own PhaseStats phase (the stageRun hook
       // covers the stage's ENTIRE construction, eager work included); phase 6
-      // is the unmaterialized tail (split + pack + output). Stage 2's
-      // shuffle/spill largely lands in the fixpoint's OWN epoch (its internal
-      // phases re-tag the job group), so the fixpoint rounds are reported
-      // alongside; stage walls are exact regardless.
+      // is the unmaterialized tail (split + pack + output). The fixpoint's
+      // rounds run nested in stage 2 and count in both; they are reported
+      // alongside.
       env(StressPretrainE2e).foreach { budget =>
         // the rep-anchored edge form is the flat-memory shape for
         // clique-heavy corpora (the pairwise form's edge set is ~b²/2 per
@@ -595,7 +597,7 @@ object Stress {
           val evalPred = if (tag == "base") col("doc_id") % 10 === 7
             else expr(s"(doc_id DIV $factor) % 10 = 7")
           var outRows = -1L
-          val (wall, shW, sp) = totals.measure {
+          val total = measure {
             val out = queries.PipelineQueries.q160Frame(spark, dir, budget,
               stageRun = Some((i, name, mk) => run.phase(i) {
                 val pinned = mk().localCheckpoint()
@@ -619,8 +621,9 @@ object Stress {
             .mkString("{", ",", "}")
           println(s"""STRESS_PRETRAIN_E2E {"corpus":"$tag","form":"$form",""" +
             s""""docs":$rows,"budget":$budget,""" +
-            s""""wall_sec":$wall,"shuffle_write_bytes":$shW,""" +
-            s""""spilled_bytes":$sp,"out_rows":$outRows,""" +
+            s""""wall_sec":${total.wallSec},""" +
+            s""""shuffle_write_bytes":${total.shuffleWriteBytes},""" +
+            s""""spilled_bytes":${total.spillBytes},"out_rows":$outRows,""" +
             s""""stage_rows":$rowsJson,"stages":${handle.json},""" +
             s""""fixpoint_rounds":${operators.Dedup.lastFixpointStatsJson}}""")
         }

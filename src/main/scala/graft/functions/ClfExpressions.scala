@@ -1,7 +1,6 @@
 package graft.functions
 
 import java.nio.charset.StandardCharsets
-import java.security.MessageDigest
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.catalyst.InternalRow
@@ -70,16 +69,15 @@ case class DocMeanPosterior(model: Broadcast[ClfModel], child: Expression)
     val n = a.numElements()
     if (n == 0) return null
     val m = model.value
-    val md = DocMeanPosterior.digests.get()
+    val md = Md5.scratch()
     var sum = 0L
     var i = 0
     while (i < n) {
       if (a.isNullAt(i)) return null
       val w = a.getUTF8String(i).toString
-      md.reset()
-      val h = md.digest((m.prefix + w).getBytes(StandardCharsets.UTF_8))
-      val v = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
-        ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
+      md.start()
+      md.update((m.prefix + w).getBytes(StandardCharsets.UTF_8))
+      val v = md.first(4)
       sum += m.micros((v % m.nBuckets).toInt)
       i += 1
     }
@@ -93,11 +91,6 @@ case class DocMeanPosterior(model: Broadcast[ClfModel], child: Expression)
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
-}
-
-object DocMeanPosterior {
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 }
 
 object ClfFunctions {

@@ -1,7 +1,5 @@
 package graft.functions
 
-import java.security.MessageDigest
-
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
@@ -71,9 +69,6 @@ case class ShingleHashSet(child: Expression, k: Int)
 
 object ShingleHashSet {
 
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
   /** Static entry the generated code calls. Returns the sorted distinct
     * 56-bit shingle-hash set; fewer than k tokens yields an empty array
     * (the twin of `array_distinct` over [[ShinglesK]]'s empty result).
@@ -97,18 +92,15 @@ object ShingleHashSet {
     val starts = Utf8Tokens.starts(b, k)
     if (starts == null) return ArrayData.toArrayData(Array.empty[Long])
     val n = starts.length - k
-    val md = digests.get()
+    val md = Md5.scratch()
     val hs = new Array[Long](n)
     var i = 0
     while (i < n) {
       val from = starts(i)
-      md.reset()
+      md.start()
       md.update(b, from, starts(i + k) - 1 - from)
-      val h = md.digest()
-      // first 14 hex digits == first 7 bytes, read unsigned big-endian
-      hs(i) = ((h(0) & 0xffL) << 48) | ((h(1) & 0xffL) << 40) |
-        ((h(2) & 0xffL) << 32) | ((h(3) & 0xffL) << 24) |
-        ((h(4) & 0xffL) << 16) | ((h(5) & 0xffL) << 8) | (h(6) & 0xffL)
+      // first 14 hex digits == first 7 bytes
+      hs(i) = md.first(7)
       i += 1
     }
     java.util.Arrays.sort(hs)

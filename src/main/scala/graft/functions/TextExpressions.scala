@@ -100,14 +100,11 @@ case class TopShingleCount(child: Expression, k: Int)
 
 object TopShingleCount {
 
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
   /** Static entry the generated code calls. */
   def compute(text: UTF8String, k: Int): Long = {
     val ws = text.toString.split(" ", -1)
     if (ws.length < k) return 0L
-    val md = digests.get()
+    val md = Md5.scratch()
     val counts = new java.util.HashMap[Long, Int]()
     var max = 0
     var i = 0
@@ -120,10 +117,9 @@ object TopShingleCount {
         sb.append(ws(i + j))
         j += 1
       }
-      md.reset()
-      val h = md.digest(sb.toString.getBytes(StandardCharsets.UTF_8))
-      val v = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
-        ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
+      md.start()
+      md.update(sb.toString.getBytes(StandardCharsets.UTF_8))
+      val v = md.first(4)
       val c = counts.merge(v, 1, (a, b) => a + b)
       if (c > max) max = c
       i += 1
@@ -133,15 +129,6 @@ object TopShingleCount {
 }
 
 object MinHashSig {
-
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
-  // reusable 16-byte digest output per thread: MessageDigest.digest()
-  // allocates a fresh array per call, and this kernel calls it
-  // nHashes × shingles times per document
-  private val digestBuf: ThreadLocal[Array[Byte]] =
-    ThreadLocal.withInitial(() => new Array[Byte](16))
 
   // seed prefixes `j + "|"` as pre-encoded ASCII bytes — the digest input
   // (j + "|" + shingle) is the concatenation of this prefix with the
@@ -173,8 +160,7 @@ object MinHashSig {
     val b = text.getBytes
     val starts = Utf8Tokens.starts(b, 3)
     if (starts == null) return null
-    val md = digests.get()
-    val out = digestBuf.get()
+    val md = Md5.scratch()
     val mins = Array.fill(nHashes)(Long.MaxValue)
     val n = starts.length - 3
     var i = 0
@@ -183,13 +169,11 @@ object MinHashSig {
       val slen = starts(i + 3) - 1 - from
       var j = 0
       while (j < nHashes) {
-        md.reset()
+        md.start()
         md.update(seedPrefix(j))
         md.update(b, from, slen)
-        md.digest(out, 0, 16)
-        // first 8 hex digits == first 4 bytes, read unsigned big-endian
-        val v = ((out(0) & 0xffL) << 24) | ((out(1) & 0xffL) << 16) |
-          ((out(2) & 0xffL) << 8) | (out(3) & 0xffL)
+        // first 8 hex digits == first 4 bytes
+        val v = md.first(4)
         if (v < mins(j)) mins(j) = v
         j += 1
       }
@@ -386,6 +370,37 @@ case class Md5Hash32(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
+/** The per-thread MD5 scratch every hashing kernel shares: one digest
+  * and one 16-byte output, so no digest allocates (a kernel hashes
+  * once per shingle, gram or token). Use: [[start]], feed bytes with
+  * [[update]], then read the digest's leading bytes with [[first]].
+  */
+private[functions] final class Md5 private {
+  private val md = MessageDigest.getInstance("MD5")
+  private val out = new Array[Byte](16)
+
+  /** Begin a new digest. */
+  def start(): Unit = md.reset()
+  def update(b: Array[Byte]): Unit = md.update(b)
+  def update(b: Array[Byte], from: Int, len: Int): Unit = md.update(b, from, len)
+  /** End the digest; its first `nBytes` (≤ 8) as one unsigned big-endian
+    * number — the value of its first `2 · nBytes` hex digits.
+    */
+  def first(nBytes: Int): Long = {
+    md.digest(out, 0, 16)
+    var v = 0L
+    var i = 0
+    while (i < nBytes) { v = (v << 8) | (out(i) & 0xffL); i += 1 }
+    v
+  }
+}
+
+private[functions] object Md5 {
+  private val perThread = ThreadLocal.withInitial[Md5](() => new Md5)
+  /** The calling thread's scratch. */
+  def scratch(): Md5 = perThread.get()
+}
+
 /** Token boundaries of a UTF-8 text split on the single byte 0x20: they
   * equal `String.split(" ", -1)`'s, empty tokens included, because 0x20
   * can only BE the space character in UTF-8 (every byte of a multi-byte
@@ -416,31 +431,15 @@ private[functions] object Utf8Tokens {
 
 object Md5Hash32 {
 
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
-  private val digestBuf: ThreadLocal[Array[Byte]] =
-    ThreadLocal.withInitial(() => new Array[Byte](16))
-
   def compute(s: UTF8String): Long = {
-    val md = digests.get()
-    val out = digestBuf.get()
-    val b = s.getBytes
-    md.reset()
-    md.update(b, 0, b.length)
-    md.digest(out, 0, 16)
-    ((out(0) & 0xffL) << 24) | ((out(1) & 0xffL) << 16) |
-      ((out(2) & 0xffL) << 8) | (out(3) & 0xffL)
+    val md = Md5.scratch()
+    md.start()
+    md.update(s.getBytes)
+    md.first(4)
   }
 }
 
 object GramHashArray {
-
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
-
-  private val digestBuf: ThreadLocal[Array[Byte]] =
-    ThreadLocal.withInitial(() => new Array[Byte](16))
 
   /** Distinct k-gram hashes in first-occurrence order. Token boundaries
     * come from [[Utf8Tokens]]; dedup probes compare the gram BYTE RUNS
@@ -456,8 +455,7 @@ object GramHashArray {
     val cap = Integer.highestOneBit(math.max(4, 2 * n - 1)) << 1
     val mask = cap - 1
     val table = new Array[Int](cap)
-    val md = digests.get()
-    val out16 = digestBuf.get()
+    val md = Md5.scratch()
     val out = new Array[Long](n)
     var m = 0
     var i = 0
@@ -485,12 +483,10 @@ object GramHashArray {
         }
       }
       if (!dup) {
-        md.reset()
+        md.start()
         md.update(b, from, glen)
-        md.digest(out16, 0, 16)
-        // first 8 hex digits == first 4 bytes, read unsigned big-endian
-        out(m) = ((out16(0) & 0xffL) << 24) | ((out16(1) & 0xffL) << 16) |
-          ((out16(2) & 0xffL) << 8) | (out16(3) & 0xffL)
+        // first 8 hex digits == first 4 bytes
+        out(m) = md.first(4)
         m += 1
       }
       i += 1
@@ -530,8 +526,6 @@ case class SimHash32(child: Expression, seed: Option[Int])
 }
 
 object SimHash32 {
-  private val digests: ThreadLocal[MessageDigest] =
-    ThreadLocal.withInitial(() => MessageDigest.getInstance("MD5"))
 
   /** seedPrefix null → unseeded md5(w); else md5(seedPrefix + "|" + w).
     * Bit b of the result is set when more than half the token hashes
@@ -539,15 +533,14 @@ object SimHash32 {
     */
   def compute(text: UTF8String, seedPrefix: String): Long = {
     val ws = text.toString.split(" ", -1)
-    val md = digests.get()
+    val md = Md5.scratch()
     val counts = new Array[Int](32)
     var i = 0
     while (i < ws.length) {
       val in = if (seedPrefix == null) ws(i) else seedPrefix + "|" + ws(i)
-      md.reset()
-      val h = md.digest(in.getBytes(StandardCharsets.UTF_8))
-      val v = ((h(0) & 0xffL) << 24) | ((h(1) & 0xffL) << 16) |
-        ((h(2) & 0xffL) << 8) | (h(3) & 0xffL)
+      md.start()
+      md.update(in.getBytes(StandardCharsets.UTF_8))
+      val v = md.first(4)
       var b = 0
       while (b < 32) {
         if (((v >> b) & 1L) == 1L) counts(b) += 1

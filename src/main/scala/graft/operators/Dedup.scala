@@ -56,7 +56,7 @@ object Dedup {
   // or star rounds) under these PhaseStats tags: the iterative
   // checkpoint-heavy queries (q87/q128) drift in wide same-box bands,
   // and without per-round rows in the artifact every flag burns an A/B
-  private val FixpointTag = "dedup-fixpoint"
+  private[graft] val FixpointTag = "dedup-fixpoint"
   private val CcTag = "dedup-cc"
 
   /** One row per (doc, band) of a frame carrying the `bkeys` array

@@ -60,7 +60,7 @@ object PageRank {
   /** Per-phase instrumentation of the last [[run]]: wall plus EXACT
     * shuffle-write/spill attribution per phase (round 0 is `prepare`,
     * 1..iters the damped rounds), via the shared [[PhaseStats]]
-    * job-group attribution (one implementation for every iterative
+    * job-tag attribution (one implementation for every iterative
     * operator — [[Dedup]] shares it).
     */
   type RoundStat = PhaseStats.RoundStat
@@ -73,7 +73,7 @@ object PageRank {
     */
   def lastRunStats: Seq[RoundStat] = PhaseStats.last(Tag).stats
 
-  /** [[lastRunStats]] as the shared JSON row shape (Bench's q146_rounds,
+  /** [[lastRunStats]] as the shared JSON row shape (Bench's `phases`,
     * the stress harness lines). */
   def lastRunStatsJson: String = PhaseStats.last(Tag).json
 

@@ -552,6 +552,12 @@ object PipelineQueries {
     docs(s, d).filter(TextOps.eligible(col("text")))
       .select(col("doc_id"), TextOps.shingleSet(col("text")).as("shset"))
 
+  /** Multi-member buckets up to this many are pruned by a broadcast
+    * join in [[graft.operators.Dedup.verifyBuckets]]; above it, by a
+    * shuffle.
+    */
+  private val PruneBroadcastLimit = 1000000L
+
   /** Verified near-dup edges — q43's banded candidates at exact Jaccard
     * ≥ 0.5 — emitted in both directions as (src, dst).
     *
@@ -576,7 +582,7 @@ object PipelineQueries {
     * composition (spec-locked, all paths forced).
     */
   private[graft] def verifiedEdges(s: SparkSession, d: String,
-      hotCap: Int = 256, pruneBroadcastLimit: Long = 1000000L): DataFrame =
+      hotCap: Int = 256, pruneBroadcastLimit: Long = PruneBroadcastLimit): DataFrame =
     verifiedEdgesOf(edgeBase(spreadForKernels(docs(s, d))), d, hotCap,
       pruneBroadcastLimit)
 
@@ -1381,7 +1387,7 @@ object PipelineQueries {
         .select(col("doc_id"), col("node_id"))
       val nodeEdges = verifiedEdgesOf(
         nodes.select(col("doc_id"), col("bkeys"), col("shset")),
-        s"$d#exact-collapsed", 256, 1000000L)
+        s"$d#exact-collapsed", 256, PruneBroadcastLimit)
       val nodeLabels = graft.operators.Dedup
         .keepListToFixpoint(nodes.select(col("doc_id")), nodeEdges)
       val expanded = docNode.join(
@@ -1542,7 +1548,7 @@ object PipelineQueries {
         edgeBase(spreadForKernels(all)))
       // 1) the PRIOR SNAPSHOT's labels: history docs, history-only edges
       val eHist = verifiedEdgesOf(base.filter(!isDelta), s"$d#cchist",
-        256, 1000000L)
+        256, PruneBroadcastLimit)
       val histLabels = graft.operators.Dedup.connectedComponents(
         all.filter(!isDelta), eHist)
       // 2) buckets the new batch touches — light band-key pass, payload
@@ -1556,7 +1562,7 @@ object PipelineQueries {
         .select(col("doc_id")).distinct()
       val eTouch = verifiedEdgesOf(
         base.join(touchedIds, Seq("doc_id"), "left_semi"),
-        s"$d#cctouch", 256, 1000000L)
+        s"$d#cctouch", 256, PruneBroadcastLimit)
       // 3) history arrives as its star compression, not its edge graph
       val starHist = histLabels.filter(col("doc_id") =!= col("rep"))
         .select(col("doc_id").as("src"), col("rep").as("dst"))
@@ -4197,7 +4203,7 @@ object PipelineQueries {
     * budget; `stageRun` (stageNo, stageName, buildSurvivors) → survivors
     * lets the stress harness run EACH STAGE'S WHOLE CONSTRUCTION —
     * including its eager work (edge generation + fixpoint in stage 2,
-    * bloom training in stage 3) — under its own job group for per-stage
+    * bloom training in stage 3) — under its own PhaseStats phase for per-stage
     * attribution, and materialize the result however it wants. The
     * default materializes stage boundaries with the bench-loop-safe
     * [[pinReleasingPrior]] discipline (each stage's manifest is ids-only
@@ -4256,7 +4262,7 @@ object PipelineQueries {
     // link the pairwise form closes transitively).
     val s2 = stage(2, "neardup_fixpoint") {
       val edges = if (repAnchoredNearDup) repAnchoredEdges(d1)
-        else verifiedEdgesOf(edgeBase(d1), s"q160:$d", 256, 1000000L)
+        else verifiedEdgesOf(edgeBase(d1), s"q160:$d", 256, PruneBroadcastLimit)
       graft.operators.Dedup
         .keepListToFixpoint(d1.select(col("doc_id")), edges)
         .filter(col("is_kept")).select(col("doc_id"))
@@ -4765,6 +4771,9 @@ object PipelineQueries {
     4 -> Seq("vector", "data", "merge"))
 
   private val Bm25K1 = 1.2
+  /** Results kept per query by q147's BM25, the dense ranking and q150's
+    * fusion of the two. */
+  private val RetrievalK = 10
   private val Bm25B = 0.75
 
   /** BM25 scoring + per-query top-k (see the q147 entry comment). Every
@@ -4774,7 +4783,8 @@ object PipelineQueries {
     * 6, and the per-doc total is a fixed-order sum of those — so rank
     * vectors hash-match with no tolerance.
     */
-  private[graft] def bm25TopK(s: SparkSession, d: String, k: Int = 10): DataFrame = {
+  private[graft] def bm25TopK(s: SparkSession, d: String): DataFrame = {
+    val k = RetrievalK
     import org.apache.spark.sql.Column
     import org.apache.spark.sql.types.DoubleType
     val terms = Bm25Queries.flatMap(_._2).distinct
@@ -4869,7 +4879,8 @@ object PipelineQueries {
     * in [[hybridRrf]] sees two k·|Q|-row inputs regardless of corpus
     * size.
     */
-  private[graft] def denseTopK(s: SparkSession, d: String, k: Int): DataFrame = {
+  private[graft] def denseTopK(s: SparkSession, d: String): DataFrame = {
+    val k = RetrievalK
     val e = embs(s, d)
     val qidOf = typedLit(RrfAnchors.map { case (q, v) => v -> q }.toMap)
     val anchors = e.filter(col("vec_id").isin(RrfAnchors.map(_._2): _*))
@@ -4896,11 +4907,12 @@ object PipelineQueries {
     * inputs end in bounded top-k aggregates), so the window's single
     * partition-by-qid exchange never sees corpus-sized data.
     */
-  private[graft] def hybridRrf(s: SparkSession, d: String, k: Int = 10): DataFrame = {
+  private[graft] def hybridRrf(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val sparse = bm25TopK(s, d, k)
+    val k = RetrievalK
+    val sparse = bm25TopK(s, d)
       .select(col("qid"), col("doc_id"), col("rank").as("sparse_rank"))
-    val dense = denseTopK(s, d, k)
+    val dense = denseTopK(s, d)
       .select(col("qid"), col("doc_id"), col("dense_rank"))
     def rrfTerm(rank: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       coalesce(lit(1.0) / (lit(RrfK) + rank.cast("double")), lit(0.0))
@@ -5030,10 +5042,15 @@ object PipelineQueries {
       .select(col("doc_id"), array(TextOps.bandKeys(col("sig")): _*).as("bkeys"),
         col("text"))
 
-  /** q152's kept pairs: edit distance ≤ `distFrac` of the longer text
-    * (see the Q entry comment). `distFrac` rides as the decimal literal
-    * 0.2 in BOTH engines (each parses it to the same nearest double),
-    * and edit_sim is canonicalized via the decimal-cast hop.
+  /** The edit-distance bound of q152/q157, as a fraction of the longer
+    * text. It rides as the decimal literal 0.2 in BOTH engines (each
+    * parses it to the same nearest double).
+    */
+  private val EditDistFrac = 0.2
+
+  /** q152's kept pairs: edit distance ≤ [[EditDistFrac]] of the longer
+    * text (see the Q entry comment); edit_sim is canonicalized via the
+    * decimal-cast hop.
     *
     * Verification is BUCKET-LOCAL, [[verifiedEdgesOf]]' pipeline
     * ([[graft.operators.Dedup.verifyBuckets]]) with the
@@ -5042,11 +5059,10 @@ object PipelineQueries {
     * `hotCap` verify through the pair-join form.
     */
   private[graft] def editDistanceNearDup(s: SparkSession, d: String,
-      distFrac: Double = 0.2, hotCap: Int = 4096,
-      pruneBroadcastLimit: Long = 1000000L): DataFrame = {
+      hotCap: Int = 4096): DataFrame = {
     import graft.operators.Dedup
     withEditSim(Dedup.verifyBuckets(editBase(s, d), s"editprobe:$d", hotCap,
-      pruneBroadcastLimit, Dedup.editWithin(distFrac)))
+      PruneBroadcastLimit, Dedup.editWithin(EditDistFrac)))
   }
 
   /** q157's rep-verified edges: [[editDistanceNearDup]]'s sub-quadratic
@@ -5065,14 +5081,13 @@ object PipelineQueries {
     * this form ran 75.5 s with zero spill (PLANS.md Round 12), and was
     * deleted.
     */
-  private[graft] def editDistanceNearDupRep(s: SparkSession, d: String,
-      distFrac: Double = 0.2): DataFrame = {
+  private[graft] def editDistanceNearDupRep(s: SparkSession, d: String): DataFrame = {
     import graft.operators.Dedup
     val base = editBase(s, d)
     val pairs = Dedup.repPairs(Dedup.bandRows(base, Seq("doc_id")), "rep_id")
       .select(col("rep_id").as("doc_a"), col("doc_id").as("doc_b"))
       .distinct()
-    withEditSim(Dedup.verifyPairs(pairs, base, Dedup.editWithin(distFrac)))
+    withEditSim(Dedup.verifyPairs(pairs, base, Dedup.editWithin(EditDistFrac)))
   }
 
   /** q152/q157's output: the verified (doc_a, doc_b, edit_dist, max_len)
@@ -5151,12 +5166,15 @@ object PipelineQueries {
       WHERE CAST(edit_dist AS DOUBLE) <= CAST(0.2 AS DOUBLE) * CAST(max_len AS DOUBLE)
       ORDER BY doc_a, doc_b"""
 
-  /** q148's PMI pipeline (see the Q entry comment). `minCount` prunes
-    * noise bigrams BEFORE the unigram joins (standard collocation
+  /** q148's bigram count floor and result size. */
+  private val PmiMinCount = 5L
+  private val PmiTopK = 30
+
+  /** q148's PMI pipeline (see the Q entry comment). [[PmiMinCount]]
+    * prunes noise bigrams BEFORE the unigram joins (standard collocation
     * practice, and the join input shrinks to the hot tail).
     */
-  private[graft] def pmiTopK(s: SparkSession, d: String,
-      minCount: Long = 5, k: Int = 30): DataFrame = {
+  private[graft] def pmiTopK(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
     val t = docs(s, d).select(TextOps.tokens(col("text")).as("ws"))
     val totRow = t.agg(sum(size(col("ws")).cast("long")).as("tu"),
@@ -5172,7 +5190,7 @@ object PipelineQueries {
         (a, b) => struct(a.as("a"), b.as("b")))).as("bg"))
       .select(col("bg.a").as("w1"), col("bg.b").as("w2"))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("cb"))
-      .filter(col("cb") >= minCount)
+      .filter(col("cb") >= PmiMinCount)
     bi.join(uni.select(col("w").as("u1"), col("cu").as("c1")),
         col("w1") === col("u1"))
       .join(uni.select(col("w").as("u2"), col("cu").as("c2")),
@@ -5183,7 +5201,7 @@ object PipelineQueries {
             (col("c2").cast(DoubleType) / lit(tu))))
           .cast(DecimalType(18, 6)).cast(DoubleType).as("pmi_ratio"))
       .orderBy(col("pmi_ratio").desc, col("w1"), col("w2"))
-      .limit(k)
+      .limit(PmiTopK)
   }
 
   private def q148OracleSql: String = s"""

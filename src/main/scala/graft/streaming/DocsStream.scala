@@ -188,9 +188,8 @@ object DocsStream {
     * `anchorRewinds` discipline) so the out-of-order regime — formerly a
     * silent bounded over-keep — is observable in any run's readout.
     */
-  private val displacedAccs = new AppAccRegistry("docsstream.displaced_rep")
   def displacedReps(spark: SparkSession): org.apache.spark.util.LongAccumulator =
-    displacedAccs.get(spark)
+    graft.operators.PhaseStats.accumulator(spark.sparkContext, "docsstream.displaced_rep")
 
   /** Displaced-rep emissions that PASSED in-handler verification — each
     * one folds the old rep's cluster into the new rep's, which is the
@@ -203,15 +202,8 @@ object DocsStream {
     * individually verified pair; this bounds how many merges the
     * anchoring difference can contribute).
     */
-  private val overConnectAccs = new AppAccRegistry("docsstream.overconnect_merge")
   def overConnectMerges(spark: SparkSession): org.apache.spark.util.LongAccumulator =
-    overConnectAccs.get(spark)
-
-  /** Applications with live accumulator entries across this object's
-    * registries — the lifecycle observable [[PhaseStatsCycle]] asserts
-    * returns to zero when a cycled session stops. */
-  private[graft] def trackedAccApps: Int =
-    math.max(displacedAccs.trackedCount, overConnectAccs.trackedCount)
+    graft.operators.PhaseStats.accumulator(spark.sparkContext, "docsstream.overconnect_merge")
 
   /** One (band, bucket)'s rep step — the pure core of every doc-stream
     * rep handler ([[nearDupCandidates]], [[nearDupVerified]] and

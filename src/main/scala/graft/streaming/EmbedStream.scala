@@ -60,13 +60,8 @@ object EmbedStream {
     * per SparkContext — micro-batches add task-side, values merge
     * driver-side across the stream's lifetime.
     */
-  private val overflowAccs = new AppAccRegistry("embedstream.cap_overflow")
   def capOverflows(spark: SparkSession): org.apache.spark.util.LongAccumulator =
-    overflowAccs.get(spark)
-
-  /** Applications with a live accumulator entry — see
-    * [[DocsStream.trackedAccApps]]. */
-  private[graft] def trackedAccApps: Int = overflowAccs.trackedCount
+    graft.operators.PhaseStats.accumulator(spark.sparkContext, "embedstream.cap_overflow")
 
   /** Emits (vec_id, cid, dup_of, cosine) for each vector within `tau`
     * of a stored exemplar in its cell. Works on batch frames too (the

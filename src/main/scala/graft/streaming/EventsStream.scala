@@ -206,13 +206,8 @@ object EventsStream {
     * discipline: one named accumulator per SparkContext, task-side adds,
     * driver-side reads).
     */
-  private val rewindAccs = new AppAccRegistry("eventsstream.anchor_rewind")
   def anchorRewinds(spark: SparkSession): org.apache.spark.util.LongAccumulator =
-    rewindAccs.get(spark)
-
-  /** Applications with a live accumulator entry — see
-    * [[DocsStream.trackedAccApps]]. */
-  private[graft] def trackedAccApps: Int = rewindAccs.trackedCount
+    graft.operators.PhaseStats.accumulator(spark.sparkContext, "eventsstream.anchor_rewind")
 
   def funnelCompletions(windowMicros: Long = 86400000000L, ttlMs: Long = 0L)(
       events: DataFrame): DataFrame = {

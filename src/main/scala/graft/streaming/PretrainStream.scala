@@ -82,17 +82,10 @@ object PretrainStream {
     * accounting as [[DocsStream.displacedReps]], kept separate so the
     * composed pipeline's out-of-order telemetry is readable on its own).
     */
-  private val displacedAccs = new AppAccRegistry("pretrainstream.displaced_rep")
   def displacedReps(spark: SparkSession): org.apache.spark.util.LongAccumulator =
-    displacedAccs.get(spark)
-  private val overConnectAccs = new AppAccRegistry("pretrainstream.overconnect_merge")
+    graft.operators.PhaseStats.accumulator(spark.sparkContext, "pretrainstream.displaced_rep")
   def overConnectMerges(spark: SparkSession): org.apache.spark.util.LongAccumulator =
-    overConnectAccs.get(spark)
-
-  /** Applications with live accumulator entries — see
-    * [[DocsStream.trackedAccApps]]. */
-  private[graft] def trackedAccApps: Int =
-    math.max(displacedAccs.trackedCount, overConnectAccs.trackedCount)
+    graft.operators.PhaseStats.accumulator(spark.sparkContext, "pretrainstream.overconnect_merge")
 
   /** Stages 1-2 as ONE streaming query (two chained append-mode keyed
     * states + a stream-static verification join). Emits two row kinds:

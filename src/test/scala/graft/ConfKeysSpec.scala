@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * its sides — never silently. Likewise the environment: only
   * [[HarnessEnv]]'s table reads it; driver frames: only
   * [[graft.plans.FoldDriverRelation]] folds them; near-dup buckets:
-  * only [[graft.operators.Dedup]] probes and collects them; and every
+  * only [[graft.operators.Dedup]] probes and collects them; listeners:
+  * only [[graft.operators.PhaseStats]] registers one; and every
   * definition in src/main has a reader.
   */
 class ConfKeysSpec extends AnyFunSuite {
@@ -72,6 +73,25 @@ class ConfKeysSpec extends AnyFunSuite {
     }.groupMap(_._1)(_._2)
     assert(homes == steps.map(_ -> Seq("graft/operators/Dedup.scala")).toMap,
       s"bucket verify steps by file: $homes")
+  }
+
+  test("PhaseStats registers the only listener and nothing swaps job groups") {
+    // one listener per application counts phases, stream progress and
+    // the telemetry accumulators; a phase tags its jobs, so a caller's
+    // job group stays on them
+    val calls = Seq("addSparkListener", "streams.addListener", "setJobGroup",
+      "clearJobGroup")
+    val decl = "(?<![A-Za-z0-9_])def\\s+([A-Za-z_][A-Za-z0-9_]*)".r
+    val lines = sources { f =>
+      val obj = f.getFileName.toString.stripSuffix(".scala")
+      var inDef = "" // the def the line sits in, by the nearest one above
+      Files.readAllLines(f).asScala.toSeq.flatMap { l =>
+        decl.findFirstMatchIn(l).foreach(m => inDef = m.group(1))
+        calls.filter(l.contains).map(c => s"$obj.$inDef: $c")
+      }
+    }
+    assert(lines == Seq("PhaseStats.listenerOf: addSparkListener"),
+      s"listener registrations and job-group calls in src/main: ${lines.sorted.mkString(", ")}")
   }
 
   test("every def in src/main is referenced outside its own declaration") {

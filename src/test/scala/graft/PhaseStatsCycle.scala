@@ -15,7 +15,8 @@ import org.apache.spark.sql.functions.expr
   * Protocol: prints `CYCLE\t<label>\t<trackedAppCount>` lines —
   * `running1/stopped1/running2/stopped2` — plus a final `CYCLE\tok`
   * after asserting each cycle's phase attribution was real (the grouped
-  * count shuffled, so round 0 must carry shuffle-write bytes).
+  * count shuffled, so round 0 must carry shuffle-write bytes) and that
+  * an accumulator read after stop returns a detached one.
   */
 object PhaseStatsCycle {
   def main(args: Array[String]): Unit = {
@@ -33,24 +34,26 @@ object PhaseStatsCycle {
       }
       require(n == 7L, s"grouped count returned $n")
       val handle = run.finish()
-      // touch every streaming telemetry registry so its per-appId entry
-      // exists — the same AppAccRegistry eviction contract as the
-      // PhaseStats listener map is then observable on stop
-      graft.streaming.DocsStream.displacedReps(spark)
-      graft.streaming.DocsStream.overConnectMerges(spark)
-      graft.streaming.PretrainStream.displacedReps(spark)
-      graft.streaming.PretrainStream.overConnectMerges(spark)
-      graft.streaming.EmbedStream.capOverflows(spark)
-      graft.streaming.EventsStream.anchorRewinds(spark)
-      def accApps: Int = Seq(
-        graft.streaming.DocsStream.trackedAccApps,
-        graft.streaming.PretrainStream.trackedAccApps,
-        graft.streaming.EmbedStream.trackedAccApps,
-        graft.streaming.EventsStream.trackedAccApps).max
+      // touch every streaming telemetry accumulator: they live in the
+      // same per-app listener, so the one tracked-app count covers them
+      def accs = Seq(
+        graft.streaming.DocsStream.displacedReps(spark),
+        graft.streaming.DocsStream.overConnectMerges(spark),
+        graft.streaming.PretrainStream.displacedReps(spark),
+        graft.streaming.PretrainStream.overConnectMerges(spark),
+        graft.streaming.EmbedStream.capOverflows(spark),
+        graft.streaming.EventsStream.anchorRewinds(spark))
+      val live = accs
+      live.head.add(3L)
+      require(accs.zip(live).forall { case (a, b) => a eq b },
+        "a running application's accumulators must be one per name")
       println(s"CYCLE\trunning$i\t${graft.operators.PhaseStats.trackedAppCount}")
-      println(s"CYCLE\taccs_running$i\t$accApps")
       spark.stop()
-      println(s"CYCLE\taccs_stopped$i\t$accApps")
+      // a read after stop hands back a detached accumulator (value 0)
+      // and registers nothing on the stopped context
+      val after = accs
+      require(after.forall(_.value == 0L) && after.head.ne(live.head),
+        s"accumulators read after stop: ${after.map(_.value)}")
       // the Handle outlives the map entry (it holds the listener
       // directly) — stats must still read, and with the bus fully
       // drained by stop() the shuffle attribution is complete

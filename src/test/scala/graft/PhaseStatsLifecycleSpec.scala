@@ -4,7 +4,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.sys.process.{Process, ProcessLogger}
 
 /** Listener lifecycle for [[graft.operators.PhaseStats]]: the per-app
-  * listener map must not grow across session cycles (`onApplicationEnd`
+  * listener map, and with it the streaming telemetry accumulators it
+  * holds, must not grow across session cycles (`onApplicationEnd`
   * removes the entry when its SparkContext stops). Forks
   * [[PhaseStatsCycle]] — two sequential local sessions in a fresh JVM —
   * because the suite's own session is shared and may never be stopped.
@@ -45,14 +46,6 @@ class PhaseStatsLifecycleSpec extends AnyFunSuite {
     assert(counts.get("stopped1").contains(0), s"counts=$counts")
     assert(counts.get("running2").contains(1), s"counts=$counts")
     assert(counts.get("stopped2").contains(0), s"counts=$counts")
-    // the streaming AppAccRegistry entries (DocsStream/PretrainStream/
-    // EmbedStream/EventsStream telemetry counters) follow the same
-    // onApplicationEnd eviction: one tracked app while running, zero
-    // after each real SparkContext.stop()
-    assert(counts.get("accs_running1").contains(1), s"counts=$counts")
-    assert(counts.get("accs_stopped1").contains(0), s"counts=$counts")
-    assert(counts.get("accs_running2").contains(1), s"counts=$counts")
-    assert(counts.get("accs_stopped2").contains(0), s"counts=$counts")
     assert(out.toString.contains("CYCLE\tok"),
       s"child never reached ok:\n${out.toString.take(2000)}")
   }

@@ -793,7 +793,7 @@ class QueriesSpec extends AnyFunSuite {
     import graft.queries.PipelineQueries
     val sparse = PipelineQueries.bm25TopK(spark, dir).collect()
       .map(r => (r.getInt(0), r.getLong(2)) -> r.getLong(1)).toMap
-    val dense = PipelineQueries.denseTopK(spark, dir, 10).collect()
+    val dense = PipelineQueries.denseTopK(spark, dir).collect()
       .map(r => (r.getInt(0), r.getLong(2)) -> r.getLong(1)).toMap
     val expect = (sparse.keySet ++ dense.keySet).groupBy(_._1).flatMap {
       case (qid, keys) =>
@@ -1217,20 +1217,27 @@ class QueriesSpec extends AnyFunSuite {
 
   test("q161's stage 2 starts no Spark job outside the fixpoint's own phases") {
     // the rep form's stage 2 is edge construction (lazy) plus the
-    // keep-list fixpoint, whose prepare and rounds run under their own
-    // PhaseStats job groups — so nothing else may run a job while the
-    // stage is built (no survivor count, no staging write). q161 only:
-    // q160's pairwise form runs its memoized bucket probe on first use.
-    var outside = -1
+    // keep-list fixpoint, whose prepare and rounds run as nested
+    // PhaseStats phases — so every job the stage starts while it is
+    // built must be one of the fixpoint run's (no survivor count, no
+    // staging write). q161 only: q160's pairwise form runs its memoized
+    // bucket probe on first use.
+    var stage2 = -1
+    var fixpoint = -1
     queries.PipelineQueries.q160Frame(spark, dir, 6000L,
       stageRun = Some((i, _, mk) => {
         var built: org.apache.spark.sql.DataFrame = null
-        if (i == 2) outside = TestSpark.jobsOf(spark) { built = mk() }
-        else built = mk()
+        if (i == 2) {
+          stage2 = TestSpark.jobsOf(spark) { built = mk() }
+          fixpoint = operators.PhaseStats.last(operators.Dedup.FixpointTag)
+            .stats.map(_.jobs).sum
+        } else built = mk()
         built.localCheckpoint()
       }),
       repAnchoredNearDup = true).queryExecution.logical // construct only
-    assert(outside == 0, s"stage 2 started $outside job(s) outside the fixpoint")
+    assert(fixpoint > 0, "the fixpoint ran no job inside stage 2")
+    assert(stage2 == fixpoint,
+      s"stage 2 started ${stage2 - fixpoint} job(s) outside the fixpoint")
   }
 
   test("rep-anchored id-join edges == the payload-carrying batch-twin derivation") {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.operators.PhaseStats
 import graft.queries.Tables
 import graft.streaming.EventsStream
 
@@ -312,40 +313,28 @@ class StreamingSpec extends AnyFunSuite {
       (3L, "2024-03-01 10:12:00", "purchase")))
     write("b3.parquet", 3000000L, Seq(
       (9L, "2024-03-03 12:00:00", "view")))
-    // drive with a state-metrics listener: per-user state must stay
-    // bounded (≤ one row per user seen — buffers live inside the row)
-    val acc = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        e.progress.stateOperators.headOption.foreach(s =>
-          acc.getAndUpdate(c => math.max(c, s.numRowsTotal)))
+    // drive with state metrics: per-user state must stay bounded
+    // (≤ one row per user seen — buffers live inside the row)
+    val q = PhaseStats.startStream(spark.sparkContext) {
+      EventsStream.funnelCompletionsExact()(
+        EventsStream.readStream(spark, d.toString, Some(1)))
+        .writeStream.format("memory").queryName("funnel_exact_ooo")
+        .outputMode("append").start()
     }
-    spark.streams.addListener(listener)
-    val got =
-      try {
-        val q = EventsStream.funnelCompletionsExact()(
-          EventsStream.readStream(spark, d.toString, Some(1)))
-          .writeStream.format("memory").queryName("funnel_exact_ooo")
-          .outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-        spark.table("funnel_exact_ooo").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          .toSet
-      } finally spark.streams.removeListener(listener)
+    q.processAllAvailable()
+    q.stop()
+    val statePeak = PhaseStats.progress(q).head.rowsPeak
+    val got = spark.table("funnel_exact_ooo").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSet
     def micros(ts: String) = java.sql.Timestamp.valueOf(ts).getTime * 1000L
     assert(got == Set(
       (2L, micros("2024-03-01 09:50:00"), micros("2024-03-01 10:05:00"),
         micros("2024-03-01 10:10:00")),
       (3L, micros("2024-03-01 10:01:00"), micros("2024-03-01 10:03:00"),
         micros("2024-03-01 10:12:00"))), s"got $got")
-    assert(acc.get() >= 1 && acc.get() <= 4,
-      s"state must stay ≤ one row per user, peak ${acc.get()}")
+    assert(statePeak >= 1 && statePeak <= 4,
+      s"state must stay ≤ one row per user, peak $statePeak")
     // contrast: the FROZEN twin on the same replay diverges on u2 (its
     // anchor stays 10:00) and counts the rewind — the disorder is real
     val rewindsBefore = EventsStream.anchorRewinds(spark).value
@@ -392,32 +381,17 @@ class StreamingSpec extends AnyFunSuite {
       write("b2.parquet", 2000000L, Seq((99L, "2024-03-01 20:00:00", "view")))
       write("b3.parquet", 3000000L, Seq((99L, "2024-03-20 10:00:00", "view")))
       write("b4.parquet", 4000000L, Seq((99L, "2024-04-20 10:00:00", "view")))
-      val peak = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val last = new java.util.concurrent.atomic.AtomicLong(-1L)
-      val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-        override def onQueryStarted(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-        override def onQueryTerminated(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-        override def onQueryProgress(
-            e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-          e.progress.stateOperators.headOption.foreach { s =>
-            peak.getAndUpdate(c => math.max(c, s.numRowsTotal))
-            last.set(s.numRowsTotal)
-          }
-      }
-      spark.streams.addListener(listener)
-      try {
-        val q = EventsStream.funnelCompletionsExact(tombstoneTtlMs = ttl)(
+      val q = PhaseStats.startStream(spark.sparkContext) {
+        EventsStream.funnelCompletionsExact(tombstoneTtlMs = ttl)(
           EventsStream.readStream(spark, d.toString, Some(1)))
           .writeStream.format("memory").queryName(s"funnel_ttl_$ttl")
           .outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-        (spark.table(s"funnel_ttl_$ttl").collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          .toSet, last.get())
-      } finally spark.streams.removeListener(listener)
+      }
+      q.processAllAvailable()
+      q.stop()
+      (spark.table(s"funnel_ttl_$ttl").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        .toSet, PhaseStats.progress(q).head.rowsLast)
     }
     val (rows0, state0) = run(0L)
     val (rowsT, stateT) = run(3600000L)
@@ -511,32 +485,20 @@ class StreamingSpec extends AnyFunSuite {
       }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(d.toString)
-    val rowsPeak = new java.util.concurrent.atomic.AtomicLong(-1L)
-    val listener = new org.apache.spark.sql.streaming.StreamingQueryListener {
-      override def onQueryStarted(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(
-          e: org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent): Unit =
-        e.progress.stateOperators.headOption.foreach(s =>
-          rowsPeak.getAndUpdate(c => math.max(c, s.numRowsTotal)))
+    val q = PhaseStats.startStream(spark.sparkContext) {
+      EventsStream.retentionActivations()(
+        EventsStream.readStream(spark, d.toString))
+        .writeStream.format("memory").queryName("retention_nostate_out")
+        .outputMode("append").start()
     }
-    spark.streams.addListener(listener)
-    val emitted =
-      try {
-        val q = EventsStream.retentionActivations()(
-          EventsStream.readStream(spark, d.toString))
-          .writeStream.format("memory").queryName("retention_nostate_out")
-          .outputMode("append").start()
-        q.processAllAvailable()
-        q.stop()
-        spark.table("retention_nostate_out").collect()
-          .map(r => (r.getLong(0), r.getInt(2))).toSet
-      } finally spark.streams.removeListener(listener)
+    q.processAllAvailable()
+    q.stop()
+    val rowsPeak = PhaseStats.progress(q).head.rowsPeak
+    val emitted = spark.table("retention_nostate_out").collect()
+      .map(r => (r.getLong(0), r.getInt(2))).toSet
     assert(emitted == Set((1L, 0), (2L, 0), (2L, 1)), s"got $emitted")
-    assert(rowsPeak.get() == 2L,
-      s"state must hold exactly the 2 cohorted users, got ${rowsPeak.get()}")
+    assert(rowsPeak == 2L,
+      s"state must hold exactly the 2 cohorted users, got $rowsPeak")
   }
 
   test("streaming session paths == batch up to the watermark tail (ST17)") {

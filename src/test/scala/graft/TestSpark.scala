@@ -1,9 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import graft.schema.{CensusMeta, ColMeta}
 
 /** One shared local SparkSession for all suites (single forked test JVM). */
@@ -14,28 +11,12 @@ object TestSpark {
     s
   }
 
-  /** Spark jobs `body` starts on `s`, counted under a job group of its
-    * own so concurrent suites' jobs are not counted.
+  /** Spark jobs `body` starts on `s` from this thread, nested
+    * PhaseStats runs' jobs included; concurrent suites' jobs are not
+    * counted.
     */
-  def jobsOf(s: SparkSession)(body: => Unit): Int = {
-    val sc = s.sparkContext
-    val group = s"jobs-of-${java.util.UUID.randomUUID()}"
-    val n = new AtomicInteger()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-          n.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setJobGroup(group, "job count")
-    try body
-    finally {
-      sc.clearJobGroup()
-      GraftSqlBridge.drainListenerBus(sc)
-      sc.removeSparkListener(listener)
-    }
-    n.get()
-  }
+  def jobsOf(s: SparkSession)(body: => Unit): Int =
+    graft.operators.PhaseStats.measure(s.sparkContext, "jobs-of")(body).jobs
 
   def resource(path: String): String =
     getClass.getClassLoader.getResource(path).getPath

@@ -40,7 +40,7 @@ object PlanAudit {
     "q92_interval_join" -> "equi-join on user_id; time range as residual",
     "q93_scrub" -> "map-side regex mask, zero corpus shuffles",
     "q94_span_dedup" -> "span hashes shuffle; span text never leaves the map side",
-    "q95_sequence_pack" -> "three-level prefix sum; bucket offsets broadcast",
+    "q95_sequence_pack" -> "Skew.prefixSum, three-level (no keys); bucket offsets broadcast",
     "q96_cell_diverse" -> "map-side IVF assignment + one window per cell",
     "q97_quality_gate" -> "map-side quality signal; one shuffle on source",
     "q98_grouping_sets" -> "single expand + one partial-agg shuffle",
@@ -65,12 +65,12 @@ object PlanAudit {
     "q121_index_append" -> "frozen codebooks as literals; batch predicate pushed; append is scan→project",
     "q122_containment_dedup" -> "banded candidates only; containment verify is bounded pairwise",
     "q123_sq8_quantize" -> "128-double scale model as literals; byte encode map-side",
-    "q124_mixture_materialize" -> "two-level prefix sum per (source, md5-prefix bucket); offsets+targets broadcast",
+    "q124_mixture_materialize" -> "Skew.prefixSum per (source, md5-prefix bucket); offsets+targets broadcast",
     "q125_ann_recall" -> "two bounded top-10 artifacts; overlap join is 10×10",
     "q127_containment_inverted" -> "shingles as rows from the fused ShingleRows generator, map-side (no interpreted HOF, no token exchange); posting lists built in one agg; df-cap bounds pair fan-out",
     "q129_source_cap" -> "salted pre-cap window bounds the per-source window to K×nSalts rows — a hot domain never lands in one sort",
     "q132_semantic_dedup" -> "map-side IVF assignment; pairwise bounded per cell (one cid shuffle); survivors via anti-join",
-    "q133_stratified_split" -> "two-level prefix sum per source; (source,bucket) offsets and totals broadcast",
+    "q133_stratified_split" -> "Skew.prefixSum rank per source; (source,bucket) offsets and totals broadcast",
     "q134_twolevel_assign" -> "recursive-IVF assignment: coarse argmax then cell argmax, one map-side projection, k1+|cell| cosines/row",
     "q135_twolevel_multiprobe" -> "nprobe=2 recall knob: union-of-2-cells argmax, still join-free map-side",
     "q136_semdedup_keep_hard" -> "q132's plan with the keep priority swapped to (centroid cos, id) — the SemDeDup paper policy",
@@ -94,10 +94,10 @@ object PlanAudit {
     "q153_funnel_steps" -> "ordered funnel: each step a conditional-min agg (map-side partial min per user before its exchange; event-type filter pushed to the scan) joined user-keyed to the previous step's ≤1-row-per-user table (AQE broadcast while it fits); final counts fold the step tables in ONE aggregation — no per-user event collection, no scalar-subquery cross join",
     "q154_retention_cohorts" -> "retention cohorts: (user, week) activity map-side-deduped before its one exchange; cohort anchor table ≤1 row/user; the (cohort, offset) rollup partial-aggregates; week offsets are exact integer day arithmetic",
     "q156_session_paths" -> "session path analysis: ONE user-keyed exchange feeds both window passes (second reuses the first's sort); per-session path collect bounded by the 30-min gap; path rollup partial-aggregates; top-20 via TakeOrdered, no global sort",
-    "q162_bucketed_pack" -> "length-bucketed packing: two-level prefix-sum rank per (grade, id-bucket) — a hot grade never lands in one sort; offsets broadcast",
+    "q162_bucketed_pack" -> "length-bucketed packing: Skew.prefixSum rank per (grade, id-bucket) — a hot grade never lands in one sort; offsets broadcast",
     "q163_contamination_frac" -> "thresholded decontamination: task-literal bloom prunes the gram stream map-side; exact hit counts on survivors only; per-doc distinct-gram totals are ONE map-side array expression (the exploded-stream aggregate they replaced carried ~725 MB of the realistic 1000x row's spill)",
     "q164_intradoc_repetition" -> "intra-doc repetition signals as ONE map-side projection: dup-trigram fraction from the shingle array + native TopShingleCount mode kernel (deleted the ~245M-key (doc,bigram) exchange: 6.9 GB spill -> 0); only the output sort exchanges",
-    "q160_pretrain_e2e" -> "the composed pretrain DAG: stage boundaries pinned as ids-only/slim manifests (the audited plan is the post-pin tail — stages 6-7 over budget-bounded rows; earlier stages reuse q155/q87/q101/q97/q124/q133/q95's audited shapes); full-chain cost decomposed per stage in the round-14 STRESS_PRETRAIN_E2E ladder (5M docs, 71.7 s, spill localized to edge-gen prepare)")
+    "q160_pretrain_e2e" -> "the composed pretrain DAG: stage boundaries pinned as ids-only/slim manifests (the audited plan is the post-pin tail — stages 6-7 over budget-bounded rows; earlier stages reuse q155/q87/q101/q97/q124/q133/q95's audited shapes; stages 5-7 are q124/q133/q95's laws over Skew.prefixSum); full-chain cost decomposed per stage in the round-14 STRESS_PRETRAIN_E2E ladder (5M docs, 71.7 s, spill localized to edge-gen prepare)")
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")

@@ -117,19 +117,24 @@ object Ivf {
       .select(col("vec_id"), col("embedding"),
         col("best.cid").as("cid"), col("best.cos").as("cos"))
 
-  /** Element-wise mean per cluster. Components are rounded to 6 decimals
-    * and summed as exact decimals (Det.davg pattern) → the division is
-    * the same IEEE op in both engines. Partial aggregation collapses each
-    * task's contribution to ≤ k·dim partial sums before the exchange.
+  /** Element-wise mean `cv` of the array column `vec` per cluster
+    * `keys` (Ivf: `cid`; Pq: `(m, cid)`). Components are rounded to 6
+    * decimals and summed as exact decimals (Det.davg pattern) → the
+    * division is the same IEEE op in both engines. Partial aggregation
+    * collapses each task's contribution to ≤ clusters·dim partial sums
+    * before the exchange.
     */
-  private[operators] def clusterMeans(assigned: DataFrame): DataFrame =
-    assigned.select(col("cid"), posexplode(col("embedding")))
-      .groupBy(col("cid"), col("pos"))
+  private[operators] def clusterMeans(assigned: DataFrame, keys: Seq[String],
+      vec: String): DataFrame = {
+    val k = keys.map(col)
+    assigned.select(k :+ posexplode(col(vec)): _*)
+      .groupBy(k :+ col("pos"): _*)
       .agg((sum(round(col("col").cast(DoubleType), 6).cast(DecimalType(24, 6)))
-        .cast(DoubleType) / count(lit(1))).as("m"))
-      .groupBy(col("cid"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-      .select(col("cid"), transform(col("pm"), x => x.getField("m")).as("cv"))
+        .cast(DoubleType) / count(lit(1))).as("mean"))
+      .groupBy(k: _*)
+      .agg(array_sort(collect_list(struct(col("pos"), col("mean")))).as("pm"))
+      .select(k :+ transform(col("pm"), x => x.getField("mean")).as("cv"): _*)
+  }
 
   /** `rounds` unrolled Lloyd iterations from the deterministic seeds.
     * A cluster that receives no points keeps its previous centroid, so
@@ -138,7 +143,7 @@ object Ivf {
   def train(e: DataFrame, k: Int, rounds: Int): Centroids = {
     var c = collectCentroids(seedCentroids(e, k))
     for (_ <- 1 to rounds) {
-      val means = collectCentroids(clusterMeans(assign(e, c))).toMap
+      val means = collectCentroids(clusterMeans(assign(e, c), Seq("cid"), "embedding")).toMap
       c = c.map { case (cid, cv) => cid -> means.getOrElse(cid, cv) }
     }
     c

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType}
+import org.apache.spark.sql.types.DoubleType
 
 /** Product quantization (PQ): the memory-compression half of a
   * large-scale ANN index (IVF-PQ). Each `dim`-dim embedding is split
@@ -118,19 +118,6 @@ object Pq {
         struct(lit(mm).as("m"), sub(col("embedding"), mm, subDim).as("sv"))): _*)).as("x"))
       .select(col("vec_id"), col("x.m").as("m"), col("x.sv").as("sv"))
 
-  /** Per-(m, cid) exact-decimal element-wise means of the assigned
-    * subvectors ([[Ivf.clusterMeans]] recipe).
-    */
-  private def clusterMeans(assigned: DataFrame): DataFrame =
-    assigned.select(col("m"), col("cid"), posexplode(col("sv")))
-      .groupBy(col("m"), col("cid"), col("pos"))
-      .agg((sum(round(col("col").cast(DoubleType), 6).cast(DecimalType(24, 6)))
-        .cast(DoubleType) / count(lit(1))).as("mean"))
-      .groupBy(col("m"), col("cid"))
-      .agg(array_sort(collect_list(struct(col("pos"), col("mean")))).as("pm"))
-      .select(col("m"), col("cid"),
-        transform(col("pm"), x => x.getField("mean")).as("cv"))
-
   /** Deterministic codebook training: seeds = subvector slices of
     * `vec_id < k`, then `rounds` unrolled Lloyd iterations; an emptied
     * code keeps its previous centroid. Shape defaults fit the 64-dim
@@ -149,7 +136,7 @@ object Pq {
         // element_at over the literal per-sub codebooks, indexed by m
         element_at(array((0 until m).map(mm =>
           code(col("sv"), litBooks(mm))): _*), col("m") + 1).as("cid"))
-      val means = collectBooksMap(clusterMeans(assigned))
+      val means = collectBooksMap(Ivf.clusterMeans(assigned, Seq("m", "cid"), "sv"))
       books = books.zipWithIndex.map { case (book, mm) =>
         book.zipWithIndex.map { case (cv, cid) => means.getOrElse((mm, cid.toLong), cv) }
       }

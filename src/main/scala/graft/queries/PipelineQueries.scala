@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Bpe, Ivf, Models, Pq, TextOps}
+import graft.operators.{Bpe, Ivf, Models, Pq, Skew, TextOps}
 
 /** LLM-training-data pipeline operators (north star [EXT]): deduplication
   * (exact, MinHash+LSH, SimHash, n-gram Jaccard), similarity search
@@ -45,7 +45,9 @@ object PipelineQueries {
     * exchange never enters the plan. `spark.graft.kernelSpread`
     * (auto|off, default auto; any other value throws): `off` pins the
     * scale plan on any input — PlanShapeSpec and PlanAudit use it. There
-    * is no `on`: a multi-split input already parallelizes.
+    * is no `on`: a multi-split input already parallelizes. A failing
+    * file listing fails the query; it never falls back to the unspread
+    * form.
     *
     * This is the ONE split probe of the query pack: every kernel-heavy
     * path that wants the spread wraps its own input in it.
@@ -55,8 +57,7 @@ object PipelineQueries {
     val s = df.sparkSession
     val spread = s.conf.get("spark.graft.kernelSpread", "auto") match {
       case "off" => false
-      case "auto" =>
-        (try df.inputFiles.length catch { case NonFatal(_) => 8 }) < 8
+      case "auto" => df.inputFiles.length < 8
       case other => throw new IllegalArgumentException(
         s"spark.graft.kernelSpread must be one of auto|off, got '$other'")
     }
@@ -2066,58 +2067,24 @@ object PipelineQueries {
     // ---- temperature-weighted mixture planning: per-source sampling
     // rates ∝ n_tokens^τ with τ = 0.5 — the standard up-weighting of
     // small domains when composing a training mixture (q91 applies
-    // per-source rates; this COMPUTES them from a token budget). τ=0.5
-    // is deliberate: sqrt is an IEEE correctly-rounded primitive (libm
-    // pow is not), so both engines produce bit-identical weights; the
-    // weight total uses the exact-decimal sum of 6-dec-rounded weights
-    // (Det recipe), making every rate and token target hash-exact. ----
+    // per-source rates; this COMPUTES them from a token budget): the
+    // [[tokenTargets]] law. ----
     // ---- MATERIALIZE the temperature mixture: q117 plans per-source
     // token targets; this selects the actual documents — per source, in
     // a deterministic md5 order (reproducible across engines, runs, and
     // partitionings), keeping rows while the running token total stays
     // within its target (a 10k-token demo budget so the cutoff actually
-    // fires at sf0.01). Training mixtures have FEW sources (~10), so a
-    // per-source running sum is the q95 regime: it would funnel
-    // ~corpus/#sources rows through one window task. Instead, the
-    // two-level prefix sum: the md5 ordering key is sub-bucketed by its
-    // own 3-hex-char prefix (4096 sub-buckets per source — the prefix
-    // ordering is by construction consistent with the full-key
-    // ordering), per-(source,bucket) totals get a tiny per-source
-    // cumsum (≤ #sources·4096 rows) broadcast back as offsets, and the
-    // corpus-sized window runs per (source, bucket). The cum values are
-    // identical to the single-window form; only the partitioning
-    // changes. ----
-    Q("q124_mixture_materialize", (s, d) => {
-      import org.apache.spark.sql.types.{DecimalType, DoubleType}
-      val ws = TextOps.tokens(col("text"))
-      val perSource = docs(s, d).groupBy(col("source"))
-        .agg(sum(size(ws).cast("long")).as("n_tokens"))
-        .select(col("source"), round(sqrt(col("n_tokens")), 6).as("w"))
-      val tw = sum(col("w").cast(DecimalType(24, 6)))
-        .over(Window.partitionBy()).cast(DoubleType)
-      val targets = perSource.select(col("source"),
-        round(lit(1e4) * (col("w") / tw), 0).cast("long").as("target_tokens"))
-      val ord = md5(concat(lit("mix|"), col("doc_id").cast("string")))
-      val base = docs(s, d)
-        .select(col("doc_id"), col("source"),
-          size(ws).cast("long").as("n_tokens"), ord.as("ord"),
-          substring(ord, 1, 3).as("mbkt"))
-      val wB = Window.partitionBy(col("source")).orderBy(col("mbkt"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = base.groupBy(col("source"), col("mbkt"))
-        .agg(sum(col("n_tokens")).as("btotal"))
-        .withColumn("boffset", coalesce(sum(col("btotal")).over(wB), lit(0L)))
-        .select(col("source"), col("mbkt"), col("boffset"))
-      val wIn = Window.partitionBy(col("source"), col("mbkt")).orderBy(col("ord"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      base
-        .join(broadcast(offsets), Seq("source", "mbkt"))
-        .join(broadcast(targets), "source")
-        .withColumn("cum", col("boffset") + sum(col("n_tokens")).over(wIn))
-        .filter(col("cum") <= col("target_tokens"))
+    // fires at sf0.01): the [[mixtureCut]] law. Training mixtures have
+    // FEW sources (~10), so a per-source running sum would funnel
+    // ~corpus/#sources rows through one window task; the running total
+    // is Skew.prefixSum's bucketed form instead, bucketed by the md5
+    // key's own 3-hex-char prefix (≤ #sources·4096 offset rows). ----
+    Q("q124_mixture_materialize", (s, d) =>
+      mixtureCut(docs(s, d).select(col("doc_id"), col("source"),
+          size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"),
+          md5(concat(lit("mix|"), col("doc_id").cast("string"))).as("ord")), 10000L)
         .select(col("doc_id"), col("source"), col("n_tokens"), col("cum"))
-        .orderBy(col("doc_id"))
-    }, Some(s"""
+        .orderBy(col("doc_id")), Some(s"""
       WITH t AS (SELECT source,
           CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
         FROM documents GROUP BY source),
@@ -2136,24 +2103,10 @@ object PipelineQueries {
       SELECT doc_id, source, n_tokens, cum FROM c
       WHERE cum <= target_tokens ORDER BY doc_id"""), bench = true),
 
-    Q("q117_temperature_mixture", (s, d) => {
-      import org.apache.spark.sql.types.{DecimalType, DoubleType}
-      val ws = TextOps.tokens(col("text"))
-      val perSource = docs(s, d).groupBy(col("source"))
-        .agg(sum(size(ws).cast("long")).as("n_tokens"))
-        .select(col("source"), col("n_tokens"),
-          round(sqrt(col("n_tokens")), 6).as("w"))
-      // the weight total is a window over the SAME aggregate (one pass —
-      // a second .agg would recompute perSource); the unpartitioned
-      // window is fine here because the frame is source-cardinality
-      val tw = sum(col("w").cast(DecimalType(24, 6)))
-        .over(Window.partitionBy()).cast(DoubleType)
-      perSource
-        .select(col("source"), col("n_tokens"), col("w"),
-          round(col("w") / tw, 6).as("mix_rate"),
-          round(lit(1e6) * (col("w") / tw), 0).cast("long").as("target_tokens"))
-        .orderBy(col("source"))
-    }, Some(s"""
+    Q("q117_temperature_mixture", (s, d) =>
+      tokenTargets(docs(s, d).select(col("source"),
+          size(TextOps.tokens(col("text"))).cast("long").as("n_tokens")), 1000000L)
+        .orderBy(col("source")), Some(s"""
       WITH t AS (SELECT source,
           CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
         FROM documents GROUP BY source),
@@ -2909,12 +2862,11 @@ object PipelineQueries {
       FROM documents d LEFT JOIN agg a USING (doc_id) ORDER BY d.doc_id""")),
 
     // ---- sequence packing: assign docs (in doc_id order) to fixed-
-    // capacity training sequences by cumulative token count. The naive
-    // form is a GLOBAL running sum — a single-partition bottleneck — so
-    // this uses the scalable two-level prefix sum: per-bucket totals
-    // (one row per bucket) get a tiny global cumsum and broadcast back
-    // as offsets; each row then needs only a WITHIN-bucket running sum.
-    // The only global ordering touches |buckets| rows, not the corpus. ----
+    // capacity training sequences by cumulative token count: the
+    // [[sequencePack]] law. The naive form is a GLOBAL running sum — a
+    // single-partition bottleneck — so the running total is
+    // Skew.prefixSum's three-level form (no keys): the only global
+    // ordering touches |superbuckets| rows, not the corpus. ----
     // ---- LENGTH-BUCKETED sequence packing (the bucketed-batching form
     // production training pipelines run alongside q95's contiguous
     // packing): docs are binned by 64-token length grade (capped at the
@@ -2926,10 +2878,10 @@ object PipelineQueries {
     // sequence running partially empty). Deterministic: rank within
     // grade is (doc_id) order. Scale shape: a plain per-grade window
     // funnels corpus/|grades| rows into ≤8 tasks (the q129 hot-domain
-    // problem with only 8 "domains"), so rank comes from the q95/q133
-    // two-level prefix sum — per-(grade, id-bucket) counts get a tiny
-    // per-grade cumsum broadcast back as offsets, and the corpus-sized
-    // window runs per (grade, id-bucket). ----
+    // problem with only 8 "domains"), so rank comes from Skew.prefixSum
+    // — per-(grade, id-bucket) counts get a per-grade cumsum broadcast
+    // back as offsets, and the corpus-sized window runs per (grade,
+    // id-bucket). ----
     Q("q162_bucketed_pack", (s, d) => {
       val cap = 512
       val bucketW = 50
@@ -2938,19 +2890,8 @@ object PipelineQueries {
           expr(s"doc_id DIV $bucketW").as("bucket"))
         .withColumn("grade",
           least(lit(cap.toLong), expr("(n_tokens + 63) DIV 64") * 64L))
-      val wB = Window.partitionBy(col("grade")).orderBy(col("bucket"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = base.groupBy(col("grade"), col("bucket"))
-        .agg(count(lit(1)).as("bn"))
-        .withColumn("boffset", coalesce(sum(col("bn")).over(wB), lit(0L)))
-        .select(col("grade").as("o_grade"), col("bucket").as("o_bucket"),
-          col("boffset"))
-      val wIn = Window.partitionBy(col("grade"), col("bucket"))
-        .orderBy(col("doc_id"))
-      base
-        .join(broadcast(offsets), col("grade") === col("o_grade") &&
-          col("bucket") === col("o_bucket"))
-        .withColumn("rnk", col("boffset") + row_number().over(wIn).cast("long"))
+      Skew.prefixSum(base, Seq("grade"), "bucket",
+          Seq(col("doc_id")), None, "rnk")
         .withColumn("seq_cap", expr(s"$cap DIV grade"))
         .select(col("doc_id"), col("n_tokens"), col("grade"),
           expr("(rnk - 1) DIV seq_cap").as("seq_in_grade"),
@@ -2972,46 +2913,11 @@ object PipelineQueries {
         (rnk - 1) % seq_cap AS slot
       FROM r ORDER BY doc_id""")),
 
-    Q("q95_sequence_pack", (s, d) => {
-      val cap = 512
-      val bucketW = 50
-      // buckets per superbucket — the THIRD prefix-sum level (r19,
-      // guide §2.5): the old two-level form ran its global running sum
-      // over ALL per-bucket aggregates in ONE window partition
-      // (docs/50 rows — tens of millions of rows in a single task at
-      // corpus scale). With the superbucket level, the only
-      // unpartitioned window sees docs/(50·4096) ≈ docs/204800 rows
-      // (≤ ~50k at a 10^10-doc corpus), the per-superbucket window is
-      // bounded at 4096 rows, and the per-bucket window at 50 rows.
-      // cum_tokens is IDENTICAL for any widths: doc_id DIV w is
-      // monotone, so bucket-then-superbucket order concatenates to the
-      // single doc_id order (oracle unchanged).
-      val sbW = 4096
-      val base = docs(s, d).select(col("doc_id"),
-        size(TextOps.tokens(col("text"))).cast("long").as("n_tokens"),
-        expr(s"doc_id DIV $bucketW").as("bucket"))
-      val btotals = base.groupBy(col("bucket"))
-        .agg(sum(col("n_tokens")).as("btotal"))
-        .withColumn("sbucket", expr(s"bucket DIV $sbW"))
-      val wS = Window.orderBy(col("sbucket"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val soffsets = btotals.groupBy(col("sbucket"))
-        .agg(sum(col("btotal")).as("stotal"))
-        .withColumn("soffset", coalesce(sum(col("stotal")).over(wS), lit(0L)))
-        .select(col("sbucket").as("s_sbucket"), col("soffset"))
-      val wB = Window.partitionBy(col("sbucket")).orderBy(col("bucket"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = btotals
-        .withColumn("woffset", coalesce(sum(col("btotal")).over(wB), lit(0L)))
-        .join(broadcast(soffsets), col("sbucket") === col("s_sbucket"))
-        .select(col("bucket"), (col("soffset") + col("woffset")).as("boffset"))
-      val wIn = Window.partitionBy(col("bucket")).orderBy(col("doc_id"))
-      base.join(broadcast(offsets), "bucket")
-        .withColumn("cum_tokens", col("boffset") + sum(col("n_tokens")).over(wIn))
-        .select(col("doc_id"), col("n_tokens"), col("cum_tokens"),
-          expr(s"(cum_tokens - 1) DIV $cap").as("seq_id"))
-        .orderBy(col("doc_id"))
-    }, Some("""
+    Q("q95_sequence_pack", (s, d) =>
+      sequencePack(docs(s, d).select(col("doc_id"),
+          size(TextOps.tokens(col("text"))).cast("long").as("n_tokens")), Nil)
+        .select(col("doc_id"), col("n_tokens"), col("cum_tokens"), col("seq_id"))
+        .orderBy(col("doc_id")), Some("""
       WITH t AS (SELECT doc_id,
         CAST(len(string_split(text, ' ')) AS BIGINT) n_tokens FROM documents),
       c AS (SELECT doc_id, n_tokens,
@@ -3240,44 +3146,16 @@ object PipelineQueries {
     // (test needs n > ceil(0.8n)+ceil(0.1n) — first at n=10; a tiny
     // source, n<=3, still lands entirely in train, a boundary QueriesSpec
     // pins), and the content-keyed order makes the split stable under
-    // re-crawls that renumber doc_ids. Scale shape is q95's two-level
-    // prefix sum applied per source: rank within (source, ckey-prefix
-    // bucket), broadcast the per-(source, bucket) offsets (|sources|x256
-    // rows), global per-source position = offset + in-bucket rank — the
-    // bucket is the leading 2 hex chars OF the sort key, so bucket order
-    // concatenates to exactly the single-window order, but no task ever
+    // re-crawls that renumber doc_ids: the [[stratifiedSplit]] law. Its
+    // rank is Skew.prefixSum per source, bucketed by the leading 2 hex
+    // chars OF the sort key (|sources|x256 offset rows), so no task ever
     // sorts more than one bucket of one source (the naive per-source
     // window gives the hottest domain to one task — the q129 problem). ----
-    Q("q133_stratified_split", (s, d) => {
-      val base = docs(s, d).select(col("doc_id"), col("source"),
-          md5(concat(lit("split|"), coalesce(col("text"), lit("")))).as("ckey"))
-        .withColumn("bucket",
-          conv(substring(col("ckey"), 1, 2), 16, 10).cast("int"))
-      val wB = Window.partitionBy(col("source")).orderBy(col("bucket"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-      val offsets = base.groupBy(col("source"), col("bucket"))
-        .agg(count(lit(1)).as("bn"))
-        .withColumn("boffset", coalesce(sum(col("bn")).over(wB), lit(0L)))
-        .select(col("source").as("o_source"), col("bucket").as("o_bucket"),
-          col("boffset"))
-      val totals = base.groupBy(col("source")).agg(count(lit(1)).as("n"))
-        .select(col("source").as("t_source"), col("n"))
-      val wIn = Window.partitionBy(col("source"), col("bucket"))
-        .orderBy(col("ckey"), col("doc_id"))
-      base
-        .join(broadcast(offsets), col("source") === col("o_source") &&
-          col("bucket") === col("o_bucket"))
-        .join(broadcast(totals), col("source") === col("t_source"))
-        .withColumn("pos",
-          col("boffset") + row_number().over(wIn).cast("long"))
-        .withColumn("n_train", expr("(n * 8 + 9) DIV 10"))
-        .withColumn("n_val", expr("(n + 9) DIV 10"))
-        .select(col("doc_id"), col("source"), col("pos"),
-          when(col("pos") <= col("n_train"), lit("train"))
-            .when(col("pos") <= col("n_train") + col("n_val"), lit("val"))
-            .otherwise(lit("test")).as("split"))
-        .orderBy(col("doc_id"))
-    }, Some("""
+    Q("q133_stratified_split", (s, d) =>
+      stratifiedSplit(docs(s, d).select(col("doc_id"), col("source"),
+          md5(concat(lit("split|"), coalesce(col("text"), lit("")))).as("ckey")))
+        .select(col("doc_id"), col("source"), col("pos"), col("split"))
+        .orderBy(col("doc_id")), Some("""
       WITH t AS (SELECT doc_id, source,
           md5('split|' || coalesce(text, '')) AS ckey FROM documents),
       p AS (SELECT doc_id, source,
@@ -4122,13 +4000,13 @@ object PipelineQueries {
     //      bloom prune map-side, exact verify on survivors)
     //   4. per-source quality gate      (q97: TTR percent_rank ≥ 0.5
     //      within the gated population)
-    //   5. temperature-mixture materialize (q124: sqrt-weight token
-    //      targets from a Q160Budget token budget, md5-ordered running cut via
-    //      the two-level prefix sum)
-    //   6. stratified train/val/test split (q133: exact ceil quotas in
-    //      content-keyed order, two-level form)
-    //   7. sequence packing PER SPLIT   (q95: 512-token sequences in
-    //      doc_id order, two-level prefix sum within each split)
+    //   5. temperature-mixture materialize (q124's mixtureCut: sqrt-
+    //      weight token targets from a Q160Budget token budget,
+    //      md5-ordered running cut)
+    //   6. stratified train/val/test split (q133's stratifiedSplit:
+    //      exact ceil quotas in content-keyed order)
+    //   7. sequence packing PER SPLIT   (q95's sequencePack: 512-token
+    //      sequences in doc_id order within each split)
     // Stage boundaries are pinned (localCheckpoint manifests — ids-only
     // until the slim signal frame exists), exactly the materialization
     // discipline a 100 TB pipeline uses between stages; see
@@ -4284,10 +4162,9 @@ object PipelineQueries {
       q160GateFrom(q160Decontaminated(all, d, s2, evalPred))
     }
 
-    // stage 5 — temperature-mixture materialize (q124): sqrt-weight
-    // token targets over the GATED population, md5-ordered running cut
-    // via the two-level prefix sum (mbkt = 3-hex-char prefix of the
-    // ordering key — 4096 sub-buckets per source)
+    // stage 5 — temperature-mixture materialize (q124's mixtureCut):
+    // sqrt-weight token targets over the GATED population, md5-ordered
+    // running cut
     val s5 = stage(5, "mixture_materialize") { q160MixtureFrom(s4, budget) }
 
     // stages 6-7 — stratified split + per-split packing
@@ -4339,92 +4216,100 @@ object PipelineQueries {
       .select(col("doc_id"), col("source"), col("n_tokens"),
         col("ckey"), col("ord"))
 
-  /** q160 stage 5 (q124 semantics) over a gated signal frame
-    * `(doc_id, source, n_tokens, ckey, ord)`: sqrt-weight token targets
-    * from `budget`, md5-ordered running cut via the two-level prefix
-    * sum. Shared with the streaming twin's finalization.
+  /** Sqrt-temperature token targets: per source of a per-doc frame
+    * `(source, n_tokens)`, the total `n_tokens`, the weight
+    * `w = round(sqrt(n_tokens), 6)`, `mix_rate = round(w / Σw, 6)` and
+    * `target_tokens = round(budget · w / Σw)`. τ = 0.5 because sqrt is
+    * an IEEE correctly-rounded primitive (libm pow is not), and Σw is the
+    * exact-decimal sum of the 6-dec weights (Det recipe), so every rate
+    * and target is hash-exact in both engines. The weight total is a
+    * window over the same aggregate: one pass, and the unpartitioned
+    * window is fine because the frame is source-cardinality. The law of
+    * q117, q124 and q160 stage 5.
     */
-  private[graft] def q160MixtureFrom(s4: DataFrame, budget: Long): DataFrame = {
+  private[graft] def tokenTargets(df: DataFrame, budget: Long): DataFrame = {
     import org.apache.spark.sql.types.{DecimalType, DoubleType}
-    val perSource = s4.groupBy(col("source"))
-      .agg(sum(col("n_tokens")).as("nt"))
-      .select(col("source"), round(sqrt(col("nt")), 6).as("w"))
     val tw = sum(col("w").cast(DecimalType(24, 6)))
       .over(Window.partitionBy()).cast(DoubleType)
-    val targets = perSource.select(col("source"),
-      round(lit(budget.toDouble) * (col("w") / tw), 0).cast("long")
-        .as("target_tokens"))
-    val base5 = s4.withColumn("mbkt", substring(col("ord"), 1, 3))
-    val wB5 = Window.partitionBy(col("source")).orderBy(col("mbkt"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets5 = base5.groupBy(col("source"), col("mbkt"))
-      .agg(sum(col("n_tokens")).as("btotal"))
-      .withColumn("boffset", coalesce(sum(col("btotal")).over(wB5), lit(0L)))
-      .select(col("source"), col("mbkt"), col("boffset"))
-    val wIn5 = Window.partitionBy(col("source"), col("mbkt")).orderBy(col("ord"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    base5.join(broadcast(offsets5), Seq("source", "mbkt"))
-      .join(broadcast(targets), "source")
-      .withColumn("cum", col("boffset") + sum(col("n_tokens")).over(wIn5))
-      .filter(col("cum") <= col("target_tokens"))
-      .select(col("doc_id"), col("source"), col("n_tokens"), col("ckey"))
+    df.groupBy(col("source")).agg(sum(col("n_tokens")).as("n_tokens"))
+      .select(col("source"), col("n_tokens"),
+        round(sqrt(col("n_tokens")), 6).as("w"))
+      .select(col("source"), col("n_tokens"), col("w"),
+        round(col("w") / tw, 6).as("mix_rate"),
+        round(lit(budget.toDouble) * (col("w") / tw), 0).cast("long")
+          .as("target_tokens"))
   }
 
-  /** q160 stages 6-7 over a materialized mixture
-    * `(doc_id, source, n_tokens, ckey)`: stratified split (q133 — exact
-    * ceil quotas in content-keyed order, two-level form: bucket =
-    * leading 2 hex chars OF the sort key, so bucket order concatenates
-    * to the single-window order) then per-split 512-token sequence
-    * packing (q95, two-level prefix sum). Shared with the streaming
-    * twin's finalization.
+  /** The temperature-mixture cut over a per-doc frame
+    * `(source, n_tokens, ord, …)`: keeps, per source, the rows whose
+    * running token total `cum` in `ord` order stays within the source's
+    * [[tokenTargets]] target, with every input column. The running total
+    * is the bucketed prefix sum with `mbkt` = the 3-hex-char prefix of
+    * `ord` (4096 buckets per source). The law of q124 and q160 stage 5.
     */
-  private[graft] def q160SplitPackFrom(s5: DataFrame): DataFrame = {
-    val base6 = s5.withColumn("bucket",
-      conv(substring(col("ckey"), 1, 2), 16, 10).cast("int"))
-    val wB6 = Window.partitionBy(col("source")).orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets6 = base6.groupBy(col("source"), col("bucket"))
-      .agg(count(lit(1)).as("bn"))
-      .withColumn("boffset", coalesce(sum(col("bn")).over(wB6), lit(0L)))
-      .select(col("source").as("o_source"), col("bucket").as("o_bucket"),
-        col("boffset"))
-    val totals6 = base6.groupBy(col("source")).agg(count(lit(1)).as("n"))
-      .select(col("source").as("t_source"), col("n"))
-    val wIn6 = Window.partitionBy(col("source"), col("bucket"))
-      .orderBy(col("ckey"), col("doc_id"))
-    val s6 = base6
-      .join(broadcast(offsets6), col("source") === col("o_source") &&
-        col("bucket") === col("o_bucket"))
-      .join(broadcast(totals6), col("source") === col("t_source"))
-      .withColumn("pos", col("boffset") + row_number().over(wIn6).cast("long"))
+  private[graft] def mixtureCut(df: DataFrame, budget: Long): DataFrame = {
+    val targets = tokenTargets(df, budget)
+      .select(col("source"), col("target_tokens"))
+    Skew.prefixSum(df.withColumn("mbkt", substring(col("ord"), 1, 3)),
+        Seq("source"), "mbkt", Seq(col("ord")), Some("n_tokens"), "cum")
+      .join(broadcast(targets), "source")
+      .filter(col("cum") <= col("target_tokens"))
+      .drop("mbkt", "target_tokens")
+  }
+
+  /** The stratified split over a per-doc frame `(doc_id, source, ckey,
+    * …)`: per source, `pos` is the 1-based rank in (ckey, doc_id) order,
+    * and the first ceil(0.8n) rows are `train`, the next ceil(0.1n)
+    * `val`, the rest `test`, with every input column. The rank is the
+    * bucketed prefix sum with `bucket` = the leading 2 hex chars of
+    * `ckey` (256 buckets per source); the per-source totals broadcast.
+    * The law of q133 and q160 stage 6.
+    */
+  private[graft] def stratifiedSplit(df: DataFrame): DataFrame = {
+    val totals = df.groupBy(col("source")).agg(count(lit(1)).as("n"))
+    Skew.prefixSum(
+        df.withColumn("bucket", conv(substring(col("ckey"), 1, 2), 16, 10).cast("int")),
+        Seq("source"), "bucket", Seq(col("ckey"), col("doc_id")), None, "pos")
+      .join(broadcast(totals), "source")
       .withColumn("n_train", expr("(n * 8 + 9) DIV 10"))
       .withColumn("n_val", expr("(n + 9) DIV 10"))
-      .select(col("doc_id"), col("source"), col("n_tokens"),
-        when(col("pos") <= col("n_train"), lit("train"))
-          .when(col("pos") <= col("n_train") + col("n_val"), lit("val"))
-          .otherwise(lit("test")).as("split"))
-
-    // stage 7 — sequence packing (q95) PER SPLIT: 512-token sequences in
-    // doc_id order, two-level prefix sum within each split
-    val bucketW = 50
-    val base7 = s6.withColumn("bucket", expr(s"doc_id DIV $bucketW"))
-    val wB7 = Window.partitionBy(col("split")).orderBy(col("bucket"))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets7 = base7.groupBy(col("split"), col("bucket"))
-      .agg(sum(col("n_tokens")).as("btotal"))
-      .withColumn("boffset", coalesce(sum(col("btotal")).over(wB7), lit(0L)))
-      .select(col("split").as("p_split"), col("bucket").as("p_bucket"),
-        col("boffset"))
-    val wIn7 = Window.partitionBy(col("split"), col("bucket"))
-      .orderBy(col("doc_id"))
-    base7.join(broadcast(offsets7),
-        col("split") === col("p_split") && col("bucket") === col("p_bucket"))
-      .withColumn("cum_tokens",
-        col("boffset") + sum(col("n_tokens")).over(wIn7))
-      .select(col("doc_id"), col("source"), col("split"), col("n_tokens"),
-        col("cum_tokens"), expr("(cum_tokens - 1) DIV 512").as("seq_id"))
-      .orderBy(col("doc_id"))
+      .withColumn("split", when(col("pos") <= col("n_train"), lit("train"))
+        .when(col("pos") <= col("n_train") + col("n_val"), lit("val"))
+        .otherwise(lit("test")))
+      .drop("bucket", "n", "n_train", "n_val")
   }
+
+  /** Sequence packing over a per-doc frame `(doc_id, n_tokens, …)`: per
+    * `keys`, `cum_tokens` is the running token total in doc_id order and
+    * `seq_id` its 512-token sequence, with every input column. The
+    * running total is the bucketed prefix sum with `bucket` =
+    * `doc_id DIV 50`. The law of q95 (no keys) and q160 stage 7 (per
+    * split).
+    */
+  private[graft] def sequencePack(df: DataFrame, keys: Seq[String]): DataFrame =
+    Skew.prefixSum(df.withColumn("bucket", expr("doc_id DIV 50")),
+        keys, "bucket", Seq(col("doc_id")), Some("n_tokens"), "cum_tokens")
+      .withColumn("seq_id", expr("(cum_tokens - 1) DIV 512"))
+      .drop("bucket")
+
+  /** q160 stage 5 over a gated signal frame
+    * `(doc_id, source, n_tokens, ckey, ord)`: the [[mixtureCut]] at
+    * `budget`. Shared with the streaming twin's finalization.
+    */
+  private[graft] def q160MixtureFrom(s4: DataFrame, budget: Long): DataFrame =
+    mixtureCut(s4, budget)
+      .select(col("doc_id"), col("source"), col("n_tokens"), col("ckey"))
+
+  /** q160 stages 6-7 over a materialized mixture
+    * `(doc_id, source, n_tokens, ckey)`: the [[stratifiedSplit]], then
+    * [[sequencePack]] per split. Shared with the streaming twin's
+    * finalization.
+    */
+  private[graft] def q160SplitPackFrom(s5: DataFrame): DataFrame =
+    sequencePack(stratifiedSplit(s5), Seq("split"))
+      .select(col("doc_id"), col("source"), col("split"), col("n_tokens"),
+        col("cum_tokens"), col("seq_id"))
+      .orderBy(col("doc_id"))
 
   /** DuckDB full-chain replay of [[q160Frame]] — every stage in one WITH
     * list; stage 2's fixpoint is the recursive-CTE transitive closure

@@ -12,8 +12,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * [[HarnessEnv]]'s table reads it; driver frames: only
   * [[graft.plans.FoldDriverRelation]] folds them; near-dup buckets:
   * only [[graft.operators.Dedup]] probes and collects them; listeners:
-  * only [[graft.operators.PhaseStats]] registers one; and every
-  * definition in src/main has a reader.
+  * only [[graft.operators.PhaseStats]] registers one; running-total
+  * offsets: only [[graft.operators.Skew.prefixSum]] computes them; and
+  * every definition in src/main has a reader.
   */
 class ConfKeysSpec extends AnyFunSuite {
   private def sources[A](read: Path => Seq[A]): Seq[A] = sourcesIn("src/main/scala")(read)
@@ -92,6 +93,19 @@ class ConfKeysSpec extends AnyFunSuite {
     }
     assert(lines == Seq("PhaseStats.listenerOf: addSparkListener"),
       s"listener registrations and job-group calls in src/main: ${lines.sorted.mkString(", ")}")
+  }
+
+  test("the bucketed prefix sum's exclusive offset window has one site: Skew.prefixSum") {
+    // every running-total query takes its offsets from the one helper; a
+    // second exclusive running window is a second copy of the law
+    val frame = "rowsBetween(Window.unboundedPreceding, -1)"
+    val sites = sources { f =>
+      val src = Files.readString(f)
+      Seq.fill(src.sliding(frame.length).count(_ == frame))(
+        Paths.get("src/main/scala").relativize(f).toString)
+    }
+    assert(sites == Seq("graft/operators/Skew.scala"),
+      s"exclusive running windows in src/main: ${sites.sorted.mkString(", ")}")
   }
 
   test("every def in src/main is referenced outside its own declaration") {

@@ -37,6 +37,43 @@ class SkewSpec extends AnyFunSuite {
     assert(plan.contains("__salt"))
   }
 
+  test("prefixSum equals the direct single window: sum and rank forms, " +
+      "keyed and keyless, hot/single-row keys, 1-row to whole-key buckets") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    // key "hot" holds 3,000 rows, "one" a single row, null 5 rows; `o` is
+    // a unique order, and each bucket width puts one row, some rows or a
+    // key's whole row set in a bucket (width 1 / 37 / 10^6)
+    val rows = (0 until 3000).map(i => ("hot", i.toLong, (i * 7919 % 13).toLong)) ++
+      Seq(("one", 5000L, 4L)) ++ (0 until 5).map(i => (null: String, 6000L + i, 2L))
+    val df = rows.toDF("k", "o", "m").repartition(4)
+    for (width <- Seq(1L, 37L, 1000000L); keys <- Seq(Seq("k"), Nil);
+         measure <- Seq(Some("m"), None)) {
+      val b = df.withColumn("b", expr(s"o DIV $width"))
+      val w = Window.partitionBy(keys.map(col): _*).orderBy(col("o"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val direct = b.withColumn("r",
+        measure.fold(row_number().over(w).cast("long"))(m => sum(col(m)).over(w)))
+      val got = Skew.prefixSum(b, keys, "b", Seq(col("o")), measure, "r")
+      def rs(f: org.apache.spark.sql.DataFrame) =
+        f.select(col("o"), col("r")).as[(Long, Long)].collect().toMap
+      val (g, d) = (rs(got), rs(direct))
+      val wrong = d.toSeq.filter { case (o, r) => !g.get(o).contains(r) }
+      assert(wrong.isEmpty && g.size == d.size,
+        s"width=$width keys=$keys measure=$measure: ${g.size} of ${d.size} rows; " +
+          s"(o, direct) pairs the helper missed: ${wrong.take(5).mkString(", ")}")
+    }
+  }
+
+  test("prefixSum with no keys needs an integral bucket") {
+    import spark.implicits._
+    val df = Seq(("a", 1L)).toDF("b", "o")
+    val e = intercept[IllegalArgumentException](
+      Skew.prefixSum(df, Nil, "b", Seq(col("o")), None, "r"))
+    assert(e.getMessage.contains("integral bucket") && e.getMessage.contains("'b'"),
+      e.getMessage)
+  }
+
   test("salt is deterministic and in range") {
     val df = spark.range(1000)
       .select(Skew.salt(16, col("id")).as("s1"), Skew.salt(16, col("id")).as("s2"))
